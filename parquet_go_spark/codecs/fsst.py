@@ -54,7 +54,9 @@ ESCAPE = 255
 MAX_LEN = 8
 SAMPLE_BYTES = 1 << 16
 GENERATIONS = 6  # symbol quality converges at 6 bottom-up generations
-# (ratio 3.03 vs 2.04 at 2) — ~50 ms per chunk, negligible vs encoding
+# (ratio 3.03 vs 2.04 at 2). Training one 64 KB code-text sample takes
+# 21-27 ms on a 4-core Xeon (FSST-train row of scripts/bench_codecs.py),
+# so it still costs about as much as encoding ~2 MB with the table
 PARSE_PASSES = 4  # compression converges at 4 passes on code-like
 # corpora (ratio 1.734 at 4 == 6 passes; 1.63 at 2) — the loop also
 # stops early as soon as a pass finds no merge
@@ -175,32 +177,6 @@ class FsstTable:
             (meta >> 16) == lens
         ) & (meta != 0)
         return np.where(hit, (meta & 0xFFFF) - 1, -1).astype(np.int64)
-
-    def pair_hits(self, lens: np.ndarray, keys: np.ndarray) -> np.ndarray:
-        """Membership-only probe for merge candidates. 2-byte pairs
-        resolve exactly via the _sym2 bitmap (one gather, no hash);
-        longer pairs gather the len≥3-prefix filter first and hash ONLY
-        the survivors (compressed index) — with ≤255 symbols most 2-byte
-        prefixes are dead, so the hash work collapses."""
-        if len(self.keys) == 0 or len(lens) == 0:
-            return np.zeros(len(lens), dtype=bool)
-        key16 = (keys & np.uint64(0xFFFF)).astype(np.int64)
-        is2 = lens == 2
-        out = self._sym2[key16]
-        out &= is2
-        maybe = self._prefix2[key16]
-        maybe &= ~is2
-        maybe &= lens <= MAX_LEN
-        idx = np.flatnonzero(maybe)
-        if len(idx):
-            k = keys[idx]
-            b = _buckets(k, self.salt)
-            meta = self._bucket_meta[b]
-            hit = (self._bucket_key[b] == k) & ((meta >> 16) == lens[idx]) & (
-                meta != 0
-            )
-            out[idx[hit]] = True
-        return out
 
     def serialize(self) -> bytes:
         out = bytearray([len(self.lengths)])
@@ -325,9 +301,11 @@ def _parse(data: np.ndarray, table: FsstTable,
             pair_key = spare_key[:m]
             np.left_shift(tok_key[1:], shift, out=pair_key)
             np.bitwise_or(pair_key, tok_key[:-1], out=pair_key)
-            # inline pair_hits with workspace buffers (the method's fresh
-            # temporaries were ~30% of encode time): exact 2-byte pairs
-            # via _sym2, longer pairs prefix-filtered then hash-verified
+            # membership probe on workspace buffers (fresh temporaries
+            # were ~30% of encode time): exact 2-byte pairs via _sym2;
+            # longer pairs pass the len≥3-prefix filter first and only
+            # the survivors are hashed — with ≤255 symbols most 2-byte
+            # prefixes are dead, so the hash work collapses
             np.bitwise_and(pair_key, np.uint64(0xFFFF), out=shift)
             key16 = ws.i32b[:m]
             np.copyto(key16, shift, casting="unsafe")
@@ -376,16 +354,23 @@ TRAIN_PARSE_PASSES = 1  # during training, parse the sample SHALLOW: pair
 
 
 def _unique_counts(lens: np.ndarray, keys: np.ndarray):
-    """Unique (len, key) pairs + counts via lexsort (no hashing)."""
-    if len(lens) == 0:
-        return lens, keys, np.empty(0, dtype=np.int64)
-    order = np.lexsort((keys, lens))
-    sl, sk = lens[order], keys[order]
-    new = np.ones(len(sl), dtype=bool)
-    new[1:] = (sl[1:] != sl[:-1]) | (sk[1:] != sk[:-1])
-    starts = np.flatnonzero(new)
-    counts = np.diff(np.append(starts, len(sl)))
-    return sl[starts], sk[starts], counts
+    """Unique (len, key) pairs in (len, key) order + their counts, from
+    one single-key uint64 sort: a len ≤ 7 key fits in 56 bits, so
+    (len << 56) | key orders like (len, key); len-8 keys fill all 64
+    bits, so they sort as their own group, which goes last."""
+    short = lens < MAX_LEN
+    packed, counts = np.unique(
+        (lens[short].astype(np.uint64) << np.uint64(56)) | keys[short],
+        return_counts=True,
+    )
+    ul = (packed >> np.uint64(56)).astype(np.uint8)
+    uk = packed & np.uint64((1 << 56) - 1)
+    if not short.all():
+        k8, c8 = np.unique(keys[~short], return_counts=True)
+        ul = np.concatenate([ul, np.full(len(k8), MAX_LEN, np.uint8)])
+        uk = np.concatenate([uk, k8])
+        counts = np.concatenate([counts, c8])
+    return ul, uk, counts
 
 
 def train(data: np.ndarray, generations: int = GENERATIONS) -> FsstTable:
@@ -402,41 +387,25 @@ def train(data: np.ndarray, generations: int = GENERATIONS) -> FsstTable:
     )
     for _ in range(generations):
         tok_key, tok_len = _parse(sample, table, TRAIN_PARSE_PASSES)
-        # candidate pool: current tokens + adjacent-pair concatenations
-        t_l, t_k, t_c = _unique_counts(tok_len, tok_key)
-        cand_l = [t_l]
-        cand_k = [t_k]
-        cand_c = [t_c]
-        if len(tok_key) > 1:
-            ll = tok_len[:-1].astype(np.uint64)
-            pair_len = tok_len[:-1] + tok_len[1:]
-            shift = np.minimum(ll << np.uint64(3), np.uint64(56))
-            pair_key = tok_key[:-1] | (tok_key[1:] << shift)
-            fits = pair_len <= MAX_LEN
-            p_l, p_k, p_c = _unique_counts(pair_len[fits], pair_key[fits])
-            cand_l.append(p_l)
-            cand_k.append(p_k)
-            cand_c.append(p_c)
-        al = np.concatenate(cand_l)
-        ak = np.concatenate(cand_k)
-        ac = np.concatenate(cand_c)
-        # merge duplicates between token & pair pools
-        ul, uk, _ = _unique_counts(al, ak)
-        # re-accumulate counts onto unique entries
-        order = np.lexsort((ak, al))
-        sl, sk, sc = al[order], ak[order], ac[order]
-        new = np.ones(len(sl), dtype=bool)
-        new[1:] = (sl[1:] != sl[:-1]) | (sk[1:] != sk[:-1])
-        gid = np.cumsum(new) - 1
-        gcounts = np.bincount(gid, weights=sc).astype(np.int64)
-        ul = sl[new]
-        uk = sk[new]
+        # candidate pool: every token plus every adjacent-pair
+        # concatenation that fits a symbol, counted together in one pass
+        pair_len = tok_len[:-1] + tok_len[1:]
+        shift = np.minimum(
+            tok_len[:-1].astype(np.uint64) << np.uint64(3), np.uint64(56)
+        )
+        pair_key = tok_key[:-1] | (tok_key[1:] << shift)
+        fits = pair_len <= MAX_LEN
+        ul, uk, ucounts = _unique_counts(
+            np.concatenate([tok_len, pair_len[fits]]),
+            np.concatenate([tok_key, pair_key[fits]]),
+        )
         # gain: bytes saved = count*(len-1) for multi-byte symbols,
-        # count*1 for single bytes (escape avoidance)
-        gain = np.where(ul >= 2, gcounts * (ul - 1), gcounts)
+        # count*1 for single bytes (escape avoidance); the stable sort
+        # breaks ties in (len, key) order
+        gain = np.where(ul >= 2, ucounts * (ul - 1), ucounts)
         top = np.argsort(-gain, kind="stable")[:MAX_SYMBOLS]
         top = top[gain[top] > 0]
-        table = FsstTable(ul[top].astype(np.uint8), uk[top])
+        table = FsstTable(ul[top], uk[top])
     return table
 
 

@@ -59,40 +59,40 @@ _ARROW_TO_SPARK = {
     "date32[day]": "date",
 }
 
-_PQ_CODEC = {"UNCOMPRESSED": None, "SNAPPY": "snappy", "GZIP": "gzip",
-             "ZSTD": "zstd", "BROTLI": "brotli"}
-
-# format CompressionCodec ids → write_table names (encrypted-source
-# inherit reads OUR footer, where the codec is the raw thrift id)
+# format CompressionCodec ids → write_table names, read from the raw
+# footer: pyarrow names LZ4_RAW (7) plain "LZ4" and the Hadoop-framed
+# LZ4 (5) "UNKNOWN", so its names cannot tell the two apart
 _CODEC_ID = {0: None, 1: "snappy", 2: "gzip", 4: "brotli",
              5: "lz4_legacy", 6: "zstd", 7: "lz4_raw"}
+_CODEC_NAME = {3: "LZO"}
 
 INHERIT = "__inherit__"
 
 
-def _inherit_props(path: str, decryption):
+def _inherit_props(path: str, decryption, compression=INHERIT):
     """(codec_name, sorting LEAF indexes, bloom columns) of one source
-    file — footer bytes only. Plaintext files go through pyarrow's
-    metadata object; encrypted ones through OUR footer reader (pyarrow
-    cannot open them without its own key plumbing)."""
-    if decryption is None:
-        import pyarrow.parquet as pq
+    file — footer bytes only, through OUR footer reader (it also opens
+    encrypted files, which pyarrow cannot without its own key
+    plumbing). codec_name is `compression` unless that is INHERIT; an
+    inherited codec the writer cannot produce raises instead of
+    silently compacting to UNCOMPRESSED."""
+    from parquet_go_spark.interop import pqreader
 
-        md = pq.ParquetFile(path).metadata
-        comp = _PQ_CODEC.get(md.row_group(0).column(0).compression)
-        sorting = [s.column_index
-                   for s in (md.row_group(0).sorting_columns or [])]
-    else:
-        from parquet_go_spark.interop import pqreader
-
-        with open(path, "rb") as f:
-            fmd = pqreader._read_footer_file(
-                f, os.path.getsize(path), path, decryption)
-        rg = fmd[4][0]
-        comp = _CODEC_ID.get(rg[1][0][3][4])
-        sorting = [sc[1] for sc in (rg.get(4) or [])]
+    with open(path, "rb") as f:
+        fmd = pqreader._read_footer_file(
+            f, os.path.getsize(path), path, decryption)
+    rg = fmd[4][0]
+    if compression == INHERIT:
+        codec = rg[1][0][3][4]
+        if codec not in _CODEC_ID:
+            name = _CODEC_NAME.get(codec, f"codec id {codec}")
+            raise ValueError(
+                f"compact: {path} uses compression {name}, which the "
+                "parquet writer cannot produce — pass compression=")
+        compression = _CODEC_ID[codec]
+    sorting = [sc[1] for sc in (rg.get(4) or [])]
     bloom = pqbloom.bloom_column_names(path, decryption) or None
-    return comp, sorting, bloom
+    return compression, sorting, bloom
 
 
 def _merge_fn(out_dir: str, columns, compression, page_rows: int,
@@ -120,9 +120,8 @@ def _merge_fn(out_dir: str, columns, compression, page_rows: int,
                 paths = [os.path.join(out_dir, f) for f in files]
                 # inherit the sources' codec + declared sort order +
                 # bloom-filtered columns (footer-only scans)
-                src_comp, leaf_sort, bloom_cols = _inherit_props(
-                    paths[0], decryption)
-                comp = src_comp if compression == INHERIT else compression
+                comp, leaf_sort, bloom_cols = _inherit_props(
+                    paths[0], decryption, compression)
                 sorting = [leaf_to_top[i] for i in leaf_sort]
                 # promote: source files may disagree on nullability (a
                 # file whose slice had no nulls declares the column —

@@ -7,8 +7,9 @@ FileMetaData.encryption_algorithm), with the footer key and/or
 per-column keys supplied by the caller — either directly or through a
 key-retriever callback that resolves the file's key_metadata (e.g.
 pyarrow/parquet-mr "PKMT1" key material). AES_GCM_CTR_V1 is read
-(thrift modules GCM, page bodies unauthenticated CTR); external /
-double-wrapped key material is rejected with clear errors. The
+(thrift modules GCM, page bodies unauthenticated CTR); PKMT1 key
+material is read single- or double-wrapped (pyarrow_key_retriever),
+while external key material is rejected with a clear error. The
 reference covers the same surface in encrypt.go / writer.go:2452-2479;
 our write side (below) authors AES_GCM_V1 only — the authenticated
 mode and the reference's own default.

@@ -900,31 +900,58 @@ def compute_range_bounds(df: DataFrame, repo_col: str, key_cols,
         F.least(F.col("__n_buckets"), F.lit(RANGE_SUBSPLIT))
         .cast("int").alias("__w"),
     )
-    keyed1 = df.join(F.broadcast(b1), on=repo_col, how="inner")
-    coarse = _coarse_bucket_expr(key)
+    keyed1 = df.join(
+        F.broadcast(_with_thresholds(b1, "__bnds", "__n1", RANGE_GRANULARITY)),
+        on=repo_col, how="inner",
+    )
     key2 = _order_surrogate(F.col(key_cols[1]), types[key_cols[1]])
     pcts2 = [i / RANGE_GRANULARITY2 for i in range(1, RANGE_GRANULARITY2)]
     b2 = (
-        keyed1.withColumn("__coarse", coarse)
+        keyed1.withColumn("__coarse", _threshold_bucket(key, "__n1"))
         .groupBy(F.col(repo_col), "__coarse")
         .agg(F.percentile_approx(key2, pcts2, 10000).alias("__bnds2"))
     )
     return b1, b2
 
 
-def _coarse_bucket_expr(key):
-    """Primary-key quantile position → coarse range index [0, __n1).
-    Shared by bounds computation and row assignment so both phases
-    agree on the coarse split (the columns __bnds/__n1 come from the
-    joined bounds table)."""
-    pos = F.aggregate(
-        F.col("__bnds"), F.lit(0),
-        lambda acc, b: acc + F.when(key >= b, 1).otherwise(0),
+def _with_thresholds(bounds: DataFrame, bnds: str, n: str, granularity: int,
+                     suffix: str = "") -> DataFrame:
+    """Add per-repo bucket thresholds to a (tiny) bounds table. The G−1
+    sorted quantile bounds b put a key in bucket min(floor(pos·n/G), n−1),
+    pos = #{b ≤ key}: the number of thresholds b[ceil(k·G/n) − 1],
+    k = 1..n−1, that lie ≤ key — so rows compare against n−1 values, not
+    G−1. Each distinct position is kept once (__thr; n > G repeats them)
+    and __cum maps "the first i thresholds passed" to the bucket id. A
+    null bounds array leaves __thr null (see _threshold_bucket)."""
+    nc = F.col(n)
+    # sequence(1, 1) when n == 1: ceil(G/1) == G is then filtered out
+    positions = F.array_distinct(F.filter(
+        F.transform(F.sequence(F.lit(1), F.greatest(nc - 1, F.lit(1))),
+                    lambda k: F.ceil(k * granularity / nc)),
+        lambda p: p < granularity,
+    ))
+    thr = F.when(F.col(bnds).isNotNull(), F.transform(
+        positions, lambda p: F.element_at(F.col(bnds), p.cast("int"))))
+    cum = F.concat(F.array(F.lit(0)), F.transform(
+        positions,
+        lambda p: F.least(F.floor(p * nc / granularity), nc - 1).cast("int"),
+    ))
+    return (bounds.withColumn("__thr" + suffix, thr)
+            .withColumn("__cum" + suffix, cum))
+
+
+def _threshold_bucket(key, n: str, suffix: str = ""):
+    """Bucket id of a row against the thresholds `_with_thresholds`
+    joined in; a null key passes none (bucket 0). With nothing to count
+    — null bounds, or no bounds row at this level — the bucket is n − 1,
+    where existing stores hold such rows (a per-row quantile count was
+    null there, and least() skipped it)."""
+    passed = F.aggregate(
+        F.col("__thr" + suffix), F.lit(0),
+        lambda acc, t: acc + F.when(key >= t, 1).otherwise(0),
     )
-    return F.least(
-        F.floor(pos * F.col("__n1") / F.lit(RANGE_GRANULARITY)).cast("int"),
-        F.col("__n1") - 1,
-    )
+    return F.coalesce(F.element_at(F.col("__cum" + suffix), passed + 1),
+                      F.col(n) - 1)
 
 
 def plan_chunks_range(df: DataFrame, repo_col: str, sort_keys,
@@ -942,6 +969,8 @@ def plan_chunks_range(df: DataFrame, repo_col: str, sort_keys,
     sort_keys = [sort_keys] if isinstance(sort_keys, str) else list(sort_keys)
     types = dict(df.dtypes)
     key = _order_surrogate(F.col(sort_keys[0]), types[sort_keys[0]])
+    n1 = "__n_buckets" if bounds2 is None else "__n1"
+    bounds = _with_thresholds(bounds, "__bnds", n1, RANGE_GRANULARITY)
     # LEFT join: a resumed run over a grown input may contain repos that
     # were absent when the _bounds sidecar was computed — an inner join
     # would silently drop their rows (data loss). Unmatched repos fall
@@ -949,34 +978,24 @@ def plan_chunks_range(df: DataFrame, repo_col: str, sort_keys,
     # bounds their chunk sizes regardless.
     out = df.join(F.broadcast(bounds), on=repo_col, how="left")
     if bounds2 is None:
-        pos = F.aggregate(
-            F.col("__bnds"), F.lit(0),
-            lambda acc, b: acc + F.when(key >= b, 1).otherwise(0),
-        )
-        bucket = F.floor(
-            pos * F.col("__n_buckets") / F.lit(RANGE_GRANULARITY)
-        ).cast("int")
-        bucket = F.least(bucket, F.col("__n_buckets") - 1)
+        bucket = _threshold_bucket(key, n1)
     else:
         key2 = _order_surrogate(F.col(sort_keys[1]), types[sort_keys[1]])
-        out = out.withColumn("__coarse", _coarse_bucket_expr(key))
+        out = out.withColumn("__coarse", _threshold_bucket(key, n1))
+        bounds2 = _with_thresholds(
+            bounds2.join(bounds.select(repo_col, "__w"), on=repo_col),
+            "__bnds2", "__w", RANGE_GRANULARITY2, suffix="2",
+        ).drop("__w")
         out = out.join(
             F.broadcast(bounds2), on=[repo_col, "__coarse"], how="left"
         )
-        pos2 = F.aggregate(
-            F.col("__bnds2"), F.lit(0),
-            lambda acc, b: acc + F.when(key2 >= b, 1).otherwise(0),
-        )
-        sub = F.least(
-            F.floor(pos2 * F.col("__w") / F.lit(RANGE_GRANULARITY2))
-            .cast("int"),
-            F.col("__w") - 1,
-        )
-        bucket = F.col("__coarse") * F.col("__w") + F.coalesce(sub, F.lit(0))
+        sub = _threshold_bucket(key2, "__w", suffix="2")
+        bucket = F.col("__coarse") * F.col("__w") + sub
     return (
         out.withColumn("__repo", F.col(repo_col).cast("string"))
         .withColumn("__bucket", F.coalesce(bucket.cast("int"), F.lit(0)))
-        .drop("__n_buckets", "__bnds", "__n1", "__w", "__coarse", "__bnds2")
+        .drop("__n_buckets", "__bnds", "__n1", "__w", "__coarse", "__bnds2",
+              "__thr", "__cum", "__thr2", "__cum2")
     )
 
 

@@ -2,7 +2,8 @@
 (/root/reference/encoding/encoding_test.go:604-658, 762-808): every codec
 x kind over seeded data shaped like the reference's generators
 (ints uniform [0,100), floats [0,1), byte arrays len 1..21, plus a
-code-like text column for FSST), reporting MB/s each way.
+code-like text column for FSST), reporting MB/s each way. FSST-train
+times table training alone, on one 64 KB sample of the FSST column.
 
 Usage: python scripts/bench_codecs.py [n_values]
 """
@@ -13,12 +14,13 @@ import json
 import os
 import sys
 import time
+import timeit
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-from parquet_go_spark.codecs import chunk as chunklib
+from parquet_go_spark.codecs import chunk as chunklib, fsst
 from parquet_go_spark.codecs.bytearrays import ByteArrays
 from parquet_go_spark.codecs.kinds import Codec, Kind
 
@@ -98,6 +100,13 @@ def main() -> None:
         }
         print(f"| {name} | {len(values)} | {mb:.1f} | {mb/best_e:.1f} "
               f"| {mb/best_d:.1f} | {ratio:.2f} |")
+    sample = code_ba.data[: fsst.SAMPLE_BYTES]
+    best_t = min(timeit.repeat(lambda: fsst.train(sample), number=1, repeat=5))
+    mb = len(sample) / 1e6
+    results["FSST-train/code_text"] = {"train_ms": round(best_t * 1e3, 2),
+                                       "train_mbps": round(mb / best_t, 1)}
+    print(f"| FSST-train/code_text | {len(sample)} B | {mb:.3f} "
+          f"| {mb/best_t:.1f} | - | - |")
     print(json.dumps(results))
 
 

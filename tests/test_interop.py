@@ -657,6 +657,43 @@ def test_compact_inherits_compression_and_sort(spark, tmp_path):
     assert back.agg({"row": "sum"}).head()[0] == sum(range(6000))
 
 
+def test_compact_inherits_lz4_flavor_by_codec_id(tmp_path):
+    """pyarrow's "lz4" writes LZ4_RAW (codec 7), reported by pyarrow as
+    plain "LZ4"; the legacy Hadoop-framed LZ4 is codec 5. Both must be
+    inherited as the matching writer codec, not as UNCOMPRESSED."""
+    import pyarrow as pa
+
+    from parquet_go_spark.interop.compact import _inherit_props
+
+    p = str(tmp_path / "pa_lz4.parquet")
+    pq.write_table(pa.table({"x": list(range(100))}), p, compression="lz4")
+    assert pq.ParquetFile(p).metadata.row_group(0).column(0).compression \
+        == "LZ4"
+    assert _inherit_props(p, None)[0] == "lz4_raw"
+    x = np.arange(100, dtype=np.int64)
+    for comp in ("lz4_raw", "lz4_legacy", None):
+        p = str(tmp_path / f"ours_{comp}.parquet")
+        write_table(p, [ColumnSpec("x", Kind.INT64, x)], compression=comp)
+        assert _inherit_props(p, None)[0] == comp
+
+
+@pytest.mark.parametrize("codec_id, name", [(3, "LZO"), (9, "codec id 9")])
+def test_compact_inherit_rejects_unwritable_codec(tmp_path, monkeypatch,
+                                                   codec_id, name):
+    from parquet_go_spark.interop import pqwriter
+    from parquet_go_spark.interop.compact import _inherit_props
+
+    # uncompressed pages under a footer that names another codec
+    monkeypatch.setitem(pqwriter._COMPRESSION, None, codec_id)
+    p = str(tmp_path / "odd.parquet")
+    write_table(p, [ColumnSpec("x", Kind.INT64,
+                               np.arange(10, dtype=np.int64))])
+    with pytest.raises(ValueError, match=name):
+        _inherit_props(p, None)
+    # an explicit codec needs nothing from the source
+    assert _inherit_props(p, None, "zstd")[0] == "zstd"
+
+
 def test_compact_recovery_cleans_stale_pending(spark, tmp_path):
     from parquet_go_spark.interop.compact import compact_export
     from parquet_go_spark.interop.export import export_parquet
