@@ -227,7 +227,13 @@ def read_bloom_at(f, off: int, crypto=None) -> np.ndarray | None:
     BloomFilterHeader + raw bitset. Encrypted chunks (`crypto` =
     pqcrypt.ChunkCrypto) carry TWO modules: a GCM header module (type
     8) then the bitset module — GCM (type 9) in AES_GCM_V1 files, a
-    CTR data module in AES_GCM_CTR_V1 files."""
+    CTR data module in AES_GCM_CTR_V1 files.
+
+    An AES_GCM_CTR_V1 bitset is UNAUTHENTICATED (the spec's CTR data
+    module has no tag), yet it drives pruning: flipped ciphertext bits
+    read as a valid bitset and can silently prune row groups that hold
+    matches, where a GCM module would fail loudly. Use AES_GCM_V1 files
+    when the integrity of query results matters."""
     if crypto is None:
         f.seek(off)
         # header ≤ ~20 B; over-read then parse

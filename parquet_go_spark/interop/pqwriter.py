@@ -933,7 +933,8 @@ def write_table(path: str, columns: list[ColumnSpec], *,
     Every leaf is encrypted with the footer key unless it has its own
     entry in column_keys (→ ENCRYPTION_WITH_COLUMN_KEY with the
     ColumnMetaData in its own encrypted module) or is opted out via
-    plaintext_columns. Page indexes and bloom filters of encrypted
+    plaintext_columns; a name in either that matches no dotted leaf
+    raises ValueError. Page indexes and bloom filters of encrypted
     columns are written as encrypted modules. plaintext_footer=True
     keeps a readable footer (statistics stripped from the visible
     ColumnMetaData) signed with a 28-byte GCM tag under PAR1 magic;
@@ -1129,6 +1130,14 @@ def write_table(path: str, columns: list[ColumnSpec], *,
             lf["dotted"] = ".".join(lf["nested"].path)
         else:
             lf["dotted"] = lf["spec"].name
+    if encryption is not None:  # else a typo silently gets the footer key
+        leaf_names = {lf["dotted"] for lf in leaves}
+        for opt in ("column_keys", "plaintext_columns"):
+            unknown = sorted(set(getattr(encryption, opt)) - leaf_names)
+            if unknown:
+                raise ValueError(
+                    f"FileEncryption.{opt}: {unknown} match no leaf "
+                    f"column (dotted leaves: {sorted(leaf_names)})")
 
     out = bytearray(b"PARE" if encryption is not None
                     and not encryption.plaintext_footer else _MAGIC)

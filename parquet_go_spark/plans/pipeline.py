@@ -1461,9 +1461,11 @@ def _decode_stream_fn(cols: list[tuple[str, str]]):
 def _decode_blobs(blobs: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
     """Arrow-native decode: hash-partition blob rows by chunk_id, SORT by
     chunk_id within partitions (cheap — metadata-scale row count), and
-    stream them through the one-chunk-in-flight kernel."""
+    stream them through the one-chunk-in-flight kernel. One partition
+    per slot: memory is one chunk anyway, and every Python task has a
+    fixed start-up cost (PLANS.md, "Python tasks sized to the work")."""
     out_schema = StructType([_out_field(c, t) for c, t in cols])
-    n_parts = blobs.sparkSession.sparkContext.defaultParallelism * 4
+    n_parts = blobs.sparkSession.sparkContext.defaultParallelism
     parts = blobs.repartition(n_parts, "chunk_id").sortWithinPartitions(
         "chunk_id"
     )

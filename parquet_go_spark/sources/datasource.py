@@ -13,7 +13,9 @@ Scale shape:
 - ``partitions()`` lists the blob parquet FILES (a driver-side listing,
   not a data read): every chunk's blob rows are written by one task, so
   a chunk never straddles files and one file is one self-contained unit
-  of decode work.
+  of decode work. Consecutive files (name order) are packed into slices
+  of at most 4 MiB, a larger file alone: every Python task costs ~200 ms
+  (4-CPU host) before any work, and a slice decodes one file at a time.
 - Filter pushdown (``pushFilters``, Spark 4.1) does NOT prune on the
   driver: the accepted filters ride into every task, and ``read()``
   first scans only its file's metadata columns (chunk_id, column,
@@ -62,9 +64,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructField, StructType
 
 
+_SLICE_BYTES = 4 << 20  # Spark's spark.sql.files.openCostInBytes default
+
+
 @dataclass
 class _FileSlice(InputPartition):
-    path: str
+    paths: tuple
     # filters ride IN the partition: Spark's python-datasource worker
     # REUSES one reader instance across queries on the same DataFrame,
     # and a query with no pushable filters never calls pushFilters —
@@ -72,18 +77,6 @@ class _FileSlice(InputPartition):
     # query's pruning (reproduced: q1 `v IS NULL AND k < 100` then q2
     # `v IS NOT NULL OR k = 0` returned only q1-pruned rows)
     filters: tuple = ()
-
-
-def _decode_blob_table(tbl, cols):
-    """Decode a table of blob rows through the one-chunk-at-a-time
-    kernel — shared by the batch reader and the streaming source."""
-    from parquet_go_spark.plans import pipeline
-
-    if tbl.num_rows == 0:
-        return
-    tbl = tbl.sort_by("chunk_id")  # kernel holds one chunk at a time
-    decode = pipeline._decode_stream_fn(cols)
-    yield from decode(tbl.to_batches())
 
 
 def _stat_key(spark_type: str, stat: str):
@@ -332,6 +325,90 @@ def _translate_filters(filters, col_types):
     return out
 
 
+def _pack_slices(paths, filters=()) -> list[_FileSlice]:
+    """Consecutive files → slices of at most _SLICE_BYTES (a larger file
+    alone): every Python task pays a fixed start-up cost."""
+    import os
+
+    groups, size = [], 0
+    for p in paths:
+        n = os.path.getsize(p)
+        if not groups or size + n > _SLICE_BYTES:
+            groups.append([])
+            size = 0
+        groups[-1].append(p)
+        size += n
+    return [_FileSlice(tuple(g), filters) for g in groups]
+
+
+def _read_slice(part: _FileSlice | None, cols):
+    """The batch and stream read path: one file at a time."""
+    if part is None:  # empty store: Spark passes one None slice
+        return
+    for path in part.paths:
+        yield from _read_file(path, part.filters, cols)
+
+
+def _read_file(path: str, filters, cols):
+    """One blob file: scan only its metadata columns, drop chunks whose
+    stats or bloom refute the filters, decode the survivors."""
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.plans import pipeline
+
+    col_types = dict(cols)
+    if filters:
+        # metadata columns only — the blob column (the file's bulk)
+        # is not touched until chunks survive; bloom bitsets are
+        # read only for the filtered columns' values streams
+        filter_cols = sorted({c for c, _, _ in filters})
+        # null tests read neither stats nor bitsets; bloom bitsets
+        # are the largest metadata stream — fetch them only when a
+        # comparison/equality op is actually present
+        null_only = all(op in ("isnull", "notnull")
+                        for _, op, _ in filters)
+        meta_cols = ["chunk_id", "column", "stream",
+                     "null_count", "n_rows"]
+        if not null_only:
+            meta_cols += ["min_val", "max_val", "bloom"]
+        meta = pq.read_table(
+            path,
+            columns=meta_cols,
+            filters=[("stream", "=", "values"),
+                     ("column", "in", filter_cols)],
+        )
+        per_chunk: dict[str, tuple[dict, dict, dict]] = {}
+        for row in meta.to_pylist():  # blob-row count: metadata scale
+            st, bl, nu = per_chunk.setdefault(
+                row["chunk_id"], ({}, {}, {}))
+            if not null_only:
+                st[row["column"]] = (row["min_val"], row["max_val"])
+                bl[row["column"]] = row["bloom"]
+            nu[row["column"]] = (row["null_count"], row["n_rows"])
+        keep = {
+            cid for cid, (st, bl, nu) in per_chunk.items()
+            if _chunk_survives(filters, col_types, st, bl, nu)
+        }
+        # chunks with no values stream for any filtered column are
+        # never pruned
+        all_ids = pq.read_table(
+            path, columns=["chunk_id"]).column(0).to_pylist()
+        keep |= {cid for cid in all_ids if cid not in per_chunk}
+        if not keep:
+            return  # every chunk refuted by stats/bloom
+        # row-level dataset filter: refuted chunks' blob rows are
+        # dropped during the scan, not materialized then discarded
+        tbl = pq.read_table(
+            path,
+            filters=[("chunk_id", "in", sorted(keep))],
+        )
+    else:
+        tbl = pq.read_table(path)
+    if tbl.num_rows:
+        tbl = tbl.sort_by("chunk_id")  # kernel holds one chunk at a time
+        yield from pipeline._decode_stream_fn(cols)(tbl.to_batches())
+
+
 class ColcodecReader(DataSourceReader):
     def __init__(self, path: str, cols: list[tuple[str, str]]):
         self._path = path
@@ -366,66 +443,11 @@ class ColcodecReader(DataSourceReader):
             f for f in os.listdir(self._path)
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
-        return [_FileSlice(os.path.join(self._path, f), filters)
-                for f in files]
+        return _pack_slices(
+            [os.path.join(self._path, f) for f in files], filters)
 
     def read(self, partition: _FileSlice | None):
-        import pyarrow.parquet as pq
-
-        from parquet_go_spark.plans import pipeline
-
-        if partition is None:  # empty store: Spark passes one None slice
-            return
-
-        col_types = dict(self._cols)
-        if partition.filters:
-            # metadata columns only — the blob column (the file's bulk)
-            # is not touched until chunks survive; bloom bitsets are
-            # read only for the filtered columns' values streams
-            filter_cols = sorted({c for c, _, _ in partition.filters})
-            # null tests read neither stats nor bitsets; bloom bitsets
-            # are the largest metadata stream — fetch them only when a
-            # comparison/equality op is actually present
-            null_only = all(op in ("isnull", "notnull")
-                            for _, op, _ in partition.filters)
-            meta_cols = ["chunk_id", "column", "stream",
-                         "null_count", "n_rows"]
-            if not null_only:
-                meta_cols += ["min_val", "max_val", "bloom"]
-            meta = pq.read_table(
-                partition.path,
-                columns=meta_cols,
-                filters=[("stream", "=", "values"),
-                         ("column", "in", filter_cols)],
-            )
-            per_chunk: dict[str, tuple[dict, dict, dict]] = {}
-            for row in meta.to_pylist():  # blob-row count: metadata scale
-                st, bl, nu = per_chunk.setdefault(
-                    row["chunk_id"], ({}, {}, {}))
-                if not null_only:
-                    st[row["column"]] = (row["min_val"], row["max_val"])
-                    bl[row["column"]] = row["bloom"]
-                nu[row["column"]] = (row["null_count"], row["n_rows"])
-            keep = {
-                cid for cid, (st, bl, nu) in per_chunk.items()
-                if _chunk_survives(partition.filters, col_types, st, bl, nu)
-            }
-            # chunks with no values stream for any filtered column are
-            # never pruned
-            all_ids = pq.read_table(
-                partition.path, columns=["chunk_id"]).column(0).to_pylist()
-            keep |= {cid for cid in all_ids if cid not in per_chunk}
-            if not keep:
-                return  # every chunk refuted by stats/bloom
-            # row-level dataset filter: refuted chunks' blob rows are
-            # dropped during the scan, not materialized then discarded
-            tbl = pq.read_table(
-                partition.path,
-                filters=[("chunk_id", "in", sorted(keep))],
-            )
-        else:
-            tbl = pq.read_table(partition.path)
-        yield from _decode_blob_table(tbl, self._cols)
+        yield from _read_slice(partition, self._cols)
 
 
 class ColcodecDataSource(DataSource):
@@ -832,9 +854,8 @@ class ColcodecStreamReader(DataSourceStreamReader):
     previously-emitted files remain, the store was rewritten under the
     reader and the query fails loudly instead of re-emitting rewritten
     data. v1 {"files": [...]} offsets from old checkpoints are still
-    honored for the transition batch. Each new file is one input
-    partition decoded executor-side with the same one-chunk-at-a-time
-    kernel as the batch reader."""
+    honored for the transition batch. New files are packed into slices
+    and read exactly as the batch reader reads them."""
 
     def __init__(self, path: str, cols: list[tuple[str, str]]):
         self._path = path
@@ -911,13 +932,10 @@ class ColcodecStreamReader(DataSourceStreamReader):
             f for f, mt in listing.items()
             if self._emitted_by(end, f, mt)
             and not self._emitted_by(start, f, mt))
-        return [_FileSlice(os.path.join(self._path, f)) for f in new]
+        return _pack_slices([os.path.join(self._path, f) for f in new])
 
     def read(self, partition: _FileSlice):
-        import pyarrow.parquet as pq
-
-        yield from _decode_blob_table(
-            pq.read_table(partition.path), self._cols)
+        yield from _read_slice(partition, self._cols)
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean: offsets are self-contained watermarks

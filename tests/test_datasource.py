@@ -105,14 +105,100 @@ def test_bloom_refutes_inside_bounds():
     assert hits < 20  # ~1% fpp on 98 absent probes
 
 
-def test_datasource_partition_per_file(spark, store):
-    d, _ = store
-    from parquet_go_spark.sources.datasource import ColcodecReader
+def test_datasource_slices_pack_small_files(tmp_path):
+    """partitions() packs consecutive data files, in name order, into
+    slices of at most _SLICE_BYTES; a larger file is alone in its
+    slice; pushed filters ride in every slice and are reset after."""
+    from pyspark.sql.datasource import EqualTo
+
+    from parquet_go_spark.sources.datasource import (_SLICE_BYTES,
+                                                     ColcodecReader)
+
+    mib = 1 << 20
+    assert _SLICE_BYTES == 4 * mib  # Spark's openCostInBytes default
+    sizes = [mib, mib, mib, 2 * mib, 5 * mib, mib // 2, 4 * mib, 1,
+             3 * mib, mib, 9 * mib, 7]
+    for i, n in enumerate(sizes):
+        with open(tmp_path / f"part-{i:03d}.parquet", "wb") as fh:
+            fh.truncate(n)  # sparse: size without the bytes
+    for name in ("_colcodec_schema.json", "_x.parquet", ".y.parquet",
+                 "notes.txt"):
+        (tmp_path / name).write_bytes(b"x")  # not data files
+    r = ColcodecReader(str(tmp_path), [("k", "bigint")])
+    r.pushFilters([EqualTo(("k",), 7)])
+    parts = r.partitions()
+
+    names = [os.path.basename(f) for p in parts for f in p.paths]
+    assert names == [f"part-{i:03d}.parquet" for i in range(len(sizes))]
+    size = {os.path.join(str(tmp_path), f"part-{i:03d}.parquet"): n
+            for i, n in enumerate(sizes)}
+    totals = [sum(size[f] for f in p.paths) for p in parts]
+    for p, total in zip(parts, totals):
+        assert total <= _SLICE_BYTES or len(p.paths) == 1
+    for p in parts:  # a file over the limit is alone
+        if any(size[f] > _SLICE_BYTES for f in p.paths):
+            assert len(p.paths) == 1
+    # greedy: no slice could take the next slice's first file
+    for total, nxt in zip(totals, parts[1:]):
+        assert total + size[nxt.paths[0]] > _SLICE_BYTES
+    assert [len(p.paths) for p in parts] == [3, 1, 1, 1, 1, 2, 1, 1, 1]
+    assert all(p.filters == (("k", "eq", 7),) for p in parts)
+    assert all(p.filters == () for p in r.partitions())
+
+
+def test_packed_slices_read_like_per_file(spark, tmp_path):
+    """Over a store of many small files, reading the packed slices
+    yields the same row multiset as reading every file on its own,
+    with eq / range / null filters pushed and with none."""
+    from collections import Counter
+
+    import pyarrow as pa
+    from pyspark.sql.datasource import (EqualTo, GreaterThanOrEqual,
+                                        IsNull, LessThan)
+
+    from parquet_go_spark.sources.datasource import (ColcodecReader,
+                                                     _read_file)
+
+    datasource.register(spark)
+    d = str(tmp_path / "smallfiles")
+    src = spark.createDataFrame(
+        [(i, f"grp{i % 3}", f"name-{i:05d}",
+          None if i % 7 == 0 else float(i)) for i in range(2400)],
+        "k bigint, grp string, name string, v double",
+    )
+    src.repartitionByRange(24, "k").write.format("colcodec") \
+        .option("repo_col", "grp").mode("append").save(d)
     cols = pipeline._read_schema_sidecar(d)
-    parts = ColcodecReader(d, cols).partitions()
-    files = [f for f in os.listdir(d)
-             if f.endswith(".parquet") and not f.startswith(("_", "."))]
-    assert len(parts) == len(files) > 0
+    files = sorted(os.path.join(d, f) for f in os.listdir(d)
+                   if f.endswith(".parquet")
+                   and not f.startswith(("_", ".")))
+
+    def rows(batches):
+        if not batches:
+            return Counter()
+        return Counter(tuple(r.values())
+                       for r in pa.Table.from_batches(batches).to_pylist())
+
+    cases = [  # (pushed filters, rows survive)
+        ([], True),
+        ([EqualTo(("k",), 1234)], True),
+        ([EqualTo(("name",), "name-00042")], True),
+        ([GreaterThanOrEqual(("k",), 500), LessThan(("k",), 900)], True),
+        ([IsNull(("v",))], True),
+        ([EqualTo(("k",), -1)], False),  # refuted in every file
+    ]
+    for pushed, survive in cases:
+        r = ColcodecReader(d, cols)
+        r.pushFilters(pushed)
+        parts = r.partitions()
+        assert len(files) > len(parts) >= 1
+        packed = rows([b for p in parts for b in r.read(p)])
+        per_file = rows([b for f in files
+                         for b in _read_file(f, parts[0].filters, cols)])
+        assert packed == per_file, pushed
+        assert bool(packed) == survive, pushed
+        if not pushed:
+            assert packed == Counter(map(tuple, src.collect()))
 
 
 @pytest.fixture(scope="module")

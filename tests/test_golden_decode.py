@@ -22,6 +22,7 @@ from parquet_go_spark.codecs import delta, dictionary, plain, rle
 from parquet_go_spark.codecs.kinds import Codec
 
 from tests.parquet_rawpages import page_nonnull, read_columns, split_levels
+from tests.refcorpus import need
 
 TESTDATA = "/root/reference/testdata"
 
@@ -39,7 +40,7 @@ def _nonnull_prefix(arr, n_page_values, def_levels):
 
 
 def test_delta_binary_packed_reference_pages():
-    path = f"{TESTDATA}/delta_binary_packed.parquet"
+    path = need(f"{TESTDATA}/delta_binary_packed.parquet")
     cols = read_columns(path)
     assert len(cols) == 66
     checked = 0
@@ -58,7 +59,7 @@ def test_delta_binary_packed_reference_pages():
 
 
 def test_delta_byte_array_reference_pages():
-    path = f"{TESTDATA}/delta_byte_array.parquet"
+    path = need(f"{TESTDATA}/delta_byte_array.parquet")
     for col in read_columns(path):
         page = col.pages[0]
         assert page.encoding == Codec.DELTA_BYTE_ARRAY
@@ -74,7 +75,7 @@ def test_delta_byte_array_reference_pages():
 
 
 def test_delta_length_byte_array_reference_pages():
-    path = f"{TESTDATA}/delta_length_byte_array.parquet"
+    path = need(f"{TESTDATA}/delta_length_byte_array.parquet")
     (col,) = read_columns(path)
     page = col.pages[0]
     assert page.encoding == Codec.DELTA_LENGTH_BYTE_ARRAY
@@ -91,7 +92,7 @@ def test_delta_length_byte_array_reference_pages():
 
 
 def test_rle_boolean_reference_pages():
-    path = f"{TESTDATA}/rle_boolean_encoding.parquet"
+    path = need(f"{TESTDATA}/rle_boolean_encoding.parquet")
     (col,) = read_columns(path)
     page = col.pages[0]
     assert page.encoding == Codec.RLE
@@ -106,7 +107,7 @@ def test_rle_boolean_reference_pages():
 def test_plain_reference_pages():
     checked = 0
     for fname in ("alltypes_plain.parquet", "alltypes_tiny_pages_plain.parquet"):
-        path = f"{TESTDATA}/{fname}"
+        path = need(f"{TESTDATA}/{fname}")
         for col in read_columns(path):
             pages = [p for p in col.pages
                      if p.page_type in (0, 3) and p.encoding == Codec.PLAIN]
@@ -132,7 +133,7 @@ def test_plain_dictionary_reference_pages():
     checked = 0
     for fname in ("alltypes_dictionary.parquet", "alltypes_plain.parquet",
                   "alltypes_tiny_pages.parquet"):
-        path = f"{TESTDATA}/{fname}"
+        path = need(f"{TESTDATA}/{fname}")
         for col in read_columns(path):
             if col.physical_type not in (1, 2, 4, 5, 6):
                 continue
@@ -174,7 +175,7 @@ def test_rle_dictionary_reference_pages():
     parquet also exercises the empty-dictionary / all-null page edge."""
     checked = 0
     for fname in ("binary_min_val_exact.parquet", "null_columns.parquet"):
-        path = f"{TESTDATA}/{fname}"
+        path = need(f"{TESTDATA}/{fname}")
         for col in read_columns(path):
             dict_pages = [p for p in col.pages if p.page_type == 2]
             if not dict_pages:

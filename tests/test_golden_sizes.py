@@ -13,6 +13,8 @@ kernels via the auto-selector, and assert
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -56,6 +58,13 @@ def _column_cases():
     cases = []
     for fname in FIXTURES:
         path = f"{GOLDEN}/{fname}"
+        if not os.path.exists(path):
+            # the cases come from the file: one skipped item stands in
+            cases.append(pytest.param(
+                path, 0, None, False, 0, id=fname,
+                marks=pytest.mark.skip(
+                    reason=f"reference corpus absent: {path}")))
+            continue
         pf = pq.ParquetFile(path)
         md = pf.metadata.row_group(0)
         tbl = pf.read_row_group(0)

@@ -24,6 +24,7 @@ from parquet_go_spark.codecs.kinds import Kind
 from parquet_go_spark.interop import pqbloom
 from parquet_go_spark.interop.pqwriter import ColumnSpec, write_table
 
+from tests.refcorpus import need
 from xxh64ref import hash_bytes
 
 GOLDEN = "/root/reference/testdata/data_index_bloom_encoding_stats.parquet"
@@ -39,7 +40,7 @@ def _hash_strs(strs):
 
 
 def test_golden_bitset_byte_identical():
-    blooms = pqbloom.read_blooms(GOLDEN)
+    blooms = pqbloom.read_blooms(need(GOLDEN))
     words = blooms[(0, "String")]
     mine = pqbloom.build_bitset(_hash_strs(GOLDEN_VALUES),
                                 words.size * 4)
@@ -47,7 +48,7 @@ def test_golden_bitset_byte_identical():
 
 
 def test_golden_probe_present_and_absent():
-    words = pqbloom.read_blooms(GOLDEN)[(0, "String")]
+    words = pqbloom.read_blooms(need(GOLDEN))[(0, "String")]
     assert pqbloom.might_contain(words, _hash_strs(GOLDEN_VALUES)).all()
     absent = _hash_strs(["zebra", "xylophone", "NOT-THERE", "qq", "claw"])
     assert not pqbloom.might_contain(words, absent).any()

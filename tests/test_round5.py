@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from parquet_go_spark.interop import compact, pqreader
 
+from tests.refcorpus import need
+
 
 def _synth_manifest(spark, n_rows: int, seed: int = 11):
     """Synthetic export manifest: many tiny repos plus a few multi-part
@@ -726,6 +728,7 @@ def test_shred_write_matches_reference_fixtures():
     from parquet_go_spark.codecs import variant as V
 
     base = "/root/reference/testdata/shredded_variant"
+    need(base)
     specs = {"case-004": "boolean", "case-045": ["string"],
              "case-134": {"a": "int", "b": "string"}}
     counts = {"case-004": 1, "case-045": 4, "case-134": 1}
@@ -1092,6 +1095,46 @@ def test_encrypted_write_plaintext_columns_and_direct_keys(tmp_path):
     dec = pqcrypt.FileDecryption(footer_key=FOOTER_KEY,
                                  column_keys={"x": COL_KEY})
     assert r.read_table(p, decryption=dec).cast(want.schema).equals(want)
+
+
+@pytest.mark.parametrize("opt,name", [
+    ("column_keys", "xx"),          # typo of a top-level column
+    ("plaintext_columns", "yy"),
+    ("column_keys", "a"),           # struct field without its parent
+    ("column_keys", "st.b"),        # wrong nested path
+    ("plaintext_columns", "st"),    # a group, not a leaf
+])
+def test_encrypted_write_rejects_unknown_column_names(tmp_path, opt, name):
+    """A column_keys / plaintext_columns entry that matches no dotted
+    leaf fails the write, naming the entry, instead of silently
+    falling back to the footer key."""
+    from parquet_go_spark.interop import pqcrypt, pqreader as r
+    from parquet_go_spark.interop.pqwriter import (
+        ColumnSpec, Kind, StructColumnSpec, write_table)
+
+    m = 100
+    cols = [
+        ColumnSpec("x", Kind.INT64, np.arange(m, dtype=np.int64)),
+        StructColumnSpec("st", fields=[
+            ("a", ColumnSpec("a", Kind.INT32,
+                             np.arange(m, dtype=np.int32)))]),
+    ]
+    ok = str(tmp_path / "ok.parquet")
+    write_table(ok, cols, encryption=pqcrypt.FileEncryption(
+        footer_key=FOOTER_KEY, column_keys={"st.a": COL_KEY},
+        plaintext_columns={"x"}))
+    got = r.read_table(ok, decryption=pqcrypt.FileDecryption(
+        footer_key=FOOTER_KEY, column_keys={"st.a": COL_KEY}))
+    assert got.column("st").to_pylist() == [{"a": i} for i in range(m)]
+
+    bad = ({"column_keys": {name: COL_KEY}} if opt == "column_keys"
+           else {"plaintext_columns": {name}})
+    p = tmp_path / "bad.parquet"
+    with pytest.raises(ValueError, match=rf"FileEncryption\.{opt}: "
+                                         rf"\['{name}'\]"):
+        write_table(str(p), cols, encryption=pqcrypt.FileEncryption(
+            footer_key=FOOTER_KEY, **bad))
+    assert not p.exists()
 
 
 def test_encrypted_write_negatives(tmp_path):
