@@ -8,11 +8,12 @@ Queries map SURVEY.md §2's operator inventory onto the driver's
 - rt_<codec>_*    forced-codec distributed round trips (TestEncoding
                   analog, encoding_test.go:207-216) — E1..E10
 - stats_* chunk_* manifest column-index statistics (column_index.go)
-- prune_*         min/max chunk pruning (search.go:6-95)
+- prune_* bloom_* chunk pruning by min/max and blooms (search.go:6-95,
+                  bloom.go:189+), all through the colcodec data source
 - dedup/minhash/simhash/ngram  training-data dedup operators
 - text_analysis_*  token/quality/langid/fingerprint (one fused query)
 - cosine/knn/lsh  embedding similarity search
-- multimodal_*    binary-payload plumbing (stubbed decode)
+- multimodal_*    binary-payload metadata (size, sha256)
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from parquet_go_spark.interop import compact as interop_compact
 from parquet_go_spark.interop import export as interop_export
 from parquet_go_spark.operators import dedup, multimodal, roundtrip, similarity, text
 from parquet_go_spark.plans import pipeline
+from parquet_go_spark.sources import datasource as colcodec_ds
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -605,19 +607,25 @@ def _parquet_interop_complex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pruned_read(spark: SparkSession, store: str, cond,
+                 *cols: str) -> DataFrame:
+    """The store's one pruned read: spark.read.format("colcodec") with a
+    pushed-down filter — task-side chunk pruning via manifest stats +
+    split-block blooms, Spark re-applies the filter exactly
+    (sources/datasource.py). The DataFrame is created fresh per query
+    (the Spark 4.1 relation-reuse caveat in that module)."""
+    colcodec_ds.register(spark)
+    return spark.read.format("colcodec").load(store).where(cond).select(
+        *cols)
+
+
 def _datasource_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python Data Source read path (Spark 4 DataSource API): encode
-    orders into a blob store, register the "colcodec" format, and read
-    it back through plain spark.read with a pushed-down point filter —
-    task-side chunk pruning via manifest stats + split-block blooms,
-    Spark re-applies the filter exactly (sources/datasource.py)."""
-    from parquet_go_spark.sources import datasource as colcodec_ds
-
+    orders into a blob store and read it back through plain spark.read
+    with a pushed-down point filter."""
     out = _encode_fresh(spark, sf_dir, "orders")
-    colcodec_ds.register(spark)
-    df = spark.read.format("colcodec").load(out)
-    return df.where(F.col("o_custkey") == 7).select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+    return _pruned_read(spark, out, F.col("o_custkey") == 7, "o_orderkey",
+                        "o_custkey", "o_orderstatus", "o_totalprice")
 
 
 def _datasource_write_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,12 +633,8 @@ def _datasource_write_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     each task's partition directly (size-triggered per-repo flush, staged
     files renamed atomically by the driver commit), then the read path
     decodes it back (sources/datasource.py ColcodecArrowWriter)."""
-    import tempfile as _tf
-
-    from parquet_go_spark.sources import datasource as colcodec_ds
-
     colcodec_ds.register(spark)
-    out = _tf.mkdtemp(prefix="colcodec_dsw_") + "/store"
+    out = tempfile.mkdtemp(prefix="colcodec_dsw_") + "/store"
     df = _load(spark, sf_dir, "orders")
     (df.write.format("colcodec").option("repo_col", "o_orderpriority")
        .mode("append").save(out))
@@ -747,27 +751,25 @@ def _footer_agg_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_point_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point lookup: chunks whose o_custkey bloom refutes 7 are skipped."""
     out = _encode_fresh(spark, sf_dir, "orders")
-    return pipeline.bloom_point_decode(
-        spark, out, "o_custkey", 7,
-        columns_subset=["o_orderkey", "o_custkey", "o_totalprice"],
-    ).select("o_orderkey", "o_custkey", "o_totalprice")
+    return _pruned_read(spark, out, F.col("o_custkey") == 7,
+                        "o_orderkey", "o_custkey", "o_totalprice")
 
 
 def _prune_decode_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Range read: chunks whose o_orderkey min/max miss [100, 5000] are
+    skipped."""
     out = _encode_fresh(spark, sf_dir, "orders")
-    d = pipeline.pruned_decode(
-        spark, out, "o_orderkey", lo=100, hi=5000,
-        columns_subset=["o_orderkey", "o_custkey", "o_totalprice"],
-    )
-    return d.select("o_orderkey", "o_custkey", "o_totalprice")
+    return _pruned_read(spark, out, F.col("o_orderkey").between(100, 5000),
+                        "o_orderkey", "o_custkey", "o_totalprice")
 
 
 def _range_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound range layout end-to-end (round 3): encode under
     layout='range' with compound sort keys (o_orderstatus, o_orderkey) —
     the SortingColumns analog (sorting.go:23-127, config.go:411) — then
-    prune-decode on the SECONDARY key. Hierarchical secondary quantiles
+    a pruned read on the SECONDARY key. Hierarchical secondary quantiles
     give disjoint o_orderkey sub-ranges within each status range, so the
     manifest min/max prune skips chunks a hash layout must read."""
     df = _load(spark, sf_dir, "orders").select(
@@ -780,11 +782,8 @@ def _range_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         sort_cols=["o_orderstatus", "o_orderkey"], layout="range",
         target_chunk_bytes=256 << 10, resume=False,
     )
-    d = pipeline.pruned_decode(
-        spark, out, "o_orderkey", lo=100, hi=5000,
-        columns_subset=["o_orderkey", "o_orderstatus", "o_totalprice"],
-    )
-    return d.select("o_orderkey", "o_orderstatus", "o_totalprice")
+    return _pruned_read(spark, out, F.col("o_orderkey").between(100, 5000),
+                        "o_orderkey", "o_orderstatus", "o_totalprice")
 
 
 def _cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -934,7 +933,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     individually — every operator family keeps a green row. Dropped as
     queries (still pytest-covered): rt_pipeline_orders (orders round
     trips via interop/datasource/compact), simhash_documents (subsumed
-    by simhash_pairs), multimodal_decode_stub (honest stub)."""
+    by simhash_pairs)."""
     li_flag = lambda df: df.select((F.col("l_quantity") > 25).alias("flag"))  # noqa: E731
     return {
         # ---- pipeline round trips (encode→manifest→decode), per shape ----
@@ -1355,6 +1354,6 @@ def oracle_sql() -> dict[str, str]:
             "l_orderkey, l_linenumber) AS rank, l_orderkey, l_linenumber, "
             "l_extendedprice FROM lineitem QUALIFY rank <= 100"
         ),
-        # minhash_pairs / simhash* / lsh_ann / multimodal_decode_stub are
-        # hash-construction-specific → rows-only checks (no portable SQL).
+        # minhash_pairs / simhash* / lsh_ann are hash-construction-
+        # specific → rows-only checks (no portable SQL).
     }

@@ -12,10 +12,11 @@ DataFrame partitions (no per-row Python in the hot path).
 Layout:
   codecs/     pure numpy/pyarrow encode/decode kernels (no Spark imports)
   operators/  training-data operators (dedup, similarity, text analysis)
-  sources/    synthetic repo-table generator, testdata loaders
-  functions/  Spark Column helper functions
+  sources/    synthetic repo-table generator; the colcodec and pqread
+              Spark data sources (the store's pruned read, its
+              streaming sink and source)
   plans/      the distributed encode/decode/verify pipeline + manifest
-  streaming/  foreachBatch incremental encode
+  interop/    parquet files both ways (writer, reader, export, compact)
 """
 
 __version__ = "0.1.0"

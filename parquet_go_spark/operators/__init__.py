@@ -3,7 +3,7 @@
 dedup       exact / n-gram Jaccard / MinHash-LSH / SimHash near-dup
 text        tokenization, quality scoring, language ID, fingerprints
 similarity  cosine top-k, k-NN join, random-hyperplane LSH ANN
-multimodal  binary payload metadata + stubbed decode plumbing
+multimodal  binary payload metadata (size, sha256)
 roundtrip   forced-codec distributed encode/decode (TestEncoding analog)
 """
 

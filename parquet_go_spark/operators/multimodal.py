@@ -1,77 +1,17 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video decode libraries are not available in this sandbox, so
-the *decode* step is a clearly-marked stub (deterministic fake features)
-— but the Spark-side plumbing is real: binary columns, Arrow-batched
-mapInPandas, explicit output schema, bounded batch sizes. Swapping
-`_fake_features` for a real decoder (PIL/librosa/ffmpeg) changes nothing
-structurally.
+Image/audio/video decode libraries are not available, so no media is
+decoded: the operator reports only what the payload bytes themselves
+prove (size and sha256), computed by JVM built-ins.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-
-FEATURE_DIM = 8
-
-META_SCHEMA = (
-    "media_id bigint, n_bytes bigint, digest string, "
-    "width int, height int, features array<float>"
-)
-
-
-def _fake_features(payload: bytes) -> tuple[int, int, list[float]]:
-    """STUB decode: deterministic pseudo-decode of a media payload.
-
-    A real implementation would decode the image and return true dimensions
-    + model features; here dims/features are a pure function of the bytes
-    so tests are reproducible. Raises nothing — the plumbing is the test.
-    """
-    d = hashlib.sha256(payload).digest()
-    width = 16 + d[0]
-    height = 16 + d[1]
-    feats = (np.frombuffer(d[2:2 + 4 * FEATURE_DIM // 2], dtype=np.uint16)
-             .astype(np.float32) / 65535.0)
-    return width, height, [float(x) for x in feats]
-
-
-def extract_media_features(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """binary payload → (size, sha256, fake-decoded dims, feature vector).
-
-    mapInPandas with Arrow batching; per-batch vectorized except the
-    per-payload stub decode (which a real codec would also do per-item).
-    """
-    sub = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("p"))
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [bytes(x) for x in pdf["p"]]
-            meta = [_fake_features(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "n_bytes": [len(p) for p in payloads],
-                    "digest": [hashlib.sha256(p).hexdigest() for p in payloads],
-                    "width": [m[0] for m in meta],
-                    "height": [m[1] for m in meta],
-                    "features": [m[2] for m in meta],
-                }
-            )
-
-    return sub.mapInPandas(fn, META_SCHEMA)
 
 
 def media_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """Pure-JVM metadata (no Python): size + sha256 of the binary payload.
-
-    This is the fast path that runs at 100 TB; the Python decode path above
-    is reserved for the sampled/decoded subset."""
+    """Pure-JVM metadata (no Python): size + sha256 of the binary payload."""
     return df.select(
         F.col(id_col).alias("media_id"),
         F.octet_length(F.col(payload_col)).alias("n_bytes"),

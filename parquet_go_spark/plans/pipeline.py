@@ -476,8 +476,8 @@ def _encode_one(values, kind, spark_type, compression, base,
     if stream == "values" and len(values) and kind != Kind.BOOLEAN:
         uniq = info.get("uniques")
         if flba_upgraded:
-            # hash in byte-array space: bloom_point_decode probes with
-            # the LOGICAL type's hashing and must not see the upgrade
+            # hash in byte-array space: datasource._chunk_survives probes
+            # with the LOGICAL type's hashing and must not see the upgrade
             if uniq is not None:
                 uniq = _flba_to_byte_values(uniq)
             bf = bloomlib.build(uniq if uniq is not None else values,
@@ -1486,182 +1486,6 @@ def decode_table(spark: SparkSession, out_path: str,
         columns = [(c, t) for c, t in columns if c in keep]
         blobs = blobs.where(F.col("column").isin([c for c, _ in columns]))
     return _decode_blobs(blobs, columns)
-
-
-def bloom_point_decode(
-    spark: SparkSession,
-    out_path: str,
-    column: str,
-    value,
-    columns_subset: list[str] | None = None,
-) -> DataFrame:
-    """Point lookup via per-chunk split-block bloom filters: decode only
-    chunks whose bloom might contain `value`, then apply the exact
-    filter. No false negatives, so the result is exact (bloom.go:189+,
-    README.md:395-465). The probe runs over manifest rows only —
-    metadata scale, never the data."""
-    columns = dict(_read_schema_sidecar(out_path))
-    col_type = columns[column]
-    # array<scalar> columns: the bloom lives on the flattened element
-    # stream, so the probe is an ELEMENT value and the exact filter is
-    # membership, not equality
-    elem = _list_elem(col_type)
-    spark_type = elem if elem is not None else col_type
-    if elem is not None and _is_container(elem):
-        raise ValueError(
-            f"bloom_point_decode: no scalar bloom stream for {col_type}")
-    kind = _col_kind(spark_type)
-    dp = _decimal_info(spark_type)
-    if spark_type in ("string", "binary"):
-        probe_vals = ByteArrays.from_pylist(
-            [value.encode() if isinstance(value, str) else value]
-        )
-    elif dp is not None:
-        unscaled = _unscaled(value, dp[1])
-        if unscaled is None:
-            # a literal finer than the column's scale can equal NO
-            # stored value: the semantically-correct answer is an
-            # EMPTY result (decode nothing), not an error
-            empty = manifest(spark, out_path).where(F.lit(False)) \
-                .select("chunk_id").distinct()
-            blobs = spark.read.parquet(out_path).join(
-                F.broadcast(empty), "chunk_id", "left_semi")
-            return _decode_blobs(blobs, _read_schema_sidecar(out_path))
-        if dp[0] <= 9:
-            probe_vals = np.array([unscaled], dtype=np.int32)
-        elif dp[0] <= 18:
-            probe_vals = np.array([unscaled], dtype=np.int64)
-        else:
-            mask64 = (1 << 64) - 1
-            words = np.array(
-                [[unscaled & mask64, (unscaled >> 64) & mask64]],
-                dtype=np.uint64,
-            )
-            probe_vals = words.view(np.uint8).reshape(1, 16)
-    else:
-        np_dt = {Kind.INT64: np.int64, Kind.INT32: np.int32,
-                 Kind.DOUBLE: np.float64, Kind.FLOAT: np.float32}[kind]
-        probe_vals = np.array([value], dtype=np_dt)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(blooms: pd.Series) -> pd.Series:
-        out = []
-        for b in blooms:  # manifest rows only — metadata scale
-            if b is None:
-                out.append(True)  # no bloom recorded → cannot prune
-            else:
-                out.append(bool(
-                    bloomlib.might_contain(bytes(b), probe_vals, kind)[0]
-                ))
-        return pd.Series(out)
-
-    m = manifest(spark, out_path).where(
-        (F.col("column") == column) & (F.col("stream") == "values")
-    )
-    chunk_ids = m.where(probe(F.col("bloom"))).select("chunk_id").distinct()
-    blobs = spark.read.parquet(out_path).join(
-        F.broadcast(chunk_ids), "chunk_id", "left_semi"
-    )
-    cols = _read_schema_sidecar(out_path)
-    if columns_subset is not None:
-        keep = set(columns_subset) | {column}
-        cols = [(c, t) for c, t in cols if c in keep]
-        blobs = blobs.where(F.col("column").isin([c for c, _ in cols]))
-    out = _decode_blobs(blobs, cols)
-    if elem is not None:
-        return out.where(F.array_contains(F.col(column), F.lit(value)))
-    return out.where(F.col(column) == F.lit(value))
-
-
-def _stat_expr(spark_type: str, col):
-    """Parse a manifest min/max string back to a comparable value.
-
-    Integer-family stats cast to bigint (NOT double: above 2^53 a double
-    cast rounds and can silently prune a chunk containing the probed
-    key). String stats are latin-1-decoded raw bytes; re-encoding with
-    ISO-8859-1 recovers the exact bytes so the comparison happens in
-    byte space — the reference compares truncated byte bounds the same
-    way (column_index.go:499-533), never via re-encoded text."""
-    if spark_type in ("int", "bigint", "timestamp", "timestamp_ntz", "date"):
-        return col.cast("bigint")  # repr(int) parses losslessly as bigint
-    if _decimal_info(spark_type) is not None:
-        return col.cast("decimal(38,0)")  # unscaled ints, up to int128
-    if spark_type in ("float", "double"):
-        return col.cast("double")
-    return F.encode(col, "ISO-8859-1")  # raw bound bytes, unsigned compare
-
-
-def _probe_expr(spark_type: str, value):
-    """A probe literal comparable against _stat_expr's output."""
-    if value is None:
-        return None
-    if spark_type in ("string", "binary"):
-        b = value.encode("utf-8") if isinstance(value, str) else bytes(value)
-        return F.lit(b)  # binary literal: byte-space comparison
-    if spark_type in ("int", "bigint", "timestamp", "timestamp_ntz", "date"):
-        return F.lit(int(value)).cast("bigint")
-    dp = _decimal_info(spark_type)
-    if dp is not None:
-        # stats hold UNSCALED ints; scale the user's probe to match.
-        # Inexact literals (more fractional digits than the scale) have
-        # no unscaled representation → None = unbounded, never prune.
-        unscaled = _unscaled(value, dp[1])
-        if unscaled is None:
-            return None
-        return F.lit(str(unscaled)).cast("decimal(38,0)")
-    return F.lit(value).cast("double")
-
-
-def pruned_decode(
-    spark: SparkSession,
-    out_path: str,
-    column: str,
-    lo=None,
-    hi=None,
-    columns_subset: list[str] | None = None,
-) -> DataFrame:
-    """Decode only chunks whose [min_val, max_val] intersects [lo, hi],
-    then apply the exact row filter — the Spark analog of page skipping
-    via the column index (search.go:6-95, column_index.go)."""
-    columns = dict(_read_schema_sidecar(out_path))
-    spark_type = columns[column]
-    m = manifest(spark, out_path).where(
-        (F.col("column") == column) & (F.col("stream") == "values")
-    )
-    mn = _stat_expr(spark_type, F.col("min_val"))
-    mx = _stat_expr(spark_type, F.col("max_val"))
-    # NULL bounds mean "unbounded", never "prunable": _truncate_max
-    # returns None for an all-0xFF prefix, and boolean/empty chunks
-    # record no stats at all — such chunks must always be kept.
-    p_lo = _probe_expr(spark_type, lo)  # None = not comparable, keep
-    p_hi = _probe_expr(spark_type, hi)
-    keep_lo = (
-        F.lit(True) if p_lo is None
-        else (F.col("max_val").isNull() | (mx >= p_lo))
-    )
-    keep_hi = (
-        F.lit(True) if p_hi is None
-        else (F.col("min_val").isNull() | (mn <= p_hi))
-    )
-    chunk_ids = m.where(keep_lo & keep_hi).select("chunk_id").distinct()
-
-    blobs = spark.read.parquet(out_path).join(
-        F.broadcast(chunk_ids), "chunk_id", "left_semi"
-    )
-    cols = _read_schema_sidecar(out_path)
-    if columns_subset is not None:
-        keep = set(columns_subset) | {column}
-        cols = [(c, t) for c, t in cols if c in keep]
-        blobs = blobs.where(F.col("column").isin([c for c, _ in cols]))
-    out = _decode_blobs(blobs, cols)
-    c = F.col(column)
-    if lo is not None:
-        out = out.where(c >= F.lit(lo))
-    if hi is not None:
-        out = out.where(c <= F.lit(hi))
-    return out
 
 
 def _fill_expr(typ: str):

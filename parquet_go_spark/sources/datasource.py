@@ -80,10 +80,12 @@ class _FileSlice(InputPartition):
 
 
 def _stat_key(spark_type: str, stat: str):
-    """Manifest min/max string → comparable value, mirroring
-    pipeline._stat_expr: byte space for strings/binary (latin-1 round
-    trip of the truncated bound bytes), int for the integer family
-    (timestamps are stored as epoch micros, dates as epoch days),
+    """Manifest min/max string → comparable value: byte space for
+    strings/binary (latin-1 round trip of the truncated bound bytes,
+    compared unsigned like the reference's byte bounds,
+    column_index.go:499-533), int for the integer family and unscaled
+    decimals (never a double: above 2^53 it rounds and mis-prunes;
+    timestamps are stored as epoch micros, dates as epoch days),
     float for floats. Returns None — meaning "unbounded, keep" — for
     types we don't compare and for NaN float bounds (a chunk holding
     any NaN records NaN min/max; NaN compares false both ways and must
@@ -109,13 +111,12 @@ def _stat_key(spark_type: str, stat: str):
 
 
 def _probe_key(spark_type: str, value):
-    """User filter literal → the same comparison space (mirrors
-    pipeline._probe_expr). Spark pushes timestamp literals as
-    datetime.datetime and date literals as datetime.date — convert to
-    the encoded representation (micros / epoch days, matching
-    pipeline._arrow_to_values). Returns None — "cannot compare, keep
-    the chunk" — on any unexpected value shape: pruning must only ever
-    skip work, never guess."""
+    """User filter literal → the same comparison space as _stat_key.
+    Spark pushes timestamp literals as datetime.datetime and date
+    literals as datetime.date — convert to the encoded representation
+    (micros / epoch days, matching pipeline._arrow_to_values). Returns
+    None — "cannot compare, keep the chunk" — on any unexpected value
+    shape: pruning must only ever skip work, never guess."""
     import datetime as _dt
     import math
 
@@ -155,9 +156,9 @@ def _probe_key(spark_type: str, value):
                 return None
             return int(value)
         if spark_type.startswith("decimal("):
-            # scale the literal into the manifest's UNSCALED-int space
-            # (mirrors pipeline._probe_expr); inexact literals → None =
-            # keep the chunk (rounding would mis-prune range predicates)
+            # scale the literal into the manifest's UNSCALED-int space;
+            # inexact literals → None = keep the chunk (rounding would
+            # mis-prune range predicates)
             from parquet_go_spark.plans.pipeline import (_decimal_info,
                                                          _unscaled)
 
@@ -180,7 +181,11 @@ def _chunk_survives(filters, col_types, stats, blooms,
     stats: {column: (min_str|None, max_str|None)}; blooms:
     {column: bloom blob bytes|None}; nulls:
     {column: (null_count|None, n_rows|None)}. NULL bounds mean
-    unbounded — unprunable (matches pruned_decode's keep rule)."""
+    unbounded — unprunable: _truncate_max records None for an all-0xFF
+    prefix, and boolean/empty chunks record no stats at all. This is
+    the store's one prune rule; array/map/struct columns are never
+    pushed here (ColcodecReader.pushFilters), so array<scalar> element
+    blooms are written but not probed."""
     import numpy as np
 
     from parquet_go_spark.codecs import bloom as bloomlib

@@ -41,28 +41,24 @@ def test_double_and_float():
     assert bloom.might_contain(blob, vals, Kind.DOUBLE).all()
 
 
-def test_bloom_point_decode(spark, tmp_path_factory):
+def test_bloom_point_lookup_through_ds(spark, tmp_path_factory):
     from pyspark.sql import functions as F
+    from pyspark.sql.datasource import EqualTo
 
     from parquet_go_spark.plans import pipeline
+    from tests.colcodec_read import direct_read, same_rows, spark_where
 
     out = str(tmp_path_factory.mktemp("enc") / "orders")
     df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     pipeline.encode_table(spark, df, out, repo_col="o_orderpriority",
                           salt_cols=["o_orderkey"], sort_cols=["o_orderkey"])
     key = df.select("o_custkey").head()[0]
-    got = sorted(
-        r["o_orderkey"]
-        for r in pipeline.bloom_point_decode(
-            spark, out, "o_custkey", key,
-            columns_subset=["o_orderkey"],
-        ).collect()
-    )
-    want = sorted(
-        r["o_orderkey"]
-        for r in df.where(F.col("o_custkey") == key).collect()
-    )
-    assert got == want and len(got) >= 1
+    cond = F.col("o_custkey") == key
+    got = spark_where(spark, out, cond)
+    assert same_rows(got, df.where(cond)) and got.count() >= 1
+    rows, _ = direct_read(out, [EqualTo(("o_custkey",), key)])
+    want = {r["o_orderkey"] for r in df.where(cond).collect()}
+    assert want <= {r["o_orderkey"] for r in rows}
 
 
 @pytest.mark.skipif(bloom._NATIVE is None, reason="no C toolchain on this host")

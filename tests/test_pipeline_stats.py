@@ -5,8 +5,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
 
 from parquet_go_spark.plans import pipeline
+from tests.colcodec_read import all_chunks, direct_read, same_rows, spark_where
 
 
 @pytest.fixture(scope="module")
@@ -45,32 +47,27 @@ def test_string_stats_truncated_bounds(spark, orders_blobs):
     assert glo <= slo and ghi >= shi
 
 
-def test_pruned_decode_matches_filter(spark, orders_blobs):
+def test_ds_range_read_matches_filter(spark, orders_blobs):
     out, df = orders_blobs
-    got = (
-        pipeline.pruned_decode(spark, out, "o_orderkey", lo=50, hi=300)
-        .select("o_orderkey").orderBy("o_orderkey").collect()
-    )
-    want = (
-        df.where((F.col("o_orderkey") >= 50) & (F.col("o_orderkey") <= 300))
-        .select("o_orderkey").orderBy("o_orderkey").collect()
-    )
-    assert got == want
+    cond = F.col("o_orderkey").between(50, 300)
+    got = spark_where(spark, out, cond)
+    assert same_rows(got, df.where(cond))
+    rows, _ = direct_read(out, [GreaterThanOrEqual(("o_orderkey",), 50),
+                                LessThanOrEqual(("o_orderkey",), 300)])
+    assert {r["o_orderkey"] for r in rows} >= set(range(50, 301))
 
 
-def test_pruned_decode_skips_chunks(spark, orders_blobs):
-    out, _ = orders_blobs
-    m = pipeline.manifest(spark, out)
-    total_chunks = m.select("chunk_id").distinct().count()
-    # a narrow range must decode fewer chunks than the total
-    narrow = pipeline.pruned_decode(spark, out, "o_orderkey", lo=1, hi=5)
-    assert narrow.count() >= 1
-    lo_hi = m.where(
-        (F.col("column") == "o_orderkey")
-        & (F.col("min_val").cast("double") <= 5)
-        & (F.col("max_val").cast("double") >= 1)
-    ).select("chunk_id").distinct().count()
-    assert lo_hi <= total_chunks  # pruning has something to skip or not; sanity
+def test_ds_range_read_skips_chunks(spark, orders_blobs):
+    out, df = orders_blobs
+    # each o_orderpriority chunk spans the key space; only the chunks
+    # holding key 0 or 1 reach below 2, so the rest are refuted by min
+    cond = F.col("o_orderkey").between(0, 1)
+    got = spark_where(spark, out, cond)
+    assert same_rows(got, df.where(cond)) and got.count() == 2
+    rows, kept = direct_read(out, [GreaterThanOrEqual(("o_orderkey",), 0),
+                                   LessThanOrEqual(("o_orderkey",), 1)])
+    assert {0, 1} <= {r["o_orderkey"] for r in rows}
+    assert kept < all_chunks(out)
 
 
 def test_column_projection(spark, orders_blobs):

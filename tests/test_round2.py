@@ -14,9 +14,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pyspark.sql.datasource import (EqualTo, GreaterThanOrEqual,
+                                    LessThanOrEqual)
+
 from parquet_go_spark.codecs import bloom as bloomlib
 from parquet_go_spark.codecs.kinds import Kind
 from parquet_go_spark.plans import pipeline
+from tests.colcodec_read import all_chunks, direct_read, same_rows, spark_where
 
 
 # ---------- ADVICE fixes ----------
@@ -44,16 +48,21 @@ def test_compact_refuses_in_place():
 def test_prune_non_ascii_strings(spark):
     # ' ' encodes as 0xC2 0xA0; latin-1 stat storage must not leak
     # into the comparison — probing the exact value must keep its chunk
-    rows = [("r", i, f" nbsp-{i:03d}") for i in range(50)]
-    rows += [("r", 100 + i, f"zé-{i:03d}") for i in range(50)]
+    # one chunk per value family, so the probe's chunk is the one that
+    # must survive and the other one is refuted
+    rows = [("a", i, f" nbsp-{i:03d}") for i in range(50)]
+    rows += [("b", 100 + i, f"zé-{i:03d}") for i in range(50)]
     df = spark.createDataFrame(rows, "repo string, k bigint, s string")
     out = tempfile.mkdtemp(prefix="colcodec_nonascii_")
     pipeline.encode_table(spark, df, out, repo_col="repo", salt_cols=["k"],
                           sort_cols=["k"], resume=False)
     probe = " nbsp-007"
-    got = pipeline.pruned_decode(spark, out, "s", lo=probe, hi=probe)
-    assert got.count() == 1
-    assert got.head()["k"] == 7
+    got = spark_where(spark, out, F.col("s") == probe)
+    assert same_rows(got, df.where(F.col("s") == probe))
+    assert [r["k"] for r in got.collect()] == [7]
+    rows, kept = direct_read(out, [EqualTo(("s",), probe)])
+    assert 7 in {r["k"] for r in rows}
+    assert kept < all_chunks(out)
 
 
 def test_prune_large_int64(spark):
@@ -64,8 +73,11 @@ def test_prune_large_int64(spark):
     out = tempfile.mkdtemp(prefix="colcodec_bigint_")
     pipeline.encode_table(spark, df, out, repo_col="repo", salt_cols=["k"],
                           sort_cols=["k"], resume=False)
-    got = pipeline.pruned_decode(spark, out, "k", lo=base + 1, hi=base + 1)
+    got = spark_where(spark, out, F.col("k") == base + 1)
+    assert same_rows(got, df.where(F.col("k") == base + 1))
     assert got.count() == 1
+    rows, _ = direct_read(out, [EqualTo(("k",), base + 1)])
+    assert base + 1 in {r["k"] for r in rows}
 
 
 def test_prune_null_bounds_kept(spark):
@@ -77,8 +89,13 @@ def test_prune_null_bounds_kept(spark):
     out = tempfile.mkdtemp(prefix="colcodec_ffbin_")
     pipeline.encode_table(spark, df, out, repo_col="repo", salt_cols=["k"],
                           sort_cols=["k"], resume=False)
-    got = pipeline.pruned_decode(spark, out, "b", lo=bytes([0xFE]))
+    cond = F.col("b") >= F.lit(bytes([0xFE]))
+    got = spark_where(spark, out, cond)
+    assert same_rows(got, df.where(cond))
     assert got.count() == 5  # the all-0xFF rows survive pruning
+    rows, _ = direct_read(out, [GreaterThanOrEqual(("b",), bytes([0xFE]))])
+    assert sorted(r["k"] for r in rows if r["b"] >= bytes([0xFE])) == [
+        0, 1, 2, 3, 4]
 
 
 # ---------- decimal ----------
@@ -131,8 +148,13 @@ def test_decimal_pruning(spark):
     out = tempfile.mkdtemp(prefix="colcodec_decprune_")
     pipeline.encode_table(spark, df, out, repo_col="repo", salt_cols=["k"],
                           sort_cols=["k"], resume=False)
-    got = pipeline.pruned_decode(spark, out, "d", lo="7.25", hi="9.25")
+    lo, hi = Decimal("7.25"), Decimal("9.25")
+    got = spark_where(spark, out, F.col("d").between(lo, hi))
+    assert same_rows(got, df.where(F.col("d").between(lo, hi)))
     assert got.count() == 3
+    rows, _ = direct_read(out, [GreaterThanOrEqual(("d",), lo),
+                                LessThanOrEqual(("d",), hi)])
+    assert {7, 8, 9} <= {r["k"] for r in rows}
 
 
 # ---------- array<string> + struct ----------
@@ -285,15 +307,6 @@ def test_decode_kernel_merges_split_chunks():
 
 # ---------- range-ordered chunk layout ----------
 
-def _chunks_kept(spark, out, column, lo, hi):
-    m = pipeline.manifest(spark, out).where(
-        (F.col("column") == column) & (F.col("stream") == "values")
-    )
-    mn = F.col("min_val").cast("bigint")
-    mx = F.col("max_val").cast("bigint")
-    return m.where((mx >= lo) & (mn <= hi)).select("chunk_id").distinct().count()
-
-
 def test_range_layout_prunes_more_than_hash(spark):
     rows = [("r", i) for i in range(20000)]
     df = spark.createDataFrame(rows, "repo string, k bigint").select(
@@ -307,20 +320,21 @@ def test_range_layout_prunes_more_than_hash(spark):
     pipeline.encode_table(spark, df, out_h, layout="hash", **kw)
     pipeline.encode_table(spark, df, out_r, layout="range", **kw)
 
-    total = pipeline.manifest(spark, out_r).where(
-        (F.col("column") == "k") & (F.col("stream") == "values")
-    ).select("chunk_id").distinct().count()
-    assert total >= 8  # enough buckets for pruning to matter
+    assert len(all_chunks(out_r)) >= 8  # enough buckets for pruning to matter
 
-    kept_h = _chunks_kept(spark, out_h, "k", 5000, 5400)
-    kept_r = _chunks_kept(spark, out_r, "k", 5000, 5400)
+    k_range = [GreaterThanOrEqual(("k",), 5000), LessThanOrEqual(("k",), 5400)]
+    _, kept_h = direct_read(out_h, k_range)
+    rows, kept_r = direct_read(out_r, k_range)
     # hash interleaving makes every chunk span ~the full key range;
     # range buckets are disjoint, so strictly fewer chunks survive
-    assert kept_r < kept_h
+    assert len(kept_r) < len(kept_h)
+    assert {r["k"] for r in rows} >= set(range(5000, 5401))
 
-    # and the range table still round-trips + prunes correctly
-    got = pipeline.pruned_decode(spark, out_r, "k", lo=5000, hi=5400)
+    # and the range table's Spark read is exact
+    cond = F.col("k").between(5000, 5400)
+    got = spark_where(spark, out_r, cond)
     assert got.count() == 401
+    assert same_rows(got, df.where(cond))
 
 
 def test_range_layout_resume_reuses_bounds(spark):

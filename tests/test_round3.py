@@ -13,9 +13,12 @@ import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (EqualTo, GreaterThanOrEqual,
+                                    LessThanOrEqual)
 
 from parquet_go_spark.codecs import chunk as chunklib
 from parquet_go_spark.plans import pipeline
+from tests.colcodec_read import all_chunks, direct_read, same_rows, spark_where
 
 
 def _mk_df(spark, n=2000, repos=("alpha", "beta")):
@@ -392,10 +395,13 @@ def test_uuid_binary_upgrades_to_flba(spark, tmp_path):
     got = {r["k"]: r["uid"] for r in d.collect()}
     assert got == src
 
-    # bloom point lookup probes in logical byte-array space
+    # the pruned read's bloom probe hashes in logical byte-array space
     probe = src[123]
-    hits = pipeline.bloom_point_decode(spark, out, "uid", probe).collect()
+    hits = spark_where(spark, out, F.col("uid") == F.lit(probe)).collect()
     assert [r["k"] for r in hits] == [123]
+    rows, kept = direct_read(out, [EqualTo(("uid",), probe)])
+    assert 123 in {r["k"] for r in rows}
+    assert kept < all_chunks(out)  # min/max span everything: the bloom pruned
 
 
 def test_array_struct_roundtrip(spark, tmp_path):
@@ -477,15 +483,6 @@ def test_compact_array_struct_empty_fill(spark, tmp_path):
     assert rows[300] == []
 
 
-def _kept(spark, out, column, lo, hi):
-    m = pipeline.manifest(spark, out).where(
-        (F.col("column") == column) & (F.col("stream") == "values")
-    )
-    mn, mx = F.col("min_val").cast("bigint"), F.col("max_val").cast("bigint")
-    return m.where((mx >= lo) & (mn <= hi)).select(
-        "chunk_id").distinct().count()
-
-
 def _compound_df(spark, n=24000):
     return spark.range(n).select(
         F.lit("r").alias("repo"),
@@ -522,12 +519,15 @@ def test_compound_range_layout(spark, tmp_path):
     assert groups_s <= 5 < groups_c
 
     # secondary pruning: a narrow k probe keeps a strict subset of chunks
-    total_c = man_c.select("chunk_id").distinct().count()
-    kept = _kept(spark, out_c, "k", 5000, 5400)
-    assert kept < total_c
+    rows, kept = direct_read(out_c, [GreaterThanOrEqual(("k",), 5000),
+                                     LessThanOrEqual(("k",), 5400)])
+    assert kept < all_chunks(out_c)
+    assert {r["k"] for r in rows} >= set(range(5000, 5401))
 
-    got = pipeline.pruned_decode(spark, out_c, "k", lo=5000, hi=5400)
+    cond = F.col("k").between(5000, 5400)
+    got = spark_where(spark, out_c, cond)
     assert got.count() == 401
+    assert same_rows(got, df.where(cond))
 
     # full round trip
     dec = pipeline.decode_table(spark, out_c)
@@ -930,7 +930,11 @@ def test_streaming_resume_recognizes_old_split_id_layout(spark, tmp_path):
     assert pipeline.manifest(spark, out).count() == before
 
 
-def test_bloom_point_decode_on_list_column(spark, tmp_path):
+def test_ds_array_contains_is_exact(spark, tmp_path):
+    """array<scalar> columns: the encoder writes element blooms, but no
+    filter on an array column is pruned (Spark 4.1 pushes no
+    array_contains to a Python data source), so every chunk is read and
+    Spark's exact filter gives the answer."""
     df = spark.range(500).select(
         (F.col("id") % 4).cast("string").alias("repo"),
         F.col("id").alias("k"),
@@ -939,8 +943,12 @@ def test_bloom_point_decode_on_list_column(spark, tmp_path):
     out = str(tmp_path / "lb")
     pipeline.encode_table(spark, df, out, repo_col="repo",
                           salt_cols=["k"], sort_cols=["k"], resume=False)
-    got = pipeline.bloom_point_decode(spark, out, "vals", 1123).collect()
-    assert [r.k for r in got] == [123]
+    cond = F.array_contains("vals", 1123)
+    got = spark_where(spark, out, cond)
+    assert [r.k for r in got.collect()] == [123]
+    assert same_rows(got, df.where(cond))
+    _, kept = direct_read(out, [EqualTo(("vals",), [123, 1123])])
+    assert kept == all_chunks(out)
 
 
 def test_fsst_cache_evicts_one_not_all():

@@ -790,8 +790,15 @@ def test_ivf_kernel_tolerates_null_and_ragged_vectors(spark):
     assert len(trained) == 4
 
 
-def test_bloom_point_decode_inexact_decimal_returns_empty(spark, tmp_path):
+def test_ds_inexact_decimal_eq_returns_empty(spark, tmp_path):
+    """A literal finer than the column's scale equals no stored value:
+    the pruned read returns no rows under the full schema, and the prune
+    rule keeps every chunk rather than round the literal."""
     from decimal import Decimal
+
+    from pyspark.sql.datasource import EqualTo
+
+    from tests.colcodec_read import all_chunks, direct_read, spark_where
 
     d = str(tmp_path / "bpstore")
     src = spark.createDataFrame(
@@ -800,9 +807,11 @@ def test_bloom_point_decode_inexact_decimal_returns_empty(spark, tmp_path):
              (F.col("k") / 4).cast("decimal(12,2)").alias("price"))
     pipeline.encode_table(spark, src, d, repo_col="grp", salt_cols=["k"],
                           sort_cols=["k"], resume=False)
-    out = pipeline.bloom_point_decode(spark, d, "price", Decimal("7.251"))
+    out = spark_where(spark, d, F.col("price") == Decimal("7.251"))
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["k", "grp", "price"]
+    _, kept = direct_read(d, [EqualTo(("price",), Decimal("7.251"))])
+    assert kept == all_chunks(d)
 
 
 def test_translate_filters_anchors_naive_timestamps():

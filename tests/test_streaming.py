@@ -1,16 +1,17 @@
-"""Structured Streaming ingest: file-source micro-batches → foreachBatch
-encode → decoded table equals the static union of all input files."""
+"""Structured Streaming ingest: file-source micro-batches →
+writeStream.format("colcodec") → decoded table equals the static union
+of all input files."""
 
 from __future__ import annotations
 
+import glob
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from parquet_go_spark.plans import pipeline
+from parquet_go_spark.sources import datasource
 from parquet_go_spark.sources.repogen import repos_table
-from parquet_go_spark.streaming.incremental import stream_encode
 
 
 def test_stream_encode_matches_batch(spark, tmp_path_factory):
@@ -21,27 +22,23 @@ def test_stream_encode_matches_batch(spark, tmp_path_factory):
     os.makedirs(src_dir)
 
     full = repos_table(spark, 3000, seed=11, n_repos=30).cache()
-    # three input files → three-ish micro-batches
+    # three input files → three micro-batches
     for i in range(3):
         full.where(F.pmod(F.xxhash64("path", "commit"), F.lit(3)) == i).coalesce(1).write.parquet(
             f"{src_dir}/slice{i}", mode="overwrite"
         )
 
-    schema = full.schema
-    stream = (
-        spark.readStream.schema(schema)
+    datasource.register(spark)
+    q = (
+        spark.readStream.schema(full.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/slice*")
-    )
-    q = stream_encode(
-        stream, out, ckpt,
-        salt_cols=["path", "commit"], sort_cols=["path", "commit"],
-        trigger_once=True,
+        .writeStream.format("colcodec").option("repo_col", "repo")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start(out)
     )
     q.awaitTermination(300)
 
+    assert len(glob.glob(f"{out}/_q*-b*.done")) == 3  # one per batch
     res = pipeline.verify_roundtrip(spark, full, out)
     assert res["ok"], res
-    # chunk ids carry batch suffixes (row-group-per-flush analog)
-    m = pipeline.manifest(spark, out)
-    assert m.where(F.col("chunk_id").contains("@b")).count() == m.count()
