@@ -7,12 +7,15 @@ Usage (cluster or local):
       --output /path/to/blobs \
       --repo-col repo --salt-cols path,commit --sort-cols path,commit \
       [--target-chunk-mb 8] [--compression zstd|snappy|gzip|lz4|brotli] \\
-      [--layout hash|range] [--size-mode metadata|exact|sample] \\
-      [--no-resume] [--verify]
+      [--layout hash|range] [--no-resume] [--verify]
 
   # or generate the deterministic synthetic input first:
   spark-submit ... jobs/encode_job.py --generate-rows 1000000 \
       --output /path/to/blobs
+
+Chunk sizes are planned from the input's parquet footers (a repo-column
+count scan, never a second data scan); an input without footers falls
+back to one exact size-sum scan.
 
 The job is idempotent: completed (repo, bucket) chunks recorded in the
 manifest are skipped on re-run (broadcast left-anti join), so a killed
@@ -41,18 +44,12 @@ def parse_args(argv):
     p.add_argument("--salt-cols", default="path,commit")
     p.add_argument("--sort-cols", default="path,commit")
     p.add_argument("--target-chunk-mb", type=int, default=8)
-    p.add_argument("--zstd", action="store_true",
-                   help="outer zstd compression of chunk payloads")
     p.add_argument("--compression", default=None,
                    choices=["zstd", "snappy", "gzip", "lz4", "brotli"],
-                   help="outer compression codec (supersedes --zstd)")
+                   help="outer compression codec of chunk payloads")
     p.add_argument("--layout", default="hash", choices=["hash", "range"],
                    help="range = sort-key quantile buckets with disjoint "
                         "chunk key ranges (min/max pruning effective)")
-    p.add_argument("--size-mode", default=None,
-                   choices=["metadata", "exact", "sample"],
-                   help="chunk-size planning source (default: parquet "
-                        "footer metadata when available, else exact)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--verify", action="store_true",
                    help="decode everything back and check per-row sha256")
@@ -96,7 +93,7 @@ def main(argv=None) -> int:
             repo_col=args.repo_col,
             salt_cols=args.salt_cols.split(","),
             sort_cols=args.sort_cols.split(",") if args.sort_cols else None,
-            compression=args.compression or ("zstd" if args.zstd else None),
+            compression=args.compression,
             target_chunk_bytes=args.target_chunk_mb << 20,
             resume=not args.no_resume,
         )
@@ -129,10 +126,8 @@ def main(argv=None) -> int:
         salt_cols=args.salt_cols.split(","),
         sort_cols=args.sort_cols.split(",") if args.sort_cols else [],
         target_chunk_bytes=args.target_chunk_mb << 20,
-        zstd=args.zstd,
         compression=args.compression,
         layout=args.layout,
-        size_mode=args.size_mode,
         resume=not args.no_resume,
     )
     stats["encode_sec"] = round(time.time() - t0, 2)

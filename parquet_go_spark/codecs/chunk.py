@@ -157,7 +157,6 @@ def encode_chunk(
     *,
     dict_wrap: bool = False,
     flba_size: int | None = None,
-    zstd: bool = False,
     compression: str | None = None,
     validity: np.ndarray | None = None,
     capture: dict | None = None,
@@ -177,8 +176,6 @@ def encode_chunk(
     during encoding — currently `uniques` for dict-wrapped chunks, so
     callers can build bloom filters from the dictionary for free (the
     writer.go:2089-2095 analog) instead of re-hashing every value."""
-    if compression is None and zstd:
-        compression = "zstd"
     if compression is not None and compression not in COMPRESSION_IDS:
         raise ValueError(f"unknown outer compression {compression!r}")
     if kind == Kind.BYTE_ARRAY and not isinstance(values, ByteArrays):

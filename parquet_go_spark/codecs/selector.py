@@ -185,7 +185,7 @@ def _trial_slice(values, kind: int):
 
 
 def select_and_encode(
-    values, kind: int, *, flba_size: int | None = None, zstd: bool = False,
+    values, kind: int, *, flba_size: int | None = None,
     compression: str | None = None,
     validity: np.ndarray | None = None,
     fsst_state: dict | None = None,
@@ -211,8 +211,6 @@ def select_and_encode(
     in every blob) and resume/replay dedupe on chunk ids, never on
     blob identity. The selector still guards ratio: a stale table that
     compresses poorly simply loses the trial to DELTA_LENGTH/dict."""
-    if compression is None and zstd:
-        compression = "zstd"
     stats = column_stats(values, kind)
     # nulls: candidates compete on the null-stripped values (the validity
     # bitmap costs the same under every codec); the winner re-encodes

@@ -398,15 +398,13 @@ def _export_fn(columns, out_dir: str, compression, target_bytes: int,
                if sort_cols else None)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        groups: dict[tuple[str, int], list[pa.RecordBatch]] = {}
-        sizes: dict[tuple[str, int], int] = {}
         parts: dict[tuple[str, int], int] = {}
         rows = []
-
-        def flush(key):
+        # pipeline._group_slices: one file per flush, and a group rolls to
+        # a new part file at ~2x target, the encode kernel's bound
+        for key, tbl, _ in pipeline._group_slices(batches, col_names,
+                                                  2 * target_bytes):
             repo, bucket = key
-            tbl = pa.Table.from_batches(groups.pop(key))
-            sizes.pop(key)
             part = parts.get(key, 0)
             parts[key] = part + 1
             name = _file_name(repo, bucket, part)
@@ -437,40 +435,6 @@ def _export_fn(columns, out_dir: str, compression, target_bytes: int,
                 "file": name, "repo": repo, "bucket": bucket, "part": part,
                 "n_rows": info["n_rows"], "file_bytes": info["file_bytes"],
             })
-
-        # vectorized grouping, same pattern as pipeline._encode_stream_fn:
-        # dictionary-encode repo, combine with bucket into one int64 key,
-        # argsort + boundary detection — no per-row Python
-        import pyarrow.compute as pc
-        data_cols = [c for c, _ in columns]
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            dictized = pc.dictionary_encode(batch.column("__repo"))
-            rcodes = np.asarray(dictized.indices).astype(np.int64)
-            rdict = dictized.dictionary
-            buckets = np.asarray(batch.column("__bucket")).astype(np.int64)
-            key_code = (rcodes << 32) | buckets
-            order = np.argsort(key_code, kind="stable")
-            sorted_keys = key_code[order]
-            change = np.ones(n, dtype=bool)
-            change[1:] = sorted_keys[1:] != sorted_keys[:-1]
-            starts = np.flatnonzero(change)
-            data = batch.select(data_cols).take(pa.array(order))
-            for i, s in enumerate(starts):
-                e = starts[i + 1] if i + 1 < len(starts) else n
-                code = sorted_keys[s]
-                k = (rdict[int(code >> 32)].as_py(), int(code & 0xFFFFFFFF))
-                sl = data.slice(s, e - s)
-                groups.setdefault(k, []).append(sl)
-                sizes[k] = sizes.get(k, 0) + sl.nbytes
-                # size-triggered roll: a task never buffers more than
-                # ~2x target per group (same bound as the encode kernel)
-                if sizes[k] >= 2 * target_bytes:
-                    flush(k)
-        for key in list(groups):
-            flush(key)
         if rows:
             yield pa.RecordBatch.from_pylist(rows, schema=_SUMMARY_ARROW)
 
@@ -487,7 +451,6 @@ def export_parquet(
     compression: str | None = None,
     target_chunk_bytes: int = pipeline.TARGET_CHUNK_BYTES,
     page_rows: int = 65536,
-    size_mode: str | None = None,
     resume: bool = False,
     sort_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -533,8 +496,7 @@ def export_parquet(
                 "top-level map<scalar,scalar>)")
     os.makedirs(out_dir, exist_ok=True)
     salt_cols = salt_cols or [c for c, _ in columns if c != repo_col][:2]
-    keyed = pipeline.plan_chunks(df, repo_col, salt_cols,
-                                 target_chunk_bytes, size_mode=size_mode)
+    keyed = pipeline.plan_chunks(df, repo_col, salt_cols, target_chunk_bytes)
     mpath = os.path.join(out_dir, "_export_manifest")
     if resume and pipeline._table_exists(mpath):
         done = spark.read.parquet(mpath).select("repo", "bucket").distinct()

@@ -484,27 +484,31 @@ class ColcodecDataSource(DataSource):
     def streamReader(self, schema: StructType):  # noqa: N802
         return ColcodecStreamReader(self.options["path"], self._cols())
 
-    def writer(self, schema: StructType, overwrite: bool):
-        import os
-        import uuid
-
+    def _writer_args(self, schema: StructType, verb: str) -> tuple:
+        """(path, cols, repo_col, compression, target_chunk_bytes) from
+        the write options, validated on the driver before any task."""
         path = self.options.get("path")
         if not path:
-            raise ValueError("colcodec: .save(<blob store path>) required")
+            raise ValueError(f"colcodec: .{verb}(<blob store path>) required")
         cols = [(f.name, f.dataType.simpleString()) for f in schema.fields]
         repo_col = self.options.get("repo_col", cols[0][0])
         if repo_col not in dict(cols):
             raise ValueError(f"colcodec: repo_col {repo_col!r} not in schema")
-        w = ColcodecArrowWriter(
-            path, cols, repo_col,
-            self.options.get("compression"),
-            int(self.options.get("target_chunk_bytes", 8 << 20)),
-            overwrite,
-            uuid.uuid4().hex[:12],  # per-JOB token: chunk-id namespace
-            # + private staging dir, so concurrent/successive appends
-            # never collide
-        )
-        if os.path.isdir(path):
+        target = int(self.options.get("target_chunk_bytes", 8 << 20))
+        if target <= 0:
+            raise ValueError(
+                f"colcodec: target_chunk_bytes must be > 0, got {target}")
+        return path, cols, repo_col, self.options.get("compression"), target
+
+    def writer(self, schema: StructType, overwrite: bool):
+        import os
+        import uuid
+
+        args = self._writer_args(schema, "save")
+        # per-JOB token: chunk-id namespace + private staging dir, so
+        # concurrent/successive appends never collide
+        w = ColcodecArrowWriter(*args, overwrite, uuid.uuid4().hex[:12])
+        if os.path.isdir(w._path):
             w._check_schema()  # fail fast at plan time, before any task
         return w
 
@@ -516,22 +520,12 @@ class ColcodecDataSource(DataSource):
             raise ValueError(
                 "colcodec sink supports append output mode only "
                 "(complete/truncate would rewrite the store every batch)")
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("colcodec: .start(<blob store path>) required")
-        cols = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-        repo_col = self.options.get("repo_col", cols[0][0])
-        if repo_col not in dict(cols):
-            raise ValueError(f"colcodec: repo_col {repo_col!r} not in schema")
+        args = self._writer_args(schema, "start")
         w = ColcodecStreamWriter(
-            path, cols, repo_col,
-            self.options.get("compression"),
-            int(self.options.get("target_chunk_bytes", 8 << 20)),
-            overwrite,
-            uuid.uuid4().hex[:12],
+            *args, overwrite, uuid.uuid4().hex[:12],
             sink_id=self.options.get("sink_id", "q0"),
         )
-        if os.path.isdir(path):
+        if os.path.isdir(w._path):
             w._check_schema()  # fail fast at plan time, before any batch
         return w
 
@@ -587,10 +581,11 @@ class _CommitLock:
 class ColcodecArrowWriter(DataSourceArrowWriter):
     """df.write.format("colcodec").save(store) — the DIRECT write path.
 
-    Each task encodes its own partition: rows are grouped by the repo
-    column with a size-triggered flush (a task holds at most one
-    target-sized buffer per repo — the same bounded-memory profile as
-    the pipeline's encode kernel), chunks stream into a staged parquet
+    Each task encodes its own partition through the writers' shared
+    group-and-flush loop (pipeline._group_slices, keyed on the repo
+    column with bucket 0): a repo's rows flush as one chunk whenever its
+    buffer reaches target_chunk_bytes, so a task holds at most one
+    target-sized buffer per repo. Chunks stream into a staged parquet
     file, and the driver-side commit writes the schema sidecar FIRST and
     then atomically renames staged files into the store — a crash at any
     point leaves either a fully-valid store or a job-private
@@ -598,8 +593,7 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
     orphaned data files without a sidecar). Chunk ids embed a per-job
     token, so appends from different jobs can never collide when decode
     paths group blob rows by chunk_id across files. NULL repo values
-    group under the key "None" (the grouping key only drives chunk
-    placement and naming — the encoded columns keep the true values).
+    group under "None", the planners' rule (pipeline._repo_key).
     Chunk placement follows the DataFrame's own partitioning; for
     planned/salted/range layouts and manifest resume use
     pipeline.encode_table (this path trades planning for plain
@@ -636,14 +630,20 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
 
         writer = None
         fsst_cache: dict = {}
-        bufs: dict[str, list] = {}
-        sizes: dict[str, int] = {}
         seqs: dict[str, int] = {}
+        data_cols = [c for c, _ in self._cols]
 
-        def flush(repo: str):
-            nonlocal writer
-            tbl = pa.Table.from_batches(bufs.pop(repo))
-            sizes.pop(repo)
+        def keyed(batches):
+            for batch in batches:
+                repos = pc.fill_null(
+                    pc.cast(batch.column(self._repo_col), pa.string()),
+                    "None")  # pipeline._repo_key's rule
+                zeros = pa.array(np.zeros(batch.num_rows, np.int32))
+                yield (batch.append_column("__repo", repos)
+                       .append_column("__bucket", zeros))
+
+        for (repo, _), tbl, _ in pipeline._group_slices(
+                keyed(iterator), data_cols, self._target):
             seq = seqs.get(repo, 0)
             seqs[repo] = seq + 1
             rec = pipeline._encode_one_chunk(
@@ -653,36 +653,6 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
                 writer = pq.ParquetWriter(
                     staged, pipeline._BLOB_ARROW_SCHEMA)
             writer.write_table(pa.Table.from_batches([rec]))
-
-        for batch in iterator:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            # single-pass grouping (the encode kernel's idiom): one
-            # dictionary-encode + one stable argsort per batch, then
-            # contiguous slices per repo — not one filter scan per
-            # distinct value. NULLs group under "None".
-            repos = pc.fill_null(
-                pc.cast(batch.column(self._repo_col), pa.string()), "None")
-            dictized = pc.dictionary_encode(repos)
-            rcodes = np.asarray(dictized.indices).astype(np.int64)
-            rdict = dictized.dictionary
-            order = np.argsort(rcodes, kind="stable")
-            sorted_codes = rcodes[order]
-            change = np.ones(n, dtype=bool)
-            change[1:] = sorted_codes[1:] != sorted_codes[:-1]
-            starts = np.flatnonzero(change)
-            data = batch.take(pa.array(order))
-            for i, st in enumerate(starts):
-                e = starts[i + 1] if i + 1 < len(starts) else n
-                repo = rdict[int(sorted_codes[st])].as_py()
-                sl = data.slice(st, e - st)
-                bufs.setdefault(repo, []).append(sl)
-                sizes[repo] = sizes.get(repo, 0) + sl.nbytes
-                if sizes[repo] >= self._target:
-                    flush(repo)
-        for repo in list(bufs):
-            flush(repo)
         if writer is None:
             # Spark 4.1 rejects a None commit message despite the API
             # docstring — return an empty marker for empty partitions

@@ -62,7 +62,8 @@ def test_chunk_boolean_rle():
 
 def test_chunk_double_bss_zstd():
     a = np.linspace(0, 1, 500)
-    blob = chunklib.encode_chunk(a, Kind.DOUBLE, Codec.BYTE_STREAM_SPLIT, zstd=True)
+    blob = chunklib.encode_chunk(a, Kind.DOUBLE, Codec.BYTE_STREAM_SPLIT,
+                               compression="zstd")
     got, meta = chunklib.decode_chunk(blob)
     assert meta["zstd"]
     assert np.array_equal(got, a)

@@ -342,6 +342,36 @@ def test_write_null_repo_rows_survive(spark, tmp_path):
     assert sorted(map(str, back.collect())) == sorted(map(str, src.collect()))
 
 
+def test_write_small_target_flushes_chunks(spark, tmp_path):
+    """A repo larger than target_chunk_bytes flushes into several chunks
+    of one task, with unique ids, and still round-trips; a target of 0
+    is rejected before any task runs."""
+    datasource.register(spark)
+    d = str(tmp_path / "wflush")
+    src = spark.createDataFrame(
+        [(i, "g0", f"text-{i:06d}-" + "y" * 100) for i in range(3000)],
+        "k bigint, grp string, txt string").coalesce(1)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "500")  # the task sees six Arrow batches
+    try:
+        src.write.format("colcodec").option("repo_col", "grp") \
+           .option("target_chunk_bytes", str(32 << 10)).mode("append") \
+           .save(d)
+    finally:
+        spark.conf.set(conf, old)
+    man = pipeline.manifest(spark, d).where(F.col("column") == "k")
+    ids = [r["chunk_id"] for r in man.select("chunk_id").collect()]
+    assert len(ids) >= 2
+    assert len(set(ids)) == len(ids)
+    back = spark.read.format("colcodec").load(d)
+    assert sorted(map(str, back.collect())) == sorted(map(str, src.collect()))
+    with pytest.raises(Exception, match="target_chunk_bytes must be > 0"):
+        src.write.format("colcodec").option("repo_col", "grp") \
+           .option("target_chunk_bytes", "0").mode("append") \
+           .save(str(tmp_path / "wzero"))
+
+
 def test_write_appends_decode_through_pipeline(spark, tmp_path):
     """Two separate append jobs must produce globally-unique chunk ids:
     pipeline.decode_table groups blob rows by chunk_id ACROSS files, so

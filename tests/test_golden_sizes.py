@@ -100,7 +100,8 @@ def test_golden_reencode(path, col_idx, kind, compressed, limit):
     else:
         values = col.to_numpy(zero_copy_only=False).astype(_NP_BY_KIND[kind])
 
-    blob, info = selector.select_and_encode(values, kind, zstd=compressed)
+    blob, info = selector.select_and_encode(
+        values, kind, compression="zstd" if compressed else None)
     decoded, meta = chunklib.decode_chunk(blob)
 
     if kind == Kind.BYTE_ARRAY:

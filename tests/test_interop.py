@@ -263,8 +263,7 @@ def test_export_rolls_oversized_groups(spark, tmp_path):
                            F.col("id").cast("string")).alias("body")))
     out = str(tmp_path / "roll")
     summary = export_parquet(spark, df, out, salt_cols=["k"],
-                             target_chunk_bytes=1 << 20,
-                             size_mode="exact")
+                             target_chunk_bytes=1 << 20)
     files = summary.collect()
     assert sum(r.n_rows for r in files) == 4000
     back = spark.read.parquet(out + "/*.parquet")
@@ -511,7 +510,7 @@ def test_sorted_export_declares_sorting_columns(spark, tmp_path):
                   F.col("id").alias("row")))
     out = str(tmp_path / "sorted")
     export_parquet(spark, df, out, salt_cols=["row"], sort_cols=["k"],
-                   target_chunk_bytes=1 << 20, size_mode="exact")
+                   target_chunk_bytes=1 << 20)
     import glob
     files = sorted(glob.glob(out + "/*.parquet"))
     assert files
@@ -639,8 +638,7 @@ def test_compact_inherits_compression_and_sort(spark, tmp_path):
                   F.col("id").alias("row")))
     out = str(tmp_path / "inherit")
     export_parquet(spark, df, out, salt_cols=["row"], sort_cols=["k"],
-                   compression="zstd", target_chunk_bytes=1 << 20,
-                   size_mode="exact")
+                   compression="zstd", target_chunk_bytes=1 << 20)
     done = compact_export(spark, out, small_bytes=4 << 20,
                           target_bytes=1 << 20)
     assert done.count() > 0

@@ -355,8 +355,8 @@ def test_range_layout_resume_reuses_bounds(spark):
 # ---------- metadata-based planning + kernel-side splitting ----------
 
 def test_metadata_sizing_no_second_scan(spark, tmp_path_factory):
-    """size_mode='metadata' plans from parquet footers + a repo-only
-    count scan; the resulting table still round-trips and is chunked."""
+    """A parquet input plans from its footers + a repo-only count scan;
+    the resulting table still round-trips and is chunked."""
     src = str(tmp_path_factory.mktemp("meta_src") / "t.parquet")
     # distinct-per-row content: parquet footers record ENCODED page bytes,
     # so repetitive data would understate logical size — the estimator is
@@ -376,17 +376,11 @@ def test_metadata_sizing_no_second_scan(spark, tmp_path_factory):
     out = tempfile.mkdtemp(prefix="colcodec_meta_")
     m = pipeline.encode_table(
         spark, df, out, repo_col="repo", salt_cols=["k"], sort_cols=["k"],
-        target_chunk_bytes=1 << 20, size_mode="metadata", resume=False,
+        target_chunk_bytes=1 << 20, resume=False,
     )
     assert m["chunks"] >= 4
     v = pipeline.verify_roundtrip(spark, df, out, content_col="content")
     assert v["ok"], v
-
-
-def test_metadata_sizing_unavailable_raises(spark):
-    df = spark.createDataFrame([("r", 1)], "repo string, k bigint")
-    with pytest.raises(ValueError, match="no parquet footer stats"):
-        pipeline.plan_chunks(df, "repo", ["k"], size_mode="metadata")
 
 
 def test_kernel_splits_oversized_groups(spark, tmp_path_factory):
@@ -402,7 +396,7 @@ def test_kernel_splits_oversized_groups(spark, tmp_path_factory):
     out = tempfile.mkdtemp(prefix="colcodec_split_")
     pipeline.encode_table(
         spark, df, out, repo_col="repo", salt_cols=["k"], sort_cols=["k"],
-        target_chunk_bytes=256 << 10, size_mode="metadata", resume=False,
+        target_chunk_bytes=256 << 10, resume=False,
     )
     m = pipeline.manifest(spark, out)
     split_ids = [r["chunk_id"] for r in
@@ -410,6 +404,14 @@ def test_kernel_splits_oversized_groups(spark, tmp_path_factory):
     assert split_ids, "oversized group was not split"
     v = pipeline.verify_roundtrip(spark, df, out, content_col="content")
     assert v["ok"], v
+    # resume: split sub-chunks count as done under their (repo, bucket)
+    n_blobs = m.count()
+    res = pipeline.encode_table(
+        spark, df, out, repo_col="repo", salt_cols=["k"], sort_cols=["k"],
+        target_chunk_bytes=256 << 10, resume=True,
+    )
+    assert res["skipped_chunks"] > 0
+    assert pipeline.manifest(spark, out).count() == n_blobs
 
 
 # ---------- outer compression codecs beyond zstd ----------
@@ -432,7 +434,8 @@ def test_outer_compression_legacy_zstd_flag():
     from parquet_go_spark.codecs.kinds import Codec
 
     vals = np.arange(100, dtype=np.int32)
-    blob = chunklib.encode_chunk(vals, Kind.INT32, Codec.PLAIN, zstd=True)
+    blob = chunklib.encode_chunk(vals, Kind.INT32, Codec.PLAIN,
+                                 compression="zstd")
     dec, _ = chunklib.decode_chunk(blob)
     assert np.array_equal(dec, vals)
 

@@ -34,37 +34,6 @@ def _mk_df(spark, n=2000, repos=("alpha", "beta")):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE high: split-chunk ids must still end with the batch suffix so a
-# replayed micro-batch's resume filter recognizes them as done.
-# ---------------------------------------------------------------------------
-
-def test_split_chunk_ids_resume_with_suffix(spark):
-    # craft rows so the 1% hash-sample sees only tiny rows: planning
-    # under-buckets deterministically and the kernel MUST split groups
-    h = F.pmod(F.xxhash64("path"), F.lit(100))
-    df = spark.range(2000).select(
-        F.lit("solo").alias("repo"),
-        F.concat(F.lit("p/"), F.col("id")).alias("path"),
-        F.when(h == 0, F.lit("x"))
-        .otherwise(F.repeat(F.lit("y"), 2000)).alias("content"),
-    )
-    out = tempfile.mkdtemp(prefix="r3_split_resume_")
-    kw = dict(repo_col="repo", salt_cols=["path"], sort_cols=["path"],
-              target_chunk_bytes=64 << 10, chunk_suffix="@b7",
-              size_mode="sample")
-    pipeline.encode_table(spark, df, out, resume=True, **kw)
-    m1 = pipeline.manifest(spark, out)
-    ids = [r.chunk_id for r in m1.select("chunk_id").distinct().collect()]
-    assert all(i.endswith("@b7") for i in ids)
-    assert any("s" in i.split("#", 1)[1] for i in ids), "expected split chunks"
-    n1 = m1.count()
-    # replay the same micro-batch: every chunk must be recognized as done
-    res = pipeline.encode_table(spark, df, out, resume=True, **kw)
-    assert pipeline.manifest(spark, out).count() == n1, "replay duplicated blobs"
-    assert res["skipped_chunks"] > 0
-
-
-# ---------------------------------------------------------------------------
 # VERDICT #1: the encode kernel must flush groups while input is still
 # streaming in — never buffer a partition's whole share.
 # ---------------------------------------------------------------------------
@@ -120,6 +89,35 @@ def test_encode_kernel_flushes_before_input_exhausted():
                 vals, _ = chunklib.decode_chunk(rb.column("blob")[i].as_py())
                 got.extend(np.asarray(vals).tolist())
     assert sorted(got) == list(range(40 * 80))
+
+    # the shared helper itself, on interleaved groups: ~10 KB of "a" rows
+    # per batch flushes at 25 KB (after batch 3), while "b" buckets 0/1
+    # stay small; the slices of "a" after the flush start a new wave
+    def mixed():
+        for bi in range(5):
+            keys = [("a", 0)] * 10 + [("b", 0)] * 2 + [("b", 1)] * (bi > 0)
+            ids = np.arange(bi * 100, bi * 100 + len(keys), dtype=np.int64)
+            consumed["n"] = bi + 1
+            yield pa.record_batch({
+                "__repo": pa.array([r for r, _ in keys]),
+                "__bucket": pa.array([k for _, k in keys], pa.int32()),
+                "k": pa.array(ids),
+                "txt": pa.array(["x" * (1000 if r == "a" else 10)
+                                 for r, _ in keys]),
+            })
+        consumed["n"] = -1
+    waves = []
+    for key, tbl, final in pipeline._group_slices(mixed(), ["k", "txt"],
+                                                  25_000):
+        waves.append((key, final, consumed["n"], tbl.column("k").to_pylist()))
+        assert tbl.column_names == ["k", "txt"]
+    assert [(k, f) for k, f, _, _ in waves] == [
+        (("a", 0), False), (("b", 0), True), (("b", 1), True),
+        (("a", 0), True)]
+    assert waves[0][2] == 3  # yielded while batches 4-5 were unread
+    assert waves[0][3] == [b * 100 + i for b in range(3) for i in range(10)]
+    assert waves[3][3] == [b * 100 + i for b in (3, 4) for i in range(10)]
+    assert waves[2][3] == [b * 100 + 12 for b in range(1, 5)]
 
 
 def test_encode_kernel_small_group_single_chunk():
@@ -898,36 +896,6 @@ def test_manifest_reads_pre_round3_tables(spark, tmp_path):
     assert pipeline.manifest(spark, out).count() == before
     # decode still round-trips
     assert pipeline.decode_table(spark, out).count() == 300
-
-
-def test_streaming_resume_recognizes_old_split_id_layout(spark, tmp_path):
-    """Tables written when split tags followed the batch suffix
-    ('@b7s0') must still count as done on replay."""
-    import glob
-    import pyarrow.parquet as pq_
-    df = spark.range(200).select(
-        F.lit("r1").cast("string").alias("repo"),
-        F.col("id").alias("k"))
-    out = str(tmp_path / "ids")
-    pipeline.encode_table(spark, df, out, repo_col="repo",
-                          salt_cols=["k"], sort_cols=["k"],
-                          chunk_suffix="@b7", resume=False)
-    # rewrite ids to the OLD layout: tag after suffix
-    for f in glob.glob(out + "/*.parquet"):
-        t = pq_.read_table(f)
-        ids = [i.replace("@b7", "") + "@b7s0"
-               for i in t.column("chunk_id").to_pylist()]
-        t = t.set_column(t.schema.get_field_index("chunk_id"),
-                         "chunk_id", pa.array(ids))
-        pq_.write_table(t, f)
-    for crc in glob.glob(out + "/.*.crc"):
-        os.remove(crc)  # hadoop checksum sidecars of the rewritten files
-    before = pipeline.manifest(spark, out).count()
-    stats = pipeline.encode_table(spark, df, out, repo_col="repo",
-                                  salt_cols=["k"], sort_cols=["k"],
-                                  chunk_suffix="@b7", resume=True)
-    assert stats["skipped_chunks"] > 0
-    assert pipeline.manifest(spark, out).count() == before
 
 
 def test_ds_array_contains_is_exact(spark, tmp_path):
