@@ -534,13 +534,13 @@ def _rt_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _parquet_read_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-direction parquet (OpenFile analog, file.go:65-130): export
     orders with OUR writer, then decode the files back through OUR
-    pqreader kernels — distributed, one file per input slice, with the
-    projection AND a stat/bloom-prunable predicate pushed into every
-    task (round-4: row groups that footer min/max statistics refute
-    are skipped without reading a data page, the reader analog of
+    pqreader kernels with spark.read.format("pqread") — distributed,
+    size-planned slices, with a stat/bloom-prunable WHERE pushed into
+    every task (row groups that footer min/max statistics refute are
+    skipped without reading a data page, the reader analog of
     column_index.go search) — and compare against the source table
     WHERE-filtered by the oracle."""
-    from parquet_go_spark.interop import pqreader
+    from parquet_go_spark.sources import pqread
 
     df = _load(spark, sf_dir, "orders")
     out = tempfile.mkdtemp(prefix="colcodec_pqread_")
@@ -548,11 +548,12 @@ def _parquet_read_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, df, out, repo_col="o_orderstatus",
         salt_cols=["o_orderkey"], target_chunk_bytes=1 << 20,
     )
-    back = pqreader.spark_read(
-        spark, out,
-        columns=["o_orderkey", "o_custkey", "o_orderstatus",
-                 "o_totalprice", "o_orderdate", "o_orderpriority"],
-        predicate=("o_totalprice", ">", 300000.0),
+    pqread.register(spark)
+    back = (
+        spark.read.format("pqread").load(out)
+        .where(F.col("o_totalprice") > 300000.0)
+        .select("o_orderkey", "o_custkey", "o_orderstatus",
+                "o_totalprice", "o_orderdate", "o_orderpriority")
     )
     return _fmt_ts(back, "o_orderdate")
 

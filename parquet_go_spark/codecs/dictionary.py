@@ -90,11 +90,3 @@ def decode_legacy_plain_dictionary(
     else:
         uniques = plain.decode_numeric(dict_payload, n_dict, kind)
     return lookup_numeric(uniques, idx)
-
-
-def dict_size_bytes(uniques) -> int:
-    """Approximate in-memory dictionary footprint — drives the
-    DictionaryMaxBytes fallback rule (writer.go:2049-2061)."""
-    if isinstance(uniques, ByteArrays):
-        return int(uniques.offsets[-1]) + 4 * len(uniques)
-    return int(uniques.nbytes)

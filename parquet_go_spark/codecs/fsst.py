@@ -416,21 +416,6 @@ ENC_BLOCK = 256 << 10  # cache-resident segments: the parse working set is
 # first-call heap-growth stall on big chunks
 
 
-def encode_stream(data: np.ndarray, table: FsstTable) -> bytes:
-    """Encode a flat uint8 stream with a trained table.
-
-    Encoded blocks concatenate into one valid stream: every escape marker
-    consumes exactly the following byte, so the decoder's run-parity scan
-    is insensitive to where block boundaries fell (symbols simply never
-    span a boundary — a negligible ratio cost)."""
-    if len(data) <= ENC_BLOCK:
-        return _encode_block(data, table)
-    return b"".join(
-        _encode_block(data[s : s + ENC_BLOCK], table)
-        for s in range(0, len(data), ENC_BLOCK)
-    )
-
-
 def _encode_block_native(data: np.ndarray, table: FsstTable) -> bytes:
     pstart, pcands, single = table.native_enc_tabs()
     data = np.ascontiguousarray(data)

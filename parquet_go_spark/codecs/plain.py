@@ -85,10 +85,6 @@ def decode_byte_array(buf, n: int) -> ByteArrays:
     return ByteArrays(data, offsets)
 
 
-def byte_array_encoded_size(buf_n: int) -> int:
-    return buf_n
-
-
 def encode_flba(values: np.ndarray, size: int) -> bytes:
     """Fixed-len byte arrays: raw concat. values is (n, size) uint8 or flat."""
     return np.ascontiguousarray(values, dtype=np.uint8).tobytes()

@@ -483,8 +483,9 @@ def export_parquet(
     fine for a handful of files) or, preferred at scale, a zero-arg
     callable returning one (pqcrypt.EncryptionFactory mints fresh
     wrapped DEKs per FILE, keeping every key's GCM nonce budget
-    per-file). Read back with spark_read / format("pqread") passing
-    the matching FileDecryption (EncryptionFactory.decryption());
+    per-file). Read back with format("pqread") and its master_keys /
+    aad_prefix options, or in process with read_table(decryption=
+    EncryptionFactory.decryption());
     compact later with compact_export(decryption=..., encryption=...)
     to keep the merged files encrypted."""
     columns = df.dtypes

@@ -172,8 +172,8 @@ class FileDecryption:
 class LocalKeyUnwrap:
     """Unwrap for KMS clients that AES-GCM-wrap the DEK locally as
     base64(nonce[12] || ciphertext || tag[16]) with no AAD, given the
-    master keys by id. Picklable (plain data) so a FileDecryption built
-    on it ships into spark_read executor closures."""
+    master keys by id. Picklable (plain data), so a FileDecryption built
+    on it ships inside the pqread data source's reader to executors."""
 
     master_keys: dict  # master_key_id -> key bytes
 
@@ -247,7 +247,7 @@ class ChunkCrypto:
     """Injected into each encrypted chunk's ColumnMetaData dict under
     the "__crypto__" key at footer-normalization time — string keys
     cannot collide with thrift field ids, survive _load_chunk's dict
-    copy, and pickle cleanly into spark_read executor closures."""
+    copy, and pickle cleanly to executors."""
 
     key: bytes
     file_aad: bytes
@@ -454,8 +454,10 @@ class EncryptionFactory:
 
     def decryption(self) -> FileDecryption:
         """The matching read-side material (key retriever over the
-        same master keys) — what spark_read / pqread's decryption
-        option needs to read the exported files back."""
+        same master keys) for read_table(decryption=). For a
+        distributed read, format("pqread") expresses the same material
+        with its string options: master_keys (JSON {key_id: hex}) and
+        aad_prefix (hex)."""
         return FileDecryption(
             key_retriever=pyarrow_key_retriever(
                 LocalKeyUnwrap(self.masters)),

@@ -17,17 +17,17 @@ Surface:
   map-of-map, list<map<struct<list>>>, …), the legacy 2-level list
   forms (bare repeated fields; `array` / `*_tuple` / multi-field
   repeated groups as struct elements per LogicalTypes.md).
-- ``spark_read(spark, dir)`` → DataFrame: one input slice per file,
-  decoded executor-side via mapInArrow — the distributed read path (no
-  driver funnel; the driver only reads one footer for the schema).
+- ``spark.read.format("pqread").load(dir)`` (sources/pqread.py) is the
+  one distributed read: size-planned slices, each decoded executor-side
+  through ``read_table`` with the pushed WHERE filters.
 - Malformed input (bad magic, truncated pages, unknown codecs) raises
   ValueError rather than returning partial data.
 
 Scale note: this reader is the PARITY/interchange surface — at fleet
 scale Spark's own vectorized parquet scan remains the right way to read
 parquet into the engine (and the blob-store Data Source is the engine's
-native read path). spark_read exists so our kernels can be driven
-end-to-end over exported files in a distributed plan.
+native read path). The pqread data source exists so our kernels can
+be driven end-to-end over exported files in a distributed plan.
 """
 
 from __future__ import annotations
@@ -923,8 +923,8 @@ def _normalize_encrypted(fmd: dict, file_aad: bytes, decryption,
 
 
 def read_schema(path: str, decryption=None) -> pa.Schema:
-    """Footer-only schema (no data pages touched) — what spark_read
-    uses on the driver."""
+    """Footer-only schema (no data pages touched) — what the pqread
+    data source uses on the driver."""
     import os
 
     with open(path, "rb") as f:
@@ -2134,9 +2134,9 @@ def read_rows(path: str, columns: list[str] | None = None,
 
 def list_parquet_files(dir_path: str) -> list[str]:
     """Data files of a directory: *.parquet, skipping underscore/dot
-    sidecars (the one file-discovery rule, shared by spark_read and
-    the pqread data source). A path to a single FILE is returned as-is
-    (spark.read.parquet accepts both shapes; so do we)."""
+    sidecars (the one file-discovery rule, shared by the pqread data
+    source and spark_footer_aggregates). A path to a single FILE is
+    returned as-is (spark.read.parquet accepts both shapes; so do we)."""
     import os
 
     if os.path.isfile(dir_path):
@@ -2148,157 +2148,6 @@ def list_parquet_files(dir_path: str) -> list[str]:
     if not files:
         raise ValueError(f"pqreader: no parquet files under {dir_path}")
     return files
-
-
-def spark_read(spark, dir_path: str, columns: list[str] | None = None,
-               predicate=None, bloom_prune_files: bool = True,
-               split_row_groups: bool = False, decryption=None):
-    """Distributed decode of a directory of parquet files through OUR
-    kernels: one footer read on the driver for the schema, then one
-    input slice per file decoded executor-side (mapInArrow) — the
-    OpenFile analog with no driver funnel. columns/predicate push the
-    projection and the stat/bloom row-group/page pruning into each
-    task (read_table semantics: only matching rows come back;
-    predicate may be one tuple or an ANDed list). Equality conjuncts
-    additionally prune whole FILES by their split-block blooms before
-    any task launches (footer+bitset reads only; distributed as a job
-    above 64 files) — disable with bloom_prune_files=False.
-    split_row_groups=True makes the input slice a ROW GROUP instead of
-    a file (distributed footer pass → (path, row span) slices decoded
-    via row_range) so parallelism scales with data volume, not file
-    count."""
-    import os
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    files = list_parquet_files(dir_path)
-    # ONE footer read/parse on the driver serves the schema probe, the
-    # predicate validation (so a bad predicate fails here, not in every
-    # task of a launched job), and the bloom file-pruning
-    with open(files[0], "rb") as fh:
-        fmd = _read_footer_file(fh, os.path.getsize(files[0]), files[0],
-                                decryption)
-    root = _parse_schema(fmd[2])
-    _annotate(root, 0, 0, ())
-    probe = pa.schema(
-        [pa.field(c.name, _node_arrow_type(c)) for c in root.children])
-    if columns is not None:
-        missing = sorted(set(columns) - set(probe.names))
-        if missing:
-            raise ValueError(f"pqreader: unknown columns {missing}")
-        probe = pa.schema(
-            [probe.field(n) for n in probe.names if n in columns])
-    tree = (_compile_pred_tree(root, fmd, predicate)
-            if predicate is not None else None)
-    preds = _tree_leaves(tree)
-    for pr in preds:
-        if pr.leaf.path[0] not in probe.names:
-            raise ValueError(
-                f"pqreader: predicate column {pr.name!r} not in the "
-                "projected columns")
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    # Spark has no half-float type: surface FLOAT16 columns as float32
-    # (exact widening — every half is f32-representable), the same
-    # spirit as the unsafe ns→µs cast Spark's own reader applies
-    def _widen_half(t: pa.DataType) -> pa.DataType:
-        if pa.types.is_float16(t):
-            return pa.float32()
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return pa.list_(_widen_half(t.value_type))
-        if pa.types.is_map(t):
-            return pa.map_(_widen_half(t.key_type),
-                           _widen_half(t.item_type))
-        if pa.types.is_struct(t):
-            return pa.struct([pa.field(f.name, _widen_half(f.type), True)
-                              for f in t])
-        return t
-
-    cast_schema = pa.schema(
-        [pa.field(f.name, _widen_half(f.type), True) for f in probe])
-    has_half = cast_schema != pa.schema(
-        [pa.field(f.name, f.type, True) for f in probe])
-    out_schema = from_arrow_schema(cast_schema)
-
-    if bloom_prune_files:
-        from parquet_go_spark.interop import pqbloom
-
-        # only top-level conjuncts may veto whole files: a leaf under
-        # an OR is satisfiable by its siblings' rows
-        conjuncts = ([tree] if isinstance(tree, _Pred) else
-                     [p for p in tree.parts if isinstance(p, _Pred)]
-                     if isinstance(tree, _BoolPred)
-                     and tree.kind == "and" else [])
-        for pr in conjuncts:
-            if pr.op in ("=", "in") and pr.bloom_args is not None \
-                    and files:
-                values, kind, flba = pr.bloom_args
-                files = pqbloom.prune_files(
-                    files, pr.name, values, kind, flba_size=flba,
-                    spark=spark, decryption=decryption)
-        if not files:
-            return spark.createDataFrame([], out_schema)
-
-    if split_row_groups:
-        # row-group-granular input slices: a few huge files would
-        # otherwise cap parallelism at len(files). One distributed
-        # METADATA pass turns each footer into (path, start, stop) row
-        # spans; each task then decodes one row group via row_range
-        # (exact byte-range reads, no overlap). 1000 executors stay
-        # busy on a 10-file 100 TB table. Each task re-parses its
-        # file's footer (O(footer bytes)) — the same per-split cost
-        # Spark's own parquet reader pays; shipping pre-parsed chunk
-        # offsets in the slices would trade that for pickle weight.
-        sc = spark.sparkContext
-        slices = min(len(files), sc.defaultParallelism * 4)
-
-        def rg_spans(it):
-            import os as _os
-            for p in it:
-                with open(p, "rb") as fh:
-                    fmd_p = _read_footer_file(
-                        fh, _os.path.getsize(p), p, decryption)
-                start = 0
-                for rg in fmd_p.get(4, []):
-                    yield (p, start, start + rg[3])
-                    start += rg[3]
-
-        spans = (sc.parallelize(files, slices)
-                 .mapPartitions(rg_spans).collect())
-        if not spans:
-            return spark.createDataFrame([], out_schema)
-        spans_df = spark.createDataFrame(
-            spans, "path string, lo long, hi long"
-        ).repartition(len(spans), F.col("path"), F.col("lo"))
-
-        def decode_span(batches):
-            for b in batches:
-                for row in b.to_pylist():
-                    tbl = read_table(
-                        row["path"], columns=columns,
-                        predicate=predicate,
-                        row_range=(row["lo"], row["hi"]),
-                        decryption=decryption)
-                    if has_half:
-                        tbl = tbl.cast(cast_schema)
-                    yield from tbl.to_batches()
-
-        return spans_df.mapInArrow(decode_span, out_schema)
-
-    paths_df = spark.createDataFrame(
-        [(p,) for p in files], "path string"
-    ).repartition(len(files), F.col("path"))
-
-    def decode(batches):
-        for b in batches:
-            for p in b.column(0).to_pylist():
-                tbl = read_table(p, columns=columns, predicate=predicate,
-                                 decryption=decryption)
-                if has_half:
-                    tbl = tbl.cast(cast_schema)
-                yield from tbl.to_batches()
-
-    return paths_df.mapInArrow(decode, out_schema)
 
 
 # ------------------------------------------------- footer aggregates

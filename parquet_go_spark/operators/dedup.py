@@ -151,37 +151,6 @@ def minhash_signatures(
     return grams.groupBy("id").agg(*aggs)
 
 
-def minhash_lsh_candidates(
-    sigs: DataFrame, num_perm: int = 64, bands: int = 8
-) -> DataFrame:
-    """Banded LSH: docs sharing any band bucket become candidate pairs."""
-    rows = num_perm // bands
-    band_cols = [
-        F.xxhash64(*[F.col(f"mh{b * rows + r}") for r in range(rows)]).alias(
-            f"band{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select("id", *band_cols)
-    exploded = banded.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("b"), F.col(f"band{b}").alias("h"))
-                for b in range(bands)
-            ])
-        ).alias("bh"),
-    ).select("id", F.col("bh.b").alias("b"), F.col("bh.h").alias("h"))
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(b, (F.col("a.b") == F.col("b.b")) & (F.col("a.h") == F.col("b.h"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str, *, n: int = 3,
     num_perm: int = 64, bands: int = 8, threshold: float = 0.5,

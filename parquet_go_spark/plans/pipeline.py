@@ -35,6 +35,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, DateType, DoubleType, FloatType,
@@ -1029,7 +1030,7 @@ def _avg_row_bytes_from_metadata(df: DataFrame) -> float | None:
     cost a second 100 TB scan."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:  # plans with no file listing (streaming)
         return None
     if not files:
         return None
@@ -1044,14 +1045,13 @@ def _avg_row_bytes_from_metadata(df: DataFrame) -> float | None:
     if len(files) > _FOOTER_DRIVER_MAX:
         spark = df.sparkSession
         slices = min(len(files), spark.sparkContext.defaultParallelism * 4)
-        try:
-            parts = (
-                spark.sparkContext.parallelize(files, slices)
-                .mapPartitions(_footer_stats_partition)
-                .collect()
-            )
-        except Exception:
-            return None
+        # unreadable footers come back as -1 per partition; a failed
+        # job is a fault and propagates
+        parts = (
+            spark.sparkContext.parallelize(files, slices)
+            .mapPartitions(_footer_stats_partition)
+            .collect()
+        )
         if any(tb < 0 for tb, _ in parts):
             return None
         total_bytes = sum(tb for tb, _ in parts)
@@ -1070,7 +1070,8 @@ _FOOTER_DRIVER_MAX = 64  # above this, footer reads run as a Spark job
 
 def _footer_stats(paths) -> tuple[int, int]:
     """(total_byte_size, num_rows) summed over parquet footers;
-    (-1, 0) if any footer is unreadable."""
+    (-1, 0) if any footer is unreadable. Any other error is a fault
+    and propagates."""
     import pyarrow.parquet as pq
 
     total_bytes = total_rows = 0
@@ -1078,7 +1079,7 @@ def _footer_stats(paths) -> tuple[int, int]:
         path = f[len("file:"):] if f.startswith("file:") else f
         try:
             md = pq.ParquetFile(path).metadata
-        except Exception:
+        except (OSError, ValueError):  # ArrowInvalid is a ValueError
             return -1, 0
         for i in range(md.num_row_groups):
             rg = md.row_group(i)

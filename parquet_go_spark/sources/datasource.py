@@ -16,6 +16,8 @@ Scale shape:
   of decode work. Consecutive files (name order) are packed into slices
   of at most 4 MiB, a larger file alone: every Python task costs ~200 ms
   (4-CPU host) before any work, and a slice decodes one file at a time.
+  The ``pqread`` source plans its parquet files with the same slice
+  class and packer.
 - Filter pushdown (``pushFilters``, Spark 4.1) does NOT prune on the
   driver: the accepted filters ride into every task, and ``read()``
   first scans only its file's metadata columns (chunk_id, column,
@@ -50,15 +52,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructField, StructType
@@ -69,7 +63,11 @@ _SLICE_BYTES = 4 << 20  # Spark's spark.sql.files.openCostInBytes default
 
 @dataclass
 class _FileSlice(InputPartition):
-    paths: tuple
+    """One read task of either data source: the units it reads (blob
+    file paths for colcodec, (path, byte span) pairs for pqread) and
+    the pushed (col, op, value) filters."""
+
+    units: tuple
     # filters ride IN the partition: Spark's python-datasource worker
     # REUSES one reader instance across queries on the same DataFrame,
     # and a query with no pushable filters never calls pushFilters —
@@ -212,7 +210,7 @@ def _chunk_survives(filters, col_types, stats, blooms,
         keys = [_probe_key(spark_type, v) for v in probes]
         if any(k is None for k in keys):
             continue
-        if op in ("eq", "in"):
+        if op in ("=", "in"):
             alive = [
                 k for k in keys
                 if (mn is None or k >= mn) and (mx is None or k <= mx)
@@ -273,84 +271,56 @@ def _chunk_survives(filters, col_types, stats, blooms,
                     bloomlib.might_contain(blob, vals, kind).any()
                 ):
                     return False
-        elif op in ("gt", "gte") and mx is not None:
-            if mx < keys[0] or (op == "gt" and mx == keys[0]):
+        elif op in (">", ">=") and mx is not None:
+            if mx < keys[0] or (op == ">" and mx == keys[0]):
                 return False
-        elif op in ("lt", "lte") and mn is not None:
-            if mn > keys[0] or (op == "lt" and mn == keys[0]):
+        elif op in ("<", "<=") and mn is not None:
+            if mn > keys[0] or (op == "<" and mn == keys[0]):
                 return False
     return True
 
 
-def _anchor_tz(col_type: str, value):
-    """Resolve naive TimestampType literals on the DRIVER: pushFilters
-    runs driver-side, but _chunk_survives runs on executors whose OS tz
-    can differ — a naive datetime shipped as-is would be interpreted in
-    the WRONG zone there and silently prune matching chunks. Recursive
-    over In-lists."""
+def _anchor_tz(value):
+    """Resolve a naive TimestampType literal on the DRIVER: pushFilters
+    runs driver-side, but the pushed filters are applied on executors
+    whose OS tz can differ — a naive datetime shipped as-is would be
+    interpreted in the WRONG zone there and silently drop matching
+    chunks or rows. Recursive over In-lists."""
     import datetime as _dt
 
     if isinstance(value, (list, tuple)):
-        return [_anchor_tz(col_type, v) for v in value]
-    if (col_type == "timestamp" and isinstance(value, _dt.datetime)
-            and value.tzinfo is None):
+        return [_anchor_tz(v) for v in value]
+    if isinstance(value, _dt.datetime) and value.tzinfo is None:
         return value.astimezone(_dt.timezone.utc)
     return value
 
 
-def _translate_filters(filters, col_types):
-    """Spark Filter objects → picklable (col, op, value) triples for the
-    columns/types we can prune on. Unsupported filters are ignored here
-    (Spark re-applies everything exactly — we only skip work)."""
-    out = []
-    for f in filters:
-        attr = getattr(f, "attribute", None)
-        if not attr or len(attr) != 1:
-            continue
-        col = attr[0]
-        if col_types.get(col) is None:
-            continue
-        t = col_types[col]
-        if isinstance(f, (IsNull, IsNotNull)):
-            # no literal: prunes on the manifest's null_count alone
-            out.append((col, "isnull" if isinstance(f, IsNull)
-                        else "notnull", None))
-        elif isinstance(f, EqualTo):
-            out.append((col, "eq", _anchor_tz(t, f.value)))
-        elif isinstance(f, In):
-            out.append((col, "in", _anchor_tz(t, list(f.value))))
-        elif isinstance(f, GreaterThan):
-            out.append((col, "gt", _anchor_tz(t, f.value)))
-        elif isinstance(f, GreaterThanOrEqual):
-            out.append((col, "gte", _anchor_tz(t, f.value)))
-        elif isinstance(f, LessThan):
-            out.append((col, "lt", _anchor_tz(t, f.value)))
-        elif isinstance(f, LessThanOrEqual):
-            out.append((col, "lte", _anchor_tz(t, f.value)))
-    return out
-
-
-def _pack_slices(paths, filters=()) -> list[_FileSlice]:
-    """Consecutive files → slices of at most _SLICE_BYTES (a larger file
-    alone): every Python task pays a fixed start-up cost."""
-    import os
-
+def _pack_slices(units, filters=()) -> list[_FileSlice]:
+    """Consecutive (unit, nbytes) pairs → slices of at most _SLICE_BYTES
+    (a larger unit alone): every Python task pays a fixed start-up
+    cost."""
     groups, size = [], 0
-    for p in paths:
-        n = os.path.getsize(p)
+    for unit, n in units:
         if not groups or size + n > _SLICE_BYTES:
             groups.append([])
             size = 0
-        groups[-1].append(p)
+        groups[-1].append(unit)
         size += n
     return [_FileSlice(tuple(g), filters) for g in groups]
+
+
+def _file_sizes(paths):
+    """(path, size) pairs: whole files as packing units."""
+    import os
+
+    return [(p, os.path.getsize(p)) for p in paths]
 
 
 def _read_slice(part: _FileSlice | None, cols):
     """The batch and stream read path: one file at a time."""
     if part is None:  # empty store: Spark passes one None slice
         return
-    for path in part.paths:
+    for path in part.units:
         yield from _read_file(path, part.filters, cols)
 
 
@@ -421,12 +391,16 @@ class ColcodecReader(DataSourceReader):
         self._filters: list[tuple[str, str, object]] = []
 
     def pushFilters(self, filters):
-        scalar_types = {
-            c: t for c, t in self._cols
-            if not (t.startswith("array<") or t.startswith("map<")
-                    or t.startswith("struct<"))
+        from parquet_go_spark.sources.pqread import _translate
+
+        scalar = {
+            c for c, t in self._cols
+            if not t.startswith(("array<", "map<", "struct<"))
         }
-        self._filters = _translate_filters(filters, scalar_types)
+        ltz = {c for c, t in self._cols if t == "timestamp"}
+        # every scalar column, > included: pruning only skips chunks,
+        # and a chunk holding NaN records NaN bounds, which keep it
+        self._filters = _translate(filters, scalar, scalar, ltz_cols=ltz)
         # we only SKIP chunks; Spark must still evaluate every filter
         # exactly (bloom fpp / truncated bounds admit false positives).
         # Assign eagerly and return a plain iterator — as a generator,
@@ -449,7 +423,8 @@ class ColcodecReader(DataSourceReader):
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
         return _pack_slices(
-            [os.path.join(self._path, f) for f in files], filters)
+            _file_sizes([os.path.join(self._path, f) for f in files]),
+            filters)
 
     def read(self, partition: _FileSlice | None):
         yield from _read_slice(partition, self._cols)
@@ -907,7 +882,8 @@ class ColcodecStreamReader(DataSourceStreamReader):
             f for f, mt in listing.items()
             if self._emitted_by(end, f, mt)
             and not self._emitted_by(start, f, mt))
-        return _pack_slices([os.path.join(self._path, f) for f in new])
+        return _pack_slices(
+            _file_sizes([os.path.join(self._path, f) for f in new]))
 
     def read(self, partition: _FileSlice):
         yield from _read_slice(partition, self._cols)

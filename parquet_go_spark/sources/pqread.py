@@ -1,12 +1,22 @@
-"""``spark.read.format("pqread")`` — arbitrary parquet directories
-decoded through OUR kernels with automatic filter pushdown.
+"""``spark.read.format("pqread")`` — the one distributed parquet read:
+arbitrary parquet directories decoded through OUR kernels with
+automatic filter pushdown. ``interop.pqreader.read_table`` is the
+in-process API for one file; this Data Source puts the same decode
+behind a ``spark.read`` line: a plain ``WHERE`` clause on the DataFrame
+pushes down via Spark's ``pushFilters`` (Spark 4.1 Python Data Source
+API) into the reader's stat/bloom row-group pruning and ColumnIndex
+page skipping — the reference's OpenFile + column_index.go read path
+(file.go:65-130).
 
-The manual API is ``interop.pqreader.spark_read``; this Data Source
-adds the declarative surface: a plain ``WHERE`` clause on the
-DataFrame pushes down via Spark's ``pushFilters`` (Spark 4.1 Python
-Data Source API) into the reader's stat/bloom row-group pruning and
-ColumnIndex page skipping — the OpenFile + column_index.go read path
-(/root/reference/file.go:65-130) behind a ``spark.read`` line.
+Scale shape: ``partitions()`` lists the files and packs them into
+slices of at most 4 MiB with the colcodec store's packer
+(``datasource._pack_slices``): every Python task costs ~200 ms before
+any work. A file larger than the cap is cut into cap-sized byte spans;
+the task reading a span decodes the row groups whose byte midpoint lies
+inside it (parquet-mr's split rule), so parallelism follows bytes, not
+file count. ``partitions()`` reads no footer. Each task refutes row
+groups by stats and bloom inside ``read_table`` before it reads a data
+page.
 
 Pushdown safety: ``read_table`` applies pushed predicates EXACTLY
 (rows are dropped, not merely skipped-and-rechecked), so only
@@ -23,11 +33,13 @@ semantics are pushed:
   other ops agree on NaN rows (<, <=, =, in are FALSE and != is TRUE
   under both semantics), so they still push. Ints, strings, binary,
   dates, and decimals compare identically for every op.
-- timestamp columns are never pushed — Spark interprets the stored
-  micros AND the filter literal in ``spark.sql.session.timeZone``,
-  which a DataSourceReader cannot see; any anchoring guess can drop
-  rows under a non-UTC session. Use ``pqreader.spark_read`` directly
-  (naive literals documented as UTC) when timestamp pruning matters.
+- µs timestamp columns push: Spark surfaces them as TimestampType and
+  compares the stored micros, and the reader compares the same micros
+  once the literal is an instant (naive literals are anchored to UTC
+  on the driver, ``datasource._anchor_tz``). ms, ns and INT96 columns
+  never push: Spark truncates ns to µs on read while the reader filters
+  the untruncated value, so ``ts <= 1 µs`` would drop a 1999 ns row
+  that Spark keeps.
 - any predicate the reader cannot compile against the footer is
   silently not pushed (Spark re-applies every filter regardless).
 
@@ -49,7 +61,6 @@ safe pattern and the upstream behavior so a Spark fix is noticed.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -59,7 +70,6 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -69,25 +79,18 @@ from pyspark.sql.datasource import (
     StringEndsWith,
     StringStartsWith,
 )
-
-
 from pyspark.sql.types import StructType
+
+from parquet_go_spark.sources.datasource import (
+    _SLICE_BYTES,
+    _FileSlice,
+    _anchor_tz,
+    _pack_slices,
+)
 
 
 def _is_nan(v) -> bool:
     return isinstance(v, float) and v != v
-
-
-@dataclass
-class _FileSlice(InputPartition):
-    path: str
-    # predicates ride IN the partition: Spark's python-datasource
-    # worker reuses one reader instance across queries on the same
-    # DataFrame, and a query with nothing pushable never calls
-    # pushFilters — instance state would apply the PREVIOUS query's
-    # filters. Unlike colcodec (skip-only), this reader filters
-    # EXACTLY, so stale predicates would silently drop rows.
-    preds: tuple = ()
 
 
 def _us_type(t):
@@ -98,7 +101,7 @@ def _us_type(t):
     if pa.types.is_timestamp(t) and t.unit == "ns":
         return pa.timestamp("us", t.tz)
     if pa.types.is_float16(t):
-        # Spark has no half type: widen exactly, like pqreader.spark_read
+        # Spark has no half type: widen exactly (every half is an f32)
         return pa.float32()
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return pa.list_(_us_type(t.value_type))
@@ -120,7 +123,10 @@ def _flat_columns(root) -> set[str]:
 
 def _pushable_columns(root) -> set[str]:
     """Flat scalar columns with Spark-identical comparison semantics
-    (see module docstring: float32 and timestamps are excluded)."""
+    (see module docstring: float32 and non-µs timestamps are
+    excluded)."""
+    from parquet_go_spark.interop import pqreader
+
     out = set()
     for c in root.children:
         if c.children or c.max_rep > 0:
@@ -129,11 +135,20 @@ def _pushable_columns(root) -> set[str]:
             continue
         if c.physical == 7 and 15 in (c.logical or {}):
             continue  # FLOAT16: surfaced widened — same float hazards
-        lg = c.logical or {}
-        if c.physical == 3 or 8 in lg or c.converted in (9, 10):
-            continue  # INT96 / timestamp: session-tz semantics
+        if c.physical == 3 or pqreader._ts_unit(c) in ("ms", "ns"):
+            continue  # INT96 / ms / ns: not Spark's µs values
         out.add(c.name)
     return out
+
+
+def _us_timestamp_columns(root) -> set[str]:
+    """Flat µs timestamp columns: surfaced as TimestampType, so their
+    naive literals anchor to UTC on the driver."""
+    from parquet_go_spark.interop import pqreader
+
+    return {c.name for c in root.children
+            if not c.children and c.max_rep == 0
+            and pqreader._ts_unit(c) == "us"}
 
 
 def _no_gt_columns(root) -> set[str]:
@@ -146,7 +161,14 @@ def _no_gt_columns(root) -> set[str]:
 
 
 def _translate(filters, cols: set[str], null_cols: set[str] = frozenset(),
-               no_gt_cols: set[str] = frozenset()):
+               no_gt_cols: set[str] = frozenset(),
+               ltz_cols: set[str] = frozenset()):
+    """The one Spark Filter → (col, op, value) translator of both data
+    sources, in pqreader's op names. Each source passes its column
+    sets: `cols` may push comparisons, `null_cols` IS [NOT] NULL,
+    `no_gt_cols` must not push > / >=, and `ltz_cols` are TimestampType
+    columns whose naive literals anchor to UTC here, on the driver.
+    Filters outside these sets are left to Spark."""
     preds = []
     for f in filters:
         if isinstance(f, Not):
@@ -227,7 +249,8 @@ def _translate(filters, cols: set[str], null_cols: set[str] = frozenset(),
             # no pruning, but rows drop reader-side before crossing
             # the Python Data Source boundary
             preds.append((col, "contains", f.value))
-    return preds
+    return [(c, op, _anchor_tz(v) if c in ltz_cols else v)
+            for c, op, v in preds]
 
 
 def _decryption_from_options(options) -> "object | None":
@@ -277,7 +300,8 @@ class PqreadReader(DataSourceReader):
         root = pqreader._parse_schema(fmd[2])
         pqreader._annotate(root, 0, 0, ())
         candidates = _translate(filters, _pushable_columns(root),
-                                _flat_columns(root), _no_gt_columns(root))
+                                _flat_columns(root), _no_gt_columns(root),
+                                _us_timestamp_columns(root))
         self._preds = []
         for p in candidates:
             try:
@@ -295,30 +319,73 @@ class PqreadReader(DataSourceReader):
 
         # snapshot into the slices and reset (see _FileSlice): a later
         # query that pushes calls pushFilters again first; one that
-        # doesn't must not inherit this query's predicates
+        # doesn't must not inherit this query's predicates. This reader
+        # filters EXACTLY, so stale predicates would silently drop rows
         preds, self._preds = tuple(self._preds), []
-        return [_FileSlice(p, preds)
-                for p in pqreader.list_parquet_files(self._path)]
+        return _pack_slices(
+            _file_units(pqreader.list_parquet_files(self._path)), preds)
 
     def read(self, partition: _FileSlice | None):
         if partition is None:
             return
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         from parquet_go_spark.interop import pqreader
 
-        tbl = pqreader.read_table(
-            partition.path, predicate=list(partition.preds) or None,
-            decryption=self._decryption)
-        for i, fld in enumerate(tbl.schema):
-            want = _us_type(fld.type)
-            if want != fld.type:
-                # Spark truncates sub-µs precision on read; so do we
-                tbl = tbl.set_column(
-                    i, fld.name,
-                    pc.cast(tbl.column(i), want, safe=False))
-        yield from tbl.to_batches()
+        preds = list(partition.filters) or None
+        for path, span in partition.units:
+            spans = ([None] if span is None
+                     else _span_rows(path, span, self._decryption))
+            for rows in spans:
+                tbl = pqreader.read_table(
+                    path, predicate=preds, row_range=rows,
+                    decryption=self._decryption)
+                for i, fld in enumerate(tbl.schema):
+                    want = _us_type(fld.type)
+                    if want != fld.type:
+                        # Spark truncates sub-µs precision on read; so
+                        # do we
+                        tbl = tbl.set_column(
+                            i, fld.name,
+                            pc.cast(tbl.column(i), want, safe=False))
+                yield from tbl.to_batches()
+
+
+def _file_units(paths):
+    """(unit, nbytes) pairs for _pack_slices, without reading a footer:
+    a file up to _SLICE_BYTES is one unit (path, None); a larger file
+    becomes cap-sized byte spans (path, (lo, hi))."""
+    for p in paths:
+        n = os.path.getsize(p)
+        if n <= _SLICE_BYTES:
+            yield (p, None), n
+            continue
+        for lo in range(0, n, _SLICE_BYTES):
+            hi = min(lo + _SLICE_BYTES, n)
+            yield (p, (lo, hi)), hi - lo
+
+
+def _span_rows(path: str, span: tuple, decryption) -> list[tuple]:
+    """Row ranges of the row groups whose byte midpoint lies in span —
+    parquet-mr's split rule: every row group of a file belongs to
+    exactly one of its spans."""
+    from parquet_go_spark.interop import pqreader
+
+    lo, hi = span
+    with open(path, "rb") as fh:
+        fmd = pqreader._read_footer_file(
+            fh, os.path.getsize(path), path, decryption)
+    out, row = [], 0
+    for rg in fmd.get(4, []):
+        metas = [cc[3] for cc in rg[1]]
+        start = min(m.get(11) or m[9] for m in metas)
+        if lo <= start + sum(m[7] for m in metas) // 2 < hi:
+            if out and out[-1][1] == row:
+                out[-1] = (out[-1][0], row + rg[3])
+            else:
+                out.append((row, row + rg[3]))
+        row += rg[3]
+    return out
 
 
 class PqreadDataSource(DataSource):

@@ -67,22 +67,22 @@ def test_chunk_survives_semantics():
     stats = {"k": ("100", "200"), "name": ("aaa", "mmm")}
     blooms = {"k": None, "name": None}
     ok = lambda f: _chunk_survives(f, types, stats, blooms)  # noqa: E731
-    assert ok([("k", "eq", 150)])
-    assert not ok([("k", "eq", 99)])
-    assert not ok([("k", "gt", 200)])
-    assert ok([("k", "gte", 200)])
-    assert not ok([("k", "lt", 100)])
-    assert ok([("k", "lte", 100)])
-    assert ok([("name", "eq", "bbb")])
-    assert not ok([("name", "eq", "zzz")])
+    assert ok([("k", "=", 150)])
+    assert not ok([("k", "=", 99)])
+    assert not ok([("k", ">", 200)])
+    assert ok([("k", ">=", 200)])
+    assert not ok([("k", "<", 100)])
+    assert ok([("k", "<=", 100)])
+    assert ok([("name", "=", "bbb")])
+    assert not ok([("name", "=", "zzz")])
     assert ok([("name", "in", ["zzz", "bbb"])])
     assert not ok([("name", "in", ["zzz", "nnn"])])
     # NULL bounds are unbounded → never prunable
-    assert ok([("k", "eq", 99)]) is False
-    assert _chunk_survives([("k", "eq", 99)], types,
+    assert ok([("k", "=", 99)]) is False
+    assert _chunk_survives([("k", "=", 99)], types,
                            {"k": (None, None)}, {"k": None})
     # unknown column/type: kept
-    assert ok([("other", "eq", 1)])
+    assert ok([("other", "=", 1)])
 
 
 def test_bloom_refutes_inside_bounds():
@@ -95,11 +95,11 @@ def test_bloom_refutes_inside_bounds():
     blob = bloomlib.build(present, Kind.INT64)
     types = {"k": "bigint"}
     stats = {"k": ("100", "200")}
-    assert _chunk_survives([("k", "eq", 150)], types, stats, {"k": blob})
+    assert _chunk_survives([("k", "=", 150)], types, stats, {"k": blob})
     # 137 is inside [100, 200] but not in the chunk: the bloom prunes
     # what min/max cannot (false positives possible, never negatives)
     hits = sum(
-        _chunk_survives([("k", "eq", v)], types, stats, {"k": blob})
+        _chunk_survives([("k", "=", v)], types, stats, {"k": blob})
         for v in range(101, 200) if v not in (150,)
     )
     assert hits < 20  # ~1% fpp on 98 absent probes
@@ -128,21 +128,21 @@ def test_datasource_slices_pack_small_files(tmp_path):
     r.pushFilters([EqualTo(("k",), 7)])
     parts = r.partitions()
 
-    names = [os.path.basename(f) for p in parts for f in p.paths]
+    names = [os.path.basename(f) for p in parts for f in p.units]
     assert names == [f"part-{i:03d}.parquet" for i in range(len(sizes))]
     size = {os.path.join(str(tmp_path), f"part-{i:03d}.parquet"): n
             for i, n in enumerate(sizes)}
-    totals = [sum(size[f] for f in p.paths) for p in parts]
+    totals = [sum(size[f] for f in p.units) for p in parts]
     for p, total in zip(parts, totals):
-        assert total <= _SLICE_BYTES or len(p.paths) == 1
+        assert total <= _SLICE_BYTES or len(p.units) == 1
     for p in parts:  # a file over the limit is alone
-        if any(size[f] > _SLICE_BYTES for f in p.paths):
-            assert len(p.paths) == 1
+        if any(size[f] > _SLICE_BYTES for f in p.units):
+            assert len(p.units) == 1
     # greedy: no slice could take the next slice's first file
     for total, nxt in zip(totals, parts[1:]):
-        assert total + size[nxt.paths[0]] > _SLICE_BYTES
-    assert [len(p.paths) for p in parts] == [3, 1, 1, 1, 1, 2, 1, 1, 1]
-    assert all(p.filters == (("k", "eq", 7),) for p in parts)
+        assert total + size[nxt.units[0]] > _SLICE_BYTES
+    assert [len(p.units) for p in parts] == [3, 1, 1, 1, 1, 2, 1, 1, 1]
+    assert all(p.filters == (("k", "=", 7),) for p in parts)
     assert all(p.filters == () for p in r.partitions())
 
 
@@ -597,9 +597,9 @@ def test_datasource_null_filters_exact(spark, tmp_path):
         assert got == exp, cond
     from pyspark.sql.datasource import IsNotNull, IsNull
 
-    got = datasource._translate_filters(
-        [IsNull(("v",)), IsNotNull(("k",))], {"v": "double", "k": "bigint"})
-    assert got == [("v", "isnull", None), ("k", "notnull", None)]
+    r = datasource.ColcodecReader(d, pipeline._read_schema_sidecar(d))
+    r.pushFilters([IsNull(("v",)), IsNotNull(("k",))])
+    assert r._filters == [("v", "isnull", None), ("k", "notnull", None)]
 
 
 def test_python_ds_relation_reuse_upstream_caveat(spark, tmp_path):

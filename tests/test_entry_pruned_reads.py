@@ -1,5 +1,6 @@
-"""The driver's pruned-read queries against their unchanged DuckDB
-oracles at sf0.01, compared the way scripts/check_oracle.py compares
+"""The driver's pruned-read queries (three colcodec stores, one
+exported parquet directory) against their unchanged DuckDB oracles at
+sf0.01, compared the way scripts/check_oracle.py compares
 every driver query: row count, column names, then the row multiset with
 values canonicalized to strings."""
 
@@ -24,7 +25,8 @@ def _canon():
 
 
 @pytest.mark.parametrize("name", ["prune_decode_orders", "range_prune_orders",
-                                  "bloom_point_orders"])
+                                  "bloom_point_orders",
+                                  "parquet_read_golden"])
 def test_pruned_read_query_matches_oracle(spark, name):
     duckdb = pytest.importorskip("duckdb")
     if not os.path.exists(ORDERS):

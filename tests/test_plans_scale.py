@@ -145,21 +145,24 @@ def _write_rg_dir(tmp_path, n=8000, files=2, rg=1000):
 def test_pqread_filters_ride_in_partitions(tmp_path):
     """The pushed predicates must live INSIDE each InputPartition (the
     stateless-reader contract that sidesteps Spark 4.1's per-relation
-    partition cache), and partitions() must RESET them so a later
-    no-push query cannot inherit stale pruning."""
+    partition cache), each file must appear in exactly one slice, and
+    partitions() must RESET the predicates so a later no-push query
+    cannot inherit stale pruning."""
     from pyspark.sql.datasource import EqualTo
 
+    from parquet_go_spark.interop import pqreader
     from parquet_go_spark.sources.pqread import PqreadReader
 
     d = _write_rg_dir(tmp_path)
     r = PqreadReader(d)
     r.pushFilters([EqualTo(("k",), 7)])
     parts = r.partitions()
-    assert len(parts) == 2
-    assert all(p.preds == (("k", "=", 7),) for p in parts)
+    files = [path for p in parts for path, _ in p.units]
+    assert sorted(files) == pqreader.list_parquet_files(d)
+    assert all(p.filters == (("k", "=", 7),) for p in parts)
     # second planning round without a push: clean slate
     parts2 = r.partitions()
-    assert all(p.preds == () for p in parts2)
+    assert all(p.filters == () for p in parts2)
 
 
 def test_pqread_partition_read_prunes_row_groups(tmp_path, monkeypatch):
@@ -194,12 +197,42 @@ def test_pqread_partition_read_prunes_row_groups(tmp_path, monkeypatch):
 
 
 def test_split_row_groups_partition_count_scales(spark, tmp_path):
-    """spark_read(split_row_groups=True): one input slice per ROW
-    GROUP, so parallelism scales with data volume, not file count."""
-    from parquet_go_spark.interop import pqreader
+    """Slices follow bytes, not file count: a file over the 4 MiB cap
+    becomes ceil(size / cap) byte spans planned without a footer read,
+    each row group belongs to exactly one span (its byte midpoint), and
+    Spark runs one task per slice."""
+    import math
+    import os
 
-    d = _write_rg_dir(tmp_path)  # 2 files x 4 row groups
-    df = pqreader.spark_read(spark, d, split_row_groups=True)
-    assert df.rdd.getNumPartitions() == 8
-    whole = pqreader.spark_read(spark, d, split_row_groups=False)
-    assert whole.rdd.getNumPartitions() == 2
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.sources import pqread
+    from parquet_go_spark.sources.datasource import _SLICE_BYTES
+
+    n = 400_000
+    d = tmp_path / "big"
+    d.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array(range(n), pa.int64()),
+        "name": pa.array([f"n{i:07d}" for i in range(n)]),
+    }), str(d / "big.parquet"), row_group_size=25_000,
+        compression="none", use_dictionary=False)
+    size = os.path.getsize(d / "big.parquet")
+    assert size > _SLICE_BYTES
+
+    parts = pqread.PqreadReader(str(d)).partitions()
+    assert len(parts) == math.ceil(size / _SLICE_BYTES) >= 2
+    spans = [span for p in parts for _, span in p.units]
+    assert spans[0][0] == 0 and spans[-1][1] == size
+    assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
+    rows = [r for sp in spans
+            for r in pqread._span_rows(str(d / "big.parquet"), sp, None)]
+    # every row group in exactly one span: the ranges tile [0, n)
+    assert rows[0][0] == 0 and rows[-1][1] == n
+    assert all(a[1] == b[0] for a, b in zip(rows, rows[1:]))
+    assert len(rows) >= 2
+
+    pqread.register(spark)
+    df = spark.read.format("pqread").load(str(d))
+    assert df.rdd.getNumPartitions() == len(parts)

@@ -219,6 +219,25 @@ def test_footer_stats_few_files_driver_path(spark):
     assert avg is not None and avg > 0
 
 
+def test_footer_stats_unreadable_vs_fault(tmp_path, monkeypatch):
+    """An unreadable footer means "no footer sizing" — (-1, 0) — while
+    any other error inside the footer read is a fault and propagates."""
+    import pyarrow.parquet as pq
+
+    bad = tmp_path / "garbage.parquet"
+    bad.write_bytes(b"not a parquet file at all")
+    assert pipeline._footer_stats([str(bad)]) == (-1, 0)
+    assert pipeline._footer_stats([str(tmp_path / "gone.parquet")]) \
+        == (-1, 0)
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected fault")
+
+    monkeypatch.setattr(pq, "ParquetFile", boom)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        pipeline._footer_stats([str(bad)])
+
+
 # ---------------------------------------------------------------------------
 # VERDICT #8: lsh_ann_pairs auto-sizing must not need a df.count() scan
 # when the caller supplies the row count (catalog/manifest stats).

@@ -112,7 +112,7 @@ def test_push_filters_assigns_eagerly():
     r = ColcodecReader("/nonexistent", [("k", "bigint")])
     out = r.pushFilters([EqualTo(("k",), 7)])
     # NOT consumed — yet the translation must already be in place
-    assert r._filters == [("k", "eq", 7)]
+    assert r._filters == [("k", "=", 7)]
     assert [type(f).__name__ for f in out] == ["EqualTo"]
 
 
@@ -213,15 +213,15 @@ def test_decimal_chunk_survives_prunes_and_keeps():
 
     types = {"price": "decimal(12,2)"}
     stats = {"price": ("100", "999")}  # unscaled: 1.00 .. 9.99
-    f_in = [("price", "eq", Decimal("5.00"))]
-    f_out = [("price", "gt", Decimal("10.00"))]
+    f_in = [("price", "=", Decimal("5.00"))]
+    f_out = [("price", ">", Decimal("10.00"))]
     assert _chunk_survives(f_in, types, stats, {})
     assert not _chunk_survives(f_out, types, stats, {})
     assert not _chunk_survives(
-        [("price", "lt", Decimal("1.00"))], types, stats, {})
+        [("price", "<", Decimal("1.00"))], types, stats, {})
     # inexact literal: never prune
     assert _chunk_survives(
-        [("price", "eq", Decimal("5.001"))], types, stats, {})
+        [("price", "=", Decimal("5.001"))], types, stats, {})
 
 
 def test_decimal_pushdown_end_to_end(spark, tmp_path):
@@ -285,7 +285,7 @@ def test_stream_source_offsets_stay_o1(spark, tmp_path):
         cur = rdr.latestOffset()
         sizes.append(len(json.dumps(cur)))
         parts = rdr.partitions(prev, cur)
-        names = {os.path.basename(f) for p in parts for f in p.paths}
+        names = {os.path.basename(f) for p in parts for f in p.units}
         assert not (names & emitted), "re-emission"
         emitted |= names
         prev = cur
@@ -320,7 +320,7 @@ def test_stream_source_accepts_v1_offsets(spark, tmp_path):
     rdr = ColcodecStreamReader(store, pipeline._read_schema_sidecar(store))
     end = rdr.latestOffset()
     parts = rdr.partitions({"files": files0}, end)
-    names = {os.path.basename(f) for p in parts for f in p.paths}
+    names = {os.path.basename(f) for p in parts for f in p.units}
     all_now = {f for f in os.listdir(store)
                if f.endswith(".parquet") and not f.startswith(("_", "."))}
     assert names == all_now - set(files0) and names
@@ -565,8 +565,9 @@ def test_pqreader_rejects_malformed(tmp_path):
 
 
 def test_pqreader_spark_read_distributed(spark, tmp_path):
+    """format("pqread") reads an export back equal to the source."""
     from parquet_go_spark.interop import export as iexport
-    from parquet_go_spark.interop import pqreader
+    from parquet_go_spark.sources import pqread
 
     src = spark.createDataFrame(
         [(i, f"g{i % 3}", float(i) / 3) for i in range(1000)],
@@ -574,7 +575,8 @@ def test_pqreader_spark_read_distributed(spark, tmp_path):
     d = str(tmp_path / "pqspark")
     iexport.export_parquet(spark, src, d, repo_col="grp",
                            salt_cols=["k"], target_chunk_bytes=32 << 10)
-    back = pqreader.spark_read(spark, d)
+    pqread.register(spark)
+    back = spark.read.format("pqread").load(d)
     assert sorted(map(str, back.collect())) == sorted(map(str, src.collect()))
 
 
@@ -585,8 +587,9 @@ def test_datasource_read_pruning_shape(spark, tmp_path, monkeypatch):
     surviving-chunk decode uses a row-level chunk_id dataset filter, and
     a refuted-everywhere filter decodes nothing at all."""
     import pyarrow.parquet as pq
+    from pyspark.sql.datasource import EqualTo
 
-    from parquet_go_spark.sources.datasource import ColcodecReader, EqualTo
+    from parquet_go_spark.sources.datasource import ColcodecReader
 
     d = str(tmp_path / "pinstore")
     src = spark.createDataFrame(
@@ -820,13 +823,14 @@ def test_translate_filters_anchors_naive_timestamps():
     would otherwise mis-prune."""
     from pyspark.sql.datasource import EqualTo, In
 
-    from parquet_go_spark.sources.datasource import _translate_filters
+    from parquet_go_spark.sources.datasource import ColcodecReader
 
     naive = dt.datetime(2024, 1, 1, 12, 0, 0)
-    out = _translate_filters(
-        [EqualTo(("ts",), naive), In(("ts",), (naive,)),
-         EqualTo(("nts",), naive)],
-        {"ts": "timestamp", "nts": "timestamp_ntz"})
+    r = ColcodecReader("/nonexistent",
+                       [("ts", "timestamp"), ("nts", "timestamp_ntz")])
+    r.pushFilters([EqualTo(("ts",), naive), In(("ts",), (naive,)),
+                   EqualTo(("nts",), naive)])
+    out = r._filters
     assert out[0][2].tzinfo is not None          # anchored, aware
     assert out[1][2][0].tzinfo is not None
     assert out[2][2].tzinfo is None              # NTZ stays wall-clock
@@ -1098,11 +1102,14 @@ def test_pqreader_predicate_errors(tmp_path):
 
 
 def test_pqreader_spark_read_pushdown(spark, tmp_path):
-    """spark_read ships projection + predicate into every task; result
-    matches Spark's own parquet reader with the same filter."""
+    """format("pqread") ships the pushed WHERE into every slice; the
+    projected result matches Spark's own parquet reader with the same
+    filter."""
     import glob
 
-    from parquet_go_spark.interop import pqreader
+    from pyspark.sql.datasource import LessThan
+
+    from parquet_go_spark.sources import pqread
 
     d = str(tmp_path / "sr")
     spark.range(20000).select(
@@ -1112,8 +1119,13 @@ def test_pqreader_spark_read_pushdown(spark, tmp_path):
     ).repartition(4).write.parquet(d)
     assert len(glob.glob(d + "/*.parquet")) == 4
 
-    ours = pqreader.spark_read(spark, d, columns=["k", "name"],
-                               predicate=("k", "<", 250))
+    r = pqread.PqreadReader(d)
+    r.pushFilters([LessThan(("k",), 250)])
+    assert all(p.filters == (("k", "<", 250),) for p in r.partitions())
+
+    pqread.register(spark)
+    ours = (spark.read.format("pqread").load(d).where(F.col("k") < 250)
+            .select("k", "name"))
     assert [f.name for f in ours.schema.fields] == ["k", "name"]
     exp = (spark.read.parquet(d).where(F.col("k") < 250)
            .select("k", "name"))
@@ -1356,13 +1368,19 @@ def test_pqreader_conjunctive_predicates(monkeypatch, tmp_path):
 
 
 def test_pqreader_spark_read_bloom_file_prune(spark, monkeypatch, tmp_path):
-    """spark_read equality conjuncts prune whole FILES via their
-    split-block blooms before any decode task launches."""
-    import numpy as np
+    """A point WHERE through format("pqread") decodes pages only from
+    the one file that holds the value: each task refutes the other
+    files' row groups by stats and bloom before reading a data page,
+    and an odd (bloom-refuted) value decodes no page at all."""
+    import os
 
-    from parquet_go_spark.interop import pqreader, pqbloom
-    from parquet_go_spark.interop.pqwriter import ColumnSpec, write_table
+    import numpy as np
+    from pyspark.sql.datasource import EqualTo
+
     from parquet_go_spark.codecs.kinds import Kind
+    from parquet_go_spark.interop import pqreader
+    from parquet_go_spark.interop.pqwriter import ColumnSpec, write_table
+    from parquet_go_spark.sources import pqread
 
     d = tmp_path / "bfiles"
     d.mkdir()
@@ -1372,32 +1390,37 @@ def test_pqreader_spark_read_bloom_file_prune(spark, monkeypatch, tmp_path):
                     [ColumnSpec("k", Kind.INT64, k)],
                     bloom_columns=["k"])
 
-    probed = []
-    orig = pqbloom.prune_files
+    pqread.register(spark)
+    for v, want in ((2500, [2500]), (2501, [])):
+        got = (spark.read.format("pqread").load(str(d))
+               .where(F.col("k") == v).collect())
+        assert [r["k"] for r in got] == want
 
-    def spy(paths, column, values, kind, flba_size=None, spark=None,
-            decryption=None):
-        out = orig(paths, column, values, kind, flba_size=flba_size,
-                   spark=spark, decryption=decryption)
-        probed.append((len(list(paths)), len(out)))
-        return out
+    # in process, to see which file each decoded page came from
+    reading, decoded = [None], []
+    real_read, real_decode = pqreader.read_table, pqreader._decode_page
 
-    monkeypatch.setattr(pqbloom, "prune_files", spy)
+    def read_spy(path, *a, **kw):
+        reading[0] = os.path.basename(path)
+        return real_read(path, *a, **kw)
 
-    got = pqreader.spark_read(spark, str(d), predicate=("k", "=", 2500))
-    assert [r["k"] for r in got.collect()] == [2500]
-    assert probed == [(4, 1)]  # 3 of 4 files never became tasks
+    def decode_spy(*a, **kw):
+        decoded.append(reading[0])
+        return real_decode(*a, **kw)
 
-    probed.clear()
-    got = pqreader.spark_read(spark, str(d), predicate=("k", "=", 2501))
-    assert got.collect() == []  # odd: bloom-refuted everywhere
-    assert probed == [(4, 0)]
+    monkeypatch.setattr(pqreader, "read_table", read_spy)
+    monkeypatch.setattr(pqreader, "_decode_page", decode_spy)
 
-    probed.clear()
-    got = pqreader.spark_read(spark, str(d), predicate=("k", "=", 2500),
-                              bloom_prune_files=False)
-    assert [r["k"] for r in got.collect()] == [2500]
-    assert probed == []
+    def probe(v):
+        decoded.clear()
+        r = pqread.PqreadReader(str(d))
+        r.pushFilters([EqualTo(("k",), v)])
+        rows = [k for p in r.partitions() for b in r.read(p)
+                for k in b.column("k").to_pylist()]
+        return rows, set(decoded)
+
+    assert probe(2500) == ([2500], {"part-2.parquet"})
+    assert probe(2501) == ([], set())  # odd: bloom-refuted everywhere
 
 
 def test_pqreader_out_of_range_int_literals(tmp_path):
@@ -1496,29 +1519,6 @@ def test_pqreader_unknown_column_order_distrusts_stats(tmp_path):
         ("k", "=", 5)).trust
 
 
-def test_pqreader_spark_read_validates_on_driver(spark, tmp_path):
-    """A bad predicate fails at the driver footer parse — never as a
-    per-task error inside a launched job — regardless of
-    bloom_prune_files."""
-    d = str(tmp_path / "val")
-    spark.range(100).selectExpr("id AS k", "id + 1 AS v") \
-        .coalesce(1).write.parquet(d)
-
-    from parquet_go_spark.interop import pqreader
-
-    for bp in (True, False):
-        with pytest.raises(ValueError, match="unsupported predicate op"):
-            pqreader.spark_read(spark, d, predicate=("k", "~", 1),
-                                bloom_prune_files=bp)
-        with pytest.raises(ValueError, match="not found"):
-            pqreader.spark_read(spark, d, predicate=("zz", "=", 1),
-                                bloom_prune_files=bp)
-        with pytest.raises(ValueError, match="not in the projected"):
-            pqreader.spark_read(spark, d, columns=["v"],
-                                predicate=("k", "=", 1),
-                                bloom_prune_files=bp)
-
-
 def test_pqreader_predicate_differential_over_corpus():
     """Pruned+filtered reads over the ENTIRE reference corpus must
     equal pyarrow's unpruned read + compute filter — every real-world
@@ -1573,36 +1573,46 @@ def test_pqreader_predicate_differential_over_corpus():
     assert covered >= 25  # most of the corpus exercises the path
 
 
-def test_pqreader_spark_read_split_row_groups(spark, tmp_path):
-    """split_row_groups=True decodes one row GROUP per input slice —
-    parallelism scales with data, not file count — and stays exact
-    with projection + predicate."""
+def _write_big_parquet(path: str, n: int = 400_000) -> None:
+    """One uncompressed file of ~7.6 MB (over two 4 MiB slices) in 8
+    row groups of 50,000 rows, sorted k."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_go_spark.interop import pqreader
-
-    n = 40000
     tbl = pa.table({
         "k": pa.array(range(n), pa.int64()),
-        "name": pa.array([f"n{i}" for i in range(n)]),
+        "name": pa.array([f"n{i:07d}" for i in range(n)]),
     })
+    pq.write_table(tbl, path, row_group_size=50_000, compression="none",
+                   use_dictionary=False)
+
+
+def test_pqreader_spark_read_split_row_groups(spark, tmp_path):
+    """A file larger than the 4 MiB slice cap is cut into byte spans
+    read by separate tasks — parallelism follows bytes, not file count
+    — every row is read exactly once, and results stay exact under a
+    pushed predicate."""
+    import os
+
+    from parquet_go_spark.sources import pqread
+    from parquet_go_spark.sources.datasource import _SLICE_BYTES
+
+    n = 400_000
     d = tmp_path / "split"
     d.mkdir()
-    # TWO files, 8 row groups each: per-file parallelism would cap at 2
-    pq.write_table(tbl.slice(0, n // 2), str(d / "a.parquet"),
-                   row_group_size=2500)
-    pq.write_table(tbl.slice(n // 2), str(d / "b.parquet"),
-                   row_group_size=2500)
+    _write_big_parquet(str(d / "big.parquet"), n)
+    assert os.path.getsize(d / "big.parquet") > _SLICE_BYTES
 
-    got = pqreader.spark_read(spark, str(d), split_row_groups=True)
-    assert got.rdd.getNumPartitions() == 16  # one slice per row group
-    assert sorted(r["k"] for r in got.collect()) == list(range(n))
+    pqread.register(spark)
+    got = spark.read.format("pqread").load(str(d))
+    assert got.rdd.getNumPartitions() >= 2
+    agg = got.agg(F.count("*"), F.countDistinct("k"), F.sum("k")).first()
+    assert tuple(agg) == (n, n, n * (n - 1) // 2)
 
-    filt = pqreader.spark_read(spark, str(d), columns=["k"],
-                               predicate=("k", "<", 100),
-                               split_row_groups=True)
-    assert sorted(r["k"] for r in filt.collect()) == list(range(100))
+    lo, hi = n // 2 - 30, n // 2 + 30  # around the row-group boundary
+    filt = (spark.read.format("pqread").load(str(d))
+            .where((F.col("k") >= lo) & (F.col("k") < hi)))
+    assert sorted(r["k"] for r in filt.collect()) == list(range(lo, hi))
 
 
 def test_pqreader_in_predicate(monkeypatch, tmp_path):
@@ -1787,13 +1797,13 @@ def test_pqreader_float_literal_on_int_column(tmp_path):
 
 def test_pqread_handles_ns_and_session_tz(spark, tmp_path):
     """INT96/ns files read through the data source without safe-cast
-    crashes (sub-µs truncates like Spark), nested ns casts too, and
-    timestamp filters are NEVER pushed (session-tz semantics are
-    invisible to a DataSourceReader) yet results stay exact under a
+    crashes (sub-µs truncates like Spark), nested ns casts too; ns
+    timestamp filters never push (Spark compares the truncated µs, the
+    reader the exact ns), µs ones do, and results stay exact under a
     non-UTC session timezone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.datasource import GreaterThan
+    from pyspark.sql.datasource import GreaterThan, LessThanOrEqual
 
     from parquet_go_spark.sources import pqread
     from parquet_go_spark.sources.pqread import PqreadReader
@@ -1814,20 +1824,43 @@ def test_pqread_handles_ns_and_session_tz(spark, tmp_path):
     assert len(rows) == 2  # 1001 ns truncates to 1 µs, no crash
     assert rows[1]["ts"].second == 2
 
-    # timestamps never push; the k filter still does
+    # ns timestamps never push; the k filter still does
     r = PqreadReader(str(d))
     r.pushFilters([GreaterThan(("ts",), dt.datetime(2024, 1, 1)),
                    GreaterThan(("k",), 1)])
     assert r._preds == [("k", ">", 1)]
 
-    # exactness under a non-UTC session tz (filters applied by
-    # Spark, never pushed): compare on a µs dir BOTH readers accept —
+    # a 1999 ns row is 1 µs to Spark: ts <= 1 µs keeps it, so the
+    # filter must not push (the reader would drop 1999 ns > 1000 ns)
+    d3 = tmp_path / "ns1999"
+    d3.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1999, 5_000_000], pa.timestamp("ns")),
+    }), str(d3 / "a.parquet"))
+    one_us = dt.datetime(1970, 1, 1, 0, 0, 0, 1, tzinfo=dt.timezone.utc)
+    r = PqreadReader(str(d3))
+    r.pushFilters([LessThanOrEqual(("ts",), one_us)])
+    assert r._preds == []
+    got = (spark.read.format("pqread").load(str(d3))
+           .where("ts <= timestamp_micros(1)").collect())
+    assert [row["k"] for row in got] == [1]
+
+    # exactness under a non-UTC session tz, now with the µs filter
+    # pushed: compare on a µs dir BOTH readers accept —
     # spark.read.parquet itself rejects the ns-annotated file above
     # (PARQUET_TYPE_ILLEGAL), which our reader decodes
-    d2 = str(tmp_path / "usdir")
-    spark.range(100).selectExpr(
-        "id AS k", "timestamp_micros(CAST(id * 1000000 AS long)) AS ts"
-    ).coalesce(1).write.parquet(d2)
+    d2 = tmp_path / "usdir"
+    d2.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array(range(100), pa.int64()),
+        "ts": pa.array([i * 1_000_000 for i in range(100)],
+                       pa.timestamp("us", tz="UTC")),
+    }), str(d2 / "a.parquet"))
+    d2 = str(d2)
+    r = PqreadReader(d2)
+    r.pushFilters([GreaterThan(("ts",), one_us)])
+    assert r._preds == [("ts", ">", one_us)]
     old = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -1838,6 +1871,65 @@ def test_pqread_handles_ns_and_session_tz(spark, tmp_path):
         assert got == exp > 0
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+@pytest.mark.parametrize(
+    "zone", ["UTC", "America/Los_Angeles", "Asia/Tokyo"])
+def test_pqread_timestamp_pushdown_matches_spark(spark, tmp_path, zone):
+    """µs timestamp WHEREs push into format("pqread") and count exactly
+    what spark.read.parquet counts under the session zone: =, >, <, >=
+    on a stored value and a string-cast literal inside the zone's DST
+    gap. The pushed triples hold the ts filter as a UTC instant."""
+    from pyspark.sql.datasource import (GreaterThanOrEqual, In,
+                                        LessThan)
+
+    from parquet_go_spark.sources import pqread
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pqread.register(spark)
+    d = tmp_path / "ts"
+    d.mkdir()
+    # hourly (+7 µs per row) from 2024-03-01 UTC over the March DST
+    # switch, 4 files of contiguous rows so stats refute whole files
+    for f in range(4):
+        ks = range(f * 500, f * 500 + 500)
+        pq.write_table(pa.table({
+            "k": pa.array(ks, pa.int64()),
+            "ts": pa.array([1709251200000000 + k * 3600000007 for k in ks],
+                           pa.timestamp("us", tz="UTC")),
+        }), str(d / f"part-{f}.parquet"))
+    d = str(d)
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        at = (spark.read.parquet(d).where("k = 777")
+              .select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+              .first()[0])
+        conds = [f"ts = timestamp'{at}'", f"ts > timestamp'{at}'",
+                 f"ts < timestamp'{at}'", f"ts >= timestamp'{at}'",
+                 "ts >= CAST('2024-03-10 02:30:00' AS TIMESTAMP)"]
+        counts = []
+        for c in conds:
+            got = spark.read.format("pqread").load(d).where(c).count()
+            exp = spark.read.parquet(d).where(c).count()
+            assert got == exp, (zone, c, got, exp)
+            counts.append(got)
+        assert counts[:4] == [1, 1222, 777, 1223]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+    inst = dt.datetime(2024, 3, 10, 10, 30, tzinfo=dt.timezone.utc)
+    naive = dt.datetime(2024, 3, 10, 10, 30)
+    r = pqread.PqreadReader(d)
+    r.pushFilters([GreaterThanOrEqual(("ts",), inst),
+                   LessThan(("ts",), naive), In(("ts",), (naive,))])
+    anchored = naive.astimezone(dt.timezone.utc)
+    assert r._preds == [("ts", ">=", inst), ("ts", "<", anchored),
+                        ("ts", "in", [anchored])]
+    assert all(v.tzinfo is not None for _, _, v in r._preds[:2])
 
 
 def test_pqreader_verify_checksums(tmp_path):
@@ -2368,18 +2460,18 @@ def test_pqreader_or_kleene_null_semantics(tmp_path):
 
 
 def test_spark_read_or_predicate(spark, tmp_path):
-    """spark_read with an OR tree equals Spark's own parquet reader
-    with the same WHERE clause."""
-    from parquet_go_spark.interop import pqreader
+    """An OR WHERE through format("pqread") equals Spark's own parquet
+    reader with the same clause (OR pruning itself is covered by the
+    read_table tests test_pqreader_or_*)."""
+    from parquet_go_spark.sources import pqread
 
     d = tmp_path / "ordir"
     d.mkdir()
     _write_null_fixture(str(d / "part-0.parquet"))
     _write_null_fixture(str(d / "part-1.parquet"))
-    ours = pqreader.spark_read(
-        spark, str(d),
-        predicate=("or", [("k", "<", 100), ("v", "isnull")]),
-    ).orderBy("k").collect()
+    pqread.register(spark)
+    ours = (spark.read.format("pqread").load(str(d))
+            .where("k < 100 OR v IS NULL").orderBy("k").collect())
     ref = (spark.read.parquet(str(d))
            .where("k < 100 OR v IS NULL").orderBy("k").collect())
     assert ours == ref

@@ -4,7 +4,7 @@
   _plan_jobs must never collect() the manifest, and its greedy bin
   semantics must be identical to the round-4 driver-side planner.
 - FLOAT16 logical type read (VERDICT r4 missing #3): decode, stats
-  pruning in exact double space, footer aggregates, spark_read f32
+  pruning in exact double space, footer aggregates, pqread f32
   widening.
 - Legacy LZ4 (codec 5) read (VERDICT r4 missing #2): try-each-framing
   decode validated against the page header's exact uncompressed size.
@@ -228,10 +228,13 @@ def test_float16_footer_aggregates(f16_file):
 def test_float16_spark_read_widens_to_f32(spark, f16_file, tmp_path):
     import shutil
 
+    from parquet_go_spark.sources import pqread as ds
+
     d = tmp_path / "f16dir"
     d.mkdir()
     shutil.copy(f16_file, d / "part0.parquet")
-    df = pqreader.spark_read(spark, str(d))
+    ds.register(spark)
+    df = spark.read.format("pqread").load(str(d))
     assert dict(df.dtypes)["h"] == "float"
     got = {r["i"]: r["h"] for r in df.collect()}
     ref = pq.read_table(f16_file)
@@ -245,12 +248,13 @@ def test_float16_spark_read_widens_to_f32(spark, f16_file, tmp_path):
             assert g != g
         else:
             assert g == pytest.approx(float(v))
-    # predicate pushes into the distributed decode too
-    n = pqreader.spark_read(spark, str(d),
-                            predicate=("h", ">", 0.5)).count()
+    # a WHERE on the half column is exact in the distributed read too
+    # (`<`: NaN rows fail it under Spark's and IEEE order alike)
+    n = (spark.read.format("pqread").load(str(d))
+         .where("h < 0.5").count())
     h64 = ref["h"].cast(pa.float64())
     import pyarrow.compute as pc
-    assert n == pc.sum(pc.fill_null(pc.greater(h64, 0.5), False)).as_py()
+    assert n == pc.sum(pc.fill_null(pc.less(h64, 0.5), False)).as_py()
 
 
 # -------------------------------------------------- legacy LZ4 (codec 5)
@@ -428,12 +432,20 @@ def _write_encrypted(path, *, plaintext_footer=False):
 def _decryption():
     from parquet_go_spark.interop import pqcrypt
 
-    # LocalKeyUnwrap matches _kms_factory's wrap format and is
-    # picklable, so the same FileDecryption works in spark_read
-    # executor closures
+    # LocalKeyUnwrap matches _kms_factory's wrap format; the pqread
+    # data source builds the same retriever from its master_keys
+    # option (_pqread_keys)
     return pqcrypt.FileDecryption(
         key_retriever=pqcrypt.pyarrow_key_retriever(
             pqcrypt.LocalKeyUnwrap({"kf": FOOTER_KEY, "kc": COL_KEY})))
+
+
+def _pqread_keys(masters: dict) -> dict:
+    """pqread string options for master keys {key_id: bytes}."""
+    import json
+
+    return {"master_keys": json.dumps(
+        {k: v.hex() for k, v in masters.items()})}
 
 
 @pytest.mark.parametrize("plaintext_footer", [False, True])
@@ -540,19 +552,23 @@ def test_plaintext_footer_partial_access(tmp_path):
 
 
 def test_encrypted_spark_read(spark, tmp_path):
-    from parquet_go_spark.interop import pqreader as r
+    import pyarrow.compute as pc
+
+    from parquet_go_spark.sources import pqread as ds
 
     d = tmp_path / "encdir"
     d.mkdir()
     t = _write_encrypted(str(d / "part0.parquet"))
-    df = r.spark_read(spark, str(d), decryption=_decryption())
-    assert df.count() == t.num_rows
-    got = df.agg({"x": "min"}).collect()[0][0]
-    import pyarrow.compute as pc
+    ds.register(spark)
+    keys = _pqread_keys({"kf": FOOTER_KEY, "kc": COL_KEY})
 
+    def load():  # fresh per query (Spark 4.1 relation-reuse caveat)
+        return spark.read.format("pqread").options(**keys).load(str(d))
+
+    assert load().count() == t.num_rows
+    got = load().agg({"x": "min"}).collect()[0][0]
     assert got == pc.min(t["x"]).as_py()
-    n = r.spark_read(spark, str(d), predicate=("x", "<", 100_000),
-                     decryption=_decryption()).count()
+    n = load().where("x < 100000").count()
     assert n == pc.sum(pc.less(t["x"], 100_000)).as_py()
 
 
@@ -1187,8 +1203,8 @@ def test_encrypted_write_negatives(tmp_path):
 def test_encrypted_export_roundtrip(spark, tmp_path):
     """Distributed encrypted export: export_parquet(encryption=
     EncryptionFactory) writes per-task encrypted files with FRESH DEKs
-    per file; spark_read with the factory's matching FileDecryption
-    decodes them back equal; keyless readers get a clear error, and
+    per file; format("pqread") with the factory's master keys decodes
+    them back equal; keyless readers get a clear error, and
     every file really is encrypted (PARE magic)."""
     import glob
 
@@ -1221,7 +1237,11 @@ def test_encrypted_export_roundtrip(spark, tmp_path):
         deks.add(km["wrappedDEK"])
     assert len(deks) == len(files)  # no DEK (wrapping) shared
 
-    got = pqreader.spark_read(spark, d, decryption=fac.decryption())
+    from parquet_go_spark.sources import pqread as ds
+
+    ds.register(spark)
+    got = (spark.read.format("pqread").options(**_pqread_keys(fac.masters))
+           .load(d))
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in df.collect())
     assert a == b
@@ -1333,7 +1353,7 @@ def test_encrypted_store_compaction(spark, tmp_path):
     import os
 
     from parquet_go_spark.interop import (
-        compact, export as pexport, pqbloom, pqcrypt, pqreader)
+        compact, export as pexport, pqbloom, pqcrypt)
 
     df = (spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
           .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -1357,7 +1377,11 @@ def test_encrypted_store_compaction(spark, tmp_path):
     for f in files1:
         assert open(f, "rb").read(4) == b"PARE"  # still encrypted
 
-    got = pqreader.spark_read(spark, d, decryption=fac.decryption())
+    from parquet_go_spark.sources import pqread as ds
+
+    ds.register(spark)
+    got = (spark.read.format("pqread").options(**_pqread_keys(fac.masters))
+           .load(d))
     assert sorted(map(tuple, got.collect())) \
         == sorted(map(tuple, df.collect()))
     for m in merged:
