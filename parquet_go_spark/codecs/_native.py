@@ -117,9 +117,9 @@ long fsst_encode(const uint8_t *in, long n,
     return o;
 }
 
-/* XXH64 (public-domain algorithm, Yann Collet) — parquet bloom filters
- * hash each value's plain-encoded bytes with seed 0. Batch form: value i
- * is data[offs[i] .. offs[i+1]). */
+/* XXH64 (public-domain algorithm, Yann Collet) — every bloom filter
+ * (codecs/bloom.py) hashes each value's plain-encoded bytes with seed 0.
+ * Batch form: value i is data[offs[i] .. offs[i+1]). */
 static inline uint64_t rotl64(uint64_t x, int r)
 {
     return (x << r) | (x >> (64 - r));
@@ -185,37 +185,6 @@ void xxh64_batch(const uint8_t *data, const int64_t *offs, long n,
 {
     for (long i = 0; i < n; i++)
         out[i] = xxh64(data + offs[i], (long)(offs[i + 1] - offs[i]), seed);
-}
-
-/* Engine-bloom per-value polynomial hash. Must match the numpy
- * reference in bloom.py bit-for-bit (same blob bytes either way):
- *   acc    = sum_j value[j] * K2^j                  (mod 2^64)
- *   out[i] = splitmix-mix(acc ^ (len * K3))
- * The numpy path materializes ~24 bytes of int64 temporaries per input
- * byte (repeat/arange/add.at) — this loop is pure sequential reads. */
-#define BK1 0x9E3779B97F4A7C15ULL
-#define BK2 0xBF58476D1CE4E5B9ULL
-#define BK3 0x94D049BB133111EBULL
-
-static inline uint64_t bmix64(uint64_t x)
-{
-    x += BK1;
-    x = (x ^ (x >> 30)) * BK2;
-    x = (x ^ (x >> 27)) * BK3;
-    return x ^ (x >> 31);
-}
-
-void poly64_batch(const uint8_t *data, const int64_t *offs, long n,
-                  uint64_t *out)
-{
-    for (long i = 0; i < n; i++) {
-        const uint8_t *p = data + offs[i];
-        long len = (long)(offs[i + 1] - offs[i]);
-        uint64_t acc = 0;
-        for (long j = len - 1; j >= 0; j--)
-            acc = acc * BK2 + p[j];
-        out[i] = bmix64(acc ^ ((uint64_t)len * BK3));
-    }
 }
 
 /* Parquet hybrid RLE/bit-packed encode, width 1..32 (dictionary
@@ -415,8 +384,7 @@ long fsst_decode(const uint8_t *in, long n,
 
 
 class _Lib:
-    __slots__ = ("encode", "decode", "xxh64", "poly64",
-                 "rle_encode", "rle_decode")
+    __slots__ = ("encode", "decode", "xxh64", "rle_encode", "rle_decode")
 
     def __init__(self, dll: ctypes.CDLL):
         u8p = ctypes.POINTER(ctypes.c_uint8)
@@ -425,12 +393,6 @@ class _Lib:
         self.xxh64.argtypes = [
             u8p, ctypes.POINTER(ctypes.c_int64), ctypes.c_long,
             ctypes.c_uint64, ctypes.POINTER(ctypes.c_uint64),
-        ]
-        self.poly64 = dll.poly64_batch
-        self.poly64.restype = None
-        self.poly64.argtypes = [
-            u8p, ctypes.POINTER(ctypes.c_int64), ctypes.c_long,
-            ctypes.POINTER(ctypes.c_uint64),
         ]
         self.rle_encode = dll.rle_encode
         self.rle_encode.restype = ctypes.c_long
@@ -506,7 +468,9 @@ def load() -> _Lib | None:
     Returns None — meaning "use the numpy path" — when disabled via
     SPARK_COLCODEC_NATIVE=0, on big-endian hosts (the kernels assume the
     table's little-endian uint64 key packing matches memory order), or
-    when no working C compiler is available.
+    when no working C compiler is available or the .so does not load. A
+    binding error (a symbol `_Lib` names that the library lacks) is a
+    bug, not a host property: it raises.
     """
     if os.environ.get("SPARK_COLCODEC_NATIVE", "1") == "0":
         return None
@@ -527,6 +491,7 @@ def load() -> _Lib | None:
             _build(cc, cache_dir, so_path)
         if hasattr(os, "getuid") and os.stat(so_path).st_uid != os.getuid():
             return None  # not our artifact — refuse to load it
-        return _Lib(ctypes.CDLL(so_path))
-    except Exception:
-        return None
+        dll = ctypes.CDLL(so_path)
+    except (OSError, subprocess.SubprocessError):
+        return None  # no/broken compiler, or an unloadable .so
+    return _Lib(dll)

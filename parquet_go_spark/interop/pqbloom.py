@@ -1,12 +1,10 @@
-"""Parquet split-block bloom filters (spec-exact, XXH64-hashed).
+"""Parquet bloom filter container: the thrift BloomFilterHeader, the
+parquet-mr sizing rule, reading bitsets from a file's footer offsets
+(plaintext or encrypted modules) and file-level pruning.
 
-The engine's own chunk blooms (codecs/bloom.py) use a vectorized
-splitmix64 hash — fine for our manifest format, but parquet interop
-requires the spec's hash: XXH64 (seed 0) of each value's plain-encoded
-bytes (BYTE_ARRAY/FLBA without any length prefix). This module supplies
-that hash plus the header/bitset container, reusing the split-block
-bit math from codecs/bloom.py (SALT constants and block selection are
-already the parquet spec's — bloom/block.go:20-28 in the reference).
+The filter itself — XXH64 (seed 0) of each value's plain-encoded bytes,
+the split-block bit math, bitset build and probe — is codecs/bloom.py,
+the package's one split-block filter (colcodec chunk blooms use it too).
 
 Parity evidence (tests/test_interop_bloom.py): inserting the 14 values
 of /root/reference/testdata/data_index_bloom_encoding_stats.parquet
@@ -26,129 +24,12 @@ import os
 
 import numpy as np
 
-from parquet_go_spark.codecs import _native
-from parquet_go_spark.codecs.bloom import SALT
-from parquet_go_spark.codecs.bytearrays import ByteArrays
-from parquet_go_spark.codecs.kinds import Kind
+from parquet_go_spark.codecs.bloom import build_bitset, probe, spec_hashes
 from parquet_go_spark.interop import thriftc as tc
-
-_NATIVE = _native.load()
-
-_M = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
 
 MIN_BYTES = 32          # one block
 MAX_BYTES = 128 << 20   # parquet-mr's upper bound
 DEFAULT_FPP = 0.01
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _xxh64_py(data: bytes, seed: int = 0) -> int:
-    """Portable XXH64 (public-domain algorithm) — the fallback when the
-    compiled batch kernel is unavailable. Unsigned result."""
-    n = len(data)
-    off = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M
-        v2 = (seed + _P2) & _M
-        v3 = seed
-        v4 = (seed - _P1) & _M
-        while off <= n - 32:
-            k1 = int.from_bytes(data[off:off + 8], "little")
-            k2 = int.from_bytes(data[off + 8:off + 16], "little")
-            k3 = int.from_bytes(data[off + 16:off + 24], "little")
-            k4 = int.from_bytes(data[off + 24:off + 32], "little")
-            v1 = (_rotl((v1 + k1 * _P2) & _M, 31) * _P1) & _M
-            v2 = (_rotl((v2 + k2 * _P2) & _M, 31) * _P1) & _M
-            v3 = (_rotl((v3 + k3 * _P2) & _M, 31) * _P1) & _M
-            v4 = (_rotl((v4 + k4 * _P2) & _M, 31) * _P1) & _M
-            off += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M
-        for v in (v1, v2, v3, v4):
-            h ^= (_rotl((v * _P2) & _M, 31) * _P1) & _M
-            h = (h * _P1 + _P4) & _M
-    else:
-        h = (seed + _P5) & _M
-    h = (h + n) & _M
-    while off <= n - 8:
-        k = int.from_bytes(data[off:off + 8], "little")
-        h ^= (_rotl((k * _P2) & _M, 31) * _P1) & _M
-        h = (_rotl(h, 27) * _P1 + _P4) & _M
-        off += 8
-    if off <= n - 4:
-        k = int.from_bytes(data[off:off + 4], "little")
-        h ^= (k * _P1) & _M
-        h = (_rotl(h, 23) * _P2 + _P3) & _M
-        off += 4
-    while off < n:
-        h ^= (data[off] * _P5) & _M
-        h = (_rotl(h, 11) * _P1) & _M
-        off += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
-
-
-def _hash_buffer(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """XXH64(seed 0) of each [offsets[i], offsets[i+1]) slice of data."""
-    n = len(offsets) - 1
-    out = np.empty(n, dtype=np.uint64)
-    if n == 0:
-        return out
-    if _NATIVE is not None and getattr(_NATIVE, "xxh64", None) is not None:
-        import ctypes
-
-        data = np.ascontiguousarray(data)
-        offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-        _NATIVE.xxh64(
-            data.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-            offsets.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            n, 0,
-            out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
-        )
-        return out
-    raw = data.tobytes()
-    for i in range(n):
-        out[i] = _xxh64_py(raw[offsets[i]:offsets[i + 1]])
-    return out
-
-
-def spec_hashes(values, kind: int, flba_size: int | None = None) -> np.ndarray:
-    """Per-value parquet bloom hash: XXH64(plain encoding, seed 0).
-
-    BYTE_ARRAY hashes the raw bytes (no length prefix); numerics hash
-    their little-endian plain width; FLBA hashes the fixed bytes.
-    BOOLEAN is not bloomed (two possible values — the spec's writers
-    skip it too)."""
-    if kind == Kind.BYTE_ARRAY:
-        assert isinstance(values, ByteArrays)
-        data = values.data[: values.offsets[-1]]
-        return _hash_buffer(data, values.offsets.astype(np.int64))
-    if kind == Kind.BOOLEAN:
-        raise ValueError("boolean columns are not bloom-filtered")
-    a = np.ascontiguousarray(values)
-    if kind == Kind.FIXED_LEN_BYTE_ARRAY:
-        width = flba_size or (a.shape[1] if a.ndim == 2 else a.itemsize)
-        flat = a.reshape(-1).view(np.uint8)
-    else:
-        width = {Kind.INT32: 4, Kind.INT64: 8,
-                 Kind.FLOAT: 4, Kind.DOUBLE: 8}[kind]
-        if a.dtype.byteorder == ">":
-            a = a.astype(a.dtype.newbyteorder("<"))
-        flat = a.view(np.uint8)
-    n = len(flat) // width
-    offsets = (np.arange(n + 1, dtype=np.int64) * width)
-    return _hash_buffer(flat, offsets)
 
 
 def optimal_bytes(ndv: int, fpp: float = DEFAULT_FPP) -> int:
@@ -159,40 +40,6 @@ def optimal_bytes(ndv: int, fpp: float = DEFAULT_FPP) -> int:
     nbytes = max(MIN_BYTES, int(bits) // 8)
     nbytes = 1 << max(nbytes - 1, 1).bit_length()
     return min(max(nbytes, MIN_BYTES), MAX_BYTES)
-
-
-def _block_index(h: np.ndarray, n_blocks: int) -> np.ndarray:
-    return (((h >> np.uint64(32)) * np.uint64(n_blocks))
-            >> np.uint64(32)).astype(np.int64)
-
-
-def _bit_masks(h: np.ndarray) -> np.ndarray:
-    lo = (h & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-    x = lo[:, None] * SALT[None, :]  # uint32 wrap
-    return (np.uint32(1) << (x >> np.uint32(27))).astype(np.uint32)
-
-
-def build_bitset(hashes: np.ndarray, nbytes: int) -> bytes:
-    """Insert hashes into a split-block bitset of nbytes (multiple of 32)."""
-    n_blocks = nbytes // 32
-    words = np.zeros((n_blocks, 8), dtype=np.uint32)
-    if len(hashes):
-        bi = _block_index(hashes, n_blocks)
-        masks = _bit_masks(hashes)
-        np.bitwise_or.at(words, (bi[:, None], np.arange(8)[None, :]), masks)
-    return words.astype("<u4").tobytes()
-
-
-def might_contain(bitset: bytes | np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Probe → bool per hash (no false negatives)."""
-    words = np.frombuffer(bitset, dtype="<u4").reshape(-1, 8) \
-        if not isinstance(bitset, np.ndarray) else bitset
-    if len(hashes) == 0:
-        return np.zeros(0, dtype=bool)
-    bi = _block_index(np.asarray(hashes, dtype=np.uint64), len(words))
-    masks = _bit_masks(np.asarray(hashes, dtype=np.uint64))
-    got = words[bi]
-    return np.all((got & masks) == masks, axis=1)
 
 
 def bloom_parts(hashes: np.ndarray, fpp: float = DEFAULT_FPP,
@@ -223,7 +70,7 @@ def bloom_blob(hashes: np.ndarray, fpp: float = DEFAULT_FPP,
 
 def read_bloom_at(f, off: int, crypto=None) -> np.ndarray | None:
     """One chunk's bloom bitset at file offset `off` as the (blocks, 8)
-    uint32 matrix might_contain expects. Plaintext layout: thrift
+    uint32 matrix bloom.probe expects. Plaintext layout: thrift
     BloomFilterHeader + raw bitset. Encrypted chunks (`crypto` =
     pqcrypt.ChunkCrypto) carry TWO modules: a GCM header module (type
     8) then the bitset module — GCM (type 9) in AES_GCM_V1 files, a
@@ -344,7 +191,7 @@ def _keep_path(path: str, column: str, hashes: np.ndarray,
                              decryption=decryption).values()
     if not col_blooms:
         return True
-    return any(bool(might_contain(w, hashes).any()) for w in col_blooms)
+    return any(bool(probe(w, hashes).any()) for w in col_blooms)
 
 
 def prune_files(paths, column: str, values, kind: int,

@@ -41,7 +41,6 @@ from parquet_go_spark.codecs import bitpacked, delta, plain, rle
 from parquet_go_spark.codecs.bytearrays import ByteArrays
 from parquet_go_spark.codecs.kinds import Codec, Kind
 from parquet_go_spark.interop.thriftc import read_struct
-from parquet_go_spark.plans import pipeline as _pipeline
 
 # codec 5 (legacy LZ4) is ambiguous in the wild — parquet-mr wrote
 # Hadoop block framing, old parquet-cpp wrote bare LZ4 blocks, a few
@@ -612,14 +611,19 @@ def _values_to_arrow(leaf: _Node, vals) -> pa.Array:
                     a = np.ascontiguousarray(np.concatenate(
                         [np.broadcast_to(pad, (len(a), 8 - w)), a], axis=1))
                 ints64 = a.view(">i8").reshape(-1).astype(np.int64)
-                return _pipeline._values_to_decimal(
+                from parquet_go_spark.plans.pipeline import _values_to_decimal
+
+                return _values_to_decimal(
                     ints64, typ.precision, typ.scale)
             ints = [int.from_bytes(row.tobytes(), "big", signed=True)
                     for row in arr]
             return _ints_to_decimal(ints, typ)
         if small:
-            # INT32/INT64-backed decimals: no per-row Python
-            return _pipeline._values_to_decimal(
+            # INT32/INT64-backed decimals: no per-row Python; the
+            # pipeline module (pandas) loads only when one is read
+            from parquet_go_spark.plans.pipeline import _values_to_decimal
+
+            return _values_to_decimal(
                 np.asarray(arr, dtype=np.int64), typ.precision, typ.scale)
         return _ints_to_decimal([int(v) for v in arr], typ)
     if pa.types.is_float16(typ):
@@ -963,7 +967,7 @@ class _Pred:
     stat_cmp: object = None      # comparable in stat space, or None
     unsigned: bool = False
     trust: bool = False          # column_orders declared → stats usable
-    bloom_args: tuple | None = None  # spec_hashes(values, kind, flba)
+    bloom_args: tuple | None = None  # bloom.spec_hashes(values, kind, flba)
 
 
 def _ts_unit(leaf: _Node) -> str | None:
@@ -1110,7 +1114,7 @@ def _stat_raw_to_cmp(raw: bytes, leaf: _Node, unsigned: bool):
 
 
 def _pred_bloom_args(leaf: _Node, stat_cmp, unsigned: bool, value):
-    """(values, kind, flba_size) for pqbloom.spec_hashes, or None.
+    """(values, kind, flba_size) for codecs.bloom.spec_hashes, or None.
     Covers FLBA decimals too (stats are unusable there, but the spec
     bloom hashes the big-endian physical bytes — a point probe works)."""
     ph = leaf.physical
@@ -1397,6 +1401,7 @@ def _rg_survives(f, rg: dict, pred: _Pred) -> bool:
             and meta.get("__crypto__", True) is not None:
         off = meta.get(14)
         if off is not None:
+            from parquet_go_spark.codecs import bloom
             from parquet_go_spark.interop import pqbloom
 
             # encrypted bloom modules decrypt through the chunk's
@@ -1405,8 +1410,8 @@ def _rg_survives(f, rg: dict, pred: _Pred) -> bool:
             # already pruned
             bits = pqbloom.read_bloom_at(f, off, meta.get("__crypto__"))
             values, kind, flba = pred.bloom_args
-            hashes = pqbloom.spec_hashes(values, kind, flba_size=flba)
-            if not bool(pqbloom.might_contain(bits, hashes).any()):
+            hashes = bloom.spec_hashes(values, kind, flba_size=flba)
+            if not bool(bloom.probe(bits, hashes).any()):
                 return False
     return True
 

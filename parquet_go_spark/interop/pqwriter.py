@@ -33,6 +33,7 @@ from parquet_go_spark.codecs import (
     plain,
     rle,
 )
+from parquet_go_spark.codecs.bloom import spec_hashes
 from parquet_go_spark.codecs.bytearrays import ByteArrays
 from parquet_go_spark.codecs.chunk import _outer
 from parquet_go_spark.codecs.kinds import Codec, Kind, KIND_WIDTHS
@@ -1201,7 +1202,7 @@ def write_table(path: str, columns: list[ColumnSpec], *,
                 vlo, vhi = ((int(cum[g_lo]), int(cum[g_hi]))
                             if cum is not None else (g_lo, g_hi))
                 vals = _slice_values(spec.values, vlo, vhi)
-                hashes = pqbloom.spec_hashes(
+                hashes = spec_hashes(
                     vals, spec.kind, flba_size=spec.flba_size)
                 cr = ch.get("crypto")
                 if cr is not None:

@@ -426,16 +426,16 @@ def _chunk_stats(values, spark_type: str) -> tuple[str | None, str | None]:
 
 def _encode_one(values, kind, spark_type, compression, base,
                 stream="values", validity=None, fsst_cache=None,
-                def_hist=None, rep_hist=None):
+                def_hist=None, rep_hist=None, bloom=False):
     # UUID-ish upgrade (type_uuid.go:14 analog): a binary chunk whose
     # values all share one width w ≤ 64 encodes as FLBA(w) — dropping
     # the per-value length framing and unlocking the BYTE_STREAM_SPLIT
-    # and FLBA-dict kernels. Physical-only: stats, sha256, and bloom
-    # stay in logical byte-array space (probes don't know the physical
-    # kind), and decode rebuilds plain binary from the blob's own
-    # header, so ragged and uniform chunks of one column can coexist.
+    # and FLBA-dict kernels. Physical-only: stats and sha256 stay in
+    # logical byte-array space, the bloom's XXH64 of the raw bytes is
+    # the same either way, and decode rebuilds plain binary from the
+    # blob's own header, so ragged and uniform chunks of one column can
+    # coexist.
     enc_values = values
-    flba_upgraded = False
     if (kind == Kind.BYTE_ARRAY and spark_type == "binary"
             and isinstance(values, ByteArrays) and len(values)):
         lens = values.lengths
@@ -445,7 +445,6 @@ def _encode_one(values, kind, spark_type, compression, base,
                 values.data[: values.offsets[-1]]
             ).reshape(-1, w)
             kind = Kind.FIXED_LEN_BYTE_ARRAY
-            flba_upgraded = True
     flba_size = None
     if kind == Kind.FIXED_LEN_BYTE_ARRAY:
         flba_size = enc_values.shape[1] if len(enc_values) else 16
@@ -469,23 +468,16 @@ def _encode_one(values, kind, spark_type, compression, base,
     )
     mn, mx = _chunk_stats(values, spark_type)
     null_count = 0 if validity is None else int(len(validity) - validity.sum())
-    # split-block bloom per chunk (bloom/block.go analog); levels/list
-    # streams carry no bloom. Dict-wrapped chunks build the filter from
-    # the dictionary uniques already in hand (writer.go:2089-2095):
-    # identical no-false-negative semantics, NDV-proportional cost.
+    # split-block bloom per scalar column chunk (bloom/block.go
+    # analog); container streams carry none, since only scalar columns
+    # are pushed to datasource._chunk_survives. Dict-wrapped chunks
+    # build the filter from the dictionary uniques already in hand
+    # (writer.go:2089-2095): identical no-false-negative semantics,
+    # NDV-proportional cost.
     bf = None
-    if stream == "values" and len(values) and kind != Kind.BOOLEAN:
+    if bloom and len(values) and kind != Kind.BOOLEAN:
         uniq = info.get("uniques")
-        if flba_upgraded:
-            # hash in byte-array space: datasource._chunk_survives probes
-            # with the LOGICAL type's hashing and must not see the upgrade
-            if uniq is not None:
-                uniq = _flba_to_byte_values(uniq)
-            bf = bloomlib.build(uniq if uniq is not None else values,
-                                Kind.BYTE_ARRAY)
-        else:
-            bf = bloomlib.build(uniq if uniq is not None else enc_values,
-                                kind)
+        bf = bloomlib.build(uniq if uniq is not None else enc_values, kind)
     rec = dict(base)
     rec.update(
         stream=stream, kind=kind, codec=info["codec"], dict=info["dict"],
@@ -713,12 +705,14 @@ def _encode_one_chunk(tbl: pa.Table, columns, repo: str, bucket: int,
     recs = []
     for name, spark_type in columns:
         b = dict(base, column=name)
+        scalar = not _is_container(spark_type)
         for (stream, values, kind, leaf_type, validity,
              de, rep) in _shred_column(tbl.column(name), spark_type):
             recs.append(_encode_one(values, kind, leaf_type, compression,
                                     b, stream=stream, validity=validity,
                                     fsst_cache=fsst_cache,
-                                    def_hist=de, rep_hist=rep))
+                                    def_hist=de, rep_hist=rep,
+                                    bloom=scalar))
     return pa.RecordBatch.from_pylist(recs, schema=_BLOB_ARROW_SCHEMA)
 
 

@@ -27,6 +27,11 @@ Scale shape:
   All filters are returned to Spark for exact re-evaluation, so bloom
   false positives and truncated bounds can never corrupt results (same
   contract as the reference's page skipping, search.go:6-95).
+- Chunk blooms are raw XXH64 split-block bitsets (codecs/bloom.py), a
+  multiple of 32 bytes. A bloom written before the XXH64 change carries
+  a uvarint block-count prefix (length % 32 ≠ 0); its probe abstains,
+  so the chunk is kept: stores from either side of the change, and
+  chunks ``compact_tables`` splices verbatim, never lose rows.
 
 SPARK 4.1 CAVEAT (upstream, applies to EVERY python data source with
 ``spark.sql.python.filterPushdown.enabled``): the JVM caches planned
@@ -182,8 +187,8 @@ def _chunk_survives(filters, col_types, stats, blooms,
     unbounded — unprunable: _truncate_max records None for an all-0xFF
     prefix, and boolean/empty chunks record no stats at all. This is
     the store's one prune rule; array/map/struct columns are never
-    pushed here (ColcodecReader.pushFilters), so array<scalar> element
-    blooms are written but not probed."""
+    pushed here (ColcodecReader.pushFilters), and the encoder builds
+    blooms for scalar columns only."""
     import numpy as np
 
     from parquet_go_spark.codecs import bloom as bloomlib

@@ -63,9 +63,10 @@ def test_bloom_point_lookup_through_ds(spark, tmp_path_factory):
 
 @pytest.mark.skipif(bloom._NATIVE is None, reason="no C toolchain on this host")
 def test_native_byte_array_hash_matches_numpy(monkeypatch):
-    """The compiled poly64 kernel must reproduce the numpy reference
-    hash bit-for-bit: filters built by one path are probed by the other
-    (mixed deployments / resume across hosts with and without cc)."""
+    """The compiled XXH64 kernel and the numpy fallback must hash
+    BYTE_ARRAY chunks bit-for-bit: filters built by one path are probed
+    by the other (mixed deployments / resume across hosts with and
+    without cc)."""
     rng = np.random.default_rng(11)
     lens = np.concatenate([
         rng.integers(0, 50, 4000),          # short values + empties
@@ -75,11 +76,38 @@ def test_native_byte_array_hash_matches_numpy(monkeypatch):
     data = rng.integers(0, 256, int(lens.sum()), dtype=np.uint8)
     offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
     vals = ByteArrays(data, offsets)
-    h_native = bloom.hash_values(vals, Kind.BYTE_ARRAY)
+    h_native = bloom.spec_hashes(vals, Kind.BYTE_ARRAY)
+    blob_native = bloom.build(vals, Kind.BYTE_ARRAY)
     monkeypatch.setattr(bloom, "_NATIVE", None)
-    h_numpy = bloom.hash_values(vals, Kind.BYTE_ARRAY)
+    h_numpy = bloom.spec_hashes(vals, Kind.BYTE_ARRAY)
     assert np.array_equal(h_native, h_numpy)
-    # cross-path build/probe: numpy-built filter, native probe hashes
-    blob = bloom.build(vals, Kind.BYTE_ARRAY)
+    # cross-path build/probe, both directions
+    blob_numpy = bloom.build(vals, Kind.BYTE_ARRAY)
+    assert blob_numpy == blob_native
+    assert bloom.might_contain(blob_native, vals, Kind.BYTE_ARRAY).all()
     monkeypatch.undo()
-    assert bloom.might_contain(blob, vals, Kind.BYTE_ARRAY).all()
+    assert bloom.might_contain(blob_numpy, vals, Kind.BYTE_ARRAY).all()
+
+
+def test_blooms_on_scalar_columns_only():
+    """Container element streams (array<scalar> elements and map values
+    are both named `values`) carry no bloom: only scalar columns are
+    pushed to the chunk prune rule, so nothing would probe one."""
+    import pyarrow as pa
+
+    from parquet_go_spark.plans import pipeline
+
+    tbl = pa.table({
+        "id": pa.array([1, 2, 3], pa.int64()),
+        "tags": pa.array([["a", "b"], [], ["c"]], pa.list_(pa.string())),
+        "attrs": pa.array([[("k", "v")], [("x", "y")], []],
+                          pa.map_(pa.string(), pa.string())),
+    })
+    cols = [("id", "bigint"), ("tags", "array<string>"),
+            ("attrs", "map<string,string>")]
+    recs = pipeline._encode_one_chunk(tbl, cols, "r", 0, None, "").to_pylist()
+    bloomed = {(r["column"], r["stream"]) for r in recs
+               if r["bloom"] is not None}
+    assert bloomed == {("id", "values")}
+    assert {("tags", "values"), ("attrs", "values")} <= {
+        (r["column"], r["stream"]) for r in recs}

@@ -105,6 +105,59 @@ def test_bloom_refutes_inside_bounds():
     assert hits < 20  # ~1% fpp on 98 absent probes
 
 
+def test_legacy_uvarint_blooms_abstain(store, tmp_path):
+    """A store whose blooms predate the XXH64 change (uvarint block
+    count ahead of the words, so length % 32 != 0) must keep every
+    chunk those blooms would judge: `=` and `in` return the rows of an
+    unpushed read. The legacy words here are all zero, so any probe of
+    them would refute everything."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.datasource import EqualTo, In
+
+    from parquet_go_spark.codecs.varint import write_uvarint
+    from tests.colcodec_read import direct_read
+
+    def legacy(blob):
+        if blob is None:
+            return None
+        out = bytearray()
+        write_uvarint(out, len(blob) // 32)
+        return bytes(out) + bytes(len(blob))
+
+    d = str(tmp_path / "legacy")
+    shutil.copytree(store[0], d)
+    n_blooms = 0
+    for f in os.listdir(d):
+        if not f.endswith(".parquet") or f.startswith(("_", ".")):
+            continue
+        path = os.path.join(d, f)
+        t = pq.read_table(path)
+        blooms = t.column("bloom").to_pylist()
+        n_blooms += sum(b is not None for b in blooms)
+        i = t.schema.get_field_index("bloom")
+        t = t.set_column(i, "bloom",
+                         pa.array([legacy(b) for b in blooms], pa.binary()))
+        pq.write_table(t, path)
+    assert n_blooms
+
+    every, _ = direct_read(d, [])
+    cases = [
+        (EqualTo(("k",), 7), lambda r: r["k"] == 7),
+        (In(("k",), (5, 1234, 3999)), lambda r: r["k"] in (5, 1234, 3999)),
+        (In(("name",), ("name-00001", "name-03999", "name-99999")),
+         lambda r: r["name"] in ("name-00001", "name-03999")),
+        (EqualTo(("name",), "name-02000"),
+         lambda r: r["name"] == "name-02000"),
+    ]
+    for flt, match in cases:
+        want = sorted(map(repr, filter(match, every)))
+        got, _ = direct_read(d, [flt])
+        assert want and sorted(map(repr, filter(match, got))) == want, flt
+
+
 def test_datasource_slices_pack_small_files(tmp_path):
     """partitions() packs consecutive data files, in name order, into
     slices of at most _SLICE_BYTES; a larger file is alone in its

@@ -147,3 +147,43 @@ def test_native_env_opt_out():
         cwd="/root/repo",
     )
     assert r.stdout.strip() == "True", r.stderr
+
+
+def test_native_load_falls_back_on_host_faults(monkeypatch, tmp_path):
+    """A broken compiler or an unloadable .so means "use numpy"."""
+    import subprocess
+
+    from parquet_go_spark.codecs import _native
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "a"))
+
+    def broken_cc(cc, cache_dir, so_path):
+        raise subprocess.CalledProcessError(1, [cc])
+
+    monkeypatch.setattr(_native, "_build", broken_cc)
+    assert _native.load() is None
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "b"))
+
+    def garbage_so(cc, cache_dir, so_path):
+        with open(so_path, "wb") as f:
+            f.write(b"not an ELF object")
+
+    monkeypatch.setattr(_native, "_build", garbage_so)
+    assert _native.load() is None  # ctypes.CDLL raises OSError
+
+
+@pytest.mark.skipif(fsst._NATIVE is None, reason="no C toolchain on this host")
+def test_native_load_raises_on_binding_error(monkeypatch):
+    """A symbol typo in _Lib is a bug, not a host without a compiler: it
+    must raise rather than quietly send every kernel to numpy."""
+    from parquet_go_spark.codecs import _native
+
+    class TypoLib(_native._Lib):
+        def __init__(self, dll):
+            super().__init__(dll)
+            self.xxh64 = dll.xxh64_batchh
+
+    monkeypatch.setattr(_native, "_Lib", TypoLib)
+    with pytest.raises(AttributeError, match="xxh64_batchh"):
+        _native.load()

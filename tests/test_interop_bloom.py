@@ -19,6 +19,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from parquet_go_spark.codecs import bloom
 from parquet_go_spark.codecs.bytearrays import ByteArrays
 from parquet_go_spark.codecs.kinds import Kind
 from parquet_go_spark.interop import pqbloom
@@ -35,42 +36,93 @@ GOLDEN_VALUES = [
 
 
 def _hash_strs(strs):
-    return pqbloom.spec_hashes(
+    return bloom.spec_hashes(
         ByteArrays.from_pylist([s.encode() for s in strs]), Kind.BYTE_ARRAY)
 
 
 def test_golden_bitset_byte_identical():
     blooms = pqbloom.read_blooms(need(GOLDEN))
     words = blooms[(0, "String")]
-    mine = pqbloom.build_bitset(_hash_strs(GOLDEN_VALUES),
-                                words.size * 4)
+    mine = bloom.build_bitset(_hash_strs(GOLDEN_VALUES), words.size * 4)
     assert mine == words.astype("<u4").tobytes()
 
 
 def test_golden_probe_present_and_absent():
     words = pqbloom.read_blooms(need(GOLDEN))[(0, "String")]
-    assert pqbloom.might_contain(words, _hash_strs(GOLDEN_VALUES)).all()
+    assert bloom.probe(words, _hash_strs(GOLDEN_VALUES)).all()
     absent = _hash_strs(["zebra", "xylophone", "NOT-THERE", "qq", "claw"])
-    assert not pqbloom.might_contain(words, absent).any()
+    assert not bloom.probe(words, absent).any()
 
 
 @given(st.lists(st.binary(max_size=80), max_size=60))
 @settings(max_examples=25)
 def test_xxh64_matches_reference(vals):
     ba = ByteArrays.from_pylist(vals)
-    ours = pqbloom.spec_hashes(ba, Kind.BYTE_ARRAY)
+    ours = bloom.spec_hashes(ba, Kind.BYTE_ARRAY)
     ref = np.array([hash_bytes(v, 0) & ((1 << 64) - 1) for v in vals],
                    dtype=np.uint64)
     assert np.array_equal(ours, ref)
 
 
+@pytest.mark.parametrize("data,want", [
+    (b"", 0xEF46DB3751D8E999),
+    (b"a", 0xD24EC4F1A98C6E5B),
+    (b"abc", 0x44BC2CF5AD770999),
+])
+def test_xxh64_published_vectors(data, want, monkeypatch):
+    """XXH64(seed 0) reference vectors through the Python reference,
+    the C kernel (when it loads) and the numpy fallback."""
+    assert hash_bytes(data, 0) & ((1 << 64) - 1) == want
+    buf = np.frombuffer(data, dtype=np.uint8)
+    offsets = np.array([0, len(data)])
+    assert int(bloom.xxh64(buf, offsets)[0]) == want
+    monkeypatch.setattr(bloom, "_NATIVE", None)
+    assert int(bloom.xxh64(buf, offsets)[0]) == want
+
+
 def test_xxh64_python_fallback_matches(monkeypatch):
-    vals = [b"x" * n for n in (0, 1, 3, 4, 7, 8, 15, 31, 32, 33, 100)]
-    ba = ByteArrays.from_pylist(vals)
-    with_native = pqbloom.spec_hashes(ba, Kind.BYTE_ARRAY)
-    monkeypatch.setattr(pqbloom, "_NATIVE", None)
-    assert np.array_equal(pqbloom.spec_hashes(ba, Kind.BYTE_ARRAY),
-                          with_native)
+    """The numpy XXH64 reproduces the compiled kernel (or, with no C
+    toolchain, the Python reference) bit for bit: every stripe/tail
+    boundary, empties, content-sized values, and the numeric kinds.
+    (test_bloom covers the colcodec build/probe across the two paths.)"""
+    rng = np.random.default_rng(11)
+    edge = [0, 1, 3, 4, 7, 8, 15, 31, 32, 33, 100]
+    lens = np.concatenate([
+        edge,
+        rng.integers(0, 50, 4000),          # short values + empties
+        rng.integers(1000, 4001, 100),      # content-sized values
+        [0, 0, 1],
+    ]).astype(np.int64)
+    data = rng.integers(0, 256, int(lens.sum()), dtype=np.uint8)
+    offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
+    ba = ByteArrays(data, offsets)
+    ints = rng.integers(-2**62, 2**62, 1000)
+    cases = [
+        (ByteArrays.from_pylist([b"x" * n for n in edge]), Kind.BYTE_ARRAY),
+        (ba, Kind.BYTE_ARRAY),
+        (ints.astype(np.int64), Kind.INT64),
+        (ints.astype(np.int32), Kind.INT32),
+        (rng.standard_normal(1000), Kind.DOUBLE),
+        (rng.standard_normal(1000).astype(np.float32), Kind.FLOAT),
+        (data[:1600].reshape(-1, 16), Kind.FIXED_LEN_BYTE_ARRAY),
+    ]
+    if bloom._NATIVE is not None:
+        want = [bloom.spec_hashes(v, k) for v, k in cases]
+    else:
+        want = [np.array([hash_bytes(bytes(s), 0) & ((1 << 64) - 1)
+                          for s in _plain_slices(v, k)], dtype=np.uint64)
+                for v, k in cases]
+    monkeypatch.setattr(bloom, "_NATIVE", None)
+    for (v, k), w in zip(cases, want):
+        assert np.array_equal(bloom.spec_hashes(v, k), w), k
+
+
+def _plain_slices(values, kind):
+    """Each value's plain-encoded bytes (the spec hash input)."""
+    if kind == Kind.BYTE_ARRAY:
+        return values.to_pylist()
+    a = np.ascontiguousarray(values)
+    return [row.tobytes() for row in a.reshape(len(a), -1)]
 
 
 def test_numeric_hash_is_plain_encoding():
@@ -78,12 +130,12 @@ def test_numeric_hash_is_plain_encoding():
     ref = np.array(
         [hash_bytes(int(v).to_bytes(8, "little", signed=True), 0)
          & ((1 << 64) - 1) for v in iv], dtype=np.uint64)
-    assert np.array_equal(pqbloom.spec_hashes(iv, Kind.INT64), ref)
+    assert np.array_equal(bloom.spec_hashes(iv, Kind.INT64), ref)
     i32 = np.array([7, -9], dtype=np.int32)
     ref32 = np.array(
         [hash_bytes(int(v).to_bytes(4, "little", signed=True), 0)
          & ((1 << 64) - 1) for v in i32], dtype=np.uint64)
-    assert np.array_equal(pqbloom.spec_hashes(i32, Kind.INT32), ref32)
+    assert np.array_equal(bloom.spec_hashes(i32, Kind.INT32), ref32)
 
 
 def _write_bloom_file(tmp_path, n=8000, rg=2000):
@@ -121,11 +173,11 @@ def test_written_bloom_sound_and_selective(tmp_path):
                            for c in ("k", "name")}
     # soundness: every value probes true in its own row group
     for g in range(n_groups):
-        h = pqbloom.spec_hashes(keys[g * rg:(g + 1) * rg], Kind.INT64)
-        assert pqbloom.might_contain(blooms[(g, "k")], h).all()
+        h = bloom.spec_hashes(keys[g * rg:(g + 1) * rg], Kind.INT64)
+        assert bloom.probe(blooms[(g, "k")], h).all()
     # selectivity: rg0's keys are absent from the others at ~fpp
-    h0 = pqbloom.spec_hashes(keys[:rg], Kind.INT64)
-    fp = np.mean([pqbloom.might_contain(blooms[(g, "k")], h0).mean()
+    h0 = bloom.spec_hashes(keys[:rg], Kind.INT64)
+    fp = np.mean([bloom.probe(blooms[(g, "k")], h0).mean()
                   for g in range(1, n_groups)])
     assert fp < 0.05
 

@@ -918,8 +918,8 @@ def test_manifest_reads_pre_round3_tables(spark, tmp_path):
 
 
 def test_ds_array_contains_is_exact(spark, tmp_path):
-    """array<scalar> columns: the encoder writes element blooms, but no
-    filter on an array column is pruned (Spark 4.1 pushes no
+    """array<scalar> columns: the encoder writes no element blooms, and
+    no filter on an array column is pruned (Spark 4.1 pushes no
     array_contains to a Python data source), so every chunk is read and
     Spark's exact filter gives the answer."""
     df = spark.range(500).select(
