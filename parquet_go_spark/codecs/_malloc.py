@@ -27,7 +27,7 @@ def tune() -> bool:
         libc.mallopt(M_MMAP_THRESHOLD, 1 << 30)
         libc.mallopt(M_TRIM_THRESHOLD, 1 << 30)
         return True
-    except Exception:
+    except (OSError, AttributeError):  # no glibc / no mallopt
         return False
 
 

@@ -33,6 +33,8 @@ be driven end-to-end over exported files in a distributed plan.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -76,19 +78,19 @@ def _page_decompress(codec: str, raw: bytes, expected: int) -> bytes:
         if len(out) != expected:
             raise ValueError("hadoop frame size mismatch")
         return bytes(out)
-    except Exception:
+    except (OSError, ValueError):
         pass
     # (b) one bare LZ4 block over the whole page (old parquet-cpp)
     try:
         return pa.Codec("lz4_raw").decompress(raw, expected, asbytes=True)
-    except Exception:
+    except (OSError, ValueError):
         pass
     # (c) LZ4 frame
     try:
         out = pa.Codec("lz4").decompress(raw, expected, asbytes=True)
         if len(out) == expected:
             return out
-    except Exception:
+    except (OSError, ValueError):
         pass
     raise ValueError(
         "pqreader: legacy LZ4 (codec 5) page decodes under none of the "
@@ -967,7 +969,34 @@ class _Pred:
     stat_cmp: object = None      # comparable in stat space, or None
     unsigned: bool = False
     trust: bool = False          # column_orders declared → stats usable
-    bloom_args: tuple | None = None  # bloom.spec_hashes(values, kind, flba)
+    # [(member's stat value | None, bloom.spec_hashes args)] per `=`/`in`
+    # member; None = the bloom abstains
+    bloom: list | None = None
+
+    @cached_property
+    def bloom_hashes(self) -> list:
+        """Each member's XXH64 hashes: computed on the first probe and
+        reused for every later chunk, never before (stats refute most
+        chunks first)."""
+        from parquet_go_spark.codecs import bloom
+
+        return [bloom.spec_hashes(v, k, flba_size=w)
+                for _, (v, k, w) in self.bloom]
+
+
+class _ChunkView(NamedTuple):
+    """What the prune rule knows of one column chunk (a pqreader row
+    group's chunk or a colcodec chunk): bounds already in the
+    predicate's stat space (None = unbounded on that side), null and
+    row counts (None = unknown), and `bloom`, a zero-argument callable
+    returning the bitset (None = abstain), called only when a probe is
+    due."""
+
+    lo: object
+    hi: object
+    null_count: int | None
+    n_rows: int | None
+    bloom: Callable | None
 
 
 def _ts_unit(leaf: _Node) -> str | None:
@@ -1214,13 +1243,14 @@ def _tree_leaves(node) -> list[_Pred]:
     return [lf for p in node.parts for lf in _tree_leaves(p)]
 
 
-def _tree_survives(f, rg: dict, node) -> bool:
-    """Row-group survival over the tree: a group dies only when the
-    whole boolean combination is refuted by stats/blooms/null counts
-    (AND dies with any dead conjunct, OR only with ALL disjuncts)."""
+def _tree_survives(node, leaf_survives) -> bool:
+    """Chunk survival over the tree, given `leaf_survives(pred)`: a
+    chunk dies only when the whole boolean combination is refuted by
+    stats/blooms/null counts (AND dies with any dead conjunct, OR only
+    with ALL disjuncts)."""
     if isinstance(node, _Pred):
-        return _rg_survives(f, rg, node)
-    it = (_tree_survives(f, rg, p) for p in node.parts)
+        return leaf_survives(node)
+    it = (_tree_survives(p, leaf_survives) for p in node.parts)
     return all(it) if node.kind == "and" else any(it)
 
 
@@ -1332,41 +1362,59 @@ def _compile_predicate(root: _Node, fmd: dict, predicate) -> _Pred:
     # column_orders AND every entry is the TYPE_ORDER union field —
     # _footer_trusted, shared with startswith and footer_aggregates
     pred.trust = _footer_trusted(fmd)
-    if op == "=":
-        pred.bloom_args = _pred_bloom_args(
-            node, pred.stat_cmp, pred.unsigned, value)
-    elif op == "in":
-        pred.bloom_args = _in_bloom_args(node, pred, value)
+    if op in ("=", "in"):
+        pred.bloom = _bloom_members(pred, [value] if op == "=" else value)
     return pred
 
 
-def _in_bloom_args(node: _Node, pred: _Pred, values):
-    """Stack every member's single-value bloom encoding; a member that
-    cannot be encoded in the physical type can never match, so it is
-    sound to drop it from the probe (refutation needs ALL members
-    absent)."""
-    per_value = []
-    svs = pred.stat_cmp if isinstance(pred.stat_cmp, list) \
-        else [None] * len(values)
-    for v, s in zip(values, svs):
-        ba = _pred_bloom_args(node, s, pred.unsigned, v)
-        if ba is not None:
-            per_value.append(ba)
-    if not per_value:
-        return None
-    kind, flba = per_value[0][1], per_value[0][2]
-    vals = per_value[0][0]
-    if isinstance(vals, ByteArrays):
-        merged = ByteArrays.from_pylist(
-            [bytes(p[0][0]) for p in per_value])
-    else:
-        merged = np.concatenate([p[0] for p in per_value])
-    return merged, kind, flba
+def _bloom_members(pred: _Pred, values) -> list | None:
+    """[(stat value, spec_hashes args)] per member. A member that
+    cannot be encoded in the physical type can never match, so dropping
+    it is sound (refutation needs ALL members absent); with no member
+    left the bloom abstains."""
+    svs = pred.stat_cmp if pred.op == "in" else [pred.stat_cmp]
+    if svs is None:
+        svs = [None] * len(values)
+    members = [(s, _pred_bloom_args(pred.leaf, s, pred.unsigned, v))
+               for v, s in zip(values, svs)]
+    return [m for m in members if m[1] is not None] or None
+
+
+def _view_survives(pred: _Pred, view: _ChunkView) -> bool:
+    """The one chunk-prune rule of both stores: False only when the
+    chunk's null counts, bounds or bloom REFUTE the predicate. An `in`
+    probes the bloom with only the members inside the bounds."""
+    if pred.op in ("isnull", "notnull"):
+        # null_count is order-free: usable without column_orders trust
+        nulls = view.null_count
+        if pred.op == "isnull":
+            if pred.leaf.max_def == 0:
+                return False  # required column: no NULL can exist
+            return nulls is None or nulls > 0
+        return nulls is None or view.n_rows is None or nulls < view.n_rows
+    probed = range(len(pred.bloom or ()))
+    if pred.trust and pred.stat_cmp is not None:
+        # BYTE_ARRAY bounds may be truncated: lo is a prefix (≤ true
+        # min), hi carries (≥ true max) — still sound
+        if _bounds_refute(view.lo, view.hi, pred.op, pred.stat_cmp):
+            return False
+        if pred.op == "in":
+            probed = [i for i in probed if pred.bloom[i][0] is None
+                      or not _bounds_refute(view.lo, view.hi, "=",
+                                            pred.bloom[i][0])]
+    if probed and view.bloom is not None:
+        bits = view.bloom()
+        if bits is not None:
+            from parquet_go_spark.codecs import bloom
+
+            hashes = np.concatenate([pred.bloom_hashes[i] for i in probed])
+            return bool(bloom.probe(bits, hashes).any())
+    return True
 
 
 def _rg_survives(f, rg: dict, pred: _Pred) -> bool:
-    """False only when footer stats or the chunk bloom REFUTE the
-    predicate for this row group — no data pages are read either way."""
+    """Footer lookup for _view_survives: the row group's chunk of the
+    predicate column as a view — no data pages are read either way."""
     meta = None
     for cc in rg[1]:
         m = cc[3]
@@ -1377,43 +1425,26 @@ def _rg_survives(f, rg: dict, pred: _Pred) -> bool:
             break
     if meta is None:
         return True
-    if pred.op in ("isnull", "notnull"):
-        # null_count is order-free: usable without column_orders trust
-        st = meta.get(12)
-        nulls = None if st is None else st.get(3)
-        if pred.op == "isnull":
-            if pred.leaf.max_def == 0:
-                return False  # required column: no NULL can exist
-            return nulls is None or nulls > 0
-        return nulls is None or nulls < meta[5]
+    st = meta.get(12) or {}
+    lo = hi = None
     if pred.trust and pred.stat_cmp is not None:
-        st = meta.get(12)
-        if st is not None and st.get(5) is not None \
-                and st.get(6) is not None:
+        if st.get(6) is not None:
             lo = _stat_raw_to_cmp(st[6], pred.leaf, pred.unsigned)
+        if st.get(5) is not None:
             hi = _stat_raw_to_cmp(st[5], pred.leaf, pred.unsigned)
-            # BYTE_ARRAY bounds may be truncated: lo is a prefix
-            # (≤ true min), hi carries (≥ true max) — still sound
-            if lo is not None and hi is not None \
-                    and _bounds_refute(lo, hi, pred.op, pred.stat_cmp):
-                return False
-    if pred.bloom_args is not None and f is not None \
+    read_bloom = None
+    off = meta.get(14)
+    if f is not None and off is not None \
             and meta.get("__crypto__", True) is not None:
-        off = meta.get(14)
-        if off is not None:
-            from parquet_go_spark.codecs import bloom
-            from parquet_go_spark.interop import pqbloom
+        from parquet_go_spark.interop import pqbloom
 
-            # encrypted bloom modules decrypt through the chunk's
-            # ChunkCrypto; a marked-but-keyless chunk ("__crypto__" is
-            # None) was excluded above — the bloom abstains, stats
-            # already pruned
-            bits = pqbloom.read_bloom_at(f, off, meta.get("__crypto__"))
-            values, kind, flba = pred.bloom_args
-            hashes = bloom.spec_hashes(values, kind, flba_size=flba)
-            if not bool(bloom.probe(bits, hashes).any()):
-                return False
-    return True
+        # encrypted bloom modules decrypt through the chunk's
+        # ChunkCrypto; a marked-but-keyless chunk ("__crypto__" is
+        # None) is excluded — its bloom abstains, stats still prune
+        def read_bloom():
+            return pqbloom.read_bloom_at(f, off, meta.get("__crypto__"))
+    return _view_survives(pred, _ChunkView(
+        lo, hi, st.get(3), meta[5], read_bloom))
 
 
 def _row_mask(arr, op: str, value, leaf: _Node):
@@ -1674,23 +1705,31 @@ def _prefix_upper(prefix: bytes) -> bytes | None:
 
 
 def _bounds_refute(lo, hi, op: str, v) -> bool:
+    """Do bounds [lo, hi] refute `op v`? A None bound is unbounded on
+    its side."""
+    def outside(m):
+        return (lo is not None and m < lo) or (hi is not None and m > hi)
+
     if op == "in":  # refuted only when EVERY member is outside
-        return all(m < lo or m > hi for m in v)
+        return all(outside(m) for m in v)
+    if op == "=":
+        return outside(v)
     if op == "startswith":
         # prefixed values live in [v, upper(v)): hi < v means every
         # value sorts below them all, lo >= upper above them all
-        if hi < v:
+        if hi is not None and hi < v:
             return True
         up = _prefix_upper(v)
-        return up is not None and lo >= up
+        return up is not None and lo is not None and lo >= up
     if op == "!=":
         # refutable only when the chunk is provably constant == v
         # (lo == hi == v; a truncated BYTE_ARRAY bound can never
         # produce lo == hi unless it is exact). Float columns never
         # compile a != stat_cmp — NaN rows hide outside the bounds.
         return lo == v and hi == v
-    return not {"=": lo <= v <= hi, "<": lo < v, "<=": lo <= v,
-                ">": hi > v, ">=": hi >= v}[op]
+    if op in ("<", "<="):
+        return lo is not None and (lo > v or (op == "<" and lo == v))
+    return hi is not None and (hi < v or (op == ">" and hi == v))
 
 
 def _page_keep_null(ci, pred: _Pred) -> list[bool]:
@@ -2019,7 +2058,8 @@ def read_table(path: str, columns: list[str] | None = None,
                     continue  # group entirely outside: nothing read
                 if (a, b) != (0, rg_n):
                     local = (a, b)
-            if tree is not None and not _tree_survives(f, rg, tree):
+            if tree is not None and not _tree_survives(
+                    tree, lambda p: _rg_survives(f, rg, p)):
                 continue
             chunk_by_path, cc_by_path = {}, {}
             for cc in rg[1]:

@@ -187,26 +187,6 @@ def _decimal_info(spark_type: str) -> tuple[int, int] | None:
     return int(p), int(s)
 
 
-def _unscaled(value, scale: int) -> int | None:
-    """Probe literal → the decimal column's UNSCALED integer, or None
-    when no exact representation exists (more fractional digits than the
-    scale — rounding would compare the WRONG value and mis-prune). Runs
-    under a widened decimal context: the default 28-digit precision
-    silently rounds decimal(38,*) probes."""
-    import decimal
-    from decimal import Decimal
-
-    with decimal.localcontext() as ctx:
-        ctx.prec = 60
-        try:
-            scaled = Decimal(str(value)).scaleb(scale)
-        except decimal.InvalidOperation:
-            return None
-        if scaled != scaled.to_integral_value():
-            return None
-        return int(scaled)
-
-
 def _decimal_kind(precision: int) -> int:
     """DECIMAL physical mapping by precision — the reference's
     type_decimal.go:18 rule: unscaled INT32 for p≤9, INT64 for p≤18,
@@ -470,7 +450,8 @@ def _encode_one(values, kind, spark_type, compression, base,
     null_count = 0 if validity is None else int(len(validity) - validity.sum())
     # split-block bloom per scalar column chunk (bloom/block.go
     # analog); container streams carry none, since only scalar columns
-    # are pushed to datasource._chunk_survives. Dict-wrapped chunks
+    # are pushed to the colcodec read's prune rule
+    # (pqreader._view_survives). Dict-wrapped chunks
     # build the filter from the dictionary uniques already in hand
     # (writer.go:2089-2095): identical no-false-negative semantics,
     # NDV-proportional cost.

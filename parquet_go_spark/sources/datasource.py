@@ -19,14 +19,20 @@ Scale shape:
   The ``pqread`` source plans its parquet files with the same slice
   class and packer.
 - Filter pushdown (``pushFilters``, Spark 4.1) does NOT prune on the
-  driver: the accepted filters ride into every task, and ``read()``
-  first scans only its file's metadata columns (chunk_id, column,
-  stream, min_val, max_val, bloom — KBs), drops chunks whose stats or
-  split-block bloom refute the filters, and decodes survivors. Pruning
-  cost is distributed with the scan; the driver never loops over files.
-  All filters are returned to Spark for exact re-evaluation, so bloom
-  false positives and truncated bounds can never corrupt results (same
-  contract as the reference's page skipping, search.go:6-95).
+  driver: the accepted filters ride into every task, each slice
+  compiles them once into pqreader's predicates (leaves modelled on the
+  store's Spark types), and ``read()`` first scans only the metadata
+  of its file's filtered columns (chunk_id, column, null_count,
+  n_rows, plus min_val/max_val and bloom only when a predicate can use
+  them — KBs), drops the chunks the one prune rule refutes
+  (``pqreader._view_survives``, which also judges parquet row groups:
+  =, !=, ranges, in, startswith, null tests), and decodes the rest. A
+  WHERE no predicate can refute (endswith, contains) skips the scan.
+  Pruning cost is distributed with the scan; the driver never loops
+  over files. All filters are returned to Spark for exact
+  re-evaluation, so bloom false positives and truncated bounds can
+  never corrupt results (same contract as the reference's page
+  skipping, search.go:6-95).
 - Chunk blooms are raw XXH64 split-block bitsets (codecs/bloom.py), a
   multiple of 32 bytes. A bloom written before the XXH64 change carries
   a uvarint block-count prefix (length % 32 ≠ 0); its probe abstains,
@@ -82,207 +88,124 @@ class _FileSlice(InputPartition):
     filters: tuple = ()
 
 
-def _stat_key(spark_type: str, stat: str):
-    """Manifest min/max string → comparable value: byte space for
-    strings/binary (latin-1 round trip of the truncated bound bytes,
-    compared unsigned like the reference's byte bounds,
-    column_index.go:499-533), int for the integer family and unscaled
-    decimals (never a double: above 2^53 it rounds and mis-prunes;
-    timestamps are stored as epoch micros, dates as epoch days),
-    float for floats. Returns None — meaning "unbounded, keep" — for
-    types we don't compare and for NaN float bounds (a chunk holding
-    any NaN records NaN min/max; NaN compares false both ways and must
-    never prune)."""
-    import math
+# Spark type → (physical type, thrift ConvertedType: UTF8 0, DATE 6,
+# TIMESTAMP_MICROS 10) of the pqreader leaf a store column is judged
+# as: the encoded representation the manifest stats and blooms were
+# built from (pipeline._col_kind) — epoch days for dates, epoch micros
+# for timestamps, UTF-8 bytes for strings.
+# Decimals are INT32/INT64 DECIMAL leaves (unscaled-int stats, _leaf).
+_LEAF_BY_SPARK = {
+    "boolean": (0, None), "int": (1, None), "date": (1, 6),
+    "bigint": (2, None), "timestamp": (2, 10), "timestamp_ntz": (2, 10),
+    "float": (4, None), "double": (5, None), "string": (6, 0),
+    "binary": (6, None),
+}
+# the manifest's bounds are value-ordered: TypeDefinedOrder for every
+# column (pqreader._footer_trusted)
+_TYPE_ORDER = {7: [{1: {}}]}
 
+
+def _leaf(name: str, spark_type: str):
+    """The optional pqreader leaf a scalar store column is judged as,
+    or None for containers (never pushed)."""
+    from parquet_go_spark.interop.pqreader import _CT_DECIMAL, _Node
+    from parquet_go_spark.plans.pipeline import _decimal_info
+
+    dp = _decimal_info(spark_type)
+    if dp is not None:
+        # every decimal's stats compare as unscaled Python ints; wide
+        # ones (p > 18) get their own bloom probe (_int128_bloom)
+        return _Node(name, 1, 1 if dp[0] <= 9 else 2, None, _CT_DECIMAL,
+                     None, scale=dp[1], precision=dp[0])
+    if spark_type not in _LEAF_BY_SPARK:
+        return None
+    physical, converted = _LEAF_BY_SPARK[spark_type]
+    return _Node(name, 1, physical, None, converted, None)
+
+
+def _int128_bloom(pred) -> list | None:
+    """Bloom members of a wide-decimal (p > 18) pred: its chunks hash
+    the 16-byte little-endian int128 words (pipeline._decimal_to_values)
+    — probing INT64 or the spec's big-endian bytes would be a silent
+    false negative."""
+    import numpy as np
+
+    from parquet_go_spark.codecs.kinds import Kind
+
+    if pred.op not in ("=", "in") or pred.stat_cmp is None:
+        return None
+    members = []
+    for s in pred.stat_cmp if pred.op == "in" else [pred.stat_cmp]:
+        if -(1 << 127) <= s < (1 << 127):  # else it can never match
+            words = np.frombuffer(s.to_bytes(16, "little", signed=True),
+                                  np.uint8).reshape(1, 16)
+            members.append((s, (words, Kind.FIXED_LEN_BYTE_ARRAY, 16)))
+    return members or None
+
+
+def _compile_filters(cols, filters):
+    """Pushed (col, op, value) triples → pqreader's compiled predicate
+    tree over leaves built from the store's Spark types, or None."""
+    from parquet_go_spark.interop import pqreader
+
+    if not filters:
+        return None
+    root = pqreader._Node("schema", 0, None, None, None, None)
+    root.children = [lf for n, t in cols if (lf := _leaf(n, t)) is not None]
+    pqreader._annotate(root, 0, 0, ())
+    tree = pqreader._compile_pred_tree(root, _TYPE_ORDER, list(filters))
+    for pred in pqreader._tree_leaves(tree):
+        if pred.leaf.converted == pqreader._CT_DECIMAL \
+                and pred.leaf.precision > 18:
+            pred.bloom = _int128_bloom(pred)
+    return tree
+
+
+def _stat_value(leaf, stat: str | None):
+    """Manifest min_val/max_val string → the leaf's stat space, or None
+    — "unbounded, keep": latin-1 bytes for strings/binary (the
+    truncated bound bytes, compared unsigned like the reference's byte
+    bounds, column_index.go:499-533), int for the integer family and
+    unscaled decimals (never a double: above 2^53 it rounds and
+    mis-prunes), float for floats with NaN unbounded (a chunk holding
+    any NaN records NaN min/max)."""
     if stat is None:
         return None
     try:
-        if spark_type in ("string", "binary"):
+        if leaf.physical == 6:
             return stat.encode("latin-1")
-        if spark_type in ("int", "bigint", "timestamp", "timestamp_ntz",
-                          "date"):
+        if leaf.physical in (1, 2):
             return int(stat)
-        if spark_type.startswith("decimal("):
-            return int(stat)  # manifest stores the UNSCALED integer
-        if spark_type in ("float", "double"):
+        if leaf.physical in (4, 5):
             f = float(stat)
-            return None if math.isnan(f) else f
-    except (ValueError, TypeError):
+            return None if f != f else f
+    except ValueError:
         return None
-    return None  # containers: no task-side pruning, keep
+    return None  # boolean: no stats
 
 
-def _probe_key(spark_type: str, value):
-    """User filter literal → the same comparison space as _stat_key.
-    Spark pushes timestamp literals as datetime.datetime and date
-    literals as datetime.date — convert to the encoded representation
-    (micros / epoch days, matching pipeline._arrow_to_values). Returns
-    None — "cannot compare, keep the chunk" — on any unexpected value
-    shape: pruning must only ever skip work, never guess."""
-    import datetime as _dt
-    import math
+def _rows_survive(tree, rows: dict) -> bool:
+    """Can one chunk hold rows matching the compiled tree? `rows` maps
+    a column to the chunk's values-stream manifest row (min_val,
+    max_val, null_count, n_rows, bloom — any may be absent), judged as
+    a pqreader._ChunkView by the rule both stores share. A column with
+    no row is never refuted; a legacy uvarint-framed bloom (length %
+    32 != 0) abstains."""
+    from parquet_go_spark.interop import pqreader
 
-    if value is None:
-        return None
-    try:
-        if spark_type in ("string", "binary"):
-            return (value.encode("utf-8") if isinstance(value, str)
-                    else bytes(value))
-        if spark_type in ("timestamp", "timestamp_ntz"):
-            if isinstance(value, _dt.datetime):
-                if value.tzinfo is not None:
-                    value = value.astimezone(
-                        _dt.timezone.utc).replace(tzinfo=None)
-                elif spark_type == "timestamp":
-                    # Spark delivers TimestampType (LTZ) literals as
-                    # naive datetimes in the driver's LOCAL timezone,
-                    # while manifest stats hold UTC epoch micros —
-                    # interpret via the local tz (naive .astimezone()
-                    # does exactly that), never as UTC: a wrong offset
-                    # here silently prunes chunks holding real matches.
-                    # timestamp_ntz naive values ARE the stored wall
-                    # clock and convert directly.
-                    value = value.astimezone(
-                        _dt.timezone.utc).replace(tzinfo=None)
-                epoch = _dt.datetime(1970, 1, 1)
-                return ((value - epoch) // _dt.timedelta(microseconds=1))
-            return int(value)
-        if spark_type == "date":
-            if isinstance(value, _dt.datetime):
-                value = value.date()
-            if isinstance(value, _dt.date):
-                return (value - _dt.date(1970, 1, 1)).days
-            return int(value)
-        if spark_type in ("int", "bigint"):
-            if isinstance(value, bool) or not isinstance(value, int):
-                return None
-            return int(value)
-        if spark_type.startswith("decimal("):
-            # scale the literal into the manifest's UNSCALED-int space;
-            # inexact literals → None = keep the chunk (rounding would
-            # mis-prune range predicates)
-            from parquet_go_spark.plans.pipeline import (_decimal_info,
-                                                         _unscaled)
+    def leaf_survives(pred):
+        row = rows.get(pred.name)
+        if row is None:
+            return True
+        blob = row.get("bloom")
+        return pqreader._view_survives(pred, pqreader._ChunkView(
+            _stat_value(pred.leaf, row.get("min_val")),
+            _stat_value(pred.leaf, row.get("max_val")),
+            row.get("null_count"), row.get("n_rows"),
+            (lambda: blob) if blob is not None and len(blob) % 32 == 0
+            else None))
 
-            dp = _decimal_info(spark_type)
-            if dp is None:
-                return None
-            return _unscaled(value, dp[1])
-        if spark_type in ("float", "double"):
-            f = float(value)
-            return None if math.isnan(f) else f
-    except (ValueError, TypeError, OverflowError):
-        return None
-    return None
-
-
-def _chunk_survives(filters, col_types, stats, blooms,
-                    nulls=None) -> bool:
-    """Can a chunk possibly hold rows matching ALL filters?
-
-    stats: {column: (min_str|None, max_str|None)}; blooms:
-    {column: bloom blob bytes|None}; nulls:
-    {column: (null_count|None, n_rows|None)}. NULL bounds mean
-    unbounded — unprunable: _truncate_max records None for an all-0xFF
-    prefix, and boolean/empty chunks record no stats at all. This is
-    the store's one prune rule; array/map/struct columns are never
-    pushed here (ColcodecReader.pushFilters), and the encoder builds
-    blooms for scalar columns only."""
-    import numpy as np
-
-    from parquet_go_spark.codecs import bloom as bloomlib
-    from parquet_go_spark.codecs.bytearrays import ByteArrays
-    from parquet_go_spark.codecs.kinds import Kind
-
-    for col, op, value in filters:
-        if op in ("isnull", "notnull"):
-            nc, nr = (nulls or {}).get(col, (None, None))
-            if nc is None:
-                continue  # unknown: keep
-            if op == "isnull" and nc == 0:
-                return False  # provably no NULL rows in this chunk
-            if op == "notnull" and nr is not None and nc == nr:
-                return False  # provably ALL rows NULL
-            continue
-        spark_type = col_types.get(col)
-        if spark_type is None or col not in stats:
-            continue
-        mn_s, mx_s = stats[col]
-        mn = _stat_key(spark_type, mn_s)
-        mx = _stat_key(spark_type, mx_s)
-        probes = value if op == "in" else [value]
-        keys = [_probe_key(spark_type, v) for v in probes]
-        if any(k is None for k in keys):
-            continue
-        if op in ("=", "in"):
-            alive = [
-                k for k in keys
-                if (mn is None or k >= mn) and (mx is None or k <= mx)
-            ]
-            if not alive:
-                return False
-            blob = blooms.get(col)
-            if blob is not None:
-                # probe with the column's PHYSICAL kind and dtype — the
-                # filter was built from those bits (pipeline._col_kind);
-                # an int64/double probe of an int32/float bloom hashes
-                # differently and would be a silent false negative
-                if spark_type in ("string", "binary"):
-                    vals = ByteArrays.from_pylist(alive)
-                    kind = Kind.BYTE_ARRAY
-                elif spark_type.startswith("decimal("):
-                    from parquet_go_spark.plans import pipeline
-
-                    # probe in the column's PHYSICAL decimal space
-                    # (unscaled int32/int64, or the FLBA(16) int128
-                    # little-endian words — same layout the bloom was
-                    # built from, pipeline._col_kind/_decimal_to_values)
-                    kind = pipeline._col_kind(spark_type)
-                    dp = pipeline._decimal_info(spark_type)
-                    if dp[0] <= 18:
-                        np_dt = np.int32 if dp[0] <= 9 else np.int64
-                        try:
-                            vals = np.array(alive, dtype=np_dt)
-                        except OverflowError:
-                            continue
-                        if any(int(v) != int(a)
-                               for v, a in zip(vals, alive)):
-                            continue  # wrap = silent false negative
-                    else:
-                        mask64 = (1 << 64) - 1
-                        words = np.array(
-                            [[v & mask64, (v >> 64) & mask64]
-                             for v in alive], dtype=np.uint64)
-                        vals = words.view(np.uint8).reshape(len(alive), 16)
-                else:
-                    from parquet_go_spark.plans import pipeline
-
-                    kind = pipeline._col_kind(spark_type)
-                    np_dt = {Kind.INT32: np.int32, Kind.INT64: np.int64,
-                             Kind.FLOAT: np.float32,
-                             Kind.DOUBLE: np.float64}.get(kind)
-                    if np_dt is None:
-                        continue  # no safe bloom probe for this kind
-                    try:
-                        vals = np.array(alive, dtype=np_dt)
-                    except OverflowError:
-                        continue  # probe outside the physical range
-                    if vals.dtype.kind == "i" and any(
-                        int(v) != int(a) for v, a in zip(vals, alive)
-                    ):
-                        continue  # silent wrap would be a false negative
-                if not bool(
-                    bloomlib.might_contain(blob, vals, kind).any()
-                ):
-                    return False
-        elif op in (">", ">=") and mx is not None:
-            if mx < keys[0] or (op == ">" and mx == keys[0]):
-                return False
-        elif op in ("<", "<=") and mn is not None:
-            if mn > keys[0] or (op == "<" and mn == keys[0]):
-                return False
-    return True
+    return pqreader._tree_survives(tree, leaf_survives)
 
 
 def _anchor_tz(value):
@@ -322,68 +245,67 @@ def _file_sizes(paths):
 
 
 def _read_slice(part: _FileSlice | None, cols):
-    """The batch and stream read path: one file at a time."""
+    """The batch and stream read path: the pushed filters compile once,
+    then one file at a time."""
     if part is None:  # empty store: Spark passes one None slice
         return
+    tree = _compile_filters(cols, part.filters)
     for path in part.units:
-        yield from _read_file(path, part.filters, cols)
+        yield from _read_file(path, tree, cols)
 
 
-def _read_file(path: str, filters, cols):
-    """One blob file: scan only its metadata columns, drop chunks whose
-    stats or bloom refute the filters, decode the survivors."""
+def _refuted_chunks(path: str, tree) -> tuple[list, int]:
+    """(ids of the file's chunks that the shared chunk-prune rule
+    (pqreader._view_survives) refutes, number of chunks in the file),
+    from one read of the metadata columns some pred can use: min/max
+    for a stat value, bloom for bloom hashes. No read at all — ([], 0)
+    — when no pred can refute (e.g. only endswith or contains). A chunk
+    with no values stream for a filtered column is never refuted by
+    it."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.interop import pqreader
+
+    judged = [p for p in pqreader._tree_leaves(tree)
+              if p.op in ("isnull", "notnull")
+              or p.stat_cmp is not None or p.bloom is not None]
+    if not judged:
+        return [], 0
+    meta_cols = ["chunk_id", "column", "stream", "null_count", "n_rows"]
+    if any(p.stat_cmp is not None for p in judged):
+        meta_cols += ["min_val", "max_val"]
+    if any(p.bloom is not None for p in judged):
+        meta_cols.append("bloom")
+    meta = pq.read_table(path, columns=meta_cols)
+    n_chunks = len(pc.unique(meta.column("chunk_id")))
+    meta = meta.filter((pc.field("stream") == "values")
+                       & pc.field("column").isin(
+                           sorted({p.name for p in judged})))
+    per_chunk: dict[str, dict] = {}
+    for row in meta.to_pylist():  # blob-row count: metadata scale
+        per_chunk.setdefault(row["chunk_id"], {})[row["column"]] = row
+    refuted = sorted(cid for cid, rows in per_chunk.items()
+                     if not _rows_survive(tree, rows))
+    return refuted, n_chunks
+
+
+def _read_file(path: str, tree, cols):
+    """One blob file under the compiled filter tree (None = no
+    filters): drop the chunks _refuted_chunks names — a row-level
+    dataset filter, so their blob rows are skipped during the scan,
+    never materialized — and decode the rest. A file whose every chunk
+    is refuted is not read at all."""
     import pyarrow.parquet as pq
 
     from parquet_go_spark.plans import pipeline
 
-    col_types = dict(cols)
-    if filters:
-        # metadata columns only — the blob column (the file's bulk)
-        # is not touched until chunks survive; bloom bitsets are
-        # read only for the filtered columns' values streams
-        filter_cols = sorted({c for c, _, _ in filters})
-        # null tests read neither stats nor bitsets; bloom bitsets
-        # are the largest metadata stream — fetch them only when a
-        # comparison/equality op is actually present
-        null_only = all(op in ("isnull", "notnull")
-                        for _, op, _ in filters)
-        meta_cols = ["chunk_id", "column", "stream",
-                     "null_count", "n_rows"]
-        if not null_only:
-            meta_cols += ["min_val", "max_val", "bloom"]
-        meta = pq.read_table(
-            path,
-            columns=meta_cols,
-            filters=[("stream", "=", "values"),
-                     ("column", "in", filter_cols)],
-        )
-        per_chunk: dict[str, tuple[dict, dict, dict]] = {}
-        for row in meta.to_pylist():  # blob-row count: metadata scale
-            st, bl, nu = per_chunk.setdefault(
-                row["chunk_id"], ({}, {}, {}))
-            if not null_only:
-                st[row["column"]] = (row["min_val"], row["max_val"])
-                bl[row["column"]] = row["bloom"]
-            nu[row["column"]] = (row["null_count"], row["n_rows"])
-        keep = {
-            cid for cid, (st, bl, nu) in per_chunk.items()
-            if _chunk_survives(filters, col_types, st, bl, nu)
-        }
-        # chunks with no values stream for any filtered column are
-        # never pruned
-        all_ids = pq.read_table(
-            path, columns=["chunk_id"]).column(0).to_pylist()
-        keep |= {cid for cid in all_ids if cid not in per_chunk}
-        if not keep:
-            return  # every chunk refuted by stats/bloom
-        # row-level dataset filter: refuted chunks' blob rows are
-        # dropped during the scan, not materialized then discarded
-        tbl = pq.read_table(
-            path,
-            filters=[("chunk_id", "in", sorted(keep))],
-        )
-    else:
-        tbl = pq.read_table(path)
+    refuted, n_chunks = (_refuted_chunks(path, tree) if tree is not None
+                         else ([], 0))
+    if refuted and len(refuted) == n_chunks:
+        return
+    tbl = pq.read_table(
+        path, filters=[("chunk_id", "not in", refuted)] if refuted else None)
     if tbl.num_rows:
         tbl = tbl.sort_by("chunk_id")  # kernel holds one chunk at a time
         yield from pipeline._decode_stream_fn(cols)(tbl.to_batches())

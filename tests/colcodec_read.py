@@ -5,7 +5,9 @@ writes (`spark.read.format("colcodec").load(store).where(cond)`); its
 rows must equal the source filtered the same way. `direct_read` runs
 `ColcodecReader` in process with explicit `pyspark.sql.datasource`
 Filters, so the prune rule runs even where Spark would not push the
-literal, and reports which chunks survived it."""
+literal, and reports which chunks survived it. `survives` and
+`compiled` unit-test that rule: one chunk's manifest values, and one
+literal's stat value."""
 
 from __future__ import annotations
 
@@ -53,3 +55,28 @@ def direct_read(store: str, filters) -> tuple[list[dict], set]:
         rows = [row for p in r.partitions() for b in r.read(p)
                 for row in b.to_pylist()]
     return rows, kept
+
+
+def compiled(cols, filters) -> list:
+    """The colcodec read's compiled predicates for pushed (col, op,
+    value) triples over store columns `cols`."""
+    from parquet_go_spark.interop import pqreader
+
+    return pqreader._tree_leaves(datasource._compile_filters(cols, filters))
+
+
+def survives(filters, types: dict, stats: dict, blooms: dict | None = None,
+             nulls: dict | None = None) -> bool:
+    """One chunk through the colcodec read's prune rule: `filters`
+    compile against the store's Spark `types`; per column, `stats` holds
+    the chunk's manifest (min_val, max_val) strings, `blooms` its bloom
+    bytes and `nulls` its (null_count, n_rows)."""
+    rows: dict = {}
+    for col, (mn, mx) in stats.items():
+        rows.setdefault(col, {}).update(min_val=mn, max_val=mx)
+    for col, blob in (blooms or {}).items():
+        rows.setdefault(col, {})["bloom"] = blob
+    for col, (nc, nr) in (nulls or {}).items():
+        rows.setdefault(col, {}).update(null_count=nc, n_rows=nr)
+    tree = datasource._compile_filters(list(types.items()), filters)
+    return datasource._rows_survive(tree, rows)

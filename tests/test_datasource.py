@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from parquet_go_spark.plans import pipeline
 from parquet_go_spark.sources import datasource
-from parquet_go_spark.sources.datasource import _chunk_survives
+from tests.colcodec_read import compiled, survives
 
 
 @pytest.fixture(scope="module")
@@ -63,10 +63,16 @@ def test_sql_view_over_format(spark, store):
 
 
 def test_chunk_survives_semantics():
+    """The colcodec read's prune rule (pqreader._view_survives over the
+    chunk's manifest values) on bounds alone."""
+    from pyspark.sql.datasource import EqualTo
+
+    from parquet_go_spark.sources.datasource import ColcodecReader
+
     types = {"k": "bigint", "name": "string"}
     stats = {"k": ("100", "200"), "name": ("aaa", "mmm")}
     blooms = {"k": None, "name": None}
-    ok = lambda f: _chunk_survives(f, types, stats, blooms)  # noqa: E731
+    ok = lambda f: survives(f, types, stats, blooms)  # noqa: E731
     assert ok([("k", "=", 150)])
     assert not ok([("k", "=", 99)])
     assert not ok([("k", ">", 200)])
@@ -79,10 +85,14 @@ def test_chunk_survives_semantics():
     assert not ok([("name", "in", ["zzz", "nnn"])])
     # NULL bounds are unbounded → never prunable
     assert ok([("k", "=", 99)]) is False
-    assert _chunk_survives([("k", "=", 99)], types,
-                           {"k": (None, None)}, {"k": None})
-    # unknown column/type: kept
-    assert ok([("other", "=", 1)])
+    assert survives([("k", "=", 99)], types,
+                    {"k": (None, None)}, {"k": None})
+    # a chunk with no values stream for the column: kept
+    assert survives([("k", "=", 99)], types, {})
+    # unknown column: never pushed, so never judged
+    r = ColcodecReader("/nonexistent", list(types.items()))
+    r.pushFilters([EqualTo(("other",), 1)])
+    assert r._filters == []
 
 
 def test_bloom_refutes_inside_bounds():
@@ -95,14 +105,20 @@ def test_bloom_refutes_inside_bounds():
     blob = bloomlib.build(present, Kind.INT64)
     types = {"k": "bigint"}
     stats = {"k": ("100", "200")}
-    assert _chunk_survives([("k", "=", 150)], types, stats, {"k": blob})
+    assert survives([("k", "=", 150)], types, stats, {"k": blob})
     # 137 is inside [100, 200] but not in the chunk: the bloom prunes
     # what min/max cannot (false positives possible, never negatives)
     hits = sum(
-        _chunk_survives([("k", "=", v)], types, stats, {"k": blob})
+        survives([("k", "=", v)], types, stats, {"k": blob})
         for v in range(101, 200) if v not in (150,)
     )
     assert hits < 20  # ~1% fpp on 98 absent probes
+    # `in` probes the bloom with the members inside the bounds only:
+    # 150 hits, 137 misses, and 5 and 999 never reach the bloom
+    assert survives([("k", "in", [5, 150, 999])], types, stats,
+                    {"k": blob})
+    assert not survives([("k", "in", [5, 137, 999])], types, stats,
+                        {"k": blob})
 
 
 def test_legacy_uvarint_blooms_abstain(store, tmp_path):
@@ -158,6 +174,58 @@ def test_legacy_uvarint_blooms_abstain(store, tmp_path):
         assert want and sorted(map(repr, filter(match, got))) == want, flt
 
 
+def test_startswith_and_not_equal_prune_chunks(store):
+    """startswith and != on the repo column, constant per chunk, drop
+    chunks (range bounds, and lo == hi == v), and the rows equal the
+    unpushed read."""
+    from pyspark.sql.datasource import EqualTo, Not, StringStartsWith
+
+    from tests.colcodec_read import all_chunks, direct_read
+
+    d = store[0]
+    every, _ = direct_read(d, [])
+    cases = [
+        (StringStartsWith(("grp",), "grp1"),
+         lambda r: r["grp"].startswith("grp1")),
+        (Not(EqualTo(("grp",), "grp0")), lambda r: r["grp"] != "grp0"),
+    ]
+    for flt, match in cases:
+        rows, kept = direct_read(d, [flt])
+        want = sorted(map(repr, filter(match, every)))
+        assert want and sorted(map(repr, filter(match, rows))) == want, flt
+        assert len(kept) < len(all_chunks(d)), flt
+
+
+def test_metadata_read_only_when_a_pred_can_refute(store):
+    """A WHERE no compiled predicate can refute (contains) reads no
+    chunk metadata; an `=` reads it once per blob file, and neither
+    reads chunk ids a second time."""
+    from unittest import mock
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.datasource import EqualTo, StringContains
+
+    from tests.colcodec_read import direct_read
+
+    d = store[0]
+    n_files = len([f for f in os.listdir(d) if f.endswith(".parquet")
+                   and not f.startswith(("_", "."))])
+    real = pq.read_table
+    for flt, n_meta in [(StringContains(("name",), "-0001"), 0),
+                        (EqualTo(("grp",), "grp2"), n_files)]:
+        metas = []
+
+        def spy(path, *a, **kw):
+            if "columns" in kw:
+                metas.append(kw["columns"])
+            return real(path, *a, **kw)
+
+        with mock.patch.object(pq, "read_table", spy):
+            direct_read(d, [flt])
+        assert len(metas) == n_meta, flt
+        assert all(c != ["chunk_id"] for c in metas), flt
+
+
 def test_datasource_slices_pack_small_files(tmp_path):
     """partitions() packs consecutive data files, in name order, into
     slices of at most _SLICE_BYTES; a larger file is alone in its
@@ -210,6 +278,7 @@ def test_packed_slices_read_like_per_file(spark, tmp_path):
                                         IsNull, LessThan)
 
     from parquet_go_spark.sources.datasource import (ColcodecReader,
+                                                     _compile_filters,
                                                      _read_file)
 
     datasource.register(spark)
@@ -246,8 +315,9 @@ def test_packed_slices_read_like_per_file(spark, tmp_path):
         parts = r.partitions()
         assert len(files) > len(parts) >= 1
         packed = rows([b for p in parts for b in r.read(p)])
+        tree = _compile_filters(cols, parts[0].filters)
         per_file = rows([b for f in files
-                         for b in _read_file(f, parts[0].filters, cols)])
+                         for b in _read_file(f, tree, cols)])
         assert packed == per_file, pushed
         assert bool(packed) == survive, pushed
         if not pushed:
@@ -311,25 +381,39 @@ def test_pushdown_typed_columns_exact(spark, typed_store):
 
 
 def test_probe_key_conversions():
+    """Pushed literals compile into the store's encoded stat space
+    (pqreader._pred_stat_value over the leaves datasource._leaf
+    builds), and manifest bounds convert with datasource._stat_value."""
     import datetime as dt
 
-    from parquet_go_spark.sources.datasource import _probe_key, _stat_key
+    from pyspark.sql.datasource import EqualTo
 
-    assert _probe_key("date", dt.date(1970, 1, 2)) == 1
+    from parquet_go_spark.sources.datasource import (ColcodecReader,
+                                                     _leaf, _stat_value)
+
+    def stat(spark_type, value):
+        return compiled([("c", spark_type)], [("c", "=", value)])[0].stat_cmp
+
+    assert stat("date", dt.date(1970, 1, 2)) == 1
     # naive LTZ literal = driver-local wall clock (Spark's pushdown
-    # contract); NTZ naive = the stored wall clock directly
+    # contract, anchored to UTC in pushFilters); NTZ naive = the stored
+    # wall clock directly
     naive = dt.datetime(1970, 1, 1, 0, 0, 1)
     local_utc = naive.astimezone(dt.timezone.utc).replace(tzinfo=None)
     exp = (local_utc - dt.datetime(1970, 1, 1)) \
         // dt.timedelta(microseconds=1)
-    assert _probe_key("timestamp", naive) == exp
-    assert _probe_key("timestamp_ntz", naive) == 1_000_000
+    cols = [("ts", "timestamp"), ("nts", "timestamp_ntz")]
+    r = ColcodecReader("/nonexistent", cols)
+    r.pushFilters([EqualTo(("ts",), naive), EqualTo(("nts",), naive)])
+    assert [p.stat_cmp for p in compiled(cols, r._filters)] \
+        == [exp, 1_000_000]
     aware = dt.datetime(1970, 1, 1, 1, 0, 1, tzinfo=dt.timezone(
         dt.timedelta(hours=1)))
-    assert _probe_key("timestamp", aware) == 1_000_000
-    assert _probe_key("bigint", "not-an-int") is None
-    assert _probe_key("double", float("nan")) is None
-    assert _stat_key("double", "nan") is None  # NaN bound = unbounded
+    assert stat("timestamp", aware) == 1_000_000
+    assert stat("bigint", "not-an-int") is None
+    assert stat("double", float("nan")) is None
+    # NaN bound = unbounded
+    assert _stat_value(_leaf("v", "double"), "nan") is None
 
 
 def test_write_path_roundtrip_append_overwrite(spark, tmp_path):
@@ -614,15 +698,15 @@ def test_chunk_survives_null_tests():
     some = {"v": (40, 100)}
     f_isnull = [("v", "isnull", None)]
     f_notnull = [("v", "notnull", None)]
-    assert not _chunk_survives(f_isnull, types, st, {}, no_nulls)
-    assert _chunk_survives(f_isnull, types, st, {}, all_null)
-    assert _chunk_survives(f_isnull, types, st, {}, some)
-    assert not _chunk_survives(f_notnull, types, st, {}, all_null)
-    assert _chunk_survives(f_notnull, types, st, {}, no_nulls)
-    assert _chunk_survives(f_notnull, types, st, {}, some)
+    assert not survives(f_isnull, types, st, {}, no_nulls)
+    assert survives(f_isnull, types, st, {}, all_null)
+    assert survives(f_isnull, types, st, {}, some)
+    assert not survives(f_notnull, types, st, {}, all_null)
+    assert survives(f_notnull, types, st, {}, no_nulls)
+    assert survives(f_notnull, types, st, {}, some)
     # unknown null info: always keep; absent nulls dict: keep
-    assert _chunk_survives(f_isnull, types, st, {}, {"v": (None, None)})
-    assert _chunk_survives(f_isnull, types, st, {})
+    assert survives(f_isnull, types, st, {}, {"v": (None, None)})
+    assert survives(f_isnull, types, st, {})
 
 
 def test_datasource_null_filters_exact(spark, tmp_path):

@@ -17,24 +17,32 @@ from tests.refcorpus import need
 
 # ---------------------------------------------------------------- ADVICE 1
 def test_probe_key_timestamp_uses_local_tz(monkeypatch):
-    """A naive TimestampType (LTZ) literal is driver-local wall clock;
-    under a non-UTC local tz the epoch micros must shift by the zone
-    offset (treating it as UTC silently prunes matching chunks)."""
-    from parquet_go_spark.sources.datasource import _probe_key
+    """A naive TimestampType (LTZ) literal is driver-local wall clock:
+    under a non-UTC local tz, ColcodecReader.pushFilters anchors it to
+    UTC, and its compiled stat value shifts by the zone offset
+    (treating it as UTC silently prunes matching chunks)."""
+    from pyspark.sql.datasource import EqualTo
+
+    from parquet_go_spark.sources.datasource import ColcodecReader
+    from tests.colcodec_read import compiled
 
     monkeypatch.setenv("TZ", "Etc/GMT-3")  # POSIX sign: UTC+3
     time.tzset()
     try:
         naive = dt.datetime(2024, 1, 1, 12, 0, 0)
-        got = _probe_key("timestamp", naive)
+        cols = [("ts", "timestamp"), ("nts", "timestamp_ntz")]
+        r = ColcodecReader("/nonexistent", cols)
+        r.pushFilters([EqualTo(("ts",), naive), EqualTo(("nts",), naive)])
         utc_wall = dt.datetime(2024, 1, 1, 9, 0, 0)  # 12:00+03 → 09:00Z
+        assert r._filters[0][2] == utc_wall.replace(tzinfo=dt.timezone.utc)
+        got, got_ntz = (p.stat_cmp for p in compiled(cols, r._filters))
         exp = (utc_wall - dt.datetime(1970, 1, 1)) \
             // dt.timedelta(microseconds=1)
         assert got == exp
         # NTZ naive values are the stored wall clock — tz-independent
         exp_ntz = (naive - dt.datetime(1970, 1, 1)) \
             // dt.timedelta(microseconds=1)
-        assert _probe_key("timestamp_ntz", naive) == exp_ntz
+        assert got_ntz == exp_ntz
     finally:
         monkeypatch.delenv("TZ")
         time.tzset()
@@ -194,33 +202,37 @@ def test_ivf_train_partial_sums_any_dim(spark):
 def test_decimal_probe_and_stat_keys():
     from decimal import Decimal
 
-    from parquet_go_spark.sources.datasource import _probe_key, _stat_key
+    from parquet_go_spark.sources.datasource import _leaf, _stat_value
+    from tests.colcodec_read import compiled
 
-    assert _stat_key("decimal(12,2)", "725") == 725
-    assert _probe_key("decimal(12,2)", Decimal("7.25")) == 725
-    assert _probe_key("decimal(12,2)", 7) == 700
+    def stat(spark_type, value):
+        return compiled([("c", spark_type)], [("c", "=", value)])[0].stat_cmp
+
+    assert _stat_value(_leaf("c", "decimal(12,2)"), "725") == 725
+    assert stat("decimal(12,2)", Decimal("7.25")) == 725
+    assert stat("decimal(12,2)", 7) == 700
     # more fractional digits than the scale: no exact representation —
     # rounding would mis-prune range predicates, so keep (None)
-    assert _probe_key("decimal(12,2)", Decimal("7.251")) is None
-    assert _probe_key("decimal(38,2)", Decimal("1" * 30 + ".25")) \
+    assert stat("decimal(12,2)", Decimal("7.251")) is None
+    assert stat("decimal(38,2)", Decimal("1" * 30 + ".25")) \
         == int("1" * 30 + "25")
 
 
 def test_decimal_chunk_survives_prunes_and_keeps():
     from decimal import Decimal
 
-    from parquet_go_spark.sources.datasource import _chunk_survives
+    from tests.colcodec_read import survives
 
     types = {"price": "decimal(12,2)"}
     stats = {"price": ("100", "999")}  # unscaled: 1.00 .. 9.99
     f_in = [("price", "=", Decimal("5.00"))]
     f_out = [("price", ">", Decimal("10.00"))]
-    assert _chunk_survives(f_in, types, stats, {})
-    assert not _chunk_survives(f_out, types, stats, {})
-    assert not _chunk_survives(
+    assert survives(f_in, types, stats, {})
+    assert not survives(f_out, types, stats, {})
+    assert not survives(
         [("price", "<", Decimal("1.00"))], types, stats, {})
     # inexact literal: never prune
-    assert _chunk_survives(
+    assert survives(
         [("price", "=", Decimal("5.001"))], types, stats, {})
 
 
@@ -229,6 +241,10 @@ def test_decimal_pushdown_end_to_end(spark, tmp_path):
     whose unscaled bounds refute the filter are skipped) with results
     identical to the source — incl. a decimal(38,2) FLBA(16) column."""
     from decimal import Decimal
+
+    from pyspark.sql.datasource import EqualTo
+
+    from tests.colcodec_read import all_chunks, direct_read
 
     datasource.register(spark)
     d = str(tmp_path / "decstore")
@@ -250,11 +266,19 @@ def test_decimal_pushdown_end_to_end(spark, tmp_path):
         F.col("price") <= F.lit(Decimal("1.50")).cast("decimal(12,2)"),
         F.col("big") == F.lit(Decimal("700000000000000000.25"))
         .cast("decimal(38,2)"),
+        # k = 0: unscaled 25 fits int64, so an INT64-modelled bloom
+        # probe would hash the wrong bytes and drop its chunk
+        F.col("big") == F.lit(Decimal("0.25")).cast("decimal(38,2)"),
     ]
     for cond in cases:
         got = sorted(map(str, df.where(cond).collect()))
         exp = sorted(map(str, src.where(cond).collect()))
         assert got == exp and got, str(cond)
+    # the wide-decimal bloom probe hashes the int128 words the encoder
+    # built the bloom from: the chunk holding 0.25 survives
+    rows, kept = direct_read(d, [EqualTo(("big",), Decimal("0.25"))])
+    assert [r["k"] for r in rows if r["big"] == Decimal("0.25")] == [0]
+    assert len(kept) < len(all_chunks(d))
 
 
 # ------------------------------------------ VERDICT #3: O(1) stream offsets
@@ -616,18 +640,21 @@ def test_datasource_read_pruning_shape(spark, tmp_path, monkeypatch):
     meta_calls = [c for c in calls if c.get("columns")]
     assert meta_calls and all("blob" not in c["columns"]
                               for c in meta_calls)
-    # 2) surviving chunks decode through a row-level chunk_id filter —
-    #    and the survivors are a PROPER subset of the store's chunks
+    # 2) surviving chunks decode through a row-level chunk_id filter
+    #    that drops the refuted ones — and the survivors are a PROPER
+    #    subset of the store's chunks
     data_calls = [c for c in calls
                   if c.get("filters") and
                   any(f[0] == "chunk_id" for f in c["filters"])]
     assert data_calls
-    kept = {cid for c in data_calls
-            for f in c["filters"] if f[0] == "chunk_id"
-            for cid in f[2]}
+    assert all(f[1] == "not in" for c in data_calls for f in c["filters"])
+    refuted = {cid for c in data_calls
+               for f in c["filters"] if f[0] == "chunk_id"
+               for cid in f[2]}
     all_chunks = set(
         pipeline.manifest(spark, d).select("chunk_id").distinct()
         .toPandas()["chunk_id"])
+    kept = all_chunks - refuted
     assert kept and kept < all_chunks
     # 3) decoded output still contains the match (Spark re-filters later)
     import pyarrow as pa

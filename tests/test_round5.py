@@ -275,8 +275,43 @@ def test_page_decompress_all_lz4_flavors():
     for buf in (hadoop, hadoop2, raw_block, frame):
         assert pqreader._page_decompress(
             pqreader._LZ4_LEGACY, buf, len(data)) == data
-    with pytest.raises(ValueError, match="legacy LZ4"):
+    with pytest.raises(ValueError, match="none of the known framings"):
         pqreader._page_decompress(pqreader._LZ4_LEGACY, b"\x00" * 40, 9999)
+
+
+def test_page_decompress_lz4_probe_faults_propagate(monkeypatch):
+    """The legacy-LZ4 probes catch only a framing that does not decode
+    (OSError from the codec, ValueError from the frame parser); any
+    other fault in the codec raises."""
+    class Faulty:
+        def __init__(self, name):
+            pass
+
+        def decompress(self, *a, **kw):
+            raise RuntimeError("codec fault")
+
+    monkeypatch.setattr(pqreader.pa, "Codec", Faulty)
+    with pytest.raises(RuntimeError, match="codec fault"):
+        pqreader._page_decompress(pqreader._LZ4_LEGACY, b"\x00" * 40, 9999)
+
+
+def test_malloc_tune_catches_only_a_missing_libc(monkeypatch):
+    import ctypes
+
+    from parquet_go_spark.codecs import _malloc
+
+    def no_libc(*a, **kw):
+        raise OSError("libc.so.6: cannot open shared object file")
+
+    monkeypatch.setattr(ctypes, "CDLL", no_libc)
+    assert _malloc.tune() is False
+
+    def broken(*a, **kw):
+        raise RuntimeError("loader fault")
+
+    monkeypatch.setattr(ctypes, "CDLL", broken)
+    with pytest.raises(RuntimeError, match="loader fault"):
+        _malloc.tune()
 
 
 @pytest.mark.parametrize("comp,codec_id", [("lz4_legacy", 5),
