@@ -62,7 +62,7 @@ def _encode_payload(values, kind: int, codec: int, flba_size: int | None,
             return plain.encode_boolean(values)
         if kind == Kind.BYTE_ARRAY:
             return plain.encode_byte_array(values)
-        if kind == Kind.FIXED_LEN_BYTE_ARRAY:
+        if kind in (Kind.FIXED_LEN_BYTE_ARRAY, Kind.INT96):
             return plain.encode_flba(values, flba_size)
         return plain.encode_numeric(values, kind)
     if codec == Codec.RLE:
@@ -107,6 +107,8 @@ def _decode_payload(buf, n: int, kind: int, codec: int, flba_size: int | None):
             return plain.decode_byte_array(buf, n)
         if kind == Kind.FIXED_LEN_BYTE_ARRAY:
             return plain.decode_flba(buf, n, flba_size)
+        if kind == Kind.INT96:
+            return plain.decode_flba(buf, n, KIND_WIDTHS[kind])
         return plain.decode_numeric(buf, n, kind)
     if codec == Codec.RLE:
         if kind == Kind.BOOLEAN:

@@ -54,8 +54,9 @@ def column_stats(values, kind: int) -> dict:
         pref = delta._prefix_lengths(sl)
         st["avg_prefix"] = float(pref[1:].mean()) if take > 1 else 0.0
         return st
-    a = np.asarray(values).reshape(len(values), -1) if kind == Kind.FIXED_LEN_BYTE_ARRAY else np.asarray(values)
-    if kind == Kind.FIXED_LEN_BYTE_ARRAY:
+    fixed = kind in (Kind.FIXED_LEN_BYTE_ARRAY, Kind.INT96)
+    a = np.asarray(values).reshape(len(values), -1) if fixed else np.asarray(values)
+    if fixed:
         st["raw_bytes"] = a.size
         take = min(n, SAMPLE)
         st["ndv_ratio"] = len(np.unique(a[:take], axis=0)) / take
@@ -91,6 +92,8 @@ def _builtin_shortlist(stats: dict) -> list[tuple[int, bool]]:
     cands: list[tuple[int, bool]] = []
     if kind == Kind.BOOLEAN:
         return [(Codec.PLAIN, False), (Codec.RLE, False)]
+    if kind == Kind.INT96:  # 12-byte rows; only PLAIN encodes them
+        return [(Codec.PLAIN, False)]
     if kind in (Kind.INT32, Kind.INT64):
         cands.append((Codec.DELTA_BINARY_PACKED, False))
         cands.append((Codec.PLAIN, False))
@@ -224,34 +227,25 @@ def select_and_encode(
     fsst_table = None
     for codec, dict_wrap in shortlist(stats):
         cap: dict = {}
-        try:
-            if codec == Codec.FSST and not dict_wrap:
-                blob, fsst_table = _fsst_trial(
-                    trial_values, kind, flba_size, compression,
-                    sampled, cap, fsst_state,
-                )
-            else:
-                blob = chunklib.encode_chunk(
-                    trial_values, kind, codec,
-                    dict_wrap=dict_wrap, flba_size=flba_size,
-                    compression=compression,
-                    capture=None if sampled else cap,
-                )
-        except Exception:
-            continue
+        if codec == Codec.FSST and not dict_wrap:
+            blob, fsst_table = _fsst_trial(
+                trial_values, kind, flba_size, compression,
+                sampled, cap, fsst_state,
+            )
+        else:
+            blob = chunklib.encode_chunk(
+                trial_values, kind, codec,
+                dict_wrap=dict_wrap, flba_size=flba_size,
+                compression=compression,
+                capture=None if sampled else cap,
+            )
         key = (len(blob), codec, dict_wrap)  # deterministic tie-break
         trials[f"{codec}{'+dict' if dict_wrap else ''}"] = len(blob)
         if best is None or key < best:
             best = key
             best_blob = blob
             capture = cap
-    if best is None:  # fall back to PLAIN, which supports every kind
-        best_blob = chunklib.encode_chunk(
-            values, kind, Codec.PLAIN, flba_size=flba_size,
-            compression=compression, validity=validity,
-        )
-        best = (len(best_blob), Codec.PLAIN, False)
-    elif sampled:  # encode the full chunk with the winning codec only;
+    if sampled:  # encode the full chunk with the winning codec only;
         # capture the full-chunk uniques so callers can build bloom
         # filters from the dictionary for free (writer.go:2089-2095)
         capture = {}

@@ -78,10 +78,7 @@ def _inherit_props(path: str, decryption, compression=INHERIT):
     silently compacting to UNCOMPRESSED."""
     from parquet_go_spark.interop import pqreader
 
-    with open(path, "rb") as f:
-        fmd = pqreader._read_footer_file(
-            f, os.path.getsize(path), path, decryption)
-    rg = fmd[4][0]
+    rg = pqreader._file_meta(path, decryption).fmd[4][0]
     if compression == INHERIT:
         codec = rg[1][0][3][4]
         if codec not in _CODEC_ID:

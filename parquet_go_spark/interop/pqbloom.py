@@ -20,7 +20,6 @@ chunk's distinct hashes — same filter, since inserts are idempotent).
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 
@@ -117,30 +116,23 @@ def read_bloom_at(f, off: int, crypto=None) -> np.ndarray | None:
 
 def _footer_chunks(path: str, decryption=None):
     """Yield (row_group_index, ColumnMetaData dict, leaf name) from the
-    footer only. With `decryption`, encrypted footers/column metadata
-    are resolved through pqreader's normalizer (the decrypted meta then
-    carries its ChunkCrypto under "__crypto__"); without it, encrypted
-    chunks are skipped (their bloom offsets live in ciphertext)."""
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        if decryption is not None:
-            from parquet_go_spark.interop import pqreader
+    footer only, through pqreader's footer cache. With `decryption`,
+    encrypted footers/column metadata are resolved through pqreader's
+    normalizer (the decrypted meta then carries its ChunkCrypto under
+    "__crypto__"); without it, encrypted chunks are skipped (their
+    bloom offsets live in ciphertext)."""
+    from parquet_go_spark.interop import pqreader
 
-            fmd = pqreader._read_footer_file(f, size, path, decryption)
-        else:
-            f.seek(0)
-            if f.read(4) == b"PARE":
-                return  # encrypted footer, no keys: nothing readable
-            f.seek(size - 8)
-            flen = int.from_bytes(f.read(4), "little")
-            f.seek(size - 8 - flen)
-            fmd, _ = tc.read_struct(f.read(flen), 0)
-        for gi, rg in enumerate(fmd[4]):
-            for cc in rg[1]:
-                meta = cc.get(3)
-                if meta is None or (decryption is None and 8 in cc):
-                    continue  # encrypted chunk without keys
-                yield gi, meta, b".".join(meta[3]).decode()
+    with open(path, "rb") as f:
+        if decryption is None and f.read(4) == b"PARE":
+            return  # encrypted footer, no keys: nothing readable
+        fmd = pqreader._file_meta(path, decryption, f).fmd
+    for gi, rg in enumerate(fmd[4]):
+        for cc in rg[1]:
+            meta = cc.get(3)
+            if meta is None or (decryption is None and 8 in cc):
+                continue  # encrypted chunk without keys
+            yield gi, meta, b".".join(meta[3]).decode()
 
 
 def read_blooms(path: str, column: str | None = None,

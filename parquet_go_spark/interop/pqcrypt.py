@@ -301,7 +301,7 @@ def sign_footer(key: bytes, file_aad: bytes, footer: bytes) -> bytes:
     after the serialized FileMetaData in plaintext-footer mode. The
     tag is GCM over the FOOTER BYTES AS PLAINTEXT with the footer
     module AAD — the construction pyarrow/parquet-mr verify (and the
-    mirror of the check in pqreader._read_footer_file).
+    mirror of the check in pqreader._open_plaintext_footer).
 
     The reference's signFooter (encrypt.go) is NOT this construction:
     it encrypts an empty plaintext with the footer bytes as AAD, which

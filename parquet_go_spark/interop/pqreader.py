@@ -20,6 +20,14 @@ Surface:
 - ``spark.read.format("pqread").load(dir)`` (sources/pqread.py) is the
   one distributed read: size-planned slices, each decoded executor-side
   through ``read_table`` with the pushed WHERE filters.
+- ``read_schema``, ``footer_aggregates`` and every other footer read
+  (pqbloom, the pqread data source, compaction) go through one entry,
+  ``_file_meta``, backed by a per-process cache of parsed footers. Its
+  key is the raw footer bytes, read afresh on every call, so a file
+  rewritten in place is never served a stale parse. Encrypted (PARE)
+  and signed plaintext footers are never cached. The cache is LRU and
+  holds at most _FOOTER_CACHE_BYTES (2 MiB) of raw footers; a larger
+  footer is not cached. Page indexes and blooms are not cached.
 - Malformed input (bad magic, truncated pages, unknown codecs) raises
   ValueError rather than returning partial data.
 
@@ -32,6 +40,9 @@ be driven end-to-end over exported files in a distributed plan.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from functools import cached_property
 from typing import Callable, NamedTuple
@@ -123,7 +134,8 @@ class _Node:
 
 
 def _parse_schema(elements: list[dict]) -> _Node:
-    """Flat footer schema list → tree (depth-first preorder walk)."""
+    """Flat footer schema list → annotated tree (depth-first preorder
+    walk)."""
     pos = 0
 
     def build() -> _Node:
@@ -148,6 +160,7 @@ def _parse_schema(elements: list[dict]) -> _Node:
     root = build()
     if pos != len(elements):
         raise ValueError("pqreader: malformed schema element count")
+    _annotate(root, 0, 0, ())
     return root
 
 
@@ -794,38 +807,96 @@ def _map_with_validity(offsets, keys, items, valid) -> pa.Array:
     return pa.MapArray.from_arrays(all_off, keys, items)
 
 
-def _read_footer_file(f, size: int, path: str, decryption=None) -> dict:
-    """FileMetaData from an open file via seeks — footer bytes only,
-    never the data pages (the point: schema reads and refuted row
-    groups cost KBs of metadata, not the file). Encrypted files
-    (modular encryption, AES_GCM_V1) decrypt through `decryption`
-    (interop.pqcrypt.FileDecryption); see _normalize_encrypted."""
+class _FileMeta(NamedTuple):
+    """One parsed footer: the FileMetaData dict and its annotated
+    schema tree. Entries come from a per-process cache and are shared
+    by every reader of the same footer bytes, so no caller may mutate
+    them."""
+
+    fmd: dict
+    root: _Node
+
+
+# Parsed plaintext footers keyed by their raw bytes, least recently
+# used first (see the module docstring). Encrypted and signed footers
+# stay out: a wrong key must still raise, and decrypted metadata must
+# not outlive the call that supplied the key. A parse is ~20x its raw
+# size, so the bound holds ~40 MB of parses at worst.
+_FOOTER_CACHE_BYTES = 2 << 20  # raw footer bytes held
+_footers: OrderedDict[bytes, _FileMeta] = OrderedDict()
+_footers_bytes = 0
+_footers_lock = threading.Lock()
+
+
+def _file_meta(path: str, decryption=None, f=None) -> _FileMeta:
+    """The footer of `path` (read through the open file `f` when
+    given) — footer bytes only, never the data pages (the point:
+    schema reads and refuted row groups cost KBs of metadata, not the
+    file). Every call reads the tail and the footer bytes; the parse
+    is reused only when those bytes equal a cached footer's. Encrypted
+    files (modular encryption, AES_GCM_V1) decrypt through
+    `decryption` (interop.pqcrypt.FileDecryption); see
+    _normalize_encrypted."""
+    global _footers_bytes
+
+    if f is None:
+        with open(path, "rb") as fh:
+            return _file_meta(path, decryption, fh)
+    size = os.fstat(f.fileno()).st_size
     if size < 12:
         raise ValueError(f"pqreader: {path} is not a parquet file")
     f.seek(0)
     head = f.read(4)
     f.seek(size - 8)
     tail = f.read(8)
-    if head == b"PARE" and tail[4:] == b"PARE":
-        return _read_encrypted_footer(f, size, path, decryption)
-    if head != b"PAR1" or tail[4:] != b"PAR1":
+    encrypted = head == b"PARE" and tail[4:] == b"PARE"
+    if encrypted and decryption is None:
+        raise ValueError(
+            f"pqreader: {path} is an encrypted parquet file (PARE) — "
+            "pass decryption=FileDecryption(footer_key=..., ...)")
+    if not encrypted and (head != b"PAR1" or tail[4:] != b"PAR1"):
         raise ValueError(f"pqreader: {path} is not a parquet file")
     flen = int.from_bytes(tail[:4], "little")
     if flen <= 0 or flen > size - 8:
         raise ValueError("pqreader: corrupt footer length")
     f.seek(size - 8 - flen)
     buf = f.read(flen)
+    if encrypted:
+        fmd = _decrypt_footer(buf, path, decryption)
+        return _FileMeta(fmd, _parse_schema(fmd[2]))
+    with _footers_lock:
+        hit = _footers.get(buf)
+        if hit is not None:
+            _footers.move_to_end(buf)
+            return hit
     fmd, used = read_struct(buf, 0)
     if 8 in fmd:
-        # plaintext-footer mode: readable footer + encrypted columns;
-        # the footer carries a 28-byte GCM signature ([nonce][tag] over
-        # the serialized FileMetaData) — verified when a footer key is
-        # available, per the spec's optional integrity check
+        _open_plaintext_footer(fmd, buf, used, path, decryption)
+        return _FileMeta(fmd, _parse_schema(fmd[2]))
+    meta = _FileMeta(fmd, _parse_schema(fmd[2]))
+    if flen <= _FOOTER_CACHE_BYTES:
+        with _footers_lock:
+            if buf not in _footers:
+                _footers[buf] = meta
+                _footers_bytes += flen
+            while _footers_bytes > _FOOTER_CACHE_BYTES:
+                _footers_bytes -= len(_footers.popitem(last=False)[0])
+    return meta
+
+
+def _open_plaintext_footer(fmd: dict, buf: bytes, used: int, path: str,
+                           decryption) -> None:
+    """Plaintext-footer mode: a readable footer over encrypted columns.
+    The footer carries a 28-byte GCM signature ([nonce][tag] over the
+    serialized FileMetaData), verified when a footer key is available,
+    per the spec's optional integrity check. Without keys the encrypted
+    chunks are only marked (no file AAD is needed for that)."""
+    file_aad = ctr = None
+    if decryption is not None:
         from parquet_go_spark.interop import pqcrypt
 
-        file_aad, ctr = pqcrypt.parse_algorithm(
-            fmd[8], decryption or pqcrypt.FileDecryption(), path)
-        if decryption is not None and flen - used >= 28:
+        file_aad, ctr = pqcrypt.parse_algorithm(fmd[8], decryption, path)
+        if len(buf) - used >= 28:
             key = decryption.resolve(fmd.get(9), None, footer=True)
             nonce, tag = buf[used:used + 12], buf[used + 12:used + 28]
             ct = pqcrypt._aesgcm(key).encrypt(
@@ -835,26 +906,15 @@ def _read_footer_file(f, size: int, path: str, decryption=None) -> dict:
                 raise ValueError(
                     f"pqreader: {path} footer signature mismatch — "
                     "wrong footer key or tampered footer")
-        _normalize_encrypted(fmd, file_aad, decryption, path,
-                             footer_key_metadata=fmd.get(9), ctr=ctr)
-    return fmd
+    _normalize_encrypted(fmd, file_aad, decryption, path,
+                         footer_key_metadata=fmd.get(9), ctr=ctr)
 
 
-def _read_encrypted_footer(f, size: int, path: str, decryption) -> dict:
+def _decrypt_footer(buf: bytes, path: str, decryption) -> dict:
     """Encrypted-footer mode (magic PARE): plaintext FileCryptoMetaData
     followed by the footer module, both inside the footer length."""
     from parquet_go_spark.interop import pqcrypt
 
-    if decryption is None:
-        raise ValueError(
-            f"pqreader: {path} is an encrypted parquet file (PARE) — "
-            "pass decryption=FileDecryption(footer_key=..., ...)")
-    f.seek(size - 8)
-    flen = int.from_bytes(f.read(4), "little")
-    if flen <= 0 or flen > size - 8:
-        raise ValueError("pqreader: corrupt footer length")
-    f.seek(size - 8 - flen)
-    buf = f.read(flen)
     fcm, used = read_struct(buf, 0)
     file_aad, ctr = pqcrypt.parse_algorithm(fcm.get(1) or {}, decryption,
                                             path)
@@ -930,14 +990,10 @@ def _normalize_encrypted(fmd: dict, file_aad: bytes, decryption,
 
 def read_schema(path: str, decryption=None) -> pa.Schema:
     """Footer-only schema (no data pages touched) — what the pqread
-    data source uses on the driver."""
-    import os
-
-    with open(path, "rb") as f:
-        fmd = _read_footer_file(f, os.path.getsize(path), path,
-                                decryption)
-    root = _parse_schema(fmd[2])
-    _annotate(root, 0, 0, ())
+    data source uses on the driver. The parse comes from the footer
+    cache when the file's footer bytes were parsed before (see
+    _file_meta)."""
+    root = _file_meta(path, decryption).root
     return pa.schema(
         [pa.field(c.name, _node_arrow_type(c)) for c in root.children])
 
@@ -2015,9 +2071,12 @@ def read_table(path: str, columns: list[str] | None = None,
     read nothing, and with page indexes a partially-covered group
     decodes only the overlapping pages. verify_checksums=True checks
     each page's recorded CRC32 before decoding (pages without one
-    pass, as in parquet-mr)."""
-    import os
+    pass, as in parquet-mr).
 
+    The footer parse (FileMetaData and schema tree) is served from the
+    per-process footer cache when this file's footer bytes were parsed
+    before; page indexes, blooms and pages are read on every call
+    (see _file_meta)."""
     if row_range is not None:
         lo, hi = row_range
         if not (isinstance(lo, int) and isinstance(hi, int)
@@ -2026,10 +2085,7 @@ def read_table(path: str, columns: list[str] | None = None,
                 f"pqreader: row_range must be 0 <= start <= stop, "
                 f"got {row_range!r}")
     with open(path, "rb") as f:
-        fmd = _read_footer_file(f, os.path.getsize(path), path,
-                                decryption)
-        root = _parse_schema(fmd[2])
-        _annotate(root, 0, 0, ())
+        fmd, root = _file_meta(path, decryption, f)
         tree = (_compile_pred_tree(root, fmd, predicate)
                 if predicate is not None else None)
         preds = _tree_leaves(tree)
@@ -2182,8 +2238,6 @@ def list_parquet_files(dir_path: str) -> list[str]:
     sidecars (the one file-discovery rule, shared by the pqread data
     source and spark_footer_aggregates). A path to a single FILE is
     returned as-is (spark.read.parquet accepts both shapes; so do we)."""
-    import os
-
     if os.path.isfile(dir_path):
         return [dir_path]
     files = sorted(
@@ -2323,14 +2377,9 @@ def footer_aggregates(path: str, columns: list[str] | None = None,
     column order, truncated/absent bounds, missing null_count); an
     all-null row group contributes no bounds without poisoning the
     column. Values come back in logical space (Decimal, date,
-    datetime, str, ...) — exactly read_table's cell values."""
-    import os
-
-    with open(path, "rb") as f:
-        fmd = _read_footer_file(f, os.path.getsize(path), path,
-                                decryption)
-    root = _parse_schema(fmd[2])
-    _annotate(root, 0, 0, ())
+    datetime, str, ...) — exactly read_table's cell values. The
+    footer parse comes from the footer cache (see _file_meta)."""
+    fmd, root = _file_meta(path, decryption)
     flat = {c.name: c for c in root.children
             if not c.children and c.max_rep == 0}
     if columns is not None:

@@ -294,11 +294,7 @@ class PqreadReader(DataSourceReader):
         first = pqreader.list_parquet_files(self._path)[0]
         # ONE footer parse serves both the pushability classification
         # and the compile check
-        with open(first, "rb") as fh:
-            fmd = pqreader._read_footer_file(
-                fh, os.path.getsize(first), first, self._decryption)
-        root = pqreader._parse_schema(fmd[2])
-        pqreader._annotate(root, 0, 0, ())
+        fmd, root = pqreader._file_meta(first, self._decryption)
         candidates = _translate(filters, _pushable_columns(root),
                                 _flat_columns(root), _no_gt_columns(root),
                                 _us_timestamp_columns(root))
@@ -372,9 +368,7 @@ def _span_rows(path: str, span: tuple, decryption) -> list[tuple]:
     from parquet_go_spark.interop import pqreader
 
     lo, hi = span
-    with open(path, "rb") as fh:
-        fmd = pqreader._read_footer_file(
-            fh, os.path.getsize(path), path, decryption)
+    fmd = pqreader._file_meta(path, decryption).fmd
     out, row = [], 0
     for rg in fmd.get(4, []):
         metas = [cc[3] for cc in rg[1]]

@@ -92,6 +92,23 @@ def test_chunk_empty():
 
 # -- selector ---------------------------------------------------------------
 
+def test_selector_int96_plain():
+    """INT96 (12-byte rows) has its own shortlist: PLAIN only, which
+    round-trips with and without nulls."""
+    rows = np.arange(12 * 300, dtype=np.uint8).reshape(300, 12)
+    assert selector.shortlist(
+        selector.column_stats(rows, Kind.INT96)) == [(Codec.PLAIN, False)]
+    blob, info = selector.select_and_encode(rows, Kind.INT96)
+    assert info["codec"] == Codec.PLAIN and info["raw_bytes"] == rows.size
+    got, _ = chunklib.decode_chunk(blob)
+    assert np.array_equal(got, rows)
+    valid = np.arange(450) % 3 != 0
+    blob, _ = selector.select_and_encode(rows, Kind.INT96, validity=valid)
+    got, meta = chunklib.decode_chunk(blob)
+    assert np.array_equal(got, rows)
+    assert np.array_equal(meta["validity"], valid)
+
+
 def test_selector_low_ndv_string_picks_dict():
     langs = [b"python", b"go", b"rust", b"python", b"python"] * 500
     ba = ByteArrays.from_pylist(langs)

@@ -78,3 +78,22 @@ def test_unregistered_id_fails_decode():
     vals = np.arange(10, dtype=np.int64)
     with pytest.raises(ValueError, match="unsupported codec"):
         chunklib.encode_chunk(vals, Kind.INT64, 151)
+
+
+def test_selector_propagates_a_failing_trial():
+    """A selectable codec whose encode raises is a fault, not a lost
+    trial: select_and_encode lets the error out instead of quietly
+    picking another codec."""
+    def broken(values, kind):
+        raise RuntimeError("kernel bug")
+
+    registry.register(registry.CustomCodec(
+        codec_id=ZLIB_ID + 1, name="broken-int", encode=broken,
+        decode=_dec, kinds=frozenset({Kind.INT64}), selectable=True,
+    ))
+    try:
+        with pytest.raises(RuntimeError, match="kernel bug"):
+            selector.select_and_encode(
+                np.arange(1000, dtype=np.int64), Kind.INT64)
+    finally:
+        registry.unregister(ZLIB_ID + 1)

@@ -1531,11 +1531,7 @@ def test_pqreader_unknown_column_order_distrusts_stats(tmp_path):
     tbl = pa.table({"k": pa.array(range(100), pa.int64())})
     p = str(tmp_path / "ord.parquet")
     pq.write_table(tbl, p)
-    with open(p, "rb") as fh:
-        import os as _os
-        fmd = pqreader._read_footer_file(fh, _os.path.getsize(p), p)
-    root = pqreader._parse_schema(fmd[2])
-    pqreader._annotate(root, 0, 0, ())
+    fmd, root = pqreader._file_meta(p)
     assert pqreader._compile_predicate(root, fmd, ("k", "=", 5)).trust
     fmd_future = dict(fmd)
     fmd_future[7] = [{9: {}}]  # a ColumnOrder union we don't know
@@ -2349,12 +2345,7 @@ def test_pqread_ds_pushes_null_filters(spark, tmp_path):
     write_table(f32, [ColumnSpec(
         "x", Kind.FLOAT, np.zeros(5, np.float32),
         validity=np.ones(5, bool))])
-    import os as _os
-    with open(f32, "rb") as fh:
-        fmd = pqreader._read_footer_file(
-            fh, _os.path.getsize(f32), f32)
-    root = pqreader._parse_schema(fmd[2])
-    pqreader._annotate(root, 0, 0, ())
+    root = pqreader._file_meta(f32).root
     got = pqread._translate(
         [IsNull(("x",)), IsNotNull(("x",)), EqualTo(("x",), 1.0),
          IsNull(("nope",))],

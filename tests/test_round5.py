@@ -333,8 +333,7 @@ def test_lz4_write_read_interop(tmp_path, comp, codec_id):
     write_table(p, [ColumnSpec("x", Kind.INT64, x,
                                encoding=Codec.PLAIN)],
                 compression=comp)
-    with open(p, "rb") as fh:
-        fmd = pqreader._read_footer_file(fh, os.path.getsize(p), p)
+    fmd = pqreader._file_meta(p).fmd
     ids = {cc[3][4] for rg in fmd.get(4, []) for cc in rg[1]}
     assert ids == {codec_id}
     ours = pqreader.read_table(p)
@@ -380,8 +379,7 @@ def test_legacy_lz4_bare_block_flavor(tmp_path):
     assert cnt >= 1
     p2 = str(tmp_path / "bare5.parquet")
     open(p2, "wb").write(bytes(blob))
-    with open(p2, "rb") as fh:
-        fmd = pqreader._read_footer_file(fh, os.path.getsize(p2), p2)
+    fmd = pqreader._file_meta(p2).fmd
     ids = {cc[3][4] for rg in fmd.get(4, []) for cc in rg[1]}
     assert ids == {5}, "patch must have flipped the codec id"
     ours = pqreader.read_table(p2)
