@@ -49,7 +49,6 @@ from parquet_go_spark.interop.export import (
 )
 from parquet_go_spark.interop import pqbloom
 from parquet_go_spark.interop.pqwriter import write_table
-from parquet_go_spark.plans import pipeline as _pipeline
 
 _ARROW_TO_SPARK = {
     "string": "string", "large_string": "string", "binary": "binary",
@@ -70,15 +69,18 @@ INHERIT = "__inherit__"
 
 
 def _inherit_props(path: str, decryption, compression=INHERIT):
-    """(codec_name, sorting LEAF indexes, bloom columns) of one source
-    file — footer bytes only, through OUR footer reader (it also opens
+    """(codec_name, sorting columns, bloom columns) of one source file
+    — footer bytes only, through OUR footer reader (it also opens
     encrypted files, which pyarrow cannot without its own key
     plumbing). codec_name is `compression` unless that is INHERIT; an
     inherited codec the writer cannot produce raises instead of
-    silently compacting to UNCOMPRESSED."""
+    silently compacting to UNCOMPRESSED. The footer's SortingColumns
+    index LEAF chunks; they come back as top-level column positions,
+    mapped through the file's own schema tree."""
     from parquet_go_spark.interop import pqreader
 
-    rg = pqreader._file_meta(path, decryption).fmd[4][0]
+    fmd, root = pqreader._file_meta(path, decryption)
+    rg = fmd[4][0]
     if compression == INHERIT:
         codec = rg[1][0][3][4]
         if codec not in _CODEC_ID:
@@ -87,25 +89,15 @@ def _inherit_props(path: str, decryption, compression=INHERIT):
                 f"compact: {path} uses compression {name}, which the "
                 "parquet writer cannot produce — pass compression=")
         compression = _CODEC_ID[codec]
-    sorting = [sc[1] for sc in (rg.get(4) or [])]
+    top_of_leaf = [j for j, c in enumerate(root.children)
+                   for _ in pqreader._leaves(c)]
+    sorting = [top_of_leaf[sc[1]] for sc in (rg.get(4) or [])]
     bloom = pqbloom.bloom_column_names(path, decryption) or None
     return compression, sorting, bloom
 
 
 def _merge_fn(out_dir: str, columns, compression, page_rows: int,
               decryption=None, encryption=None):
-    # file-footer SortingColumn indexes address LEAF chunks; a MAP
-    # column contributes two leaves and a STRUCT one per field, so map
-    # them back to top-level column positions for Arrow sorting and
-    # for write_table
-    leaf_to_top = []
-    for j, (_, t) in enumerate(columns):
-        if t.startswith("map<"):
-            leaf_to_top += [j, j]
-        else:
-            sf = _pipeline._struct_fields(t)
-            leaf_to_top += [j] * (len(sf) if sf else 1)
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -117,9 +109,8 @@ def _merge_fn(out_dir: str, columns, compression, page_rows: int,
                 paths = [os.path.join(out_dir, f) for f in files]
                 # inherit the sources' codec + declared sort order +
                 # bloom-filtered columns (footer-only scans)
-                comp, leaf_sort, bloom_cols = _inherit_props(
+                comp, sorting, bloom_cols = _inherit_props(
                     paths[0], decryption, compression)
-                sorting = [leaf_to_top[i] for i in leaf_sort]
                 # promote: source files may disagree on nullability (a
                 # file whose slice had no nulls declares the column —
                 # or a MAP's value leaf — required)

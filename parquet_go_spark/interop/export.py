@@ -26,12 +26,10 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
 
-from parquet_go_spark.codecs.kinds import Kind
 from parquet_go_spark.plans import pipeline
-from parquet_go_spark.interop import thriftc as tc
 from parquet_go_spark.interop.pqwriter import (
     ColumnSpec, MapColumnSpec, NestedColumnSpec, NestedLeaf,
-    StructColumnSpec, _logical_fields, write_table,
+    StructColumnSpec, _group_element, _leaf_element, write_table,
 )
 
 _SUMMARY_SCHEMA = StructType([
@@ -120,30 +118,16 @@ def _nested_schema_elements(name: str, spark_type: str) -> list:
         elem = pipeline._list_elem(ty)
         sf = pipeline._struct_fields(ty)
         if elem is not None:
-            els.append(tc.struct([
-                (3, tc.I32, 1), (4, tc.BINARY, nm),
-                (5, tc.I32, 1), (6, tc.I32, 3),  # ConvertedType LIST
-            ]))
-            els.append(tc.struct([
-                (3, tc.I32, 2), (4, tc.BINARY, "list"), (5, tc.I32, 1),
-            ]))
+            els.append(_group_element(nm, 1, 1, 3))  # ConvertedType LIST
+            els.append(_group_element("list", 2, 1))
             emit("element", elem)
         elif sf is not None:
-            els.append(tc.struct([
-                (3, tc.I32, 1), (4, tc.BINARY, nm), (5, tc.I32, len(sf)),
-            ]))
+            els.append(_group_element(nm, 1, len(sf)))
             for fn, ft in sf:
                 emit(fn, ft)
         else:
-            kind = pipeline._col_kind(ty)
-            els.append(tc.struct([
-                (1, tc.I32, kind),
-                (2, tc.I32, _leaf_flba(ty)
-                 if kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
-                (3, tc.I32, 1),
-                (4, tc.BINARY, nm),
-                *_logical_fields(_leaf_logical(ty)),
-            ]))
+            els.append(_leaf_element(nm, 1, pipeline._col_kind(ty),
+                                     _leaf_flba(ty), _leaf_logical(ty)))
 
     emit(name, spark_type)
     return els

@@ -2089,8 +2089,15 @@ def read_table(path: str, columns: list[str] | None = None,
         tree = (_compile_pred_tree(root, fmd, predicate)
                 if predicate is not None else None)
         preds = _tree_leaves(tree)
-        top = [c for c in root.children
-               if columns is None or c.name in columns]
+        top = root.children
+        if columns is not None:
+            by_name = {c.name: c for c in root.children}
+            unknown = [n for n in columns if n not in by_name]
+            if unknown:
+                raise ValueError(
+                    f"pqreader: no column {unknown[0]!r} in {path} "
+                    f"(columns: {list(by_name)})")
+            top = [by_name[n] for n in dict.fromkeys(columns)]
         top_names = {c.name for c in top}
         for pr in preds:
             if pr.leaf.path[0] not in top_names:

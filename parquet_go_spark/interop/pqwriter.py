@@ -8,8 +8,10 @@ parquet-format spec — so pyarrow, DuckDB, and Spark's own parquet-mr
 reader validate our encoded bytes end-to-end. Mirrors the reference
 being a full parquet writer (writer.go) rather than a private format.
 
-Scope: flat schemas plus LIST and MAP groups (true Dremel rep/def
-levels), required/optional leaves, data pages v1 AND v2
+Scope: flat schemas, structs, LIST and MAP groups and any nesting of
+them (true Dremel rep/def levels; one chunk writer for every leaf, as
+the reference wraps one column writer for optional and repeated
+leaves), required/optional leaves, data pages v1 AND v2
 (the reference's default is v2, config.go:27-31), multiple row groups,
 row-group Statistics with the reference's truncate-with-carry bound
 rule (column_index.go:684-700), encodings PLAIN / RLE(boolean) /
@@ -103,7 +105,10 @@ class ColumnSpec:
     then marks null LISTS (elements themselves are required). The
     column is written as the spec's 3-level LIST group with true
     Dremel repetition/definition levels (rep 0/1; def 0=null list,
-    1=empty list, 2=element)."""
+    1=empty list, 2=element).
+
+    Like StructColumnSpec and MapColumnSpec, this is a front-end:
+    write_table lowers it to a NestedColumnSpec (see _lower)."""
 
     name: str
     kind: int
@@ -160,8 +165,9 @@ class NestedLeaf:
 class NestedColumnSpec:
     """One column of ANY nesting (struct/list composition, nullable at
     every level) → one chunk per leaf with true rep/def streams. The
-    schema subtree is pre-built by the shredder (`schema_elements` is a
-    list of thriftc SchemaElement structs, root group first)."""
+    schema subtree is pre-built (`schema_elements` is a list of thriftc
+    SchemaElement structs, root group first) — by export's shredder, or
+    by write_table lowering the other spec classes."""
 
     name: str
     n_rows: int
@@ -184,7 +190,7 @@ class StructColumnSpec:
     validity: np.ndarray | None = None  # null structs (rows)
 
 
-def _default_encoding(spec: ColumnSpec) -> int:
+def _default_encoding(spec: NestedLeaf) -> int:
     k = spec.kind
     if k in (Kind.INT32, Kind.INT64):
         return Codec.DELTA_BINARY_PACKED
@@ -336,40 +342,205 @@ def _statistics_struct(vals, kind: int, null_count: int,
 
 
 # ---------------------------------------------------------------------------
-# pages
+# lowering: every spec shape → NestedColumnSpec (leaves + schema subtree)
 # ---------------------------------------------------------------------------
 
-def _list_levels(lens: np.ndarray, valid: np.ndarray | None,
-                 entry_valid: np.ndarray | None = None):
-    """Dremel entry streams for one page of a repeated column →
-    (rep uint8[E], def uint8[E]): each row contributes its elements
-    (rep 0 for the first, 1 after) or ONE placeholder entry
-    (def 1 empty / def 0 null container, rep 0). Element def is 2 for
-    a required leaf; with `entry_valid` (an optional leaf under the
-    repeated group, e.g. a MAP's value) present elements get def 3 and
-    null ones def 2."""
+def _leaf_element(name: str, repetition: int, kind: int,
+                  flba_size: int | None = None,
+                  logical: str | None = None) -> bytes:
+    """SchemaElement of one leaf (repetition 0 required, 1 optional)."""
+    return tc.struct([
+        (1, tc.I32, kind),
+        (2, tc.I32, flba_size if kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
+        (3, tc.I32, repetition),
+        (4, tc.BINARY, name),
+        *_logical_fields(logical),
+    ])
+
+
+def _group_element(name: str, repetition: int, n_children: int,
+                   converted: int | None = None) -> bytes:
+    """SchemaElement of one group (ConvertedType 1 MAP, 3 LIST)."""
+    return tc.struct([
+        (3, tc.I32, repetition), (4, tc.BINARY, name),
+        (5, tc.I32, n_children), (6, tc.I32, converted),
+    ])
+
+
+def _cum(mask: np.ndarray) -> np.ndarray:
+    """Entry index → value index (length len(mask)+1) for a mask of
+    value-bearing entries."""
+    out = np.zeros(len(mask) + 1, dtype=np.int64)
+    np.cumsum(mask, out=out[1:])
+    return out
+
+
+def _list_levels(lens: np.ndarray, valid: np.ndarray | None):
+    """Dremel entry streams of a 1-level repeated column →
+    (rep uint8[E], def uint8[E], row_starts int64[n_rows+1]): each row
+    contributes its elements (rep 0 for the first, 1 after, def 2) or
+    ONE placeholder entry (def 1 empty / def 0 null container,
+    rep 0)."""
     lens = np.where(valid, lens, 0) if valid is not None else lens
-    epr = np.maximum(lens, 1)
-    E = int(epr.sum())
-    starts = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(epr[:-1], out=starts[1:])
-    rep = np.ones(E, dtype=np.uint8)
+    row_starts = _cum(np.maximum(lens, 1))
+    starts = row_starts[:-1]
+    rep = np.ones(int(row_starts[-1]), dtype=np.uint8)
     rep[starts] = 0
-    if entry_valid is None:
-        de = np.full(E, 2, dtype=np.uint8)
-    else:
-        # scatter per-element validity into the entry stream
-        de = np.full(E, 3, dtype=np.uint8)
-        mask = np.ones(E, dtype=bool)
-        mask[starts[lens == 0]] = False  # placeholder slots
-        de[mask] = np.where(entry_valid, 3, 2).astype(np.uint8)
+    de = np.full(len(rep), 2, dtype=np.uint8)
     ph = starts[lens == 0]  # placeholder entries
     if valid is None:
         de[ph] = 1
     else:
         de[ph] = np.where(valid[lens == 0], 1, 0).astype(np.uint8)
-    return rep, de
+    return rep, de, row_starts
 
+
+def _leaf(part, path: list, rep, de, max_rep: int, max_def: int,
+          row_starts, val_cum) -> NestedLeaf:
+    return NestedLeaf(path, part.kind, part.values, rep, de, max_rep,
+                      max_def, row_starts, val_cum, part.flba_size,
+                      part.encoding, part.logical)
+
+
+def _spec_rows(c) -> int:
+    if isinstance(c, NestedColumnSpec):
+        return c.n_rows
+    if isinstance(c, StructColumnSpec):
+        if c.validity is not None:
+            return len(c.validity)
+        f0 = c.fields[0][1]
+        return len(f0.validity) if f0.validity is not None else len(f0.values)
+    if isinstance(c, MapColumnSpec) or c.lengths is not None:
+        return len(c.lengths)
+    return len(c.validity) if c.validity is not None else len(c.values)
+
+
+def _lower(c, n_rows: int, ident: np.ndarray,
+           zeros: np.ndarray) -> NestedColumnSpec:
+    """One column spec → its NestedColumnSpec. Flat leaves share the
+    identity `ident` (arange(n_rows+1)) for row_starts and for val_cum
+    when required, and `zeros` for absent level streams, so lowering a
+    flat column costs at most one validity cumsum."""
+    if isinstance(c, NestedColumnSpec):
+        for lf in c.leaves:
+            if len(lf.row_starts) != n_rows + 1:
+                raise ValueError(
+                    f"nested column {c.name}/{'.'.join(lf.path)}: "
+                    f"row_starts has {len(lf.row_starts)} slots for "
+                    f"{n_rows} rows")
+        return c
+    if isinstance(c, StructColumnSpec):
+        # <optional|required> group <name> { one leaf per field }; field
+        # def levels run 0 null struct / 1 field null / 2 present
+        sv = c.validity
+        n_present = int(sv.sum()) if sv is not None else n_rows
+        leaves = []
+        elements = [_group_element(c.name, 1 if sv is not None else 0,
+                                   len(c.fields))]
+        for fname, part in c.fields:
+            fv = part.validity
+            if fv is None:
+                if len(part.values) != n_present:
+                    raise ValueError(
+                        f"struct column {c.name}.{fname}: "
+                        f"{len(part.values)} values for {n_present} "
+                        "present structs")
+            else:
+                if len(fv) != n_rows:
+                    raise ValueError(
+                        f"struct column {c.name}.{fname}: validity has "
+                        f"{len(fv)} rows, expected {n_rows}")
+                if sv is not None and bool(np.any(fv & ~sv)):
+                    raise ValueError(
+                        f"struct column {c.name}.{fname}: field marked "
+                        "present inside a null struct")
+                if len(part.values) != int(fv.sum()):
+                    raise ValueError(
+                        f"struct column {c.name}.{fname}: values must be "
+                        "null-stripped")
+            max_def = (sv is not None) + (fv is not None)
+            de, val_cum = zeros, ident
+            if max_def:
+                de = np.full(n_rows, max_def, dtype=np.uint8)
+                if fv is not None:
+                    de[~fv] = max_def - 1
+                if sv is not None:
+                    de[~sv] = 0
+                val_cum = _cum(fv if fv is not None else sv)
+            leaves.append(_leaf(part, [fname], zeros, de, 0, max_def,
+                                ident, val_cum))
+            elements.append(_leaf_element(
+                fname, 1 if fv is not None else 0, part.kind,
+                part.flba_size, part.logical))
+        return NestedColumnSpec(c.name, n_rows, leaves, elements)
+    if isinstance(c, MapColumnSpec) or c.lengths is not None:
+        # 1-level repeated group: entries are elements, or one
+        # placeholder per empty/null row; the group is always optional
+        rep, de, row_starts = _list_levels(
+            np.asarray(c.lengths, dtype=np.int64), c.validity)
+        elem = de == 2
+        val_cum = _cum(elem)
+        n_ent = int(val_cum[-1])
+        if isinstance(c, ColumnSpec):
+            # optional group <name> (LIST) { repeated group list {
+            #   required <type> element } }
+            return NestedColumnSpec(c.name, n_rows, [_leaf(
+                c, ["list", "element"], rep, de, 1, 2, row_starts, val_cum,
+            )], [_group_element(c.name, 1, 1, 3),
+                 _group_element("list", 2, 1),
+                 _leaf_element("element", 0, c.kind, c.flba_size,
+                               c.logical)])
+        # optional group <name> (MAP) { repeated group key_value {
+        #   required K key; <optional|required> V value } }
+        if len(c.key.values) != n_ent:
+            raise ValueError(
+                f"map column {c.name}: {len(c.key.values)} keys "
+                f"for {n_ent} entries")
+        ev = c.entry_validity
+        vde, vmax, vcum = de, 2, val_cum
+        if ev is not None:
+            if len(ev) != n_ent:
+                raise ValueError(
+                    f"map column {c.name}: entry_validity has "
+                    f"{len(ev)} slots for {n_ent} entries")
+            if len(c.value.values) != int(ev.sum()):
+                raise ValueError(
+                    f"map column {c.name}: values must be null-stripped")
+            # an optional value under the repeated group: def 3 present,
+            # 2 null
+            vde = de.copy()
+            vde[elem] += ev
+            vmax, vcum = 3, _cum(vde == 3)
+        elif len(c.value.values) != n_ent:
+            raise ValueError(
+                f"map column {c.name}: {len(c.value.values)} values "
+                f"for {n_ent} entries")
+        return NestedColumnSpec(c.name, n_rows, [
+            _leaf(c.key, ["key_value", "key"], rep, de, 1, 2,
+                  row_starts, val_cum),
+            _leaf(c.value, ["key_value", "value"], rep, vde, 1, vmax,
+                  row_starts, vcum),
+        ], [_group_element(c.name, 1, 1, 1),
+            _group_element("key_value", 2, 2),
+            _leaf_element("key", 0, c.key.kind, c.key.flba_size,
+                          c.key.logical),
+            _leaf_element("value", 1 if ev is not None else 0,
+                          c.value.kind, c.value.flba_size, c.value.logical)])
+    if c.validity is None:
+        leaf = _leaf(c, [], zeros, zeros, 0, 0, ident, ident)
+    else:
+        if len(c.values) != int(c.validity.sum()):
+            raise ValueError(f"column {c.name}: values must be null-stripped")
+        leaf = _leaf(c, [], zeros, c.validity.astype(np.uint8), 0, 1,
+                     ident, _cum(c.validity))
+    return NestedColumnSpec(c.name, n_rows, [leaf], [_leaf_element(
+        c.name, 1 if c.validity is not None else 0, c.kind, c.flba_size,
+        c.logical)])
+
+
+# ---------------------------------------------------------------------------
+# pages and the one chunk writer
+# ---------------------------------------------------------------------------
 
 def _page(page_type: int, payload: bytes, header_field: tuple,
           compression: str | None,
@@ -435,299 +606,17 @@ def _page(page_type: int, payload: bytes, header_field: tuple,
             len(head) + stored)
 
 
-def _write_chunk(out: bytearray, spec: ColumnSpec, row_lo: int, row_hi: int,
-                 compression: str | None, page_rows: int,
-                 page_version: int, statistics: bool,
-                 nn_cum: np.ndarray | None,
-                 path: list[str] | None = None,
-                 def_levels: np.ndarray | None = None,
-                 def_width: int = 1, crypto=None) -> dict:
-    """Append one column CHUNK (pages for rows [row_lo, row_hi)) to
-    `out`; return a dict with everything the footer needs (the
-    ColumnChunk struct is built later, once the page-index offsets are
-    known).
-
-    The default is a top-level leaf whose def stream (bit width 1) is
-    derived from spec.validity. A STRUCT field leaf instead passes
-    explicit `def_levels` (uint8 per row, e.g. 0 null struct / 1 field
-    null / 2 present) with `def_width`; spec.validity must then be the
-    value-presence mask (def == max)."""
-    codec = spec.encoding
-    vals = spec.values
-    n_rows = row_hi - row_lo
-    if spec.validity is not None:
-        vlo_all, vhi_all = int(nn_cum[row_lo]), int(nn_cum[row_hi])
-    else:
-        vlo_all, vhi_all = row_lo, row_hi
-    chunk_vals = _slice_values(vals, vlo_all, vhi_all)
-    null_count = n_rows - (vhi_all - vlo_all)
-
-    dict_offset = None
-    encodings = {Codec.PLAIN, Codec.RLE, codec}
-    total_raw = total_stored = 0
-
-    indexes = None
-    if codec == Codec.RLE_DICTIONARY:
-        if spec.kind == Kind.BYTE_ARRAY:
-            uniques, indexes = dictionary.factorize_byte_array(chunk_vals)
-        elif np.asarray(chunk_vals).ndim == 2:
-            uniques, indexes = dictionary.factorize_flba(chunk_vals)
-        else:
-            uniques, indexes = dictionary.factorize_numeric(
-                np.asarray(chunk_vals))
-        dict_offset = len(out)
-        pg, raw, stored = _page(
-            _DICTIONARY_PAGE,
-            _encode_values(uniques, spec.kind, Codec.PLAIN, spec.flba_size),
-            (7, tc.STRUCT, tc.struct([
-                (1, tc.I32, len(uniques)), (2, tc.I32, Codec.PLAIN),
-            ])),
-            compression, crypto=crypto,
-        )
-        out += pg
-        total_raw += raw
-        total_stored += stored
-
-    data_offset = len(out)
-    pages = []  # per data page, for the ColumnIndex/OffsetIndex
-    for lo in range(row_lo, row_hi, page_rows):
-        hi = min(lo + page_rows, row_hi)
-        if spec.validity is not None:
-            vlo, vhi = int(nn_cum[lo]), int(nn_cum[hi])
-        else:
-            vlo, vhi = lo, hi
-        page_vals = _slice_values(vals, vlo, vhi)
-        if indexes is not None:
-            body = rle.encode_dictionary_indexes(
-                indexes[vlo - vlo_all:vhi - vlo_all])
-        else:
-            body = _encode_values(page_vals, spec.kind, codec,
-                                  spec.flba_size)
-        if def_levels is not None:
-            page_def = def_levels[lo:hi]
-        elif spec.validity is not None:
-            page_def = spec.validity[lo:hi].astype(np.uint8)
-        else:
-            page_def = None
-        if page_version == 2:
-            dl = (rle.encode_levels(page_def, def_width)
-                  if page_def is not None else b"")
-            pg, raw, stored = _page(
-                _DATA_PAGE_V2, body,
-                (8, tc.STRUCT, tc.struct([
-                    (1, tc.I32, hi - lo),
-                    (2, tc.I32, (hi - lo) - (vhi - vlo)),
-                    (3, tc.I32, hi - lo),
-                    (4, tc.I32, codec),
-                    (5, tc.I32, len(dl)),
-                    (6, tc.I32, 0),
-                    (7, tc.BOOL, bool(compression)),
-                ])),
-                compression, precompressed=dl,
-                crypto=crypto, page_ord=len(pages),
-            )
-        else:
-            payload = body
-            if page_def is not None:
-                dpay = rle.encode_hybrid(
-                    page_def.astype(np.uint64), def_width)
-                payload = (len(dpay).to_bytes(4, "little") + dpay + body)
-            pg, raw, stored = _page(
-                _DATA_PAGE, payload,
-                (5, tc.STRUCT, tc.struct([
-                    (1, tc.I32, hi - lo), (2, tc.I32, codec),
-                    (3, tc.I32, Codec.RLE), (4, tc.I32, Codec.RLE),
-                ])),
-                compression, crypto=crypto, page_ord=len(pages),
-            )
-        page_off = len(out)
-        out += pg
-        total_raw += raw
-        total_stored += stored
-        lo_b, hi_b = _stat_bounds(page_vals, spec.kind, spec.logical)
-        pages.append({
-            "offset": page_off,
-            "size": len(pg),
-            "first_row": lo - row_lo,
-            "null_count": (hi - lo) - (vhi - vlo),
-            "null_page": vhi == vlo,
-            "min": lo_b, "max": hi_b,
-        })
-
-    meta_fields = [
-        (1, tc.I32, spec.kind),
-        (2, tc.LIST, sorted(encodings), tc.I32),
-        (3, tc.LIST, path or [spec.name], tc.BINARY),
-        (4, tc.I32, _COMPRESSION[compression]),
-        (5, tc.I64, n_rows),
-        (6, tc.I64, total_raw),
-        (7, tc.I64, total_stored),
-        (9, tc.I64, data_offset),
-        (11, tc.I64, dict_offset),
-        (12, tc.STRUCT,
-         _statistics_struct(chunk_vals, spec.kind, null_count,
-                            spec.logical)
-         if statistics else None),
-    ]
-    return {
-        "meta_fields": meta_fields,
-        "file_offset": dict_offset if dict_offset is not None else data_offset,
-        "pages": pages,
-        "total_raw": total_raw,
-    }
-
-
-def _write_list_chunk(out: bytearray, spec: ColumnSpec, row_lo: int,
-                      row_hi: int, compression: str | None, page_rows: int,
-                      page_version: int, statistics: bool,
-                      elem_cum: np.ndarray,
-                      path: list[str] | None = None,
-                      entry_valid: np.ndarray | None = None,
-                      val_cum: np.ndarray | None = None,
-                      crypto=None) -> dict:
-    """Append one repeated-leaf column chunk: flattened element pages
-    with true rep/def level streams. Pages break on ROW boundaries, so
-    a record never splits across pages. `elem_cum` maps row index →
-    entry index (null rows contribute 0).
-
-    The default is the 3-level LIST group's required element. For an
-    OPTIONAL leaf under the repeated group (a MAP's value), pass
-    `entry_valid` (per entry: value present?) and `val_cum` (entry
-    index → null-stripped value index); def levels then run 0..3."""
-    codec = spec.encoding
-    vals = spec.values
-    n_rows = row_hi - row_lo
-
-    def vof(e: int) -> int:  # entry index → value index
-        return int(val_cum[e]) if val_cum is not None else int(e)
-
-    elo_all, ehi_all = int(elem_cum[row_lo]), int(elem_cum[row_hi])
-    vlo_all, vhi_all = vof(elo_all), vof(ehi_all)
-    chunk_vals = _slice_values(vals, vlo_all, vhi_all)
-
-    dict_offset = None
-    encodings = {Codec.PLAIN, Codec.RLE, codec}
-    total_raw = total_stored = 0
-    indexes = None
-    if codec == Codec.RLE_DICTIONARY:
-        if spec.kind == Kind.BYTE_ARRAY:
-            uniques, indexes = dictionary.factorize_byte_array(chunk_vals)
-        elif np.asarray(chunk_vals).ndim == 2:
-            uniques, indexes = dictionary.factorize_flba(chunk_vals)
-        else:
-            uniques, indexes = dictionary.factorize_numeric(
-                np.asarray(chunk_vals))
-        dict_offset = len(out)
-        pg, raw, stored = _page(
-            _DICTIONARY_PAGE,
-            _encode_values(uniques, spec.kind, Codec.PLAIN, spec.flba_size),
-            (7, tc.STRUCT, tc.struct([
-                (1, tc.I32, len(uniques)), (2, tc.I32, Codec.PLAIN),
-            ])),
-            compression, crypto=crypto,
-        )
-        out += pg
-        total_raw += raw
-        total_stored += stored
-
-    max_def = 3 if entry_valid is not None else 2
-    data_offset = len(out)
-    pages = []
-    total_entries = 0
-    for lo in range(row_lo, row_hi, page_rows):
-        hi = min(lo + page_rows, row_hi)
-        elo, ehi = int(elem_cum[lo]), int(elem_cum[hi])
-        vlo, vhi = vof(elo), vof(ehi)
-        page_vals = _slice_values(vals, vlo, vhi)
-        if indexes is not None:
-            body = rle.encode_dictionary_indexes(
-                indexes[vlo - vlo_all:vhi - vlo_all])
-        else:
-            body = _encode_values(page_vals, spec.kind, codec,
-                                  spec.flba_size)
-        rep, de = _list_levels(
-            np.asarray(spec.lengths[lo:hi]),
-            spec.validity[lo:hi] if spec.validity is not None else None,
-            entry_valid[elo:ehi] if entry_valid is not None else None)
-        n_ent = len(rep)
-        total_entries += n_ent
-        if page_version == 2:
-            rl = rle.encode_levels(rep, 1)
-            dl = rle.encode_levels(de, 2)
-            pg, raw, stored = _page(
-                _DATA_PAGE_V2, body,
-                (8, tc.STRUCT, tc.struct([
-                    (1, tc.I32, n_ent),
-                    (2, tc.I32, int((de < max_def).sum())),
-                    (3, tc.I32, hi - lo),
-                    (4, tc.I32, codec),
-                    (5, tc.I32, len(dl)),
-                    (6, tc.I32, len(rl)),
-                    (7, tc.BOOL, bool(compression)),
-                ])),
-                compression, precompressed=rl + dl,
-                crypto=crypto, page_ord=len(pages),
-            )
-        else:
-            rpay = rle.encode_hybrid(rep.astype(np.uint64), 1)
-            dpay = rle.encode_hybrid(de.astype(np.uint64), 2)
-            payload = (len(rpay).to_bytes(4, "little") + rpay
-                       + len(dpay).to_bytes(4, "little") + dpay + body)
-            pg, raw, stored = _page(
-                _DATA_PAGE, payload,
-                (5, tc.STRUCT, tc.struct([
-                    (1, tc.I32, n_ent), (2, tc.I32, codec),
-                    (3, tc.I32, Codec.RLE), (4, tc.I32, Codec.RLE),
-                ])),
-                compression, crypto=crypto, page_ord=len(pages),
-            )
-        page_off = len(out)
-        out += pg
-        total_raw += raw
-        total_stored += stored
-        lo_b, hi_b = _stat_bounds(page_vals, spec.kind, spec.logical)
-        pages.append({
-            "offset": page_off,
-            "size": len(pg),
-            "first_row": lo - row_lo,
-            "null_count": n_ent - (vhi - vlo),
-            "null_page": vhi == vlo,
-            "min": lo_b, "max": hi_b,
-        })
-
-    meta_fields = [
-        (1, tc.I32, spec.kind),
-        (2, tc.LIST, sorted(encodings), tc.I32),
-        (3, tc.LIST, path or [spec.name, "list", "element"], tc.BINARY),
-        (4, tc.I32, _COMPRESSION[compression]),
-        (5, tc.I64, total_entries),
-        (6, tc.I64, total_raw),
-        (7, tc.I64, total_stored),
-        (9, tc.I64, data_offset),
-        (11, tc.I64, dict_offset),
-        (12, tc.STRUCT,
-         _statistics_struct(chunk_vals, spec.kind,
-                            total_entries - (vhi_all - vlo_all),
-                            spec.logical)
-         if statistics else None),
-    ]
-    return {
-        "meta_fields": meta_fields,
-        "file_offset": dict_offset if dict_offset is not None else data_offset,
-        "pages": pages,
-        "total_raw": total_raw,
-    }
-
-
 def _write_nested_chunk(out: bytearray, leaf: NestedLeaf, name: str,
                         row_lo: int, row_hi: int, compression: str | None,
                         page_rows: int, page_version: int,
                         statistics: bool, crypto=None) -> dict:
-    """Append one arbitrarily nested leaf chunk: precomputed rep/def
-    entry streams at their true widths, pages broken on ROW boundaries
-    via `row_starts` (an entry with rep 0 starts a record, so a record
-    never splits across pages — the same invariant the 1-level list
-    writer keeps)."""
+    """Append one leaf CHUNK (pages for rows [row_lo, row_hi)) to `out`
+    — the one chunk writer; every spec shape lowers to a NestedLeaf.
+    Precomputed rep/def entry streams are written at their true widths
+    (none at max level 0), and pages break on ROW boundaries via
+    `row_starts`, so a record never splits across pages. Returns a dict
+    with everything the footer needs (the ColumnChunk struct is built
+    later, once the page-index offsets are known)."""
     codec = leaf.encoding
     vals = leaf.values
     n_rows = row_hi - row_lo
@@ -908,7 +797,9 @@ def _page_index_structs(chunk: dict, kind: int) -> tuple[bytes | None, bytes]:
     return column_index, offset_index
 
 
-def write_table(path: str, columns: list[ColumnSpec], *,
+def write_table(path: str,
+                columns: list[ColumnSpec | StructColumnSpec | MapColumnSpec
+                              | NestedColumnSpec], *,
                 compression: str | None = None,
                 page_rows: int = 65536,
                 row_group_rows: int | None = None,
@@ -920,13 +811,21 @@ def write_table(path: str, columns: list[ColumnSpec], *,
                 bloom_fpp: float = 0.01,
                 encryption=None) -> dict:
     """Write one parquet file. Returns a summary
-    {n_rows, file_bytes, row_groups, encodings: {col: codec id}}.
+    {n_rows, file_bytes, row_groups, encodings: {leaf: codec id}}.
 
-    bloom_columns: leaf names (dotted for struct fields) to write
-    split-block bloom filters for, per row group — XXH64 spec hashing,
-    built from the chunk's distinct values (the reference builds from
-    the dictionary, writer.go:2089-2095 — same filter, inserts are
-    idempotent). Boolean and repeated (LIST/MAP) leaves are skipped.
+    Every column spec lowers to a NestedColumnSpec (its NestedLeafs
+    plus its schema subtree) and every leaf goes through the one chunk
+    writer. Leaves are addressed by their dotted schema path
+    ("s.a", "m.key_value.key"), except that a ColumnSpec — flat or
+    list — is addressed by its column name; the encodings summary,
+    bloom_columns and the FileEncryption column names all use these
+    names.
+
+    bloom_columns: leaves to write split-block bloom filters for, per
+    row group — XXH64 spec hashing, built from the chunk's distinct
+    values (the reference builds from the dictionary,
+    writer.go:2089-2095 — same filter, inserts are idempotent). Boolean
+    and repeated leaves (max_rep > 0) are skipped.
 
     encryption (pqcrypt.FileEncryption): parquet modular encryption,
     AES_GCM_V1 — the write-side mirror of the reference's
@@ -956,183 +855,29 @@ def write_table(path: str, columns: list[ColumnSpec], *,
                 "encryption must be a pqcrypt.FileEncryption")
         file_unique = encryption.file_unique()
         file_aad = bytes(encryption.aad_prefix) + file_unique
-    n_rows = None
+    n_rows = _spec_rows(columns[0])
     for c in columns:
-        if isinstance(c, NestedColumnSpec):
-            rows = c.n_rows
-        elif isinstance(c, StructColumnSpec):
-            if c.validity is not None:
-                rows = len(c.validity)
-            else:
-                f0 = c.fields[0][1]
-                rows = (len(f0.validity) if f0.validity is not None
-                        else len(f0.values))
-        elif isinstance(c, MapColumnSpec) or c.lengths is not None:
-            rows = len(c.lengths)
-        elif c.validity is not None:
-            rows = len(c.validity)
-        else:
-            rows = len(c.values)
-        if n_rows is None:
-            n_rows = rows
-        elif rows != n_rows:
+        rows = _spec_rows(c)
+        if rows != n_rows:
             raise ValueError(f"column {c.name}: {rows} rows, expected {n_rows}")
-        if isinstance(c, NestedColumnSpec):
-            for lf in c.leaves:
-                if len(lf.row_starts) != rows + 1:
-                    raise ValueError(
-                        f"nested column {c.name}/{'.'.join(lf.path)}: "
-                        f"row_starts has {len(lf.row_starts)} slots for "
-                        f"{rows} rows")
-            continue
-        if isinstance(c, StructColumnSpec):
-            n_present = (int(c.validity.sum())
-                         if c.validity is not None else rows)
-            for fname, part in c.fields:
-                if part.validity is None:
-                    if len(part.values) != n_present:
-                        raise ValueError(
-                            f"struct column {c.name}.{fname}: "
-                            f"{len(part.values)} values for {n_present} "
-                            "present structs")
-                    continue
-                if len(part.validity) != rows:
-                    raise ValueError(
-                        f"struct column {c.name}.{fname}: validity has "
-                        f"{len(part.validity)} rows, expected {rows}")
-                if c.validity is not None and \
-                        bool(np.any(part.validity & ~c.validity)):
-                    raise ValueError(
-                        f"struct column {c.name}.{fname}: field marked "
-                        "present inside a null struct")
-                if len(part.values) != int(part.validity.sum()):
-                    raise ValueError(
-                        f"struct column {c.name}.{fname}: values must be "
-                        "null-stripped")
-        elif isinstance(c, MapColumnSpec):
-            lens = np.asarray(c.lengths, dtype=np.int64)
-            eff = (np.where(c.validity, lens, 0)
-                   if c.validity is not None else lens)
-            n_ent = int(eff.sum())
-            if len(c.key.values) != n_ent:
-                raise ValueError(
-                    f"map column {c.name}: {len(c.key.values)} keys "
-                    f"for {n_ent} entries")
-            if c.entry_validity is not None:
-                if len(c.entry_validity) != n_ent:
-                    raise ValueError(
-                        f"map column {c.name}: entry_validity has "
-                        f"{len(c.entry_validity)} slots for {n_ent} entries")
-                if len(c.value.values) != int(c.entry_validity.sum()):
-                    raise ValueError(
-                        f"map column {c.name}: values must be null-stripped")
-            elif len(c.value.values) != n_ent:
-                raise ValueError(
-                    f"map column {c.name}: {len(c.value.values)} values "
-                    f"for {n_ent} entries")
-        elif c.lengths is None and c.validity is not None and \
-                len(c.values) != int(c.validity.sum()):
-            raise ValueError(f"column {c.name}: values must be null-stripped")
+    ident = np.arange(n_rows + 1, dtype=np.int64)
+    zeros = np.zeros(n_rows, dtype=np.uint8)
+    nested = [_lower(c, n_rows, ident, zeros) for c in columns]
 
-    # expand top-level columns into LEAF chunks (a MAP contributes two:
-    # required key + optional value sharing the entry lengths/levels)
-    leaves = []
-    used = {}
+    # one chunk per leaf, addressed as the docstring says
+    leaves = []  # [(column name, addressing name, NestedLeaf)]
     first_leaf = []  # top-level column idx → its first leaf idx
-    for c in columns:
+    for c, spec in zip(columns, nested):
         first_leaf.append(len(leaves))
-        if isinstance(c, NestedColumnSpec):
-            for lf in c.leaves:
-                if lf.encoding is None:
-                    lf.encoding = _default_encoding(lf)
-                used[".".join([c.name] + list(lf.path))] = lf.encoding
-                leaves.append({
-                    "nested": lf, "spec": None,
-                    "path": [c.name] + list(lf.path), "repeated": False,
-                    "cum": None, "entry_valid": None, "val_cum": None,
-                })
-            continue
-        if isinstance(c, StructColumnSpec):
-            sv = c.validity
-            for fname, part in c.fields:
-                fv = part.validity
-                max_def = ((1 if sv is not None else 0)
-                           + (1 if fv is not None else 0))
-                pres = fv if fv is not None else sv
-                de = None
-                if max_def:
-                    de = np.full(n_rows, max_def, dtype=np.uint8)
-                    if fv is not None:
-                        de[~fv] = max_def - 1
-                    if sv is not None:
-                        de[~sv] = 0
-                enc = (part.encoding if part.encoding is not None
-                       else _default_encoding(part))
-                used[f"{c.name}.{fname}"] = enc
-                spec = ColumnSpec(fname, part.kind, part.values, pres,
-                                  part.flba_size, enc, part.logical)
-                leaves.append({
-                    "spec": spec,
-                    "cum": (np.concatenate(
-                        [[0], np.cumsum(pres.astype(np.int64))])
-                        if pres is not None else None),
-                    "repeated": False,
-                    "path": [c.name, fname],
-                    "entry_valid": None, "val_cum": None,
-                    "def_levels": de,
-                    "def_width": 2 if max_def == 2 else 1,
-                })
-            continue
-        if isinstance(c, MapColumnSpec):
-            lens = np.asarray(c.lengths, dtype=np.int64)
-            eff = (np.where(c.validity, lens, 0)
-                   if c.validity is not None else lens)
-            ecum = np.concatenate([[0], np.cumsum(eff)])
-            for role, part in (("key", c.key), ("value", c.value)):
-                enc = (part.encoding if part.encoding is not None
-                       else _default_encoding(part))
-                used[f"{c.name}.{role}"] = enc
-                spec = ColumnSpec(role, part.kind, part.values, c.validity,
-                                  part.flba_size, enc, part.logical, eff)
-                ev = c.entry_validity if role == "value" else None
-                leaves.append({
-                    "spec": spec, "cum": ecum, "repeated": True,
-                    "path": [c.name, "key_value", role],
-                    "entry_valid": ev,
-                    "val_cum": (np.concatenate(
-                        [[0], np.cumsum(ev.astype(np.int64))])
-                        if ev is not None else None),
-                })
-            continue
-        enc = c.encoding if c.encoding is not None else _default_encoding(c)
-        used[c.name] = enc
-        spec = ColumnSpec(c.name, c.kind, c.values, c.validity,
-                          c.flba_size, enc, c.logical, c.lengths)
-        if c.lengths is not None:
-            lens = np.asarray(c.lengths, dtype=np.int64)
-            if c.validity is not None:
-                lens = np.where(c.validity, lens, 0)
-            cum = np.concatenate([[0], np.cumsum(lens)])
-        elif c.validity is not None:
-            cum = np.concatenate(
-                [[0], np.cumsum(c.validity.astype(np.int64))])
-        else:
-            cum = None
-        leaves.append({"spec": spec, "cum": cum,
-                       "repeated": c.lengths is not None,
-                       "path": None, "entry_valid": None, "val_cum": None})
-
-    # dotted leaf names — the column_keys / plaintext_columns /
-    # bloom_columns addressing space
-    for lf in leaves:
-        if lf.get("path"):
-            lf["dotted"] = ".".join(lf["path"])
-        elif lf.get("nested") is not None:
-            lf["dotted"] = ".".join(lf["nested"].path)
-        else:
-            lf["dotted"] = lf["spec"].name
+        for lf in spec.leaves:
+            if lf.encoding is None:
+                lf.encoding = _default_encoding(lf)
+            dotted = (c.name if isinstance(c, ColumnSpec)
+                      else ".".join([c.name, *lf.path]))
+            leaves.append((c.name, dotted, lf))
+    used = {dotted: lf.encoding for _, dotted, lf in leaves}
     if encryption is not None:  # else a typo silently gets the footer key
-        leaf_names = {lf["dotted"] for lf in leaves}
+        leaf_names = set(used)
         for opt in ("column_keys", "plaintext_columns"):
             unknown = sorted(set(getattr(encryption, opt)) - leaf_names)
             if unknown:
@@ -1153,31 +898,18 @@ def write_table(path: str, columns: list[ColumnSpec], *,
             from parquet_go_spark.interop import pqcrypt
 
             cryptos = [
-                None if (k := encryption.key_for(lf["dotted"])) is None
+                None if (k := encryption.key_for(dotted)) is None
                 else pqcrypt.ChunkCrypto(k, file_aad, rg_i, col_i)
-                for col_i, lf in enumerate(leaves)
+                for col_i, (_, dotted, _) in enumerate(leaves)
             ]
         chunks = [
-            _write_nested_chunk(
-                out, lf["nested"], lf["path"][0], g_lo, g_hi, compression,
-                page_rows, page_version, statistics, crypto=cr)
-            if lf.get("nested") is not None else
-            _write_list_chunk(
-                out, lf["spec"], g_lo, g_hi, compression, page_rows,
-                page_version, statistics, lf["cum"], path=lf["path"],
-                entry_valid=lf["entry_valid"], val_cum=lf["val_cum"],
-                crypto=cr)
-            if lf["repeated"] else
-            _write_chunk(
-                out, lf["spec"], g_lo, g_hi, compression, page_rows,
-                page_version, statistics, lf["cum"], path=lf["path"],
-                def_levels=lf.get("def_levels"),
-                def_width=lf.get("def_width", 1), crypto=cr)
-            for lf, cr in zip(leaves, cryptos)
+            _write_nested_chunk(out, lf, name, g_lo, g_hi, compression,
+                                page_rows, page_version, statistics,
+                                crypto=cr)
+            for (name, _, lf), cr in zip(leaves, cryptos)
         ]
-        for ch, cr, lf in zip(chunks, cryptos, leaves):
+        for ch, cr in zip(chunks, cryptos):
             ch["crypto"] = cr
-            ch["dotted"] = lf["dotted"]
         # RowGroup.total_byte_size is the UNCOMPRESSED data size per the
         # spec, not the stored bytes
         groups.append((g_lo, g_hi,
@@ -1190,20 +922,14 @@ def write_table(path: str, columns: list[ColumnSpec], *,
     if bloom_columns:
         wanted = set(bloom_columns)
         for g_lo, g_hi, _, chunks in groups:
-            for ch, lf in zip(chunks, leaves):
-                spec = lf["spec"]
-                name = (".".join(lf["path"]) if lf["path"]
-                        else spec.name)
-                if (name not in wanted or lf["repeated"]
-                        or lf.get("nested") is not None
-                        or spec.kind == Kind.BOOLEAN):
+            for ch, (_, dotted, lf) in zip(chunks, leaves):
+                if (dotted not in wanted or lf.max_rep
+                        or lf.kind == Kind.BOOLEAN):
                     continue
-                cum = lf["cum"]
-                vlo, vhi = ((int(cum[g_lo]), int(cum[g_hi]))
-                            if cum is not None else (g_lo, g_hi))
-                vals = _slice_values(spec.values, vlo, vhi)
-                hashes = spec_hashes(
-                    vals, spec.kind, flba_size=spec.flba_size)
+                vals = _slice_values(
+                    lf.values, int(lf.val_cum[lf.row_starts[g_lo]]),
+                    int(lf.val_cum[lf.row_starts[g_hi]]))
+                hashes = spec_hashes(vals, lf.kind, flba_size=lf.flba_size)
                 cr = ch.get("crypto")
                 if cr is not None:
                     from parquet_go_spark.interop import pqcrypt
@@ -1229,10 +955,8 @@ def write_table(path: str, columns: list[ColumnSpec], *,
     # index), which is why ColumnChunk structs are only built now
     if page_index:
         for _, _, _, chunks in groups:
-            for ch, lf in zip(chunks, leaves):
-                lkind = (lf["nested"].kind if lf.get("nested") is not None
-                         else lf["spec"].kind)
-                ci, oi = _page_index_structs(ch, lkind)
+            for ch, (_, _, lf) in zip(chunks, leaves):
+                ci, oi = _page_index_structs(ch, lf.kind)
                 cr = ch.get("crypto")
                 if cr is not None:
                     from parquet_go_spark.interop import pqcrypt
@@ -1256,7 +980,7 @@ def write_table(path: str, columns: list[ColumnSpec], *,
     row_groups = []
     for rg_i, (g_lo, g_hi, g_bytes, chunks) in enumerate(groups):
         chunk_structs = []
-        for ch in chunks:
+        for ch, (name, dotted, lf) in zip(chunks, leaves):
             cr = ch.get("crypto")
             meta_bytes = tc.struct(ch["meta_fields"])
             fields = [
@@ -1271,17 +995,18 @@ def write_table(path: str, columns: list[ColumnSpec], *,
             else:
                 from parquet_go_spark.interop import pqcrypt
 
-                dotted = ch["dotted"]
                 own_key = dotted in encryption.column_keys
                 if own_key:
                     # ENCRYPTION_WITH_COLUMN_KEY {path_in_schema,
-                    # key_metadata}; the ColumnMetaData travels only as
-                    # its own encrypted module (field 9) — never
-                    # plaintext inside an encrypted footer, stripped
-                    # when the footer itself is plaintext
+                    # key_metadata}; path_in_schema is the leaf's schema
+                    # path, the same as its ColumnMetaData's. The
+                    # ColumnMetaData travels only as its own encrypted
+                    # module (field 9) — never plaintext inside an
+                    # encrypted footer, stripped when the footer itself
+                    # is plaintext
                     fields.append((8, tc.STRUCT, tc.struct([
                         (2, tc.STRUCT, tc.struct([
-                            (1, tc.LIST, dotted.split("."), tc.BINARY),
+                            (1, tc.LIST, [name, *lf.path], tc.BINARY),
                             (2, tc.BINARY,
                              encryption.column_key_metadata.get(dotted)),
                         ])),
@@ -1329,79 +1054,8 @@ def write_table(path: str, columns: list[ColumnSpec], *,
     schema = [tc.struct([
         (4, tc.BINARY, "schema"), (5, tc.I32, len(columns)),
     ])]
-    for c in columns:
-        if isinstance(c, NestedColumnSpec):
-            schema.extend(c.schema_elements)
-            continue
-        if isinstance(c, StructColumnSpec):
-            # <optional|required> group <name> { one leaf per field }
-            schema.append(tc.struct([
-                (3, tc.I32, 1 if c.validity is not None else 0),
-                (4, tc.BINARY, c.name),
-                (5, tc.I32, len(c.fields)),
-            ]))
-            for fname, part in c.fields:
-                schema.append(tc.struct([
-                    (1, tc.I32, part.kind),
-                    (2, tc.I32, part.flba_size
-                     if part.kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
-                    (3, tc.I32, 1 if part.validity is not None else 0),
-                    (4, tc.BINARY, fname),
-                    *_logical_fields(part.logical),
-                ]))
-        elif isinstance(c, MapColumnSpec):
-            # optional group <name> (MAP) { repeated group key_value {
-            #   required K key; <optional|required> V value } }
-            # (ConvertedType MAP = 1; the inner group carries no
-            # annotation per the modern spec)
-            schema.append(tc.struct([
-                (3, tc.I32, 1), (4, tc.BINARY, c.name),
-                (5, tc.I32, 1), (6, tc.I32, 1),
-            ]))
-            schema.append(tc.struct([
-                (3, tc.I32, 2), (4, tc.BINARY, "key_value"), (5, tc.I32, 2),
-            ]))
-            for role, part, rep in (("key", c.key, 0),
-                                    ("value", c.value,
-                                     1 if c.entry_validity is not None
-                                     else 0)):
-                schema.append(tc.struct([
-                    (1, tc.I32, part.kind),
-                    (2, tc.I32, part.flba_size
-                     if part.kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
-                    (3, tc.I32, rep),
-                    (4, tc.BINARY, role),
-                    *_logical_fields(part.logical),
-                ]))
-        elif c.lengths is not None:
-            # 3-level LIST group (always optional so the def scheme is
-            # the constant 0=null/1=empty/2=element):
-            # optional group <name> (LIST) { repeated group list {
-            #   required <type> element } }
-            schema.append(tc.struct([
-                (3, tc.I32, 1), (4, tc.BINARY, c.name),
-                (5, tc.I32, 1), (6, tc.I32, 3),  # ConvertedType LIST
-            ]))
-            schema.append(tc.struct([
-                (3, tc.I32, 2), (4, tc.BINARY, "list"), (5, tc.I32, 1),
-            ]))
-            schema.append(tc.struct([
-                (1, tc.I32, c.kind),
-                (2, tc.I32, c.flba_size
-                 if c.kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
-                (3, tc.I32, 0),
-                (4, tc.BINARY, "element"),
-                *_logical_fields(c.logical),
-            ]))
-        else:
-            schema.append(tc.struct([
-                (1, tc.I32, c.kind),
-                (2, tc.I32, c.flba_size
-                 if c.kind == Kind.FIXED_LEN_BYTE_ARRAY else None),
-                (3, tc.I32, 1 if c.validity is not None else 0),
-                (4, tc.BINARY, c.name),
-                *_logical_fields(c.logical),
-            ]))
+    for spec in nested:
+        schema.extend(spec.schema_elements)
 
     # ColumnOrder = union{1: TypeDefinedOrder{}} per leaf — readers only
     # trust min_value/max_value statistics when column_orders is declared

@@ -872,6 +872,36 @@ def test_map_column_required_values(tmp_path):
     assert t.column("m").to_pylist() == exp
 
 
+def test_encodings_summary_keyed_by_leaf_name(tmp_path):
+    """write_table's encodings summary uses the leaf addressing names:
+    a ColumnSpec (flat or list) by its column name, every other leaf by
+    its dotted schema path."""
+    from parquet_go_spark.codecs.kinds import Codec
+    from parquet_go_spark.interop.pqwriter import (
+        MapColumnSpec, StructColumnSpec)
+
+    lens = np.array([1, 2, 0], dtype=np.int64)
+    info = write_table(str(tmp_path / "enc.parquet"), [
+        ColumnSpec("k", Kind.INT64, np.arange(3), encoding=Codec.PLAIN),
+        ColumnSpec("l", Kind.INT32, np.arange(3, dtype=np.int32),
+                   lengths=lens, encoding=Codec.PLAIN),
+        StructColumnSpec("s", fields=[("a", ColumnSpec(
+            "a", Kind.INT64, np.arange(3), encoding=Codec.PLAIN))]),
+        MapColumnSpec(
+            "m", key=ColumnSpec("key", Kind.INT32,
+                                np.arange(3, dtype=np.int32),
+                                encoding=Codec.PLAIN),
+            value=ColumnSpec("value", Kind.INT64, np.arange(3),
+                             encoding=Codec.DELTA_BINARY_PACKED),
+            lengths=lens),
+    ])
+    assert info["encodings"] == {
+        "k": Codec.PLAIN, "l": Codec.PLAIN, "s.a": Codec.PLAIN,
+        "m.key_value.key": Codec.PLAIN,
+        "m.key_value.value": Codec.DELTA_BINARY_PACKED,
+    }
+
+
 def test_map_column_duckdb(tmp_path):
     duckdb = pytest.importorskip("duckdb")
     from parquet_go_spark.interop.pqwriter import MapColumnSpec
@@ -972,6 +1002,42 @@ def test_compact_export_map_column(spark, tmp_path):
     md = pq.ParquetFile(os.path.join(out, biggest)).metadata
     sc = md.row_group(0).sorting_columns
     assert sc and sc[0].column_index == 0
+
+
+def test_compact_export_sorted_after_multi_leaf_column(spark, tmp_path):
+    """A sorted export whose sort key follows a column with several
+    leaves (array<struct<x,y>> writes two chunks) compacts: the footer's
+    leaf-indexed sorting_columns map back to the top-level key through
+    the source file's schema tree, and merged files stay sorted."""
+    from parquet_go_spark.interop.export import export_parquet
+    from parquet_go_spark.interop.compact import compact_export
+    from pyspark.sql import functions as F
+
+    src = spark.range(600).select(
+        F.array(F.struct((F.col("id") % 7).cast("int").alias("x"),
+                         (F.col("id") % 5).cast("int").alias("y")))
+        .alias("s"),
+        (F.lit(10_000) - F.col("id")).alias("k"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+    )
+    out = str(tmp_path / "cs")
+    export_parquet(spark, src, out, repo_col="grp", salt_cols=["k"],
+                   target_chunk_bytes=2 << 10, sort_cols=["k"])
+    files = lambda: sorted(  # noqa: E731
+        f for f in os.listdir(out) if f.endswith(".parquet"))
+    n_before = len(files())
+    md = pq.ParquetFile(os.path.join(out, files()[0])).metadata
+    assert md.row_group(0).sorting_columns[0].column_index == 2
+    compact_export(spark, out, small_bytes=1 << 20, target_bytes=4 << 20)
+    assert len(files()) < n_before
+    back = spark.read.parquet(out + "/*.parquet")
+    assert sorted(r.k for r in back.select("k").collect()) == \
+        sorted(r.k for r in src.select("k").collect())
+    for f in files():
+        pf = pq.ParquetFile(os.path.join(out, f))
+        assert pf.metadata.row_group(0).sorting_columns[0].column_index == 2
+        k = pf.read(columns=["k"]).column("k").to_pylist()
+        assert k == sorted(k)
 
 
 # ---------------------------------------------------------------------------

@@ -213,6 +213,41 @@ def test_bloom_skips_boolean_and_repeated(tmp_path):
     assert pq.read_table(path).num_rows == 100
 
 
+def test_bloom_on_non_repeated_nested_leaf(tmp_path):
+    """One bloom rule per leaf: a leaf under structs only (max_rep 0)
+    gets its bloom like a flat leaf; only repeated and boolean leaves
+    are skipped."""
+    import pyarrow as pa
+
+    from parquet_go_spark.interop.export import _nested_spec
+
+    n = 400
+    arr = pa.array(
+        [None if i % 9 == 0 else
+         {"a": None if i % 5 == 0 else {"x": i * 2, "y": f"v{i % 7}"}}
+         for i in range(n)],
+        pa.struct([("a", pa.struct([("x", pa.int32()),
+                                    ("y", pa.string())]))]))
+    spec = _nested_spec("s", arr, "struct<a:struct<x:int,y:string>>")
+    path = os.path.join(str(tmp_path), "nested.parquet")
+    write_table(path, [spec], row_group_rows=200,
+                bloom_columns=["s.a.x"])
+    blooms = pqbloom.read_blooms(path)
+    assert sorted(blooms) == [(0, "s.a.x"), (1, "s.a.x")]
+    assert pq.read_table(path).column("s").to_pylist() == arr.to_pylist()
+    present = pa.compute.struct_field(arr, [0, 0]).drop_null().to_pylist()
+    keep = pqbloom.prune_files(
+        [path], "s.a.x", np.array(present[:5], dtype=np.int32), Kind.INT32)
+    assert keep == [path]
+    # odd values are never written (x = 2i): at fpp 0.01 a few may
+    # pass as false positives, not a quarter of them
+    absent = np.arange(1, 200, 2, dtype=np.int32)
+    hits = sum(bool(pqbloom.prune_files([path], "s.a.x", absent[i:i + 1],
+                                        Kind.INT32))
+               for i in range(len(absent)))
+    assert hits < len(absent) // 4
+
+
 def test_optimal_bytes_power_of_two_and_clamped():
     assert pqbloom.optimal_bytes(1) == 32
     for ndv in (10, 100, 10_000, 1_000_000):

@@ -3258,3 +3258,24 @@ def test_pqreader_struct_field_predicate_errors(tmp_path):
         pqreader.read_table(p, predicate=("s.zzz", "=", 1))
     with _pt.raises(ValueError, match="not found"):
         pqreader.read_table(p, predicate=("tags.element", "=", 1))
+
+
+def test_pqreader_columns_requested_order_and_unknown_name(tmp_path):
+    """columns= returns the requested order (as pyarrow does), not the
+    file's, and an unknown name raises instead of being dropped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.interop import pqreader
+
+    p = str(tmp_path / "order.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 3], "s": ["a", "b", "c"],
+                             "x": [1.5, 2.5, 3.5]}), p)
+    got = pqreader.read_table(p, columns=["x", "k"])
+    assert got.column_names == ["x", "k"]
+    assert got.equals(pq.read_table(p, columns=["x", "k"]))
+    assert pqreader.read_table(
+        p, columns=["s", "k"],
+        predicate=("k", ">", 1)).column_names == ["s", "k"]
+    with pytest.raises(ValueError, match="'nope'"):
+        pqreader.read_table(p, columns=["k", "nope"])

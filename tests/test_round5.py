@@ -1233,6 +1233,38 @@ def test_encrypted_write_negatives(tmp_path):
             assert 12 not in cc[3]
 
 
+def test_encrypted_list_column_key_path_in_schema(tmp_path):
+    """A list column with its own key: ENCRYPTION_WITH_COLUMN_KEY's
+    path_in_schema is the leaf's schema path [l, list, element], the
+    same as its ColumnMetaData path, while the writer still addresses
+    the column as "l". Readers resolve the key by that path."""
+    from parquet_go_spark.interop import pqcrypt, pqreader as r, thriftc
+    from parquet_go_spark.interop.pqwriter import (
+        ColumnSpec, Kind, write_table)
+
+    lens = np.array([2, 0, 3, 1] * 25, dtype=np.int64)
+    cols = [
+        ColumnSpec("k", Kind.INT64, np.arange(100, dtype=np.int64)),
+        ColumnSpec("l", Kind.INT64, np.arange(int(lens.sum()),
+                                              dtype=np.int64),
+                   lengths=lens),
+    ]
+    p = str(tmp_path / "list_key.parquet")
+    write_table(p, cols, encryption=pqcrypt.FileEncryption(
+        footer_key=FOOTER_KEY, column_keys={"l": COL_KEY},
+        plaintext_footer=True))
+    raw = open(p, "rb").read()
+    flen = int.from_bytes(raw[-8:-4], "little")
+    fmd, _ = thriftc.read_struct(raw[len(raw) - 8 - flen:], 0)
+    cc = fmd[4][0][1][1]
+    assert cc[8][2][1] == [b"l", b"list", b"element"] == cc[3][3]
+    got = r.read_table(p, decryption=pqcrypt.FileDecryption(
+        footer_key=FOOTER_KEY, column_keys={"l.list.element": COL_KEY}))
+    off = np.concatenate([[0], np.cumsum(lens)])
+    assert got.column("l").to_pylist() == [
+        list(range(off[i], off[i + 1])) for i in range(len(lens))]
+
+
 def test_encrypted_export_roundtrip(spark, tmp_path):
     """Distributed encrypted export: export_parquet(encryption=
     EncryptionFactory) writes per-task encrypted files with FRESH DEKs
