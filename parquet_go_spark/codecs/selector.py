@@ -11,9 +11,14 @@ dictionary-size fallback) into a measured, deterministic decision:
      plus its defaults (BYTE_ARRAY → DELTA_LENGTH, else PLAIN)
   3. trial-encode the shortlist and keep the smallest blob
 
-The decision is a pure function of the chunk bytes (sampling is
-positional, not random), so re-running a partition reproduces the
-identical blob — required for idempotent manifest resume.
+Within one encode task the decision is made once per column, not once
+per chunk: the caller's per-(column, stream) state carries the FSST
+symbol table and the last full trial's winner to the task's later
+chunks of that column (select_and_encode). The choice therefore depends
+on the chunk bytes AND on the task's earlier chunks of the same column
+(sampling stays positional, not random). That is safe for resume:
+blobs are self-describing, and resume and replay dedupe on chunk ids,
+never on blob bytes.
 """
 
 from __future__ import annotations
@@ -132,8 +137,9 @@ def _builtin_shortlist(stats: dict) -> list[tuple[int, bool]]:
 
 TRIAL_BYTES = 256 << 10  # big chunks: trial-encode a positional sample
 TRIAL_MIN_ROWS = 256
-FSST_RETRAIN_FACTOR = 1.25  # reused-table drift bound: retrain when the
-# trial ratio degrades beyond this vs the ratio at training time
+FSST_RETRAIN_FACTOR = 1.25  # drift bound of every reuse: retrain a
+# table, or re-run a recorded winner's trial, when the ratio degrades
+# beyond this vs the ratio recorded at training / trial time
 
 
 def _fsst_trial(trial_values, kind, flba_size, compression, sampled, cap,
@@ -202,19 +208,37 @@ def select_and_encode(
     fallback, writer.go:2049-2077).
 
     fsst_state: optional mutable dict scoped by the caller to one
-    (repo, column, stream). The first chunk trains an FSST symbol
-    table (on the trial slice) and stores it under "table"; later
-    chunks reuse it for both the trial and the full encode, amortizing
-    the ~GENERATIONS×parse training cost across a column's chunks —
-    the batch-level analog of parquet-go training its dictionary once
-    per row group (writer.go:2049-2077) rather than per page. With
-    reuse active the FSST candidate's size (and thus the codec choice)
-    depends on task-local history, not on the chunk bytes alone; this
-    is safe because blobs stay self-describing (the table is embedded
-    in every blob) and resume/replay dedupe on chunk ids, never on
-    blob identity. The selector still guards ratio: a stale table that
-    compresses poorly simply loses the trial to DELTA_LENGTH/dict."""
+    (column, stream) of one encode task — the analog of the reference
+    choosing an encoding once per column writer, not once per page.
+    It carries two decisions to the task's later chunks of the column:
+      - the FSST symbol table, trained on the first FSST trial's slice
+        (_fsst_trial) and reused for later trials and full encodes;
+      - the winner of the last full trial, (codec, dict_wrap, enc/raw
+        ratio), with the chunk's kind. A later chunk of the same kind
+        whose shortlist still holds that winner is encoded once with it
+        (info["trials"] is then empty) and kept if its ratio is within
+        FSST_RETRAIN_FACTOR × the recorded one; otherwise the full
+        trial runs and records a new winner.
+    One drift bound guards both reuses. The choice thus depends on the
+    task's earlier chunks of the same column, not on the chunk bytes
+    alone; this is safe because blobs stay self-describing (the table
+    is embedded in every blob) and resume/replay dedupe on chunk ids,
+    never on blob identity."""
     stats = column_stats(values, kind)
+    raw = max(stats["raw_bytes"], 1)
+    winner = fsst_state.get("winner") if fsst_state is not None else None
+    if (winner is not None and fsst_state.get("kind") == kind
+            and winner[:2] in shortlist(stats)):
+        codec, dict_wrap, ratio = winner
+        capture: dict = {}
+        blob = chunklib.encode_chunk(
+            values, kind, codec, dict_wrap=dict_wrap, flba_size=flba_size,
+            compression=compression, validity=validity, capture=capture,
+            fsst_table=fsst_state.get("table") if codec == Codec.FSST else None,
+        )
+        if len(blob) / raw <= FSST_RETRAIN_FACTOR * ratio:
+            return blob, _info(blob, codec, dict_wrap, stats, {}, False,
+                               capture)
     # nulls: candidates compete on the null-stripped values (the validity
     # bitmap costs the same under every codec); the winner re-encodes
     # with the validity prefix attached
@@ -222,7 +246,7 @@ def select_and_encode(
     trial_values = _trial_slice(values, kind) if sampled else values
     best_blob = None
     best = None
-    capture: dict = {}
+    capture = {}
     trials = {}
     fsst_table = None
     for codec, dict_wrap in shortlist(stats):
@@ -256,15 +280,21 @@ def select_and_encode(
             validity=validity, capture=capture,
             fsst_table=fsst_table if best[1] == Codec.FSST else None,
         )
-        best = (len(best_blob), best[1], best[2])
-    info = {
-        "codec": best[1],
-        "dict": best[2],
-        "enc_bytes": best[0],
+    if fsst_state is not None:
+        fsst_state["winner"] = (best[1], best[2], len(best_blob) / raw)
+        fsst_state["kind"] = kind
+    return best_blob, _info(best_blob, best[1], best[2], stats, trials,
+                            sampled, capture)
+
+
+def _info(blob, codec, dict_wrap, stats, trials, sampled, capture) -> dict:
+    return {
+        "codec": codec,
+        "dict": dict_wrap,
+        "enc_bytes": len(blob),
         "raw_bytes": stats["raw_bytes"],
         "n": stats["n"],
         "trials": trials,
         "sampled": sampled,
         "uniques": capture.get("uniques"),
     }
-    return best_blob, info

@@ -161,11 +161,12 @@ class FileDecryption:
             return self.footer_key
         if column is not None and column in self.column_keys:
             return self.column_keys[column]
-        if self.footer_key is not None and key_metadata is None:
-            return self.footer_key
+        # a column with its own key never falls back to the footer key:
+        # the read would only fail later, as a misleading GCM error
         raise ValueError(
             f"pqcrypt: no key for encrypted column {column!r} (pass "
-            "column_keys[name] or a key_retriever)")
+            f"column_keys[{column!r}] or a key_retriever; column_keys "
+            f"names {sorted(self.column_keys)})")
 
 
 @dataclass

@@ -23,7 +23,7 @@ none/snappy/gzip/zstd.
 from __future__ import annotations
 
 import struct as _struct
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pyarrow as pa
@@ -870,8 +870,9 @@ def write_table(path: str,
     for c, spec in zip(columns, nested):
         first_leaf.append(len(leaves))
         for lf in spec.leaves:
-            if lf.encoding is None:
-                lf.encoding = _default_encoding(lf)
+            if lf.encoding is None:  # resolved on a copy: the
+                # caller's spec is not changed by being written
+                lf = replace(lf, encoding=_default_encoding(lf))
             dotted = (c.name if isinstance(c, ColumnSpec)
                       else ".".join([c.name, *lf.path]))
             leaves.append((c.name, dotted, lf))

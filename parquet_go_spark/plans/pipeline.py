@@ -428,14 +428,15 @@ def _encode_one(values, kind, spark_type, compression, base,
     flba_size = None
     if kind == Kind.FIXED_LEN_BYTE_ARRAY:
         flba_size = enc_values.shape[1] if len(enc_values) else 16
-    # FSST training amortization (VERDICT r2 #3): one symbol table per
-    # (repo, column, stream) per task, trained on the first chunk's
-    # trial slice and reused by every later chunk of that column —
-    # sub-chunk splits and streaming waves stop paying the
-    # GENERATIONS×parse training cost. ~2 KB/entry; capped below.
+    # one codec decision per (column, stream) per task, across repos,
+    # sub-chunk splits and streaming waves: the state carries the FSST
+    # symbol table and the last full trial's winner to the task's later
+    # chunks of the column (selector.select_and_encode), so the choice
+    # depends on those earlier chunks too; resume still dedupes on chunk
+    # ids. ~2 KB/entry; capped below.
     fsst_state = None
-    if fsst_cache is not None and kind == Kind.BYTE_ARRAY:
-        ck = (base.get("repo"), base.get("column"), stream)
+    if fsst_cache is not None:
+        ck = (base.get("column"), stream)
         if ck not in fsst_cache and len(fsst_cache) >= 512:
             # evict the OLDEST entry (insertion order), not the whole
             # cache: a clear() would force every still-active column to
@@ -765,7 +766,7 @@ def _encode_stream_fn(columns: list[tuple[str, str]],
 
     def fn(batches):
         flushed: dict[tuple, int] = {}  # sub-chunks already emitted
-        fsst_cache: dict = {}  # (repo, column, stream) -> trained table
+        fsst_cache: dict = {}  # (column, stream) -> codec state, all repos
         for key, tbl, final in _group_slices(batches, data_cols, flush_bytes):
             repo, bucket = key
             start = flushed.get(key, 0)
@@ -1187,21 +1188,33 @@ def encode_table(
 
     _write_schema_sidecar(out_path, columns)
 
-    m = manifest(spark, out_path)
-    agg = m.agg(
-        F.countDistinct("chunk_id").alias("chunks"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-    ).collect()[0]
+    agg = _store_totals(out_path)
     return {
-        "chunks": agg["chunks"],
-        "raw_bytes": agg["raw_bytes"],
-        "enc_bytes": agg["enc_bytes"],
+        **agg,
         "ratio": (agg["raw_bytes"] or 0) / max(agg["enc_bytes"] or 1, 1),
         "skipped_chunks": skipped,
         # time from call to write commit — the job itself, excluding the
-        # post-hoc manifest summary aggregation below
+        # post-hoc manifest summary below
         "write_sec": round(write_sec, 2),
+    }
+
+
+def _store_totals(out_path: str) -> dict:
+    """{chunks, raw_bytes, enc_bytes} over the whole store, read in
+    process from three manifest columns — no Spark job. Like Spark,
+    pyarrow's discovery skips '_'/'.'-prefixed entries (the _bounds
+    sidecars, _SUCCESS, .crc files). Sums are None for an empty store,
+    as Spark's SUM over no rows."""
+    import pyarrow.dataset as ds
+
+    if not _table_exists(out_path):
+        return {"chunks": 0, "raw_bytes": None, "enc_bytes": None}
+    t = ds.dataset(out_path, format="parquet").to_table(
+        columns=["chunk_id", "raw_bytes", "enc_bytes"])
+    return {
+        "chunks": pa.compute.count_distinct(t.column("chunk_id")).as_py(),
+        "raw_bytes": pa.compute.sum(t.column("raw_bytes")).as_py(),
+        "enc_bytes": pa.compute.sum(t.column("enc_bytes")).as_py(),
     }
 
 
@@ -1540,9 +1553,8 @@ def compact_tables(
             target_chunk_bytes=target_chunk_bytes, resume=False,
             chunk_suffix="@compact",
         )
-    m = manifest(spark, out_path)
     return {
-        "chunks": m.select("chunk_id").distinct().count(),
+        "chunks": _store_totals(out_path)["chunks"],
         "merged_small_chunks": n_small,
         "converted_tables": len(convert_dfs) - (1 if n_small else 0),
     }

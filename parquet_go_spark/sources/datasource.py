@@ -531,6 +531,9 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
         staged = os.path.join(staging, f"w-{uuid.uuid4().hex}.parquet")
 
         writer = None
+        # one codec decision per (column, stream) across this task's
+        # chunks (pipeline._encode_one): blobs depend on the task's
+        # earlier chunks of a column; chunk ids, not bytes, stay unique
         fsst_cache: dict = {}
         seqs: dict[str, int] = {}
         data_cols = [c for c, _ in self._cols]

@@ -231,3 +231,16 @@ def test_writer_matrix_reads_back(tmp_path, version):
     np.testing.assert_array_equal(
         t.column("m2").combine_chunks().keys.to_numpy(), m2.key.values)
     assert t.column("n").to_pylist() == nested.to_pylist()
+
+
+def test_write_table_leaves_caller_spec_unchanged(tmp_path):
+    """The default encoding is resolved on a copy of each leaf: writing
+    a spec does not change it, so a second write resolves afresh."""
+    from parquet_go_spark.interop import export
+
+    spec = export._nested_spec("s", pa.array([{"a": 1}, None]),
+                               "struct<a:bigint>")
+    write_table(str(tmp_path / "s.parquet"), [spec])
+    assert spec.leaves[0].encoding is None
+    got = pq.read_table(str(tmp_path / "s.parquet"))
+    assert got.column("s").to_pylist() == [{"a": 1}, None]

@@ -941,13 +941,14 @@ def test_ds_array_contains_is_exact(spark, tmp_path):
 def test_fsst_cache_evicts_one_not_all():
     from parquet_go_spark.codecs.bytearrays import ByteArrays
     from parquet_go_spark.codecs.kinds import Kind
-    cache = {("r", f"c{i}", "values"): {"keep": i} for i in range(512)}
+    # keyed (column, stream): one state per column across the task's repos
+    cache = {(f"c{i}", "values"): {"keep": i} for i in range(512)}
     vals = ByteArrays.from_pylist([b"abcabcabc"] * 50)
     pipeline._encode_one(vals, Kind.BYTE_ARRAY, "string", None,
                          {"repo": "r", "column": "new", "chunk_id": "x",
                           "bucket": 0, "n_rows": 50},
                          fsst_cache=cache)
     assert len(cache) == 512  # one evicted, one added — not a clear()
-    assert ("r", "new", "values") in cache
-    assert ("r", "c0", "values") not in cache  # oldest went
-    assert ("r", "c1", "values") in cache
+    assert ("new", "values") in cache
+    assert ("c0", "values") not in cache  # oldest went
+    assert ("c1", "values") in cache

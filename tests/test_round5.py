@@ -1265,6 +1265,29 @@ def test_encrypted_list_column_key_path_in_schema(tmp_path):
         list(range(off[i], off[i + 1])) for i in range(len(lens))]
 
 
+def test_missing_column_key_names_the_leaf_path(tmp_path):
+    """An own-key column whose dotted path has no entry in column_keys
+    fails at key resolution, naming the path and the names supplied —
+    not later as a GCM error under the footer key."""
+    from parquet_go_spark.interop import pqcrypt, pqreader as r
+    from parquet_go_spark.interop.pqwriter import (
+        ColumnSpec, Kind, write_table)
+
+    lens = np.array([2, 0, 3, 1] * 25, dtype=np.int64)
+    cols = [
+        ColumnSpec("k", Kind.INT64, np.arange(100, dtype=np.int64)),
+        ColumnSpec("l", Kind.INT64, np.arange(int(lens.sum()),
+                                              dtype=np.int64),
+                   lengths=lens),
+    ]
+    p = str(tmp_path / "list_key.parquet")
+    write_table(p, cols, encryption=pqcrypt.FileEncryption(
+        footer_key=FOOTER_KEY, column_keys={"l": COL_KEY}))
+    with pytest.raises(ValueError, match=r"'l\.list\.element'.*\['l'\]"):
+        r.read_table(p, decryption=pqcrypt.FileDecryption(
+            footer_key=FOOTER_KEY, column_keys={"l": COL_KEY}))
+
+
 def test_encrypted_export_roundtrip(spark, tmp_path):
     """Distributed encrypted export: export_parquet(encryption=
     EncryptionFactory) writes per-task encrypted files with FRESH DEKs
