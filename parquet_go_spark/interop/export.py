@@ -385,7 +385,8 @@ def _export_fn(columns, out_dir: str, compression, target_bytes: int,
         parts: dict[tuple[str, int], int] = {}
         rows = []
         # pipeline._group_slices: one file per flush, and a group rolls to
-        # a new part file at ~2x target, the encode kernel's bound
+        # a new part file at ~2x target, the encode kernel's bound, or
+        # early when the task's total buffer passes the loop's cap
         for key, tbl, _ in pipeline._group_slices(batches, col_names,
                                                   2 * target_bytes):
             repo, bucket = key
@@ -488,7 +489,8 @@ def export_parquet(
         cond = ((keyed["__repo"] == done["repo"])
                 & (keyed["__bucket"] == done["bucket"]))
         keyed = keyed.join(F.broadcast(done), on=cond, how="left_anti")
-    n_parts = spark.sparkContext.defaultParallelism * 4
+    # one task per slot, encode_table's rule
+    n_parts = spark.sparkContext.defaultParallelism
     parts = keyed.repartition(n_parts, "__repo", "__bucket")
     fn = _export_fn(columns, out_dir, compression, target_chunk_bytes,
                     page_rows, sort_cols, bloom_cols, encryption)

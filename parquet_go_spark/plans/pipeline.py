@@ -698,6 +698,12 @@ def _encode_one_chunk(tbl: pa.Table, columns, repo: str, bucket: int,
     return pa.RecordBatch.from_pylist(recs, schema=_BLOB_ARROW_SCHEMA)
 
 
+# a task's buffered bytes, over all its groups, stay within this many
+# flush_bytes (64 MiB at the encode kernel's 2x 8 MiB): past it the
+# largest group flushes early, whatever the partition's group count
+BUFFER_CAP_FLUSHES = 4
+
+
 def _group_slices(batches, data_cols: list[str], flush_bytes: int | None):
     """The one group-and-flush loop of every writer: Arrow batches
     carrying non-null `__repo` (string) and `__bucket` (int) columns →
@@ -706,17 +712,22 @@ def _group_slices(batches, data_cols: list[str], flush_bytes: int | None):
 
     Grouping is vectorized per batch: one dictionary-encode of __repo,
     one int64 (repo code, bucket) key, one stable argsort and boundary
-    detection, then contiguous slices — no per-row Python. Memory is
+    detection, then one take per group — no per-row Python. Memory is
     bounded by a SIZE-TRIGGERED FLUSH, the page-flush analog of
     writer.go:262-267: once a group's buffered slices reach flush_bytes
     it is yielded at once with final=False and its buffers dropped (a
-    later slice of that key starts a new wave). flush_bytes=None never
-    flushes early. After the input ends, every buffered group is
-    yielded with final=True, in first-seen order."""
+    later slice of that key starts a new wave). The TOTAL is bounded
+    too: while all groups together hold more than BUFFER_CAP_FLUSHES ×
+    flush_bytes, the largest group is yielded the same way. So the loop
+    buffers at most that total plus one incoming batch, however many
+    small groups a partition holds. flush_bytes=None never flushes
+    early. After the input ends, every buffered group is yielded with
+    final=True, in first-seen order."""
     import pyarrow.compute as pc
 
     groups: dict[tuple, list[pa.RecordBatch]] = {}
     gbytes: dict[tuple, int] = {}
+    total = 0
     for batch in batches:
         n = batch.num_rows
         if n == 0:
@@ -731,17 +742,26 @@ def _group_slices(batches, data_cols: list[str], flush_bytes: int | None):
         change = np.ones(n, dtype=bool)
         change[1:] = sorted_keys[1:] != sorted_keys[:-1]
         starts = np.flatnonzero(change)
-        data = batch.select(data_cols).take(pa.array(order))
+        data = batch.select(data_cols)
         for i, s in enumerate(starts):
             e = starts[i + 1] if i + 1 < len(starts) else n
             code = sorted_keys[s]
             key = (rdict[int(code >> 32)].as_py(), int(code & 0xFFFFFFFF))
-            sl = data.slice(s, e - s)
+            # each group takes its own rows: a slice of one batch-wide
+            # take would pin the whole batch until every group holding a
+            # slice of it flushed, and the cap would bound counted bytes,
+            # not held ones
+            sl = data.take(pa.array(order[s:e]))
             groups.setdefault(key, []).append(sl)
             gbytes[key] = gbytes.get(key, 0) + sl.nbytes
+            total += sl.nbytes
             if flush_bytes and gbytes[key] >= flush_bytes:
-                del gbytes[key]
+                total -= gbytes.pop(key)
                 yield key, pa.Table.from_batches(groups.pop(key)), False
+            while flush_bytes and total > BUFFER_CAP_FLUSHES * flush_bytes:
+                big = max(gbytes, key=gbytes.get)
+                total -= gbytes.pop(big)
+                yield big, pa.Table.from_batches(groups.pop(big)), False
     for key in list(groups):  # pop: a drained group's buffers are freed
         yield key, pa.Table.from_batches(groups.pop(key)), True
 
@@ -757,10 +777,12 @@ def _encode_stream_fn(columns: list[tuple[str, str]],
     columnar sort inside _encode_chunk_batches.
 
     A group whose buffer reaches 2× target_bytes is encoded and yielded
-    IMMEDIATELY as 's<i>'-tagged sub-chunks — a task never holds its
-    whole partition share, only ≤2× target per in-flight group plus one
-    incoming Arrow batch (VERDICT r2 #1). Groups that never hit the
-    threshold still encode as one chunk after input exhaustion."""
+    IMMEDIATELY as 's<i>'-tagged sub-chunks, and so is the largest group
+    whenever all buffered groups together pass BUFFER_CAP_FLUSHES × 2×
+    target_bytes (64 MiB at the default target). A task therefore holds
+    at most that total plus one incoming Arrow batch, not its whole
+    partition share (VERDICT r2 #1). Groups that never flush early
+    still encode as one chunk after input exhaustion."""
     data_cols = [c for c, _ in columns]
     flush_bytes = 2 * target_bytes if target_bytes else None
 
@@ -1176,11 +1198,13 @@ def encode_table(
     t0 = _time.time()
     fn = _encode_stream_fn(columns, compression, sort_cols, chunk_suffix,
                            target_bytes=target_chunk_bytes)
-    # explicit partition count: AQE's advisory-size coalescing would
-    # otherwise merge this shuffle into a handful of 64 MB partitions and
-    # starve the Python encode kernels of parallelism; 4x parallelism
-    # keeps the straggler tail short when group sizes vary
-    n_parts = spark.sparkContext.defaultParallelism * 4
+    # one encode task per slot, an explicit count (AQE's advisory-size
+    # coalescing would merge this shuffle into a handful of 64 MB
+    # partitions): each Python task costs ~0.2-0.4 s before any work,
+    # which at 4x parallelism was most of the stage (local[2], 25k rows:
+    # 8 tasks 1.9-2.2 s, 2 tasks 0.95-1.1 s), and fewer tasks share
+    # more codec state. _group_slices' total cap bounds a task's memory
+    n_parts = spark.sparkContext.defaultParallelism
     parts = keyed.repartition(n_parts, "__repo", "__bucket")
     encoded = parts.mapInArrow(fn, BLOB_SCHEMA)
     encoded.write.mode("append").parquet(out_path)

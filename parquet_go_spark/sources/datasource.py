@@ -486,9 +486,10 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
     Each task encodes its own partition through the writers' shared
     group-and-flush loop (pipeline._group_slices, keyed on the repo
     column with bucket 0): a repo's rows flush as one chunk whenever its
-    buffer reaches target_chunk_bytes, so a task holds at most one
-    target-sized buffer per repo. Chunks stream into a staged parquet
-    file, and the driver-side commit writes the schema sidecar FIRST and
+    buffer reaches target_chunk_bytes, and the largest repo's rows flush
+    whenever all repos together pass the loop's cap (4× the target), so
+    a task's buffer stays bounded however many repos it sees. Chunks
+    stream into a staged parquet file, and the driver-side commit writes the schema sidecar FIRST and
     then atomically renames staged files into the store — a crash at any
     point leaves either a fully-valid store or a job-private
     .staging-<job> directory the commit/abort sweep removes (never
