@@ -770,9 +770,10 @@ def _range_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound range layout end-to-end (round 3): encode under
     layout='range' with compound sort keys (o_orderstatus, o_orderkey) —
     the SortingColumns analog (sorting.go:23-127, config.go:411) — then
-    a pruned read on the SECONDARY key. Hierarchical secondary quantiles
-    give disjoint o_orderkey sub-ranges within each status range, so the
-    manifest min/max prune skips chunks a hash layout must read."""
+    a pruned read on the SECONDARY key. Each group's rows are sorted by
+    (status, orderkey) and cut by size, so its chunks hold disjoint
+    o_orderkey sub-ranges within each status range, and the manifest
+    min/max prune skips chunks a hash layout must read."""
     df = _load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_custkey", "o_totalprice",
         (F.col("o_orderkey") % 4).cast("string").alias("grp"),

@@ -48,8 +48,9 @@ def parse_args(argv):
                    choices=["zstd", "snappy", "gzip", "lz4", "brotli"],
                    help="outer compression codec of chunk payloads")
     p.add_argument("--layout", default="hash", choices=["hash", "range"],
-                   help="range = sort-key quantile buckets with disjoint "
-                        "chunk key ranges (min/max pruning effective)")
+                   help="range = rows sorted by repo and sort key, cut "
+                        "into chunks by size: disjoint chunk key ranges "
+                        "(min/max pruning effective)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--verify", action="store_true",
                    help="decode everything back and check per-row sha256")

@@ -497,10 +497,13 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
     token, so appends from different jobs can never collide when decode
     paths group blob rows by chunk_id across files. NULL repo values
     group under "None", the planners' rule (pipeline._repo_key).
-    Chunk placement follows the DataFrame's own partitioning; for
-    planned/salted/range layouts and manifest resume use
-    pipeline.encode_table (this path trades planning for plain
-    spark.write composability)."""
+    Chunk placement follows the DataFrame's own partitioning, and the
+    rows arrive in its order: a Python data-source writer has no hook to
+    sort them, so this path keeps the loop's cap, and a task (or a
+    streaming micro-batch) spread over many repos fragments them into
+    small cap-flushed chunks. For planned/salted/range layouts and
+    manifest resume use pipeline.encode_table (this path trades planning
+    for plain spark.write composability)."""
 
     def __init__(self, path: str, cols: list[tuple[str, str]],
                  repo_col: str, compression: str | None,

@@ -337,7 +337,7 @@ def test_range_layout_prunes_more_than_hash(spark):
     assert same_rows(got, df.where(cond))
 
 
-def test_range_layout_resume_reuses_bounds(spark):
+def test_range_layout_resume_skips_encoded_repo(spark):
     rows = [("r", i) for i in range(2000)]
     df = spark.createDataFrame(rows, "repo string, k bigint").select(
         "repo", "k", F.sha2(F.col("k").cast("string"), 256).alias("pad"),
@@ -349,7 +349,7 @@ def test_range_layout_resume_reuses_bounds(spark):
     m1 = pipeline.encode_table(spark, df, out, layout="range", resume=True, **kw)
     assert m1["skipped_chunks"] > 0
     dec = pipeline.decode_table(spark, out)
-    assert dec.count() == 2000  # no duplicated chunks from a re-plan
+    assert dec.count() == 2000  # the encoded repo is skipped whole
 
 
 # ---------- metadata-based planning + kernel-side splitting ----------

@@ -512,28 +512,41 @@ def _compound_df(spark, n=24000):
     )
 
 
+def _chunk_spans(store, cols):
+    """[(min row tuple, max row tuple)] per chunk of store, decoded from
+    its blob rows one chunk at a time."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    blobs = pq.read_table(store)
+    names = [c for c, _ in cols]
+    fn = pipeline._decode_stream_fn(cols)
+    spans = []
+    for cid in set(blobs.column("chunk_id").to_pylist()):
+        rows = blobs.filter(pc.equal(blobs["chunk_id"], cid))
+        for out in fn(iter(rows.to_batches())):
+            tup = list(zip(*(out.column(c).to_pylist() for c in names)))
+            spans.append((min(tup), max(tup)))
+    return spans
+
+
 def test_compound_range_layout(spark, tmp_path):
-    """sort_cols=(lang, k) with a LOW-cardinality primary: the compound
-    split (SortingColumns analog) must (a) keep parallelism — more
-    planned groups than primary-distinct values — and (b) make
-    secondary-key stats prune, since sub-buckets are k-disjoint within
+    """sort_cols=(lang, k) with a LOW-cardinality primary: the sorted
+    stream (SortingColumns analog) cuts chunks that are disjoint in
+    lexicographic (lang, k) order, so secondary-key stats prune within
     each lang range."""
     df = _compound_df(spark)
     out_c = str(tmp_path / "compound")
-    out_s = str(tmp_path / "single")
     kw = dict(repo_col="repo", salt_cols=["k"], layout="range",
               target_chunk_bytes=64 << 10, resume=False)
     pipeline.encode_table(spark, df, out_c, sort_cols=["lang", "k"], **kw)
-    pipeline.encode_table(spark, df, out_s, sort_cols=["lang"], **kw)
 
-    man_c = pipeline.manifest(spark, out_c)
-    # planned groups (bucket ids before kernel size-splits): the single-
-    # key layout collapses to ≤5 groups (4 langs + edge), the compound
-    # one fans out across secondary sub-buckets
-    groups_c = man_c.select("bucket").distinct().count()
-    groups_s = pipeline.manifest(spark, out_s).select(
-        "bucket").distinct().count()
-    assert groups_s <= 5 < groups_c
+    # each chunk's rows span [first, last] (lang, k) tuple; sorted by
+    # their first tuple, every chunk ends below the next one's start
+    spans = sorted(_chunk_spans(out_c, [("lang", "string"), ("k", "bigint")]))
+    assert len(spans) > 4
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert hi < lo
 
     # secondary pruning: a narrow k probe keeps a strict subset of chunks
     rows, kept = direct_read(out_c, [GreaterThanOrEqual(("k",), 5000),
@@ -554,7 +567,7 @@ def test_compound_range_layout(spark, tmp_path):
     assert gotall == src
 
 
-def test_compound_range_resume_reuses_both_sidecars(spark, tmp_path):
+def test_compound_range_resume_skips_encoded_repo(spark, tmp_path):
     df = _compound_df(spark, n=6000)
     out = str(tmp_path / "cres")
     kw = dict(repo_col="repo", salt_cols=["k"], sort_cols=["lang", "k"],
