@@ -6,8 +6,8 @@ parquet writer in the reference; tests/test_golden_decode.py covers the
 read direction here).
 
 Same scale shape as pipeline.encode_table: one metadata-scale planning
-aggregation, one shuffle on the chunk key, Arrow-native kernels, no
-per-row Python. Oversized groups roll to additional files at
+aggregation, one sorted shuffle on the chunk key, Arrow-native kernels,
+no per-row Python. Oversized groups roll to additional files at
 2x target_chunk_bytes (files are independent, so splitting is free) —
 a task never buffers more than ~one file of Arrow slices.
 """
@@ -384,22 +384,15 @@ def _export_fn(columns, out_dir: str, compression, target_bytes: int,
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         parts: dict[tuple[str, int], int] = {}
         rows = []
-        # pipeline._group_slices: one file per flush, and a group rolls to
-        # a new part file at ~2x target, the encode kernel's bound, or
-        # early when the task's total buffer passes the loop's cap
-        for key, tbl, _ in pipeline._group_slices(batches, col_names,
-                                                  2 * target_bytes):
+        # one file per flush of the sorted stream: a group rolls to a new
+        # part file at ~2x target, the encode kernel's bound, and its
+        # parts and pages hold ascending, disjoint sort_cols ranges
+        for key, tbl, _ in pipeline._group_slices(
+                batches, col_names, 2 * target_bytes, sorted_input=True):
             repo, bucket = key
             part = parts.get(key, 0)
             parts[key] = part + 1
             name = _file_name(repo, bucket, part)
-            if sort_cols:
-                # per-file Arrow sort (the SortingWriter analog): page
-                # stats become disjoint ranges, boundary_order goes ASC,
-                # and the footer declares sorting_columns
-                idx = pa.compute.sort_indices(
-                    tbl, sort_keys=[(c, "ascending") for c in sort_cols])
-                tbl = tbl.take(idx)
             # write-tmp-then-rename: readers globbing *.parquet never see
             # a partial file, and re-runs overwrite deterministically (the
             # name is a pure function of (repo, bucket, part)) — export is
@@ -445,6 +438,10 @@ def export_parquet(
     by our kernels; returns the per-file summary DataFrame (collected
     eagerly so the write is done when this returns).
 
+    Each partition is sorted by (repo, bucket, *sort_cols), NULLs last
+    (pipeline._sorted_partitions), so a group's part files hold
+    disjoint, ascending sort_cols ranges, as their footers declare.
+
     resume=True skips (repo, bucket) groups already recorded in the
     `_export_manifest` sidecar (the encode_table checkpoint analog;
     underscore-prefixed so parquet readers treat it as hidden).
@@ -489,9 +486,8 @@ def export_parquet(
         cond = ((keyed["__repo"] == done["repo"])
                 & (keyed["__bucket"] == done["bucket"]))
         keyed = keyed.join(F.broadcast(done), on=cond, how="left_anti")
-    # one task per slot, encode_table's rule
-    n_parts = spark.sparkContext.defaultParallelism
-    parts = keyed.repartition(n_parts, "__repo", "__bucket")
+    parts = pipeline._sorted_partitions(keyed, ["__repo", "__bucket"],
+                                        sort_cols or [])
     fn = _export_fn(columns, out_dir, compression, target_chunk_bytes,
                     page_rows, sort_cols, bloom_cols, encryption)
     summary = parts.mapInArrow(fn, _SUMMARY_SCHEMA)
@@ -514,5 +510,5 @@ def _reconcile_dir(spark: SparkSession, out_dir: str, mpath: str) -> None:
         if f.endswith(".parquet") and f not in listed:
             try:
                 os.remove(os.path.join(out_dir, f))
-            except OSError:
+            except FileNotFoundError:  # a concurrent sweep got there
                 pass

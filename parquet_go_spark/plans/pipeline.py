@@ -628,7 +628,6 @@ _BLOB_ARROW_SCHEMA = pa.schema(
 
 def _encode_chunk_batches(tbl: pa.Table, columns, repo: str, bucket: int,
                           compression: str | None,
-                          sort_cols: list[str] | None = None,
                           chunk_suffix: str = "",
                           target_bytes: int | None = None,
                           split_offset: int = 0,
@@ -637,32 +636,20 @@ def _encode_chunk_batches(tbl: pa.Table, columns, repo: str, bucket: int,
     """Encode one (repo, bucket) group's columns → manifest+blob record
     batches (a generator: one batch per emitted chunk).
 
-    Each group is sorted HERE with Arrow's C++ sort_indices + take. The
-    hash layout relies on this alone. The range layout also sorts in the
-    JVM (sortWithinPartitions by repo and sort key), which an older
-    measurement priced above the encode kernels. With today's kernels it
-    is not: on a 4-core host at local[2] (1 GB heap, a 25k-row, 50-repo
-    repos table) warm range encodes took 1.65-1.76 s sorted, against
-    2.65-3.21 s with the quantile planner the sort replaced.
-
-    Groups larger than 2× target_bytes split into row-range sub-chunks
-    AFTER the sort (ids '#<bucket>s<i><suffix>'), the dynamic analog of
-    the reference's page-flush size checks (writer.go:262-267): it bounds
-    chunk size when the hash planner under-bucketed a repo (metadata-
-    based sizing uses a global average row size), and it is how the
-    range layout cuts a sorted repo into chunks of ~target_bytes with
-    disjoint sort-key ranges.
+    Rows arrive in sort-key order (_sorted_partitions), so the kernel
+    only cuts: groups larger than 2× target_bytes split into row-range
+    sub-chunks (ids '#<bucket>s<i><suffix>') of disjoint sort-key
+    ranges, the dynamic analog of the reference's page-flush size checks
+    (writer.go:262-267). It bounds chunk size when the hash planner
+    under-bucketed a repo (metadata sizing uses a global average row
+    size), and it is how the range layout cuts a repo into chunks of
+    ~target_bytes.
 
     split_offset/force_split support the streaming-flush caller
     (_encode_stream_fn): a group flushed in several waves numbers its
     sub-chunks continuously (s<offset>, s<offset+1>, …) and keeps the
     s-tag even for a single-chunk wave so ids never collide across
     waves."""
-    if sort_cols:
-        idx = pa.compute.sort_indices(
-            tbl, sort_keys=[(c, "ascending") for c in sort_cols]
-        )
-        tbl = tbl.take(idx)
     n_splits = 1
     if target_bytes and tbl.nbytes > 2 * target_bytes:
         n_splits = -(-tbl.nbytes // target_bytes)
@@ -702,8 +689,8 @@ def _encode_one_chunk(tbl: pa.Table, columns, repo: str, bucket: int,
     return pa.RecordBatch.from_pylist(recs, schema=_BLOB_ARROW_SCHEMA)
 
 
-# a task's buffered bytes, over all its groups, stay within this many
-# flush_bytes (64 MiB at the encode kernel's 2x 8 MiB): past it the
+# the colcodec sink's buffered bytes, over all its groups, stay within
+# this many flush_bytes (32 MiB at its 1x 8 MiB target): past it the
 # largest group flushes early, whatever the partition's group count
 BUFFER_CAP_FLUSHES = 4
 
@@ -715,31 +702,30 @@ def _group_slices(batches, data_cols: list[str], flush_bytes: int | None,
     (key, table, final) per (repo, bucket) group, tables holding only
     data_cols.
 
-    sorted_input says the batches arrive sorted by (__repo, __bucket), as
-    the range layout's sortWithinPartitions delivers them: after each
-    batch every buffered group but the batch's last key is whole, so it
-    is yielded at once with final=True. The loop then holds one group
-    plus one batch, so the total cap below fires only on a batch that
-    alone nears it.
+    sorted_input says the batches arrive sorted by (__repo, __bucket)
+    (_sorted_partitions): a key change yields the previous group at once
+    with final=True, so the loop holds one group plus one batch and the
+    cap below never fires. A group that appears again after the stream
+    passed it means the sort was lost: ValueError names its key.
+
+    Unsorted input (only the colcodec sink's) keeps every group open
+    until the input ends, under a TOTAL cap: while all groups together
+    hold more than BUFFER_CAP_FLUSHES × flush_bytes, the largest group is
+    yielded early with final=False, so many small groups fragment.
 
     Grouping is vectorized per batch: one dictionary-encode of __repo,
     one int64 (repo code, bucket) key, one stable argsort and boundary
-    detection, then one take per group — no per-row Python. Memory is
-    bounded by a SIZE-TRIGGERED FLUSH, the page-flush analog of
-    writer.go:262-267: once a group's buffered slices reach flush_bytes
-    it is yielded at once with final=False and its buffers dropped (a
-    later slice of that key starts a new wave). The TOTAL is bounded
-    too: while all groups together hold more than BUFFER_CAP_FLUSHES ×
-    flush_bytes, the largest group is yielded the same way. So the loop
-    buffers at most that total plus one incoming batch, however many
-    small groups a partition holds. flush_bytes=None never flushes
-    early. After the input ends, every buffered group is yielded with
-    final=True, in first-seen order."""
+    detection, then one take per group — no per-row Python. In both
+    modes a group reaching flush_bytes is yielded with final=False (the
+    page-flush analog of writer.go:262-267) and a later slice of its key
+    starts a new wave; flush_bytes=None never flushes early. After the
+    input ends, every buffered group is yielded with final=True."""
     import pyarrow.compute as pc
 
     groups: dict[tuple, list[pa.RecordBatch]] = {}
     gbytes: dict[tuple, int] = {}
     total = 0
+    current, done = None, set()  # sorted input: the open and passed keys
     for batch in batches:
         n = batch.num_rows
         if n == 0:
@@ -759,6 +745,20 @@ def _group_slices(batches, data_cols: list[str], flush_bytes: int | None,
             e = starts[i + 1] if i + 1 < len(starts) else n
             code = sorted_keys[s]
             key = (rdict[int(code >> 32)].as_py(), int(code & 0xFFFFFFFF))
+            if sorted_input and key != current:
+                if key in done:
+                    raise ValueError(
+                        f"_group_slices: group {key} reappeared after the "
+                        "stream passed it; the input is not sorted by "
+                        "(__repo, __bucket)")
+                if current is not None:
+                    done.add(current)
+                    if current in groups:
+                        total -= gbytes.pop(current)
+                        yield (current,
+                               pa.Table.from_batches(groups.pop(current)),
+                               True)
+                current = key
             # each group takes its own rows: a slice of one batch-wide
             # take would pin the whole batch until every group holding a
             # slice of it flushed, and the cap would bound counted bytes,
@@ -774,37 +774,21 @@ def _group_slices(batches, data_cols: list[str], flush_bytes: int | None,
                 big = max(gbytes, key=gbytes.get)
                 total -= gbytes.pop(big)
                 yield big, pa.Table.from_batches(groups.pop(big)), False
-        if sorted_input:
-            last = (rdict[int(rcodes[-1])].as_py(), int(buckets[-1]))
-            for key in [k for k in groups if k != last]:
-                total -= gbytes.pop(key)
-                yield key, pa.Table.from_batches(groups.pop(key)), True
     for key in list(groups):  # pop: a drained group's buffers are freed
         yield key, pa.Table.from_batches(groups.pop(key)), True
 
 
 def _encode_stream_fn(columns: list[tuple[str, str]],
-                      compression: str | None,
-                      sort_cols: list[str], chunk_suffix: str = "",
-                      target_bytes: int | None = None,
-                      sorted_input: bool = False):
-    """mapInArrow encode kernel: the partition is hash-partitioned and
-    sorted per layout. The hash layout's rows arrive unsorted, and
-    _group_slices buffers slices per group. The range layout's arrive
-    sorted by (__repo, sort key) — sorted_input=True — so each group is
-    yielded whole as soon as the stream passes it. No pandas conversion
-    anywhere: strings stay in Arrow buffers end to end, and each chunk is
-    sorted once more by a per-group columnar sort inside
-    _encode_chunk_batches.
-
-    A group whose buffer reaches 2× target_bytes is encoded and yielded
-    IMMEDIATELY as 's<i>'-tagged sub-chunks, and so is the largest group
-    whenever all buffered groups together pass BUFFER_CAP_FLUSHES × 2×
-    target_bytes (64 MiB at the default target). A task therefore holds
-    at most that total plus one incoming Arrow batch, not its whole
-    partition share (VERDICT r2 #1); with sorted input it holds one group
-    plus one batch. Groups that never flush early still encode as one
-    chunk."""
+                      compression: str | None, chunk_suffix: str = "",
+                      target_bytes: int | None = None):
+    """mapInArrow encode kernel of encode_table, both layouts: the
+    partition arrives sorted by (__repo, __bucket, *sort_cols)
+    (_sorted_partitions), so each group is yielded whole, in sort-key
+    order, once the stream passes it. No pandas conversion: strings stay
+    in Arrow buffers end to end. A group whose buffer reaches 2×
+    target_bytes is encoded IMMEDIATELY as 's<i>'-tagged sub-chunks, so a
+    task holds one group's buffer plus one Arrow batch, not its partition
+    share (VERDICT r2 #1)."""
     data_cols = [c for c, _ in columns]
     flush_bytes = 2 * target_bytes if target_bytes else None
 
@@ -812,14 +796,14 @@ def _encode_stream_fn(columns: list[tuple[str, str]],
         flushed: dict[tuple, int] = {}  # sub-chunks already emitted
         fsst_cache: dict = {}  # (column, stream) -> codec state, all repos
         for key, tbl, final in _group_slices(batches, data_cols, flush_bytes,
-                                             sorted_input):
+                                             sorted_input=True):
             repo, bucket = key
             start = flushed.get(key, 0)
             # any early-flushed group keeps s-tags on ALL its chunks
             # (including the final wave) so ids never collide
             force = (not final) or start > 0
             for rb in _encode_chunk_batches(
-                tbl, columns, repo, bucket, compression, sort_cols,
+                tbl, columns, repo, bucket, compression,
                 chunk_suffix, target_bytes,
                 split_offset=start, force_split=force,
                 fsst_cache=fsst_cache,
@@ -982,6 +966,22 @@ def plan_chunks(df: DataFrame, repo_col: str, salt_cols: list[str],
     )
 
 
+def _sorted_partitions(keyed: DataFrame, part_cols: list[str],
+                       sort_cols: list[str]) -> DataFrame:
+    """The one shuffle of encode_table and export_parquet, the
+    SortingWriter analog (sorting.go:23-127): part_cols into one task per
+    slot, each partition sorted in the JVM by (__repo, __bucket,
+    *sort_cols), NULLs last as pqwriter's SortingColumn declares. An
+    explicit count: AQE would coalesce to a few 64 MB partitions, and a
+    Python task costs ~0.2-0.4 s before any work (local[2], 25k rows: 8
+    tasks 1.9-2.2 s, 2 tasks 0.95-1.1 s)."""
+    n_parts = keyed.sparkSession.sparkContext.defaultParallelism
+    order = [F.col(c).asc_nulls_last()
+             for c in ("__repo", "__bucket", *sort_cols)]
+    return keyed.repartition(n_parts, *part_cols).sortWithinPartitions(
+        *order)
+
+
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -998,14 +998,13 @@ def encode_table(
 ) -> dict:
     """Encode df into a blobs+manifest parquet table at out_path.
 
-    layout="hash" buckets rows by xxhash64(salt_cols) — fastest, but
-    chunk key ranges interleave. layout="range" is the SortingWriter
-    analog (sorting.go:23-127): rows shuffle by repo, sort within each
-    partition by (repo, *sort_cols), and the encode kernel cuts each
-    repo's sorted stream into chunks of ~target_chunk_bytes. A repo's
-    chunks then hold disjoint sort_cols ranges, in lexicographic order
-    for compound keys, so min/max pruning works. Every range chunk has
-    bucket 0.
+    Both layouts sort each partition by (repo, bucket, *sort_cols), NULLs
+    last (_sorted_partitions), and the kernel cuts each group's sorted
+    stream by size, so a group's chunks hold disjoint sort_cols ranges.
+    layout="hash" buckets rows by xxhash64(salt_cols), whose buckets'
+    ranges interleave. layout="range" is one bucket-0 stream per repo,
+    so a repo's chunks hold disjoint ranges (lexicographic for compound
+    keys) and min/max pruning works.
 
     resume=True skips the (repo, bucket) groups the store's manifest
     already holds: whole repos for the range layout, since each is bucket
@@ -1028,8 +1027,7 @@ def encode_table(
             f"{sidecar}: this store was written by the former quantile "
             "range planner and cannot be resumed; it still reads, so "
             "re-encode it into a new store with resume=False")
-    sorted_input = layout == "range"
-    if sorted_input:
+    if layout == "range":
         keyed = (df.withColumn("__repo", _repo_key(repo_col))
                  .withColumn("__bucket", F.lit(0)))
     else:
@@ -1045,21 +1043,11 @@ def encode_table(
     import time as _time
 
     t0 = _time.time()
-    fn = _encode_stream_fn(columns, compression, sort_cols, chunk_suffix,
-                           target_bytes=target_chunk_bytes,
-                           sorted_input=sorted_input)
-    # one encode task per slot, an explicit count (AQE's advisory-size
-    # coalescing would merge this shuffle into a handful of 64 MB
-    # partitions): each Python task costs ~0.2-0.4 s before any work,
-    # which at 4x parallelism was most of the stage (local[2], 25k rows:
-    # 8 tasks 1.9-2.2 s, 2 tasks 0.95-1.1 s), and fewer tasks share
-    # more codec state. _group_slices' total cap bounds a task's memory
-    n_parts = spark.sparkContext.defaultParallelism
-    if sorted_input:
-        parts = keyed.repartition(n_parts, "__repo").sortWithinPartitions(
-            "__repo", *sort_cols)
-    else:
-        parts = keyed.repartition(n_parts, "__repo", "__bucket")
+    fn = _encode_stream_fn(columns, compression, chunk_suffix,
+                           target_bytes=target_chunk_bytes)
+    # range: a repo is one task's stream, so a resume skips whole repos
+    part_cols = ["__repo"] if layout == "range" else ["__repo", "__bucket"]
+    parts = _sorted_partitions(keyed, part_cols, sort_cols)
     encoded = parts.mapInArrow(fn, BLOB_SCHEMA)
     encoded.write.mode("append").parquet(out_path)
     write_sec = _time.time() - t0

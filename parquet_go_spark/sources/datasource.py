@@ -499,11 +499,14 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
     group under "None", the planners' rule (pipeline._repo_key).
     Chunk placement follows the DataFrame's own partitioning, and the
     rows arrive in its order: a Python data-source writer has no hook to
-    sort them, so this path keeps the loop's cap, and a task (or a
-    streaming micro-batch) spread over many repos fragments them into
-    small cap-flushed chunks. For planned/salted/range layouts and
-    manifest resume use pipeline.encode_table (this path trades planning
-    for plain spark.write composability)."""
+    sort them, so this is the one unsorted writer. It alone runs the
+    loop's unsorted mode and its cap (encode_table and export_parquet
+    sort each partition in the JVM first), and a task (or a streaming
+    micro-batch) spread over many repos fragments them into small
+    cap-flushed chunks whose rows keep arrival order. For
+    planned/salted/range layouts, sorted chunks and manifest resume use
+    pipeline.encode_table (this path trades planning for plain
+    spark.write composability)."""
 
     def __init__(self, path: str, cols: list[tuple[str, str]],
                  repo_col: str, compression: str | None,

@@ -1,8 +1,10 @@
-"""One encode task per slot, with a bounded buffer: the group-and-flush
-loop (pipeline._group_slices) caps a task's TOTAL buffered bytes at
-BUFFER_CAP_FLUSHES × flush_bytes by flushing the largest group early, so
-a partition of many small groups never sits in memory whole; and the
-shuffling writers run defaultParallelism encode tasks."""
+"""One encode task per slot, with a bounded buffer. The group-and-flush
+loop's unsorted mode (pipeline._group_slices), which only the colcodec
+sink runs, caps a task's TOTAL buffered bytes at BUFFER_CAP_FLUSHES ×
+flush_bytes by flushing the largest group early, so a partition of many
+small groups never sits in memory whole. The shuffling writers run
+defaultParallelism tasks over input sorted within each partition, so the
+cap never applies to them and each small group is one chunk or file."""
 
 from __future__ import annotations
 
@@ -13,7 +15,6 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_go_spark.codecs import chunk as chunklib
 from parquet_go_spark.plans import pipeline
 
 N_SMALL = 20
@@ -108,32 +109,12 @@ def test_no_cap_without_flush_bytes():
     assert len(waves) == N_SMALL + 1
 
 
-def test_encode_kernel_ids_unique_under_cap():
-    """The cap fires inside _encode_stream_fn: early waves carry s-tags,
-    no chunk id repeats, and the chunks decode to every row once."""
-    columns = [("k", "bigint"), ("txt", "string")]
-    fn = pipeline._encode_stream_fn(columns, None, ["k"], "",
-                                    target_bytes=10_000)  # flush 20 KB
-    out = list(fn(_cap_batches(9, {"n": 0})))
-    ids = [rb.column("chunk_id")[0].as_py() for rb in out]
-    assert len(set(ids)) == len(ids)
-    assert "big#0s0" in ids and "big#0s1" in ids
-    got = []
-    for rb in out:
-        for i in range(rb.num_rows):
-            if rb.column("column")[i].as_py() == "k":
-                vals, _ = chunklib.decode_chunk(rb.column("blob")[i].as_py())
-                got.extend(np.asarray(vals).tolist())
-    assert sorted(got) == [b * 100 + i for b in range(9)
-                           for i in range(N_SMALL + 2)]
-
-
 # ---------------------------------------------------------------------------
-# the writers under a forced cap: 300 repos of ~5 KB each plan one
-# bucket apiece at a 16 KB target, so no group reaches flush_bytes alone
-# and every early flush (an s-tag, a part > 0) is the cap's. Small Arrow
-# batches spread each repo's rows over several batches of a task, so a
-# flushed group gets later slices
+# the writers on many small groups: 300 repos of ~5 KB each plan one
+# bucket apiece at a 16 KB target, so no group reaches flush_bytes alone.
+# Small Arrow batches spread each repo's rows over several batches of a
+# task. The sorted writers still write each group whole; the colcodec
+# sink, which keeps arrival order, fragments them under the cap
 # ---------------------------------------------------------------------------
 
 TINY_TARGET = 16 << 10
@@ -158,6 +139,15 @@ def _many_small_repos(spark):
     )
 
 
+def _same_row_hashes(a, b) -> bool:
+    def h(d):
+        return d.select(F.sha2(F.concat_ws("\x1f", "repo", "path",
+                                           "content"), 256).alias("h"))
+    return (a.count() == b.count()
+            and h(a).groupBy("h").count().exceptAll(
+                h(b).groupBy("h").count()).count() == 0)
+
+
 def test_encode_table_cap_ids_unique_and_one_task_per_slot(
         spark, tmp_path, small_batches):
     df = _many_small_repos(spark)
@@ -168,8 +158,11 @@ def test_encode_table_cap_ids_unique_and_one_task_per_slot(
     dup = (m.groupBy("chunk_id", "column", "stream").count()
            .where("count > 1").count())
     assert dup == 0
-    ids = {r.chunk_id for r in m.select("chunk_id").distinct().collect()}
-    assert any("s" in i.split("#", 1)[1] for i in ids), "cap never fired"
+    # sorted input: each (repo, bucket) is exactly one chunk, no s-tag
+    ids = [r.chunk_id for r in m.select("chunk_id").distinct().collect()]
+    groups = m.select("repo", "bucket").distinct().count()
+    assert len(ids) == groups == 300
+    assert all("s" not in i.split("#", 1)[1] for i in ids)
     assert pipeline.verify_roundtrip(spark, df, out)["ok"]
     parts = [f for f in os.listdir(out)
              if f.startswith("part-") and f.endswith(".parquet")]
@@ -187,14 +180,32 @@ def test_export_parquet_cap_rows_once_names_unique(
     rows = summary.collect()
     names = [r.file for r in rows]
     assert len(set(names)) == len(names)
-    assert any(r.part > 0 for r in rows), "cap never fired"
+    assert all(r.part == 0 for r in rows)  # sorted: each group whole
     assert sorted(names) == sorted(
         f for f in os.listdir(out) if f.endswith(".parquet"))
+    assert _same_row_hashes(df, spark.read.parquet(out))
 
-    def h(d):
-        return d.select(F.sha2(F.concat_ws("\x1f", "repo", "path",
-                                           "content"), 256).alias("h"))
-    back = spark.read.parquet(out)
-    assert h(df).groupBy("h").count().exceptAll(
-        h(back).groupBy("h").count()).count() == 0
-    assert back.count() == df.count()
+
+def test_colcodec_sink_cap_ids_unique_rows_once(
+        spark, tmp_path, small_batches):
+    """The sink receives the caller's partitions unsorted, so the cap
+    fires inside it: a repo gets several chunks from one task (seq > 0),
+    no chunk id repeats, and every row reads back once."""
+    from parquet_go_spark.sources import datasource
+
+    datasource.register(spark)
+    df = _many_small_repos(spark)
+    out = str(tmp_path / "sink")
+    (df.write.format("colcodec").option("repo_col", "repo")
+     .option("target_chunk_bytes", str(TINY_TARGET))
+     .mode("overwrite").save(out))
+    m = pipeline.manifest(spark, out)
+    dup = (m.groupBy("chunk_id", "column", "stream").count()
+           .where("count > 1").count())
+    assert dup == 0
+    # sink ids are '<repo>#<seq>@w<job>p<task>': seq > 0 is a repo's
+    # second chunk within one task
+    ids = [r.chunk_id for r in m.select("chunk_id").distinct().collect()]
+    assert any(i.split("#", 1)[1].split("@", 1)[0] != "0" for i in ids)
+    assert _same_row_hashes(
+        df, spark.read.format("colcodec").load(out))

@@ -54,7 +54,7 @@ def test_three_repos_one_column_train_fsst_once(train_calls):
         "__repo": pa.array(repos),
         "__bucket": pa.array(np.zeros(len(repos), np.int32)),
     })
-    fn = pipeline._encode_stream_fn([("content", "string")], None, [])
+    fn = pipeline._encode_stream_fn([("content", "string")], None)
     out = pa.Table.from_batches(list(fn(iter([batch]))))
     assert out.num_rows == 3  # one chunk per repo
     assert train_calls["n"] == 1  # the later repos reused the table

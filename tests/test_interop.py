@@ -626,6 +626,37 @@ def test_export_reconciles_orphans(spark, tmp_path):
     assert spark.read.parquet(out + "/*.parquet").count() == 2000
 
 
+def test_reconcile_raises_when_an_orphan_cannot_go(spark, tmp_path,
+                                                   monkeypatch):
+    """An orphan part that cannot be deleted would stay visible to
+    readers that glob the directory (duplicate rows), so the sweep
+    raises; only an orphan already gone is skipped. os.remove is
+    patched because file modes do not stop a root process."""
+    from parquet_go_spark.interop import export
+    from pyspark.sql import functions as F
+
+    df = spark.range(50).select(F.lit("r").alias("repo"),
+                                F.col("id").alias("k"))
+    out = str(tmp_path / "rec")
+    export.export_parquet(spark, df, out, salt_cols=["k"])
+    orphan = os.path.join(out, "deadbeef-b0-9.parquet")
+    open(orphan, "wb").write(b"PAR1garbagePAR1")
+    mpath = os.path.join(out, "_export_manifest")
+
+    def denied(path):
+        raise PermissionError(13, "Permission denied", path)
+
+    monkeypatch.setattr(export.os, "remove", denied)
+    with pytest.raises(PermissionError):
+        export._reconcile_dir(spark, out, mpath)
+
+    def gone(path):
+        raise FileNotFoundError(2, "No such file or directory", path)
+
+    monkeypatch.setattr(export.os, "remove", gone)
+    export._reconcile_dir(spark, out, mpath)
+
+
 def test_compact_inherits_compression_and_sort(spark, tmp_path):
     from parquet_go_spark.interop.compact import compact_export
     from parquet_go_spark.interop.export import export_parquet

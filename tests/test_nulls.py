@@ -128,3 +128,76 @@ def test_null_repo_rows_survive_every_writer(spark, tmp_path, writer):
     # an earlier query's pruned scan (see the datasource docstring)
     assert sum(r.repo is None for r in rows) == 100
     assert sorted(map(str, rows)) == sorted(map(str, df.collect()))
+
+
+@pytest.fixture
+def small_batches(spark):
+    """50-row Arrow batches: a group spans batches, so the writers'
+    size flushes fall between batches of one sorted stream."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    yield
+    spark.conf.set(key, old)
+
+
+def _null_keyed_repo(spark):
+    """One repo, one bucket (salted on the constant repo), 600 rows of
+    ~215 bytes: a permuted bigint k, NULL on every 20th row."""
+    return spark.range(600).select(
+        F.lit("r").alias("repo"),
+        F.when(F.col("id") % 20 == 0, None)
+        .otherwise((F.col("id") * 7919) % 600).alias("k"),
+        F.concat(F.lit("x" * 200), F.col("id").cast("string")).alias("body"),
+    )
+
+
+def test_null_sort_keys_sort_last_in_parts_and_chunks(spark, tmp_path,
+                                                      small_batches):
+    """The shuffling writers sort NULL keys last, as the footers'
+    SortingColumn{nulls_first=false} declares: a group's export parts
+    hold disjoint ascending k ranges with NULLs only at the end of the
+    last part, and its hash-layout chunks hold disjoint k ranges."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.interop.export import export_parquet
+    from parquet_go_spark.plans import pipeline
+
+    df = _null_keyed_repo(spark)
+    target = 16 << 10
+    out = str(tmp_path / "exp")
+    rows = export_parquet(spark, df, out, salt_cols=["repo"],
+                          sort_cols=["k"], target_chunk_bytes=target).collect()
+    assert len({(r.repo, r.bucket) for r in rows}) == 1
+    parts = sorted(rows, key=lambda r: r.part)
+    assert len(parts) >= 2
+    ks = []
+    for r in parts:
+        pf = pq.ParquetFile(os.path.join(out, r.file))
+        sc = pf.metadata.row_group(0).sorting_columns
+        assert [(c.column_index, c.descending, c.nulls_first)
+                for c in sc] == [(1, False, False)]
+        ks.append(pf.read(columns=["k"]).column("k").to_pylist())
+    n_null = 30
+    assert all(None not in k for k in ks[:-1])
+    assert ks[-1][-n_null:] == [None] * n_null
+    flat = [v for k in ks for v in k if v is not None]
+    assert flat == sorted(flat) and len(flat) == 600 - n_null
+    for a, b in zip(ks, ks[1:]):
+        assert max(v for v in a if v is not None) < b[0]
+
+    store = str(tmp_path / "store")
+    pipeline.encode_table(spark, df, store, salt_cols=["repo"],
+                          sort_cols=["k"], target_chunk_bytes=target,
+                          layout="hash", resume=False)
+    m = (pipeline.manifest(spark, store).where("column = 'k'")
+         .select("chunk_id", "min_val", "max_val", "null_count").collect())
+    assert len(m) >= 2
+    spans = sorted((int(r.min_val), int(r.max_val)) for r in m
+                   if r.min_val is not None)
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+    assert sum(r.null_count for r in m) == n_null
+    res = pipeline.verify_roundtrip(spark, df, store, content_col="body")
+    assert res["ok"], res

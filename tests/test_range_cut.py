@@ -110,6 +110,28 @@ def test_sorted_input_holds_one_group_plus_one_batch():
     assert peak <= max(sizes) * row_bytes + 3 * batch_bytes
 
 
+def test_lost_sort_raises_naming_the_group():
+    """A group that appears again after the stream passed it means the
+    input lost its sort: the sorted loop raises instead of writing
+    overlapping chunks and s-tagged fragments."""
+    def batch(keys):
+        return pa.record_batch({
+            "__repo": pa.array(keys),
+            "__bucket": pa.array(np.zeros(len(keys), np.int32)),
+            "k": pa.array(np.arange(len(keys))),
+            "txt": pa.array(["x"] * len(keys)),
+        })
+
+    got = []
+    with pytest.raises(ValueError, match=r"\('a', 0\)"):
+        for key, _, final in pipeline._group_slices(
+                iter([batch(["a", "a", "b"]), batch(["b", "c"]),
+                      batch(["a"])]), ["k", "txt"], None,
+                sorted_input=True):
+            got.append((key, final))
+    assert got == [(("a", 0), True), (("b", 0), True)]
+
+
 # ---------------------------------------------------------------------------
 # the range store, end to end
 # ---------------------------------------------------------------------------

@@ -53,7 +53,7 @@ def _kernel_batches(n_batches, rows_per, repo="r", bucket=0):
 def test_encode_kernel_flushes_before_input_exhausted():
     columns = [("k", "bigint"), ("txt", "string")]
     target = 16 << 10  # flush threshold = 2x = 32 KB
-    fn = pipeline._encode_stream_fn(columns, None, ["k"], "@b7", target)
+    fn = pipeline._encode_stream_fn(columns, None, "@b7", target)
 
     consumed = {"n": 0, "done": False}
 
@@ -123,7 +123,7 @@ def test_encode_kernel_flushes_before_input_exhausted():
 def test_encode_kernel_small_group_single_chunk():
     """Groups under the threshold still produce one untagged chunk."""
     columns = [("k", "bigint"), ("txt", "string")]
-    fn = pipeline._encode_stream_fn(columns, None, ["k"], "", 8 << 20)
+    fn = pipeline._encode_stream_fn(columns, None, "", 8 << 20)
     out = list(fn(_kernel_batches(3, 50)))
     assert len(out) == 1
     assert out[0].column("chunk_id")[0].as_py() == "r#0"
