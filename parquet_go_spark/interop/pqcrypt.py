@@ -247,8 +247,8 @@ def pyarrow_key_retriever(unwrap):
 class ChunkCrypto:
     """Injected into each encrypted chunk's ColumnMetaData dict under
     the "__crypto__" key at footer-normalization time — string keys
-    cannot collide with thrift field ids, survive _load_chunk's dict
-    copy, and pickle cleanly to executors."""
+    cannot collide with thrift field ids and pickle cleanly to
+    executors."""
 
     key: bytes
     file_aad: bytes

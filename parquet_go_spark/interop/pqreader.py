@@ -499,17 +499,16 @@ def _chunk_codec(meta: dict) -> str | None:
     return codec
 
 
-def _leaf_data(defs_parts, reps_parts, val_parts, leaf,
-               total: int) -> _LeafData:
-    """Combine per-page payloads. A None defs/reps part means the page
-    had no such level stream (max_def/max_rep == 0) — materialized
-    once here (zeros), not per page."""
+def _leaf_data(parts: list, leaf: _Node) -> _LeafData:
+    """Combine decoded (defs, reps, values, n_entries) parts. A None
+    defs/reps means the part had no such level stream (max_def/max_rep
+    == 0) — materialized once here (zeros), not per part."""
     if leaf.max_def == 0:
-        defs = np.zeros(total, np.int64)
+        defs = np.zeros(sum(p[3] for p in parts), np.int64)
         val_idx = None  # identity; _assemble's required-flat path
         #                 returns the values directly, never an index
     else:
-        defs = np.concatenate(defs_parts) if defs_parts \
+        defs = np.concatenate([p[0] for p in parts]) if parts \
             else np.zeros(0, np.int64)
         nn = defs == leaf.max_def
         if nn.all():  # nullable column, no actual nulls: identity
@@ -521,9 +520,9 @@ def _leaf_data(defs_parts, reps_parts, val_parts, leaf,
         # identity) — zero-length beats 8·total bytes of zeros
         reps = np.zeros(0, np.int64)
     else:
-        reps = np.concatenate(reps_parts) if reps_parts \
+        reps = np.concatenate([p[1] for p in parts]) if parts \
             else np.zeros(0, np.int64)
-    values = _concat_values(val_parts, leaf) if val_parts \
+    values = _concat_values([p[2] for p in parts], leaf) if parts \
         else np.zeros(0, np.int64)
     return _LeafData(defs, reps, values, val_idx)
 
@@ -540,36 +539,6 @@ def _chunk_crypto(meta: dict, leaf: _Node):
             f"pqreader: column {'.'.join(leaf.path)} is encrypted — "
             "pass decryption=FileDecryption(...)")
     return c
-
-
-def _read_leaf_chunk(data: bytes, meta: dict, leaf: _Node,
-                     verify: bool = False) -> _LeafData:
-    codec = _chunk_codec(meta)
-    crypto = _chunk_crypto(meta, leaf)
-    start = meta.get(11) or meta[9]
-    num_values = meta[5]
-    pos = start
-    seen = 0
-    page_ord = 0
-    has_dict_first = crypto is not None and meta.get(
-        "__has_dict__", (meta.get(11) or None) is not None)
-    dictionary_vals = None
-    defs_parts, reps_parts, val_parts = [], [], []
-    while seen < num_values:
-        kind, payload, pos = _decode_page(
-            data, pos, leaf, codec, dictionary_vals, verify,
-            crypto=crypto, page_ord=page_ord,
-            is_dict=has_dict_first and pos == start)
-        if kind == "dict":
-            dictionary_vals = payload
-            continue
-        defs, reps, values, nv = payload
-        val_parts.append(values)
-        defs_parts.append(defs)
-        reps_parts.append(reps)
-        seen += nv
-        page_ord += 1
-    return _leaf_data(defs_parts, reps_parts, val_parts, leaf, seen)
 
 
 # ------------------------------------------------------------- assembly
@@ -635,7 +604,7 @@ def _values_to_arrow(leaf: _Node, vals) -> pa.Array:
             return _ints_to_decimal(ints, typ)
         if small:
             # INT32/INT64-backed decimals: no per-row Python; the
-            # pipeline module (pandas) loads only when one is read
+            # pipeline module (pyspark) loads only when one is read
             from parquet_go_spark.plans.pipeline import _values_to_decimal
 
             return _values_to_decimal(
@@ -1674,20 +1643,11 @@ def _row_mask(arr, op: str, value, leaf: _Node):
     return ops[op](arr, scalar)
 
 
-def _load_chunk(f, meta: dict) -> tuple[bytes, dict]:
-    """Read exactly one column chunk's byte range; offsets rebased so
-    _read_leaf_chunk decodes from position 0."""
-    start = meta.get(11) or meta[9]
-    f.seek(start)
-    buf = f.read(meta[7])
-    m2 = dict(meta)
-    m2.pop(11, None)
-    m2[9] = 0
-    # the rebase erases the dictionary offset; the encrypted page walk
-    # needs dictionary-presence UP FRONT (the first page's module AAD
-    # differs), so carry it as a marker the rebase cannot destroy
-    m2["__has_dict__"] = (meta.get(11) or None) is not None
-    return buf, m2
+def _load_chunk(f, meta: dict) -> bytes:
+    """Read exactly one column chunk's byte range, the dictionary page
+    (if any) first: the one whole-chunk read."""
+    f.seek(meta.get(11) or meta[9])
+    return f.read(meta[7])
 
 
 # ------------------------------------------- page-level skipping
@@ -1859,8 +1819,7 @@ def _surviving_pages(f, meta: dict, leaf: _Node, locs, ranges,
     dictionary page occupies [chunk start, first OffsetIndex page),
     and some writers leave dictionary_page_offset unset even when one
     exists (data_page_offset then points at it), so detect by the
-    byte gap, not the footer field. Shared by the non-repeated and
-    repeated page-trimmed readers."""
+    byte gap, not the footer field."""
     codec = _chunk_codec(meta)
     crypto = _chunk_crypto(meta, leaf)
     dictionary_vals = None
@@ -1900,71 +1859,83 @@ def _surviving_pages(f, meta: dict, leaf: _Node, locs, ranges,
         yield runs, payload, row1 - row0
 
 
-def _read_leaf_rows(f, meta: dict, leaf: _Node, locs, ranges,
-                    rg_rows: int, verify: bool = False) -> _LeafData:
-    """Decode only the pages of a non-repeated leaf (max_rep == 0 —
-    top-level scalar OR struct field: one entry per row either way)
-    overlapping `ranges`, trimmed to exactly those rows."""
-    max_def = leaf.max_def
-    defs_parts, val_parts = [], []
-    n_decoded = 0  # actual rows decoded — NOT the requested ranges:
-    #                a malformed OffsetIndex (head gap) must trip the
-    #                rows-vs-footer guard, not silently truncate
-    for runs, payload, span in _surviving_pages(
-            f, meta, leaf, locs, ranges, rg_rows, verify):
-        defs, _reps, values, nv = payload
-        if nv != span:
-            raise ValueError(
-                f"pqreader: page row count {nv} != offset-index span "
-                f"{span} for column {leaf.path}")
-        if defs is None:  # all present: value index == row index
-            nn_cum = None
-        else:
-            nn_cum = np.zeros(nv + 1, dtype=np.int64)
-            np.cumsum(defs == max_def, out=nn_cum[1:])
-        for aa, bb in runs:
-            n_decoded += bb - aa
-            defs_parts.append(None if defs is None else defs[aa:bb])
-            val_parts.append(_slice_vals(
-                values,
-                aa if nn_cum is None else int(nn_cum[aa]),
-                bb if nn_cum is None else int(nn_cum[bb])))
-    # non-repeated leaves (max_rep == 0): reps are never materialized
-    return _leaf_data(defs_parts, [], val_parts, leaf, n_decoded)
+def _walked_pages(f, meta: dict, leaf: _Node, verify: bool):
+    """Yield every data page's payload of one chunk, in order, from
+    one _load_chunk read; a leading dictionary page is decoded on the
+    way. An encrypted page's module AAD needs its kind and data-page
+    ordinal UP FRONT, so the dictionary comes from the footer field."""
+    buf = _load_chunk(f, meta)
+    codec = _chunk_codec(meta)
+    crypto = _chunk_crypto(meta, leaf)
+    has_dict = crypto is not None and bool(meta.get(11))
+    dictionary_vals = None
+    pos = seen = page_ord = 0
+    while seen < meta[5]:
+        kind, payload, next_pos = _decode_page(
+            buf, pos, leaf, codec, dictionary_vals, verify,
+            crypto=crypto, page_ord=page_ord, is_dict=has_dict and pos == 0)
+        pos = next_pos
+        if kind == "dict":
+            dictionary_vals = payload
+            continue
+        seen += payload[3]
+        page_ord += 1
+        yield payload
 
 
-def _read_leaf_rows_rep(f, meta: dict, leaf: _Node, locs, ranges,
-                        rg_rows: int, verify: bool = False) -> _LeafData:
-    """_read_leaf_rows for REPEATED leaves (max_rep > 0): a page holds
-    ENTRIES, a row begins at each rep == 0 entry, and the spec pins
-    pages to row boundaries whenever a page index is written — so each
-    requested row run maps to one contiguous entry slice per page
-    (a spec-violating row-straddling page fails loudly below, the
-    same strictness as the non-repeated reader's span guard). Rows
-    outside `ranges` cost zero page reads."""
-    max_def = leaf.max_def
-    defs_parts, reps_parts, val_parts = [], [], []
-    for runs, payload, span in _surviving_pages(
-            f, meta, leaf, locs, ranges, rg_rows, verify):
-        defs, reps, values, nv = payload
-        # max_def >= max_rep >= 1 for a repeated leaf, so _decode_page
-        # always materializes both level streams here
-        row_starts = np.flatnonzero(reps == 0)
-        if len(row_starts) != span:
-            raise ValueError(
-                f"pqreader: page row count {len(row_starts)} != "
-                f"offset-index span {span} for column {leaf.path}")
+def _trim(payload, leaf: _Node, runs, span: int, indexed: bool):
+    """Yield one (defs, reps, values, n_entries) part per row run of a
+    decoded payload — a page, or a walked chunk's pages joined. A row
+    starts at every entry of a flat leaf and at each rep == 0 entry of
+    a repeated one; runs are row intervals relative to the payload's
+    first row, which must hold `span` rows (the offset-index span of a
+    page, the footer's row count of a chunk)."""
+    defs, reps, values, nv = payload
+    starts = None if reps is None else np.flatnonzero(reps == 0)
+    rows = nv if starts is None else len(starts)
+    if rows != span:
+        raise ValueError(
+            f"pqreader: page row count {rows} != offset-index span "
+            f"{span} for column {leaf.path}" if indexed else
+            f"pqreader: column {leaf.path} has {rows} rows, footer "
+            f"says {span}")
+    nn_cum = None  # None: all present, value index == entry index
+    if defs is not None:
         nn_cum = np.zeros(nv + 1, dtype=np.int64)
-        np.cumsum(defs == max_def, out=nn_cum[1:])
-        for aa, bb in runs:
-            ea = int(row_starts[aa])
-            eb = nv if bb == len(row_starts) else int(row_starts[bb])
-            defs_parts.append(defs[ea:eb])
-            reps_parts.append(reps[ea:eb])
-            val_parts.append(_slice_vals(
-                values, int(nn_cum[ea]), int(nn_cum[eb])))
-    # total is only consulted for max_def == 0, impossible here
-    return _leaf_data(defs_parts, reps_parts, val_parts, leaf, 0)
+        np.cumsum(defs == leaf.max_def, out=nn_cum[1:])
+    for aa, bb in runs:
+        ea, eb = aa, bb
+        if starts is not None:
+            ea = int(starts[aa])
+            eb = nv if bb == rows else int(starts[bb])
+        yield (None if defs is None else defs[ea:eb],
+               None if reps is None else reps[ea:eb],
+               _slice_vals(values, ea if nn_cum is None else int(nn_cum[ea]),
+                           eb if nn_cum is None else int(nn_cum[eb])),
+               eb - ea)
+
+
+def _read_leaf(f, meta: dict, leaf: _Node, ranges, locs, rg_rows: int,
+               verify: bool) -> _LeafData:
+    """The one leaf reader: decode one column chunk's pages, keeping
+    the rows in `ranges` (sorted, disjoint row intervals of the row
+    group; None keeps every row). With `ranges` and the chunk's
+    OffsetIndex `locs`, only the overlapping pages are read and each is
+    trimmed on its own (a page index pins pages to row boundaries).
+    Otherwise one read loads the chunk and its pages are walked in
+    order; a repeated row may straddle those pages, so they are joined
+    before the trim."""
+    if ranges is not None and locs is not None:
+        return _leaf_data([part for runs, page, span in _surviving_pages(
+            f, meta, leaf, locs, ranges, rg_rows, verify)
+            for part in _trim(page, leaf, runs, span, True)], leaf)
+    ld = _leaf_data(list(_walked_pages(f, meta, leaf, verify)), leaf)
+    if ranges is None:
+        return ld
+    chunk = (ld.defs if leaf.max_def else None,
+             ld.reps if leaf.max_rep else None, ld.values, len(ld.defs))
+    return _leaf_data(list(_trim(chunk, leaf, ranges, rg_rows, False)),
+                      leaf)
 
 
 def _intersect_ranges(a, b):
@@ -1995,7 +1966,7 @@ def _union_ranges(a, b):
 
 
 def _tree_page_ranges(f, cc_by_path: dict, node, rg_n: int,
-                      memo: dict | None = None):
+                      memo: dict):
     """Surviving row ranges of ONE row group from the page indexes,
     over the whole predicate tree. Returns None (no page information
     — read everything), [] (every row refuted — skip the group), or a
@@ -2003,21 +1974,20 @@ def _tree_page_ranges(f, cc_by_path: dict, node, rg_n: int,
     stops at the first empty intersection; OR unions them, but any
     uninformed disjunct makes the whole OR uninformed (its rows could
     be anywhere). memo caches each column's (ColumnIndex, OffsetIndex)
-    so several leaves on one column cost one metadata read."""
-    if memo is None:
-        memo = {}
+    by leaf path, so several leaves on one column cost one metadata
+    read and read_table reuses the OffsetIndexes it holds."""
     if isinstance(node, _Pred):
         null_op = node.op in ("isnull", "notnull")
         if not null_op \
                 and not (node.trust and node.stat_cmp is not None):
             return None
-        if node.name in memo:
-            ci, locs = memo[node.name]
+        if node.leaf.path in memo:
+            ci, locs = memo[node.leaf.path]
         else:
             pcc = cc_by_path.get(node.leaf.path)
             ci = _column_index(f, pcc) if pcc is not None else None
             locs = _offset_index(f, pcc) if pcc is not None else None
-            memo[node.name] = (ci, locs)
+            memo[node.leaf.path] = (ci, locs)
         if ci is None or locs is None or len(ci[0]) != len(locs):
             return None
         keep = _page_keep_null(ci, node) if null_op \
@@ -2124,75 +2094,40 @@ def read_table(path: str, columns: list[str] | None = None,
             if tree is not None and not _tree_survives(
                     tree, lambda p: _rg_survives(f, rg, p)):
                 continue
-            chunk_by_path, cc_by_path = {}, {}
+            cc_by_path = {}
             for cc in rg[1]:
-                meta = cc[3]
                 p = tuple(x.decode() if isinstance(x, bytes) else str(x)
-                          for x in meta[3])
-                chunk_by_path[p] = meta
+                          for x in cc[3][3])
                 cc_by_path[p] = cc
             for p in leaves:
-                if p not in chunk_by_path:
+                if p not in cc_by_path:
                     raise ValueError(
                         f"pqreader: column {p} missing in footer")
-            # page-level skipping inside a surviving row group (flat
-            # schemas; needs each conjunct column's ColumnIndex and an
-            # OffsetIndex on every projected column). Conjuncts prune
-            # on their own page grids; survivors intersect as row
-            # ranges.
-            page_ranges = page_ois = None
+            # page-level skipping inside a surviving row group:
+            # conjuncts prune on their own columns' page indexes, and
+            # survivors intersect as row ranges (predicate leaves are
+            # flat by compile-time contract; PROJECTED columns may be
+            # nested — _read_leaf trims them by row)
+            sub = None  # rows of this group to read; None: all
+            memo = {}  # leaf path → (ColumnIndex, OffsetIndex)
             if tree is not None:
-                # predicate leaves are flat by compile-time contract;
-                # PROJECTED columns may be nested — their pages trim
-                # by row via the rep-aware reader below
-                r = _tree_page_ranges(f, cc_by_path, tree, rg_n)
-                if r is not None and not r:
+                sub = _tree_page_ranges(f, cc_by_path, tree, rg_n, memo)
+                if sub is not None and not sub:
                     continue  # every row page-refuted: finer than
                     #           chunk stats, still zero data reads
-                page_ranges = r
-            gathered = []  # memo: OffsetIndexes read at most once per rg
-
-            def all_ois():
-                if not gathered:
-                    ois = {p: _offset_index(f, cc_by_path[p])
-                           for p in leaves}
-                    gathered.append(
-                        ois if all(v is not None for v in ois.values())
-                        else None)
-                return gathered[0]
-
-            if page_ranges is not None:
-                page_ois = all_ois()
-                if page_ois is None:
-                    page_ranges = None
-            # combine the predicate's surviving pages with the
-            # row_range slice of this group
-            sub = page_ranges
             if local is not None:
                 sub = _intersect_ranges(sub or [(0, rg_n)], [local])
                 if not sub:
                     continue
-                if page_ois is None:
-                    page_ois = all_ois()
-            slice_after = None
-            leaf_data = {}
-            if sub is not None and page_ois is not None:
-                for p, lf in leaves.items():
-                    fn = (_read_leaf_rows if lf.max_rep == 0
-                          else _read_leaf_rows_rep)
-                    leaf_data[p] = fn(
-                        f, chunk_by_path[p], lf, page_ois[p],
-                        sub, rg_n, verify_checksums)
-                n_rows = sum(b - a for a, b in sub)
-            else:
-                for p, lf in leaves.items():
-                    buf, meta2 = _load_chunk(f, chunk_by_path[p])
-                    leaf_data[p] = _read_leaf_chunk(
-                        buf, meta2, lf, verify_checksums)
-                n_rows = rg_n
-                # no page index: decode the whole group, then slice
-                # the assembled rows
-                slice_after = local
+            # every OffsetIndex before any page: the indexes sit
+            # together, so one buffered read serves several
+            ois = {} if sub is None else {
+                p: memo[p][1] if p in memo
+                else _offset_index(f, cc_by_path[p]) for p in leaves}
+            leaf_data = {p: _read_leaf(f, cc_by_path[p][3], lf, sub,
+                                       ois.get(p), rg_n, verify_checksums)
+                         for p, lf in leaves.items()}
+            n_rows = rg_n if sub is None else sum(b - a for a, b in sub)
             starts, ends = {}, {}
             ident = None  # one shared identity for every flat leaf
             for p, ld in leaf_data.items():
@@ -2221,9 +2156,6 @@ def read_table(path: str, columns: list[str] | None = None,
                 [a.cast(fl.type) if a.type != fl.type else a
                  for a, fl in zip(arrays, arrow_fields)],
                 schema=pa.schema(arrow_fields))
-            if slice_after is not None:
-                rb = rb.slice(slice_after[0],
-                              slice_after[1] - slice_after[0])
             batches.append(rb)
     if not batches:
         return pa.schema(arrow_fields).empty_table()

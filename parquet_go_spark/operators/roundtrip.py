@@ -10,8 +10,8 @@ scenarios, lifted onto Spark partitions.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
@@ -29,14 +29,14 @@ def codec_roundtrip(
 
     def fn(batches):
         for batch in batches:
-            s = batch.column(0).to_pandas()
+            arr = batch.column(0)
             if sort_within:
-                s = s.sort_values(kind="mergesort").reset_index(drop=True)
-            values = pipeline._series_to_values(s, spark_type)
+                arr = arr.take(pc.sort_indices(arr))
+            values = pipeline._arrow_to_values(arr, spark_type)
             blob = chunklib.encode_chunk(values, kind, codec, dict_wrap=dict_wrap)
             decoded, meta = chunklib.decode_chunk(blob)
-            assert meta["n"] == len(s)
-            out = pipeline._values_to_series(decoded, spark_type)
-            yield pa.RecordBatch.from_pandas(pd.DataFrame({column: out}))
+            assert meta["n"] == len(arr)
+            out = pipeline._values_to_arrow(decoded, spark_type)
+            yield pa.RecordBatch.from_arrays([out], names=[column])
 
     return df.select(column).mapInArrow(fn, f"{column} {spark_type}")

@@ -32,7 +32,6 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.errors import AnalysisException
@@ -265,24 +264,6 @@ def _values_to_decimal(values, precision: int, scale: int) -> pa.Array:
     return pa.Array.from_buffers(pa.decimal128(precision, scale), n, [None, buf])
 
 
-def _series_to_values(s: pd.Series, spark_type: str):
-    """pandas column → kernel value container (ByteArrays or ndarray)."""
-    if spark_type in ("string", "binary"):
-        arr = pa.Array.from_pandas(s, type=pa.binary() if spark_type == "binary" else pa.string())
-        return ByteArrays.from_arrow(arr)
-    dp = _decimal_info(spark_type)
-    if dp is not None:
-        arr = pa.Array.from_pandas(s, type=pa.decimal128(*dp))
-        return _decimal_to_values(arr, dp[0])
-    if spark_type in ("timestamp", "timestamp_ntz"):
-        return s.values.astype("datetime64[us]").astype(np.int64)
-    if spark_type == "date":
-        return s.values.astype("datetime64[D]").astype(np.int32)
-    dt = {"bigint": np.int64, "int": np.int32, "double": np.float64,
-          "float": np.float32, "boolean": bool}[spark_type]
-    return s.to_numpy(dtype=dt)
-
-
 def _arrow_to_values(arr: pa.Array, spark_type: str):
     """Arrow column → kernel value container, zero per-row boxing."""
     if isinstance(arr, pa.ChunkedArray):
@@ -327,23 +308,6 @@ def _values_to_arrow(values, spark_type: str) -> pa.Array:
     if spark_type == "date":
         return pa.array(values, pa.int32()).cast(pa.date32())
     return pa.array(values)
-
-
-def _values_to_series(values, spark_type: str) -> pd.Series:
-    dp = _decimal_info(spark_type)
-    if dp is not None:
-        return _values_to_decimal(values, *dp).to_pandas()
-    if spark_type == "string":
-        return values.to_arrow(pa.string()).to_pandas()
-    if spark_type == "binary":
-        if isinstance(values, np.ndarray):  # FLBA-upgraded uniform chunk
-            values = _flba_to_byte_values(values)
-        return values.to_arrow(pa.binary()).to_pandas()
-    if spark_type in ("timestamp", "timestamp_ntz"):
-        return pd.Series(values.astype("datetime64[us]"))
-    if spark_type == "date":
-        return pd.Series(values.astype("datetime64[D]").astype("datetime64[us]")).dt.date
-    return pd.Series(values)
 
 
 def _column_sha256(values, spark_type: str, validity=None) -> str:

@@ -940,18 +940,19 @@ def test_export_parquet_decimals_all_readers(spark, tmp_path):
 
 # -------------------------------------- round-4: reader-side pruning
 def _count_chunk_reads(monkeypatch):
-    """Patch _read_leaf_chunk to count decoded chunks (pruned row
-    groups must never reach it)."""
+    """Patch _load_chunk, the one whole-chunk read, to count loaded
+    chunks by column path (pruned row groups must never reach it)."""
     from parquet_go_spark.interop import pqreader
 
     calls = []
-    orig = pqreader._read_leaf_chunk
+    orig = pqreader._load_chunk
 
-    def spy(data, meta, leaf, *a, **kw):
-        calls.append(leaf.path)
-        return orig(data, meta, leaf, *a, **kw)
+    def spy(f, meta, *a, **kw):
+        calls.append(tuple(x.decode() if isinstance(x, bytes) else str(x)
+                           for x in meta[3]))
+        return orig(f, meta, *a, **kw)
 
-    monkeypatch.setattr(pqreader, "_read_leaf_chunk", spy)
+    monkeypatch.setattr(pqreader, "_load_chunk", spy)
     return calls
 
 
@@ -3106,9 +3107,12 @@ def test_pqreader_nested_row_range_page_trim(monkeypatch, tmp_path):
 
 
 def test_pqreader_struct_and_deep_nested_page_trim(tmp_path):
-    """Struct fields and deep nesting (list<struct<list>>) stay exact
-    under the page-trimmed path — every row range assembles the same
-    values pyarrow produces."""
+    """Struct fields, maps (empty and null ones too) and deep nesting
+    (list<struct<list>>) stay exact under row trimming, with a page
+    index (only the overlapping pages are read) and without one (the
+    walked chunk is trimmed after its pages are joined, so a repeated
+    row that straddles pages stays whole) — every row range and
+    predicate assembles the same values pyarrow produces."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -3118,33 +3122,42 @@ def test_pqreader_struct_and_deep_nested_page_trim(tmp_path):
     n = 5000
     tbl = pa.table({
         "k": pa.array(range(n), pa.int64()),
-        "s": pa.array([{"a": i, "b": f"x{i}"} for i in range(n)],
+        "s": pa.array([{"a": i, "b": f"x{i}"} if i % 7 else None
+                       for i in range(n)],
                       pa.struct([("a", pa.int64()), ("b", pa.string())])),
         "deep": pa.array(
             [[{"v": [i, i + 1]}] if i % 3 else None for i in range(n)],
             pa.list_(pa.struct([("v", pa.list_(pa.int64()))]))),
+        "m": pa.array(
+            [None if i % 11 == 0 else
+             [(f"k{j}", i * j) for j in range(i % 4)] for i in range(n)],
+            pa.map_(pa.string(), pa.int64())),
     })
-    p = str(tmp_path / "deeppage.parquet")
-    pq.write_table(tbl, p, row_group_size=n, data_page_size=1024,
-                   write_page_index=True, use_dictionary=False)
-    for pred, rr in ((("k", ">=", 4321), None), (("k", "<", 17), None),
-                     (None, (1234, 1300)),
-                     ([("k", ">=", 100), ("k", "<", 130)], None)):
-        got = pqreader.read_table(p, predicate=pred, row_range=rr)
-        if pred is not None:
-            conj = pred if isinstance(pred, list) else [pred]
-            mask = None
-            for c_, op, lit in conj:
-                m = {"<": pc.less, ">=": pc.greater_equal}[op](
-                    tbl.column(c_), lit)
-                mask = m if mask is None else pc.and_kleene(mask, m)
-            exp = tbl.filter(mask)
-        else:
-            exp = tbl.slice(rr[0], rr[1] - rr[0])
-        assert got.num_rows == exp.num_rows, (pred, rr)
-        for col in ("k", "s", "deep"):
-            assert got.column(col).to_pylist() \
-                == exp.column(col).to_pylist(), (pred, rr, col)
+    cases = [(("k", ">=", 4321), None), (("k", "<", 17), None),
+             (None, (1234, 1300)), (None, (0, 1)), (None, (n - 1, n)),
+             (None, (17, 4321)), (("k", ">=", 100), (50, 4000)),
+             ([("k", ">=", 100), ("k", "<", 130)], None)]
+    for index in (True, False):
+        p = str(tmp_path / f"deeppage-{index}.parquet")
+        pq.write_table(tbl, p, row_group_size=n, data_page_size=1024,
+                       write_page_index=index, use_dictionary=False)
+        assert pq.ParquetFile(p).metadata.row_group(0).column(0) \
+            .has_offset_index == index
+        for pred, rr in cases:
+            got = pqreader.read_table(p, predicate=pred, row_range=rr)
+            exp = tbl if rr is None else tbl.slice(rr[0], rr[1] - rr[0])
+            if pred is not None:
+                conj = pred if isinstance(pred, list) else [pred]
+                mask = None
+                for c_, op, lit in conj:
+                    m = {"<": pc.less, ">=": pc.greater_equal}[op](
+                        exp.column(c_), lit)
+                    mask = m if mask is None else pc.and_kleene(mask, m)
+                exp = exp.filter(mask)
+            assert got.num_rows == exp.num_rows, (index, pred, rr)
+            for col in ("k", "s", "deep", "m"):
+                assert got.column(col).to_pylist() \
+                    == exp.column(col).to_pylist(), (index, pred, rr, col)
 
 
 def test_pqreader_our_list_writer_page_trim(monkeypatch, tmp_path):
