@@ -64,6 +64,13 @@ def sf_from_dir(d: str) -> float:
         return 0.1
 
 
+def driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g: a heap the host
+    can give (a 15 GB host gets 7g, not 48g)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2 // (1 << 30)))}g"
+
+
 def build_spark():
     from pyspark.sql import SparkSession
 
@@ -76,7 +83,7 @@ def build_spark():
         # container default is already UTC, and an explicit setting makes
         # Spark ship TZ into Arrow/Python workers, measured 2.5x slower
         # on the mapInArrow encode path
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.log.level", "ERROR")
         .getOrCreate()

@@ -1113,12 +1113,16 @@ def _out_field(name: str, spark_type: str) -> StructField:
 
 
 def _decode_stream_fn(cols: list[tuple[str, str]]):
-    """Build the mapInArrow decode kernel. Input blob rows arrive sorted
-    by chunk_id within the partition (repartition + sortWithinPartitions
-    upstream), so the kernel holds exactly ONE chunk's decoded streams at
-    a time and yields it the moment the chunk_id changes — peak memory is
-    one decoded chunk per task, never the whole partition. Factored out
-    of _decode_blobs so tests can drive it directly and assert the
+    """Build the mapInArrow decode kernel. Each chunk's blob rows arrive
+    consecutively (decode_table, _decode_blobs), so the kernel holds
+    exactly ONE chunk's decoded streams at a time and yields it the
+    moment the chunk_id changes — peak memory is one decoded chunk per
+    task, never the whole partition. The kernel relies on that order and
+    says so when it is broken: a chunk_id that reappears after the
+    kernel passed it, a chunk missing a column's stream, or a stream
+    whose row count disagrees with the chunk's raises ValueError naming
+    the chunk (the rule of _group_slices(sorted_input=True)). Factored
+    out of _decode_blobs so tests can drive it directly and assert the
     streaming behavior (yield-before-exhaustion)."""
     col_types = dict(cols)
 
@@ -1132,14 +1136,26 @@ def _decode_stream_fn(cols: list[tuple[str, str]]):
             arr = arr.take(index)
         return arr
 
-    def _unshred(st: dict, spark_type: str, prefix: str, n: int) -> pa.Array:
+    def _unshred(st: dict, spark_type: str, prefix: str, n: int,
+                 where: str) -> pa.Array:
         """Recursive Reconstruct — the inverse of _shred_column, walking
         the same stream-name grammar. st maps stream name →
         (values, validity) for one column of one chunk; n is the row
-        count of the current nesting domain."""
+        count of the current nesting domain; where names the chunk and
+        column in errors."""
         el = _list_elem(spark_type)
         mk = _map_kv(spark_type)
         sf = _struct_fields(spark_type)
+
+        def _need(key: str):
+            if key not in st:
+                raise ValueError(f"{where}: no {key!r} stream")
+            return st[key]
+
+        def _check_len(key: str, got: int):
+            if got != n:
+                raise ValueError(
+                    f"{where}: stream {key!r} holds {got} rows, {n} expected")
 
         def _cont_valid(pfx, stream="valid"):
             """Container validity (round-5 nullable-container grammar);
@@ -1150,67 +1166,65 @@ def _decode_stream_fn(cols: list[tuple[str, str]]):
                 return np.asarray(st[vkey][0]).astype(bool)
             return None
 
-        if el is not None:
-            lengths, _ = st[_join_stream(prefix, "lengths")]
-            assert len(lengths) == n
+        if el is not None or mk is not None:
+            lkey = _join_stream(prefix, "lengths")
+            lengths, _ = _need(lkey)
+            _check_len(lkey, len(lengths))
             offsets = np.zeros(n + 1, dtype=np.int32)
             np.cumsum(lengths, out=offsets[1:])
-            child_prefix = (_join_stream(prefix, "item")
-                            if (_list_elem(el) is not None
-                                or _map_kv(el) is not None)
-                            else prefix)
-            child = _unshred(st, el, child_prefix, int(offsets[-1]))
+            n_flat = int(offsets[-1])
             valid = _cont_valid(prefix)
             if valid is None:
                 off_arr = pa.array(offsets, pa.int32())
             else:
-                # a null offset marks the list itself null (final
+                # a null offset marks the container itself null (final
                 # offset stays non-null per the Arrow layout)
                 off_arr = pa.array(
                     offsets, pa.int32(),
                     mask=np.concatenate([~valid, [False]]))
+        if el is not None:
+            child_prefix = (_join_stream(prefix, "item")
+                            if (_list_elem(el) is not None
+                                or _map_kv(el) is not None)
+                            else prefix)
+            child = _unshred(st, el, child_prefix, n_flat, where)
             return pa.ListArray.from_arrays(off_arr, child)
         if mk is not None:
             ktype, vtype = mk
-            lengths, _ = st[_join_stream(prefix, "lengths")]
-            assert len(lengths) == n
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(lengths, out=offsets[1:])
-            n_flat = int(offsets[-1])
-            karr = _unshred(st, ktype, _join_stream(prefix, "keys"), n_flat)
-            iarr = _unshred(st, vtype, _join_stream(prefix, "values"), n_flat)
-            valid = _cont_valid(prefix)
-            if valid is None:
-                off_arr = pa.array(offsets, pa.int32())
-            else:
-                off_arr = pa.array(
-                    offsets, pa.int32(),
-                    mask=np.concatenate([~valid, [False]]))
+            karr = _unshred(st, ktype, _join_stream(prefix, "keys"), n_flat,
+                            where)
+            iarr = _unshred(st, vtype, _join_stream(prefix, "values"),
+                            n_flat, where)
             return pa.MapArray.from_arrays(off_arr, karr, iarr)
         if sf is not None:
             children = [
-                _unshred(st, ftype, _join_stream(prefix, f"f:{fname}"), n)
+                _unshred(st, ftype, _join_stream(prefix, f"f:{fname}"), n,
+                         where)
                 for fname, ftype in sf
             ]
             valid = _cont_valid(prefix, "s:valid")
             return pa.StructArray.from_arrays(
                 children, names=[fname for fname, _ in sf],
                 mask=pa.array(~valid) if valid is not None else None)
-        arr = _rebuild(*st[prefix or "values"], spark_type)
-        assert len(arr) == n
+        key = prefix or "values"
+        arr = _rebuild(*_need(key), spark_type)
+        _check_len(key, len(arr))
         return arr
 
-    def _assemble(acc: dict, n_rows: int) -> pa.RecordBatch:
-        arrays = [
-            _unshred(acc[name], spark_type, "", n_rows)
-            for name, spark_type in cols
-        ]
+    def _assemble(cid: str, acc: dict, n_rows: int) -> pa.RecordBatch:
+        arrays = []
+        for name, spark_type in cols:
+            where = f"chunk {cid!r} column {name!r}"
+            if name not in acc:
+                raise ValueError(f"{where}: the chunk has no stream of it")
+            arrays.append(_unshred(acc[name], spark_type, "", n_rows, where))
         return pa.RecordBatch.from_arrays(arrays, names=[c for c, _ in cols])
 
     def decode(batches):
         cur_id = None
         cur_acc: dict = {}  # column -> stream -> (values, validity)
         cur_rows = 0
+        passed: set = set()  # chunk ids already yielded
         for batch in batches:
             cids = batch.column("chunk_id")
             names = batch.column("column")
@@ -1221,8 +1235,14 @@ def _decode_stream_fn(cols: list[tuple[str, str]]):
                 cid = cids[i].as_py()  # (metadata scale: one per column
                 # per chunk, thousands of values each — not per value)
                 if cid != cur_id:
+                    if cid in passed:
+                        raise ValueError(
+                            f"_decode_stream_fn: chunk {cid!r} reappeared "
+                            "after the kernel passed it; its blob rows are "
+                            "not consecutive")
                     if cur_id is not None:
-                        yield _assemble(cur_acc, cur_rows)
+                        passed.add(cur_id)
+                        yield _assemble(cur_id, cur_acc, cur_rows)
                     cur_id, cur_acc = cid, {}
                 name = names[i].as_py()
                 values, meta = chunklib.decode_chunk(blob_col[i].as_py())
@@ -1231,33 +1251,89 @@ def _decode_stream_fn(cols: list[tuple[str, str]]):
                     values, meta["validity"]
                 )
                 ctype = col_types.get(name)
-                if ctype is None or not _is_container(ctype):
-                    # scalar columns: the values stream covers every row;
-                    # nested streams live on flattened domains
-                    assert meta["n"] == cur_rows
+                # scalar columns: the values stream covers every row;
+                # nested streams live on flattened domains
+                if ((ctype is None or not _is_container(ctype))
+                        and meta["n"] != cur_rows):
+                    raise ValueError(
+                        f"chunk {cid!r} column {name!r}: stream "
+                        f"{streams[i].as_py()!r} holds {meta['n']} rows, "
+                        f"the chunk {cur_rows}")
         if cur_id is not None:
-            yield _assemble(cur_acc, cur_rows)
+            yield _assemble(cur_id, cur_acc, cur_rows)
 
     return decode
 
 
-def _decode_blobs(blobs: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
-    """Arrow-native decode: hash-partition blob rows by chunk_id, SORT by
-    chunk_id within partitions (cheap — metadata-scale row count), and
-    stream them through the one-chunk-in-flight kernel. One partition
-    per slot: memory is one chunk anyway, and every Python task has a
-    fixed start-up cost (PLANS.md, "Python tasks sized to the work")."""
-    out_schema = StructType([_out_field(c, t) for c, t in cols])
+def _chunks_within_row_groups(out_path: str) -> bool:
+    """True when no chunk's blob rows cross a parquet row group in any of
+    the store's blob files. Spark never splits a row group across input
+    partitions and a chunk never straddles files, so then a plain scan
+    hands each chunk whole and in order to one task. A file with one row
+    group is judged from its footer; a file with several (the colcodec
+    sink writes one chunk per row group, and a writer task's file passes
+    parquet.block.size, 128 MB) also from its chunk_id column, which is
+    metadata scale. Files are discovered as Spark's reader finds them
+    ('_'/'.'-prefixed entries skipped)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    if not _table_exists(out_path):
+        return True
+    for path in ds.dataset(out_path, format="parquet").files:
+        pf = pq.ParquetFile(path)
+        md = pf.metadata
+        if md.num_row_groups <= 1:
+            continue
+        ids = pf.read(columns=["chunk_id"]).column(0)
+        seen: set = set()
+        at = 0
+        for rg in range(md.num_row_groups):
+            n = md.row_group(rg).num_rows
+            here = set(pc.unique(ids.slice(at, n)).to_pylist())
+            if here & seen:
+                return False
+            seen |= here
+            at += n
+    return True
+
+
+def _chunks_together(blobs: DataFrame, chunks_whole: bool) -> DataFrame:
+    """blobs with each chunk's rows consecutive inside one partition.
+    chunks_whole says every chunk lies inside one row group of the input
+    (_chunks_within_row_groups), so the scan's partitions already hold
+    each chunk whole and in order and blobs is returned as it is.
+    Otherwise the rows are hash-partitioned by chunk_id into one
+    partition per slot (every Python task has a fixed start-up cost,
+    PLANS.md "Python tasks sized to the work") and sorted by it within
+    each."""
+    if chunks_whole:
+        return blobs
     n_parts = blobs.sparkSession.sparkContext.defaultParallelism
-    parts = blobs.repartition(n_parts, "chunk_id").sortWithinPartitions(
-        "chunk_id"
-    )
-    return parts.mapInArrow(_decode_stream_fn(cols), out_schema)
+    return blobs.repartition(n_parts, "chunk_id").sortWithinPartitions(
+        "chunk_id")
+
+
+def _decode_blobs(blobs: DataFrame, cols: list[tuple[str, str]],
+                  chunks_whole: bool) -> DataFrame:
+    """Arrow-native decode: stream blob rows through the
+    one-chunk-in-flight kernel where the scan put them, shuffled by
+    chunk_id only when a chunk crosses a row group (_chunks_together)."""
+    out_schema = StructType([_out_field(c, t) for c, t in cols])
+    return _chunks_together(blobs, chunks_whole).mapInArrow(
+        _decode_stream_fn(cols), out_schema)
 
 
 def decode_table(spark: SparkSession, out_path: str,
                  columns_subset: list[str] | None = None) -> DataFrame:
     """blobs table → original rows (order within chunks preserved).
+
+    The parquet scan feeds the decode kernel directly — each chunk is
+    decoded in the task that reads it, the analog of reader.go:63-65
+    decoding a row group's column chunks where they lie. Only a store
+    with a chunk across row groups (_chunks_within_row_groups, checked
+    in the driver) is shuffled by chunk_id first.
 
     columns_subset prunes both the output AND the blobs that are read —
     the analog of reader.go:63-65 projection (Spark's parquet reader
@@ -1268,7 +1344,7 @@ def decode_table(spark: SparkSession, out_path: str,
         keep = set(columns_subset)
         columns = [(c, t) for c, t in columns if c in keep]
         blobs = blobs.where(F.col("column").isin([c for c, _ in columns]))
-    return _decode_blobs(blobs, columns)
+    return _decode_blobs(blobs, columns, _chunks_within_row_groups(out_path))
 
 
 def _fill_expr(typ: str):
@@ -1338,9 +1414,11 @@ def compact_tables(
     cols = union
 
     verbatim_parts = []
+    verbatim_whole = True  # every verbatim input passes the row-group check
     convert_dfs = []
     for i, pth in enumerate(in_paths):
         if schemas[i] == union:
+            verbatim_whole = verbatim_whole and _chunks_within_row_groups(pth)
             verbatim_parts.append(
                 spark.read.parquet(pth).withColumn(
                     "chunk_id", F.concat(F.lit(f"t{i}:"), F.col("chunk_id"))
@@ -1361,14 +1439,20 @@ def compact_tables(
             blobs = blobs.unionByName(pdf)
         sizes = blobs.groupBy("chunk_id").agg(F.sum("raw_bytes").alias("b"))
         small_ids = sizes.where(F.col("b") < min_chunk_bytes).select("chunk_id")
-        big = blobs.join(F.broadcast(small_ids), "chunk_id", "left_anti")
+        # one output file per task: a chunk across input row groups is
+        # brought together first, so no chunk straddles output files
+        big = _chunks_together(
+            blobs.join(F.broadcast(small_ids), "chunk_id", "left_anti"),
+            verbatim_whole)
         big.write.mode("overwrite").parquet(out_path)
         _write_schema_sidecar(out_path, cols)
         n_small = small_ids.count()
         if n_small:
+            # the broadcast semi join keeps the scan's order, so a chunk
+            # whole in one row group still reaches one task in order
             convert_dfs.append(_decode_blobs(
                 blobs.join(F.broadcast(small_ids), "chunk_id", "left_semi"),
-                cols,
+                cols, verbatim_whole,
             ))
     else:
         os.makedirs(out_path, exist_ok=True)

@@ -294,8 +294,10 @@ def _read_file(path: str, tree, cols):
     """One blob file under the compiled filter tree (None = no
     filters): drop the chunks _refuted_chunks names — a row-level
     dataset filter, so their blob rows are skipped during the scan,
-    never materialized — and decode the rest. A file whose every chunk
-    is refuted is not read at all."""
+    never materialized — and decode the rest in file order: a file's
+    chunk rows are consecutive and the filter keeps their order (the
+    kernel raises if a chunk reappears). A file whose every chunk is
+    refuted is not read at all."""
     import pyarrow.parquet as pq
 
     from parquet_go_spark.plans import pipeline
@@ -307,7 +309,6 @@ def _read_file(path: str, tree, cols):
     tbl = pq.read_table(
         path, filters=[("chunk_id", "not in", refuted)] if refuted else None)
     if tbl.num_rows:
-        tbl = tbl.sort_by("chunk_id")  # kernel holds one chunk at a time
         yield from pipeline._decode_stream_fn(cols)(tbl.to_batches())
 
 

@@ -296,13 +296,37 @@ def test_decode_kernel_streams_one_chunk_at_a_time():
 
 def test_decode_kernel_merges_split_chunks():
     """Blob rows of one chunk split across input batches still assemble
-    into a single output chunk (sortWithinPartitions guarantees order)."""
+    into a single output chunk (its rows arrive consecutively: one row
+    group of a scan, or a shuffle sorted by chunk_id)."""
     fn = pipeline._decode_stream_fn([("v", "bigint"), ("w", "bigint")])
     b1 = _blob_batch("a", "v", np.arange(4, dtype=np.int64))
     b2 = _blob_batch("a", "w", np.arange(4, dtype=np.int64) * 2)
     out = list(fn(iter([b1, b2])))
     assert len(out) == 1
     assert out[0].column("w").to_pylist() == [0, 2, 4, 6]
+
+
+def test_decode_kernel_fails_loudly():
+    """Input the kernel cannot assemble raises ValueError naming the
+    chunk: a chunk_id that reappears after the kernel passed it, a
+    chunk missing a column's stream, a stream whose row count is not
+    the chunk's."""
+    cols = [("v", "bigint"), ("w", "bigint")]
+    vals = np.arange(4, dtype=np.int64)
+
+    def run(*batches):
+        return list(pipeline._decode_stream_fn(cols)(iter(batches)))
+
+    with pytest.raises(ValueError, match="'a' reappeared"):
+        run(_blob_batch("a", "v", vals), _blob_batch("a", "w", vals),
+            _blob_batch("b", "v", vals), _blob_batch("b", "w", vals),
+            _blob_batch("a", "v", vals))
+    with pytest.raises(ValueError, match="chunk 'a' column 'w'"):
+        run(_blob_batch("a", "v", vals))
+    short = _blob_batch("a", "w", vals[:3])
+    short = short.set_column(3, "n_rows", pa.array([4]))
+    with pytest.raises(ValueError, match="chunk 'a' column 'w'.*3 rows"):
+        run(_blob_batch("a", "v", vals), short)
 
 
 # ---------- range-ordered chunk layout ----------
