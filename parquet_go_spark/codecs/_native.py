@@ -1,20 +1,34 @@
-"""Optional compiled kernels (FSST encode/decode hot loops).
+"""Optional compiled kernels for the codec hot loops.
 
-The numpy FSST parse is allocation- and bandwidth-bound at ~18-20 MB/s
-per core (three measured optimization attempts rejected — see
-BASELINE.md); the honest lever named there is a native kernel. This
-module ships ~90 lines of C **as source inside the package** (so it is
+The package ships its C **as source** (`_C_SOURCE`, so it is
 `--py-files` compatible: every executor's Python worker compiles it once
-on first import with the host toolchain) and binds it with ctypes. If no
-C compiler is present, compilation fails, or the platform is not
-little-endian, everything silently falls back to the pure-numpy kernels
-— the numpy path remains the reference implementation and is exercised
-directly in tests via `SPARK_COLCODEC_NATIVE=0`.
+on first import with the host toolchain, cached by source hash) and
+binds it with ctypes. If no C compiler is present, compilation fails, or
+the platform is not little-endian, `load()` returns None and every
+caller runs its numpy kernel — the numpy paths remain the reference
+implementation and are exercised directly in tests via
+`SPARK_COLCODEC_NATIVE=0`. The same pattern as the reference's amd64
+assembly + purego kernel pairs. The kernels, their callers and their
+fallback rule:
 
-The C encoder is the FSST paper's canonical greedy longest-match parse
-(shortCodes-style 2-byte dispatch + per-prefix candidate lists ordered
-longest-first), not a translation of the numpy pair-merge parse; both
-produce valid streams for the same serialized symbol table, and the
+- `fsst_encode` / `fsst_decode` (codecs/fsst.py): greedy longest-match
+  parse and bounds-checked sequential decode. Decode returns -1 on a
+  malformed stream (fsst.py raises) and -2 on output overflow.
+- `rle_encode` / `rle_decode` (codecs/rle.py, widths 1..32): hybrid
+  RLE/bit-packed, byte-identical to the numpy encoder. Decode returns
+  -1 on a malformed varint or truncated bit-packed run, and rle.py
+  falls through to the numpy decoder.
+- `xxh64_batch` (codecs/bloom.py): the one bloom hash; never fails.
+- `dbp_decode` (codecs/delta.py): DELTA_BINARY_PACKED block walk after
+  the Python header parse — it also decodes DELTA_LENGTH_BYTE_ARRAY
+  lengths, both DELTA_BYTE_ARRAY streams and FSST's length stream.
+  Returns -1 on a truncated header or payload, an overlong varint or a
+  width over 64, and delta.py falls through to numpy, which raises.
+
+The C FSST encoder is the FSST paper's canonical greedy longest-match
+parse (shortCodes-style 2-byte dispatch + per-prefix candidate lists
+ordered longest-first), not a translation of the numpy pair-merge parse;
+both produce valid streams for the same serialized symbol table, and the
 sequential decoder accepts either. Blob bytes are deterministic per
 environment (required for manifest resume); cross-environment resume
 re-encodes only missing partitions, for which determinism is not
@@ -270,6 +284,30 @@ long rle_encode(const uint64_t *v, long n, int width, uint8_t *out)
     return o;
 }
 
+/* ULEB128 at in[*pos]; -1 when truncated or wider than 64 bits (the
+ * numpy readers take such a varint as a bigint and decide). */
+static inline int get_uvarint(const uint8_t *in, long len, long *pos,
+                              uint64_t *v)
+{
+    uint64_t h = 0;
+    int shift = 0;
+    for (;;) {
+        if (*pos >= len)
+            return -1;
+        uint8_t b = in[(*pos)++];
+        if (shift == 63 && b > 1)
+            return -1;
+        h |= (uint64_t)(b & 0x7F) << shift;
+        if (!(b & 0x80))
+            break;
+        shift += 7;
+        if (shift > 63)
+            return -1;
+    }
+    *v = h;
+    return 0;
+}
+
 /* Hybrid decode: fills exactly n values, skipping empty RLE runs.
  * Returns n, or -1 on anything anomalous — malformed/overlong varint,
  * or a bit-packed run whose declared payload exceeds the buffer — so
@@ -283,21 +321,9 @@ long rle_decode(const uint8_t *in, long len, long n, int width,
     int vbytes = (width + 7) / 8;
     uint64_t mask = width >= 64 ? ~0ULL : ((1ULL << width) - 1);
     while (got < n && pos < len) {
-        uint64_t h = 0;
-        int shift = 0;
-        for (;;) {
-            if (pos >= len)
-                return -1;
-            uint8_t b = in[pos++];
-            if (shift == 63 && b > 1)
-                return -1; /* bits past 2^64: numpy reads a bigint */
-            h |= (uint64_t)(b & 0x7F) << shift;
-            if (!(b & 0x80))
-                break;
-            shift += 7;
-            if (shift > 63)
-                return -1;
-        }
+        uint64_t h;
+        if (get_uvarint(in, len, &pos, &h) < 0)
+            return -1;
         if (h & 1) {
             long groups = (long)(h >> 1);
             /* payload is exactly groups*width bytes; compare without
@@ -380,11 +406,84 @@ long fsst_decode(const uint8_t *in, long n,
     }
     return o;
 }
+
+/* DELTA_BINARY_PACKED blocks, after the Python header parse: n values
+ * (n >= 2) whose block walk starts at in[pos]. Per block: zigzag min
+ * delta, nmini width bytes, then miniblocks of block_size/nmini deltas
+ * packed LSB-first at their width. Unpack, add the min and prefix-sum
+ * from `first` in one pass, wrapping at 64 bits; bits == 32 stores the
+ * low halves (uint32 out), else uint64. Unused trailing miniblocks carry
+ * no payload whatever width they declare. Returns the bytes consumed
+ * (the numpy path's `consumed`), or -1 on anything anomalous — truncated
+ * header or payload, overlong varint, width > 64, a miniblock that is
+ * not whole bytes — and the caller falls back to the numpy reference. */
+long dbp_decode(const uint8_t *in, long len, long pos, long n,
+                long block_size, long nmini, uint64_t first, int bits,
+                void *out)
+{
+    uint32_t *o32 = (uint32_t *)out;
+    uint64_t *o64 = (uint64_t *)out;
+    long mb = block_size / nmini, nd = n - 1, got = 0, k = 1;
+    uint64_t v = first;
+    if (bits == 32)
+        o32[0] = (uint32_t)v;
+    else
+        o64[0] = v;
+    while (got < nd) {
+        uint64_t u;
+        if (get_uvarint(in, len, &pos, &u) < 0)
+            return -1;
+        uint64_t mn = (u >> 1) ^ (0 - (u & 1));
+        if (nmini > len - pos)
+            return -1;
+        const uint8_t *widths = in + pos;
+        pos += nmini;
+        for (long j = 0; j < nmini && got + j * mb < nd; j++) {
+            int w = widths[j];
+            if (w > 64 || (mb * w) % 8)
+                return -1;
+            long span = mb * w / 8;
+            if (span > len - pos)
+                return -1;
+            const uint8_t *p = in + pos;
+            long cnt = nd - (got + j * mb);
+            if (cnt > mb)
+                cnt = mb;
+            uint64_t mask = w == 64 ? ~0ULL : ((1ULL << w) - 1);
+            for (long i = 0; i < cnt; i++) {
+                uint64_t x = 0;
+                if (w) {
+                    long bit = i * w, byte = bit >> 3;
+                    int sh = (int)(bit & 7);
+                    if (byte + 8 <= span) {
+                        memcpy(&x, p + byte, 8);
+                    } else {
+                        for (int b = 0; byte + b < span; b++)
+                            x |= (uint64_t)p[byte + b] << (8 * b);
+                    }
+                    x >>= sh;
+                    if (sh + w > 64) /* the value's top bits: byte + 8 */
+                        x |= (uint64_t)p[byte + 8] << (64 - sh);
+                    x &= mask;
+                }
+                v += x + mn;
+                if (bits == 32)
+                    o32[k++] = (uint32_t)v;
+                else
+                    o64[k++] = v;
+            }
+            pos += span;
+        }
+        got += block_size;
+    }
+    return pos;
+}
 """
 
 
 class _Lib:
-    __slots__ = ("encode", "decode", "xxh64", "rle_encode", "rle_decode")
+    __slots__ = ("encode", "decode", "xxh64", "rle_encode", "rle_decode",
+                 "dbp_decode")
 
     def __init__(self, dll: ctypes.CDLL):
         u8p = ctypes.POINTER(ctypes.c_uint8)
@@ -405,6 +504,16 @@ class _Lib:
         self.rle_decode.argtypes = [
             u8p, ctypes.c_long, ctypes.c_long, ctypes.c_int,
             ctypes.POINTER(ctypes.c_uint64),
+        ]
+        # dbp_decode takes raw addresses (ndarray.ctypes.data): a page
+        # decode calls it once or twice, so the per-call pointer
+        # wrapping is the cost worth skipping
+        vp = ctypes.c_void_p
+        self.dbp_decode = dll.dbp_decode
+        self.dbp_decode.restype = ctypes.c_long
+        self.dbp_decode.argtypes = [
+            vp, ctypes.c_long, ctypes.c_long, ctypes.c_long, ctypes.c_long,
+            ctypes.c_long, ctypes.c_uint64, ctypes.c_int, vp,
         ]
         self.encode = dll.fsst_encode
         self.encode.restype = ctypes.c_long

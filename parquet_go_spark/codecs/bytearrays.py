@@ -61,15 +61,13 @@ class ByteArrays:
 
     @staticmethod
     def from_arrow(arr: pa.Array) -> "ByteArrays":
-        """From a pyarrow string/binary array (no nulls)."""
+        """From a pyarrow (large_)string/(large_)binary array (no nulls)."""
         if arr.null_count:
             raise ValueError("ByteArrays requires non-null input")
-        if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type):
-            arr = arr.cast(pa.binary())
-        elif pa.types.is_string(arr.type):
-            arr = arr.cast(pa.binary())
+        large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
         buffers = arr.buffers()
-        off = np.frombuffer(buffers[1], dtype=np.int32, count=len(arr) + 1 + arr.offset)
+        off = np.frombuffer(buffers[1], dtype=np.int64 if large else np.int32,
+                            count=len(arr) + 1 + arr.offset)
         off = off[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
         data = np.frombuffer(buffers[2], dtype=np.uint8) if buffers[2] is not None else np.empty(0, np.uint8)
         # normalize to zero-based offsets over a tight slice

@@ -23,12 +23,17 @@ Vectorization notes:
   - DELTA_BYTE_ARRAY decode avoids the sequential prev-value chain with
     a per-prefix-byte-column forward-fill (np.maximum.accumulate), so
     the whole reconstruction is O(max_prefix) vectorized passes.
+  - DELTA_BINARY_PACKED decode runs compiled when _native.py loads
+    (`dbp_decode`: the block walk, unpack and prefix-sum in one pass);
+    the numpy code above stays the reference and takes over whenever
+    the kernel returns -1.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from . import _native
 from .bitpack import bit_length_u64, pack_le_rows, unpack_le_rows
 from .bytearrays import ByteArrays
 from .varint import (
@@ -41,6 +46,18 @@ from .varint import (
 BLOCK = 128
 MINIBLOCKS = 4
 MB = BLOCK // MINIBLOCKS  # 32 values per miniblock
+
+#: compiled block walk (_native.py); None → the numpy code below, which
+#: stays the reference and the fallback whenever the kernel returns -1
+#: on input it cannot vouch for
+_NATIVE = _native.load()
+# the kernel fills an n-value array before it can see that the stream
+# lies about n: take it only while n is within what the bytes left can
+# hold (128 values a byte; the default 128/4 layout packs at most 25.6)
+# and the block size keeps its counters far from overflow
+_MAX_VALUES_PER_BYTE = 128
+_MAX_NATIVE_BLOCK = 1 << 32
+_MASK64 = (1 << 64) - 1
 
 
 def _types(bits: int):
@@ -143,6 +160,14 @@ def decode_binary_packed(buf, bits: int) -> tuple[np.ndarray, int]:
         return np.array([first], dtype=np.int64).astype(S), pos
     nd = n - 1
     arr = np.frombuffer(mv, dtype=np.uint8)
+    if (_NATIVE is not None and 0 < block_size <= _MAX_NATIVE_BLOCK
+            and nd <= (len(arr) - pos) * _MAX_VALUES_PER_BYTE):
+        values = np.empty(n, dtype=U)
+        consumed = _NATIVE.dbp_decode(
+            arr.ctypes.data, len(arr), pos, n, block_size, nmini,
+            first & _MASK64, bits, values.ctypes.data)
+        if consumed >= 0:
+            return values.view(S), consumed
     # first pass: walk headers, record miniblock (offset, width) + block mins
     mins: list[int] = []
     mb_offsets: list[int] = []
@@ -160,6 +185,9 @@ def decode_binary_packed(buf, bits: int) -> tuple[np.ndarray, int]:
             # writes arbitrary widths there); a used-but-partial final
             # miniblock IS padded to full length by writers
             w = widths[j] if got + j * mb_size < nd else 0
+            if w > 64:
+                raise ValueError(
+                    f"DELTA_BINARY_PACKED miniblock width {w} > 64")
             mb_offsets.append(pos)
             mb_widths.append(w)
             pos += (mb_size * w) // 8
@@ -196,6 +224,8 @@ def encode_length_byte_array(values: ByteArrays) -> bytes:
 def decode_length_byte_array(buf, n: int) -> ByteArrays:
     lengths, consumed = decode_binary_packed(buf, 32)
     lengths = lengths[:n].astype(np.int64)
+    if (lengths < 0).any():
+        raise ValueError("DELTA_LENGTH_BYTE_ARRAY: negative length")
     offsets = np.zeros(n + 1, dtype=np.int64)
     offsets[1:] = np.cumsum(lengths)
     total = int(offsets[-1])
@@ -265,6 +295,11 @@ def decode_byte_array(buf, n: int) -> ByteArrays:
     pref = pref[:n].astype(np.int64)
     suf_len = suf_len[:n].astype(np.int64)
     lengths = pref + suf_len
+    if (pref < 0).any() or (suf_len < 0).any() or (
+            n and (pref[0] or (pref[1:] > lengths[:-1]).any())):
+        raise ValueError(
+            "DELTA_BYTE_ARRAY: negative length, or a prefix longer than "
+            "the previous value")
     offsets = np.zeros(n + 1, dtype=np.int64)
     offsets[1:] = np.cumsum(lengths)
     total = int(offsets[-1])

@@ -49,19 +49,19 @@ def lookup_numeric(uniques: np.ndarray, indexes: np.ndarray) -> np.ndarray:
 
 
 def lookup_byte_array(uniques: ByteArrays, indexes: np.ndarray) -> ByteArrays:
-    """Gather: vectorized take on the flat (data, offsets) layout."""
-    lens = uniques.lengths
-    out_lens = lens[indexes]
-    n = len(indexes)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    offsets[1:] = np.cumsum(out_lens)
-    total = int(offsets[-1])
-    if total == 0:
-        return ByteArrays(np.empty(0, np.uint8), offsets)
-    csum = offsets[:-1]
-    within = np.arange(total, dtype=np.int64) - np.repeat(csum, out_lens)
-    src = np.repeat(uniques.offsets[:-1][indexes], out_lens) + within
-    return ByteArrays(uniques.data[src], offsets)
+    """Gather: Arrow's take over a zero-copy large_binary view of the
+    uniques. take bounds-checks every index, so an out-of-range one —
+    negative included — raises IndexError and never wraps. take trusts
+    the offsets, so they are checked first (O(n_dict)): uniques decoded
+    from a corrupt blob must raise here, never make take over-read."""
+    off = uniques.offsets
+    if off[0] < 0 or off[-1] > len(uniques.data) or (off[1:] < off[:-1]).any():
+        raise ValueError(
+            "dictionary uniques: offsets descend or run past the data")
+    view = pa.Array.from_buffers(
+        pa.large_binary(), len(uniques),
+        [None, pa.py_buffer(uniques.offsets), pa.py_buffer(uniques.data)])
+    return ByteArrays.from_arrow(view.take(pa.array(indexes)))
 
 
 def decode_legacy_plain_dictionary(

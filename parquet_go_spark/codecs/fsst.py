@@ -555,6 +555,8 @@ def decode_byte_array(buf, n: int | None = None) -> ByteArrays:
     lengths, consumed = delta.decode_binary_packed(mv[pos:], 32)
     pos += consumed
     lengths = lengths[:n_strings].astype(np.int64)
+    if (lengths < 0).any():
+        raise ValueError("FSST chunk: negative string length")
     table, pos = FsstTable.deserialize(mv, pos)
     n_blocks, pos = read_uvarint(mv, pos)
     enc_lens = []

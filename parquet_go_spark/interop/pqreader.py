@@ -569,9 +569,7 @@ def _values_to_arrow(leaf: _Node, vals) -> pa.Array:
                                    signed=True) for i in range(n)]
             return _ints_to_decimal(ints, typ)
         base = pa.Array.from_buffers(
-            pa.binary(), n,
-            [None, pa.py_buffer(offs.tobytes()),
-             pa.py_buffer(data.tobytes())])
+            pa.binary(), n, [None, pa.py_buffer(offs), pa.py_buffer(data)])
         return base.cast(typ) if typ != pa.binary() else base
     arr = np.asarray(vals)
     if leaf.physical == 3:  # INT96 → epoch nanos
@@ -746,8 +744,7 @@ def _assemble(node: _Node, leaf_data: dict, starts: dict, ends: dict,
             if flat and len(vals) == len(idx):
                 return vals  # identity permutation: no take
             return vals.take(pa.array(idx, type=pa.int64()))
-        nul_idx = pa.array(np.where(present, idx, None), type=pa.int64())
-        return vals.take(nul_idx)
+        return vals.take(pa.array(idx, type=pa.int64(), mask=~present))
     if _is_list(node) or _is_map(node):
         return _assemble_repeated(node, node.children[0], leaf_data,
                                   starts, ends, n_slots,

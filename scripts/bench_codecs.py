@@ -2,7 +2,8 @@
 (/root/reference/encoding/encoding_test.go:604-658, 762-808): every codec
 x kind over seeded data shaped like the reference's generators
 (ints uniform [0,100), floats [0,1), byte arrays len 1..21, plus a
-code-like text column for FSST), reporting MB/s each way. FSST-train
+code-like text column for FSST and sorted repo/path keys for
+DELTA_BYTE_ARRAY's shared prefixes), reporting MB/s each way. FSST-train
 times table training alone, on one 64 KB sample of the FSST column.
 
 Usage: python scripts/bench_codecs.py [n_values]
@@ -41,9 +42,13 @@ short_ba = ByteArrays(data, offsets)
 
 from parquet_go_spark.sources.repogen import generate_batch
 
-code_ba = ByteArrays.from_arrow(
-    generate_batch(np.arange(N // 40), seed=42, n_repos=100).column(4)
-)
+_repos = generate_batch(np.arange(N // 40), seed=42, n_repos=100)
+code_ba = ByteArrays.from_arrow(_repos.column(4))
+# sorted "repo/path" keys share long prefixes, as a range-layout store's
+# path chunks do (short_ba is random: its values share almost none)
+path_ba = ByteArrays.from_pylist(sorted(
+    f"{r}/{p}" for r, p in zip(_repos.column(0).to_pylist(),
+                               _repos.column(1).to_pylist())))
 
 CASES = [
     ("PLAIN/int64", ints64, Kind.INT64, Codec.PLAIN, {}),
@@ -60,6 +65,8 @@ CASES = [
     ("DELTA_LENGTH/byte_array", short_ba, Kind.BYTE_ARRAY,
      Codec.DELTA_LENGTH_BYTE_ARRAY, {}),
     ("DELTA_BYTE_ARRAY/byte_array", short_ba, Kind.BYTE_ARRAY,
+     Codec.DELTA_BYTE_ARRAY, {}),
+    ("DELTA_BYTE_ARRAY/sorted_paths", path_ba, Kind.BYTE_ARRAY,
      Codec.DELTA_BYTE_ARRAY, {}),
     ("BYTE_STREAM_SPLIT/float", floats, Kind.FLOAT, Codec.BYTE_STREAM_SPLIT, {}),
     ("BYTE_STREAM_SPLIT/double", doubles, Kind.DOUBLE, Codec.BYTE_STREAM_SPLIT, {}),

@@ -131,6 +131,7 @@ def test_native_decode_rejects_malformed():
 
 
 def test_native_env_opt_out():
+    import os
     import subprocess
     import sys
 
@@ -141,10 +142,11 @@ def test_native_env_opt_out():
             "from parquet_go_spark.codecs import _native; "
             "print(_native.load() is None)",
         ],
-        env={**__import__("os").environ, "SPARK_COLCODEC_NATIVE": "0"},
+        env={**os.environ, "SPARK_COLCODEC_NATIVE": "0"},
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        # the checkout under test, wherever it lives
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert r.stdout.strip() == "True", r.stderr
 

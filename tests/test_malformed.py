@@ -73,3 +73,59 @@ def test_rle_truncated_tolerated_or_raises():
         assert len(out) <= 64
     except Exception:
         pass
+
+
+@pytest.fixture(params=["native", "numpy"])
+def kernels(request, monkeypatch):
+    """Each case runs on the compiled kernels (where this host builds
+    them) and on the numpy reference, as SPARK_COLCODEC_NATIVE=0 does."""
+    if request.param == "numpy":
+        for mod in (delta, fsst, rle):
+            monkeypatch.setattr(mod, "_NATIVE", None)
+    elif delta._NATIVE is None:
+        pytest.skip("no C toolchain on this host")
+    return request.param
+
+
+def _bad_lengths() -> bytes:
+    """Lengths [100, -90]: they sum to the 10 bytes that follow, but the
+    offsets [0, 100, 10] they give run past the data and descend."""
+    return delta.encode_binary_packed(np.array([100, -90], np.int32), 32)
+
+
+def _dict_blob(dict_payload: bytes, codec: int) -> bytes:
+    """A FLAG_DICT BYTE_ARRAY blob over two uniques, indexes [0, 1, 1, 0]."""
+    from parquet_go_spark.codecs.varint import write_uvarint
+
+    out = bytearray(chunklib.MAGIC)
+    out += bytes([codec, Kind.BYTE_ARRAY, chunklib.FLAG_DICT, 0])
+    write_uvarint(out, 4)
+    write_uvarint(out, 2)
+    write_uvarint(out, len(dict_payload))
+    out += dict_payload
+    out += rle.encode_dictionary_indexes(np.array([0, 1, 1, 0], np.int32))
+    return bytes(out)
+
+
+def test_dict_uniques_negative_length_dlba(kernels):
+    payload = _bad_lengths() + b"x" * 10
+    with pytest.raises(ValueError, match="negative length"):
+        delta.decode_length_byte_array(payload, 2)
+    with pytest.raises(ValueError):
+        chunklib.decode_chunk(
+            _dict_blob(payload, Codec.DELTA_LENGTH_BYTE_ARRAY))
+
+
+def test_dict_uniques_negative_length_fsst(kernels):
+    """A good two-string FSST stream (5 + 5 bytes) with its length
+    stream swapped for [100, -90]: the total still matches."""
+    from parquet_go_spark.codecs.varint import read_uvarint
+
+    good = fsst.encode_byte_array(ByteArrays.from_pylist([b"hello", b"world"]))
+    _, pos = read_uvarint(good, 0)
+    _, consumed = delta.decode_binary_packed(good[pos:], 32)
+    payload = good[:pos] + _bad_lengths() + good[pos + consumed:]
+    with pytest.raises(ValueError, match="negative"):
+        fsst.decode_byte_array(payload, 2)
+    with pytest.raises(ValueError):
+        chunklib.decode_chunk(_dict_blob(payload, Codec.FSST))
