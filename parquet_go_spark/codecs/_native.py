@@ -19,6 +19,14 @@ fallback rule:
   -1 on a malformed varint or truncated bit-packed run, and rle.py
   falls through to the numpy decoder.
 - `xxh64_batch` (codecs/bloom.py): the one bloom hash; never fails.
+- `sbbf_insert` (codecs/bloom.py): the split-block bitset insert, any
+  block count; never fails. bloom.py takes numpy's scatter + packbits
+  only when the kernel is missing or the bitset has no block.
+- `dbp_encode` (codecs/delta.py): every DELTA_BINARY_PACKED block after
+  the Python header, byte-identical to the numpy encoder — pqwriter
+  pages, DELTA_LENGTH_BYTE_ARRAY lengths, both DELTA_BYTE_ARRAY
+  streams, FSST's length stream and `chunk.encode_chunk`. Never fails;
+  numpy encodes only when the kernel is missing.
 - `dbp_decode` (codecs/delta.py): DELTA_BINARY_PACKED block walk after
   the Python header parse — it also decodes DELTA_LENGTH_BYTE_ARRAY
   lengths, both DELTA_BYTE_ARRAY streams and FSST's length stream.
@@ -478,12 +486,86 @@ long dbp_decode(const uint8_t *in, long len, long pos, long n,
     }
     return pos;
 }
+
+/* DELTA_BINARY_PACKED blocks, after the Python header: n values
+ * (n >= 2), int32 (bits == 32) or int64. Blocks of 128 deltas in 4
+ * miniblocks of 32; deltas and adjusted deltas wrap at `bits`. Per
+ * block: the min delta, signed at the kind's width, as a sign-extended
+ * zigzag varint; the 4 widths; the miniblocks packed LSB-first, the
+ * last one zero-padded. A miniblock with no values gets width 0 and no
+ * payload. out capacity: 14 + 1024 bytes per block. Returns the bytes
+ * written; byte-identical to the numpy encoder. */
+long dbp_encode(const void *in, long n, int bits, uint8_t *out)
+{
+    const uint32_t *i32 = (const uint32_t *)in;
+    const uint64_t *i64 = (const uint64_t *)in;
+    uint64_t mask = bits == 32 ? 0xFFFFFFFFULL : ~0ULL;
+    uint64_t prev = bits == 32 ? i32[0] : i64[0], d[128];
+    long o = 0;
+    for (long s = 1; s < n; s += 128) {
+        long cnt = n - s < 128 ? n - s : 128;
+        int64_t mn = INT64_MAX;
+        for (long i = 0; i < cnt; i++) {
+            uint64_t v = bits == 32 ? i32[s + i] : i64[s + i];
+            d[i] = (v - prev) & mask;
+            prev = v;
+            int64_t sd = bits == 32 ? (int64_t)(int32_t)d[i] : (int64_t)d[i];
+            if (sd < mn)
+                mn = sd;
+        }
+        o = put_uvarint(out, o, ((uint64_t)mn << 1) ^ (0 - ((uint64_t)mn >> 63)));
+        for (long i = 0; i < 128; i++)
+            d[i] = i < cnt ? (d[i] - (uint64_t)mn) & mask : 0;
+        uint8_t *widths = out + o;
+        o += 4;
+        for (int j = 0; j < 4; j++) {
+            const uint64_t *x = d + 32 * j;
+            uint64_t any = 0;
+            for (int i = 0; i < 32; i++)
+                any |= x[i];
+            int w = any ? 64 - __builtin_clzll(any) : 0;
+            widths[j] = (uint8_t)w;
+            uint64_t acc = 0;
+            int nb = 0;
+            for (int i = 0; w && i < 32; i++) {
+                acc |= x[i] << nb;
+                if (nb + w >= 64) { /* the word is full: flush it */
+                    memcpy(out + o, &acc, 8);
+                    o += 8;
+                    acc = nb ? x[i] >> (64 - nb) : 0;
+                    nb = nb + w - 64;
+                } else {
+                    nb += w;
+                }
+            }
+            memcpy(out + o, &acc, nb / 8); /* 32*w bits: whole bytes */
+            o += nb / 8;
+        }
+    }
+    return o;
+}
+
+/* Split-block bloom insert (codecs/bloom.py): hash i sets one salted
+ * bit in each of the 8 words of block ((h >> 32) * nblocks) >> 32, for
+ * any block count. */
+void sbbf_insert(const uint64_t *h, long n, uint32_t *words, long nblocks)
+{
+    static const uint32_t SALT[8] = {
+        0x47B6137BU, 0x44974D91U, 0x8824AD5BU, 0xA2B7289DU,
+        0x705495C7U, 0x2DF1424BU, 0x9EFC4947U, 0x5C6BFB31U};
+    for (long i = 0; i < n; i++) {
+        uint32_t *w = words + 8 * (((h[i] >> 32) * (uint64_t)nblocks) >> 32);
+        uint32_t lo = (uint32_t)h[i];
+        for (int j = 0; j < 8; j++)
+            w[j] |= 1U << ((lo * SALT[j]) >> 27);
+    }
+}
 """
 
 
 class _Lib:
     __slots__ = ("encode", "decode", "xxh64", "rle_encode", "rle_decode",
-                 "dbp_decode")
+                 "dbp_decode", "dbp_encode", "sbbf_insert")
 
     def __init__(self, dll: ctypes.CDLL):
         u8p = ctypes.POINTER(ctypes.c_uint8)
@@ -505,9 +587,9 @@ class _Lib:
             u8p, ctypes.c_long, ctypes.c_long, ctypes.c_int,
             ctypes.POINTER(ctypes.c_uint64),
         ]
-        # dbp_decode takes raw addresses (ndarray.ctypes.data): a page
-        # decode calls it once or twice, so the per-call pointer
-        # wrapping is the cost worth skipping
+        # the delta and bloom kernels take raw addresses
+        # (ndarray.ctypes.data): a page calls them once or twice, so the
+        # per-call pointer wrapping is the cost worth skipping
         vp = ctypes.c_void_p
         self.dbp_decode = dll.dbp_decode
         self.dbp_decode.restype = ctypes.c_long
@@ -515,6 +597,12 @@ class _Lib:
             vp, ctypes.c_long, ctypes.c_long, ctypes.c_long, ctypes.c_long,
             ctypes.c_long, ctypes.c_uint64, ctypes.c_int, vp,
         ]
+        self.dbp_encode = dll.dbp_encode
+        self.dbp_encode.restype = ctypes.c_long
+        self.dbp_encode.argtypes = [vp, ctypes.c_long, ctypes.c_int, vp]
+        self.sbbf_insert = dll.sbbf_insert
+        self.sbbf_insert.restype = None
+        self.sbbf_insert.argtypes = [vp, ctypes.c_long, vp, ctypes.c_long]
         self.encode = dll.fsst_encode
         self.encode.restype = ctypes.c_long
         self.encode.argtypes = [

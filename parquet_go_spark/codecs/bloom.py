@@ -15,7 +15,10 @@ low 32 hash bits times one of 8 fixed odd salts. The block is the high
 The hash runs in the compiled `xxh64_batch` kernel (_native.py) or, with
 no C compiler, in a vectorized numpy XXH64: length-sorted values step
 through their 32-byte stripes in lock-step, then the 8/4/1-byte tails.
-Both produce the same bits (tests pin the published vectors).
+Both produce the same bits (tests pin the published vectors). The
+insert likewise runs in the compiled `sbbf_insert` loop or, with no C
+compiler, as one scatter of each value's 8 bits into a flat bool array
+that `np.packbits` folds into the same little-endian words.
 
 Colcodec chunk blooms (`build`/`might_contain`) store the raw bitset,
 ceil(n·BITS_PER_VALUE/256) blocks, so the blob length is a multiple of
@@ -36,7 +39,8 @@ from . import _native
 from .bytearrays import ByteArrays
 from .kinds import Kind
 
-#: compiled XXH64 batch kernel; None → the numpy XXH64 below (same bits)
+#: compiled XXH64 batch and bitset insert kernels; None → the numpy
+#: XXH64 and insert below (same bits)
 _NATIVE = _native.load()
 
 SALT = np.array(
@@ -171,21 +175,33 @@ def _block_index(h: np.ndarray, n_blocks: int) -> np.ndarray:
             >> np.uint64(32)).astype(np.int64)
 
 
+def _bit_index(h: np.ndarray) -> np.ndarray:
+    """(n, 8) bit index within each word: one bit per word per value."""
+    lo = (h & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+    return (lo[:, None] * SALT[None, :]) >> np.uint32(27)  # uint32 wrap
+
+
 def _bit_masks(h: np.ndarray) -> np.ndarray:
     """(n, 8) uint32 word masks: one bit per word per value."""
-    lo = (h & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-    x = lo[:, None] * SALT[None, :]  # uint32 wrap
-    return (np.uint32(1) << (x >> np.uint32(27))).astype(np.uint32)
+    return np.uint32(1) << _bit_index(h)
 
 
 def build_bitset(hashes: np.ndarray, nbytes: int) -> bytes:
     """Insert hashes into a split-block bitset of nbytes (multiple of 32)."""
-    words = np.zeros((nbytes // 32, 8), dtype=np.uint32)
+    n_blocks = nbytes // 32
+    hashes = np.ascontiguousarray(hashes, dtype=np.uint64)
+    if _NATIVE is not None and n_blocks:
+        words = np.zeros(8 * n_blocks, dtype=np.uint32)
+        _NATIVE.sbbf_insert(hashes.ctypes.data, len(hashes),
+                            words.ctypes.data, n_blocks)
+        return words.tobytes()
+    # word j of block b is bits [(8b + j)·32, +32) of one flat bit array
+    # that packs LSB-first into the same little-endian words
+    bits = np.zeros(256 * n_blocks, dtype=bool)
     if len(hashes):
-        bi = _block_index(hashes, len(words))
-        np.bitwise_or.at(words, (bi[:, None], np.arange(8)[None, :]),
-                         _bit_masks(hashes))
-    return words.astype("<u4").tobytes()
+        word = _block_index(hashes, n_blocks)[:, None] * 8 + np.arange(8)
+        bits[(word * 32 + _bit_index(hashes)).reshape(-1)] = True
+    return np.packbits(bits, bitorder="little").tobytes()
 
 
 def probe(bitset: bytes | np.ndarray, hashes: np.ndarray) -> np.ndarray:

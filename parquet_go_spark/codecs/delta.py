@@ -15,8 +15,12 @@ Format semantics from /root/reference/encoding/delta/:
     value; emit DBP(prefix lengths) ‖ DBP(suffix lengths) ‖ suffix bytes.
 
 Vectorization notes:
-  - encode packs all miniblocks of equal bit-width in one shot
-    (pack_le_rows); per-block Python is only varint header emission.
+  - encode runs compiled when _native.py loads (`dbp_encode`: deltas,
+    min delta, widths and LSB-first packing, block by block; Python
+    writes the stream header). The numpy encoder below stays the
+    byte-identical reference and runs when the kernel is missing: it
+    packs all miniblocks of equal bit-width in one shot (pack_le_rows),
+    and assembles the blocks with no per-block Python.
   - decode gathers all equal-width miniblock byte spans with one fancy
     index and unpacks them together; prefix-sum restores values with
     uint wrap-around (modular cumsum).
@@ -58,6 +62,9 @@ _NATIVE = _native.load()
 _MAX_VALUES_PER_BYTE = 128
 _MAX_NATIVE_BLOCK = 1 << 32
 _MASK64 = (1 << 64) - 1
+# an encoded block: a 10-byte min-delta varint, the 4 widths, and at
+# most 4 miniblocks of 32 values at 64 bits
+_MAX_BLOCK_BYTES = 14 + 1024
 
 
 def _types(bits: int):
@@ -78,7 +85,12 @@ def encode_binary_packed(values: np.ndarray, bits: int) -> bytes:
     write_zigzag_varint(out, first)
     if n <= 1:
         return bytes(out)
-    u = np.ascontiguousarray(values, dtype=S).view(U)
+    v = np.ascontiguousarray(values, dtype=S)
+    if _NATIVE is not None:
+        body = np.empty(-(-(n - 1) // BLOCK) * _MAX_BLOCK_BYTES, np.uint8)
+        size = _NATIVE.dbp_encode(v.ctypes.data, n, bits, body.ctypes.data)
+        return bytes(out) + body[:size].tobytes()
+    u = v.view(U)
     deltas = u[1:] - u[:-1]  # modular wrap at the kind's width
     nd = n - 1
     nblocks = -(-nd // BLOCK)

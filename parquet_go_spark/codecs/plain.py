@@ -62,6 +62,9 @@ def decode_byte_array(buf, n: int) -> ByteArrays:
     """Sequential scan (length i's position depends on all prior lengths).
     Only on the dictionary-page path; data pages use DELTA_LENGTH."""
     mv = memoryview(buf)
+    if n > len(mv) // 4:  # each value carries a 4-byte length
+        raise ValueError(
+            f"PLAIN BYTE_ARRAY: {n} values cannot fit in {len(mv)} bytes")
     offsets = np.zeros(n + 1, dtype=np.int64)
     pos = 0
     total = 0
@@ -72,7 +75,6 @@ def decode_byte_array(buf, n: int) -> ByteArrays:
         pos += 4 + ln
         total += ln
     offsets[1:] = np.cumsum(lengths)
-    data = np.empty(total, dtype=np.int64)
     # gather value bytes: src position of byte j of value i = 4*(i+1) + offsets[i] + j
     arr = np.frombuffer(buf, dtype=np.uint8, count=pos)
     if total:

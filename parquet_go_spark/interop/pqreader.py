@@ -70,6 +70,8 @@ _CODEC_NAMES = {0: None, 1: "snappy", 2: "gzip", 4: "brotli",
 def _page_decompress(codec: str, raw: bytes, expected: int) -> bytes:
     """Decompress one page body; `expected` is the page header's exact
     uncompressed_page_size."""
+    if expected < 0:
+        raise ValueError(f"negative uncompressed page size {expected}")
     if codec != _LZ4_LEGACY:
         return pa.Codec(codec).decompress(raw, expected, asbytes=True)
     # (a) Hadoop framing: repeated [BE32 usize][BE32 csize][lz4 block]

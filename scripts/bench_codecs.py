@@ -4,7 +4,9 @@ x kind over seeded data shaped like the reference's generators
 (ints uniform [0,100), floats [0,1), byte arrays len 1..21, plus a
 code-like text column for FSST and sorted repo/path keys for
 DELTA_BYTE_ARRAY's shared prefixes), reporting MB/s each way. FSST-train
-times table training alone, on one 64 KB sample of the FSST column.
+times table training alone, on one 64 KB sample of the FSST column;
+bloom/build times the bitset insert alone, 65,536 seeded hashes into a
+128 KiB split-block bitset, in ms.
 
 Usage: python scripts/bench_codecs.py [n_values]
 """
@@ -21,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-from parquet_go_spark.codecs import chunk as chunklib, fsst
+from parquet_go_spark.codecs import bloom, chunk as chunklib, fsst
 from parquet_go_spark.codecs.bytearrays import ByteArrays
 from parquet_go_spark.codecs.kinds import Codec, Kind
 
@@ -114,6 +116,12 @@ def main() -> None:
                                        "train_mbps": round(mb / best_t, 1)}
     print(f"| FSST-train/code_text | {len(sample)} B | {mb:.3f} "
           f"| {mb/best_t:.1f} | - | - |")
+    hashes = rng.integers(0, 2**64, 65_536, dtype=np.uint64)
+    best_b = min(timeit.repeat(lambda: bloom.build_bitset(hashes, 128 << 10),
+                               number=1, repeat=20))
+    results["bloom/build"] = {"build_ms": round(best_b * 1e3, 3)}
+    print(f"| bloom/build | {len(hashes)} | {hashes.nbytes / 1e6:.3f} "
+          f"| {best_b * 1e3:.3f} ms | - | - |")
     print(json.dumps(results))
 
 

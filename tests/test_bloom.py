@@ -111,3 +111,44 @@ def test_blooms_on_scalar_columns_only():
     assert bloomed == {("id", "values")}
     assert {("tags", "values"), ("attrs", "values")} <= {
         (r["column"], r["stream"]) for r in recs}
+
+
+def _bitset_reference(h: np.ndarray, nbytes: int) -> bytes:
+    """The insert as an unbuffered OR of each hash's 8 word masks."""
+    words = np.zeros((nbytes // 32, 8), dtype=np.uint32)
+    block = bloom._block_index(h, len(words))
+    np.bitwise_or.at(words, (block[:, None], np.arange(8)[None, :]),
+                     bloom._bit_masks(h))
+    return words.astype("<u4").tobytes()
+
+
+class _InsertSpy:
+    def __init__(self, lib):
+        self.lib, self.calls = lib, 0
+
+    def sbbf_insert(self, *args):
+        self.calls += 1
+        return self.lib.sbbf_insert(*args)
+
+
+@pytest.mark.parametrize("n,nbytes", [
+    (0, 32), (0, 4096), (1, 32), (300, 32), (500, 32 * 37),
+    (2000, 4096), (65536, 128 * 1024)])
+def test_bitset_insert_paths_match(n, nbytes, monkeypatch):
+    """The compiled insert and the numpy scatter + packbits give the
+    bits of an OR per hash: tiny and non-power-of-two block counts (the
+    colcodec `build` sizes), duplicate hashes, 65,536 random hashes."""
+    rng = np.random.default_rng(n + nbytes)
+    h = rng.integers(0, 2**64, n, dtype=np.uint64, endpoint=False)
+    h[: n // 4] = h[n // 4: n // 2]  # duplicates
+    got = {}
+    if bloom._NATIVE is not None:
+        spy = _InsertSpy(bloom._NATIVE)
+        monkeypatch.setattr(bloom, "_NATIVE", spy)
+        got["native"] = bloom.build_bitset(h, nbytes)
+        assert spy.calls == 1
+    monkeypatch.setattr(bloom, "_NATIVE", None)
+    got["numpy"] = bloom.build_bitset(h, nbytes)
+    assert set(got.values()) == {_bitset_reference(h, nbytes)}
+    assert len(got["numpy"]) == nbytes
+    assert bloom.probe(got["numpy"], h).all()

@@ -1,8 +1,9 @@
 """The compiled DELTA_BINARY_PACKED block walk against its numpy
 reference: equal values and equal `consumed` on good streams, the same
 exception on bad ones — directly, and under DELTA_BYTE_ARRAY, whose
-prefix and suffix-length streams it decodes. Also the Arrow dictionary
-gather's bounds check."""
+prefix and suffix-length streams it decodes. The compiled encoder
+against the numpy one and a value-by-value Python build of the stream,
+byte for byte. Also the Arrow dictionary gather's bounds check."""
 
 from __future__ import annotations
 
@@ -38,6 +39,10 @@ class _Spy:
 
     def dbp_decode(self, *args):
         self.rcs.append(self.lib.dbp_decode(*args))
+        return self.rcs[-1]
+
+    def dbp_encode(self, *args):
+        self.rcs.append(self.lib.dbp_encode(*args))
         return self.rcs[-1]
 
 
@@ -160,6 +165,77 @@ def test_dbp_width64_wraps():
     v32 = np.array([-2**31, 2**31 - 1, -2**31, 0] * 20, dtype=np.int32)
     got, _ = _dbp_same(_dbp_stream(v32, 32), 32)
     assert np.array_equal(got, v32)
+
+
+def _enc_same(values, bits):
+    """Encode on both paths: the same bytes, equal to the value-by-value
+    build, decoding back to the values cast to the kind."""
+    want = _dbp_stream(values, bits)
+    if delta._NATIVE is None:  # a host without cc: the numpy path alone
+        assert delta.encode_binary_packed(values, bits) == want
+        return
+    a, b, err = _both(lambda: delta.encode_binary_packed(values, bits))
+    assert err is None, err
+    assert a == b == want
+    S = np.int32 if bits == 32 else np.int64
+    got, consumed = _dbp_same(a, bits)
+    assert np.array_equal(got, np.asarray(values).astype(S))
+    assert consumed == len(a)
+
+
+@SET
+@given(st.lists(st.integers(-2**31, 2**31 - 1), max_size=700))
+def test_dbp_encode_int32_matches(xs):
+    _enc_same(np.array(xs, dtype=np.int32), 32)
+
+
+@SET
+@given(st.lists(st.integers(I64.min, I64.max), max_size=700))
+def test_dbp_encode_int64_matches(xs):
+    _enc_same(np.array(xs, dtype=np.int64), 64)
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 33, 128, 129, 8192])
+def test_dbp_encode_shapes(n):
+    """Random, sorted and constant runs (width 0 everywhere), and the
+    MinInt<->MaxInt alternation whose deltas need all 32 or 64 bits and
+    wrap, at both widths."""
+    rng = np.random.default_rng(n)
+    for bits, dt in ((32, np.int32), (64, np.int64)):
+        info = np.iinfo(dt)
+        rand = rng.integers(info.min, info.max, n, dtype=dt, endpoint=True)
+        for v in (rand, np.sort(rand), np.full(n, -7, dt),
+                  np.resize(np.array([info.min, info.max], dt), n),
+                  np.cumsum(rng.integers(-50, 5000, n)).astype(dt)):
+            _enc_same(v, bits)
+
+
+def test_dbp_encode_int64_input_bits32():
+    """int64 values at bits=32 are cast to int32 first, as numpy does:
+    the deltas wrap at 32 bits."""
+    rng = np.random.default_rng(5)
+    v = rng.integers(-2**40, 2**40, 300, dtype=np.int64)
+    _enc_same(v, 32)
+    _enc_same(np.arange(-2**33, -2**33 + 200, dtype=np.int64), 32)
+
+
+@native_only
+def test_dbp_encode_kernel_ran():
+    """A spy: every stream of n >= 2 goes through the kernel, and the
+    streams under DELTA_LENGTH_BYTE_ARRAY and DELTA_BYTE_ARRAY do too."""
+    saved = delta._NATIVE
+    spy = delta._NATIVE = _Spy(saved)
+    try:
+        v = np.arange(1000, dtype=np.int64) * 3
+        buf = delta.encode_binary_packed(v, 64)
+        delta.encode_binary_packed(v[:1], 64)  # the header alone
+        assert len(spy.rcs) == 1 and 0 < spy.rcs[0] < len(buf)
+        vals = ByteArrays.from_pylist(_long_prefix_paths())
+        delta.encode_length_byte_array(vals)
+        delta.encode_byte_array(vals)
+    finally:
+        delta._NATIVE = saved
+    assert len(spy.rcs) == 4 and all(rc > 0 for rc in spy.rcs)
 
 
 def _raises_alike(buf, bits=64):

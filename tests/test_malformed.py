@@ -129,3 +129,31 @@ def test_dict_uniques_negative_length_fsst(kernels):
         fsst.decode_byte_array(payload, 2)
     with pytest.raises(ValueError):
         chunklib.decode_chunk(_dict_blob(payload, Codec.FSST))
+
+
+@pytest.mark.parametrize("codec", ["snappy", "zstd", "gzip"])
+def test_page_negative_uncompressed_size(codec):
+    """A corrupt page header's negative uncompressed_page_size raises
+    ValueError before the codec sees it (it raised SystemError)."""
+    import pyarrow as pa
+
+    from parquet_go_spark.interop import pqreader
+
+    raw = pa.Codec(codec).compress(b"page body " * 20, asbytes=True)
+    assert pqreader._page_decompress(codec, raw, 200) == b"page body " * 20
+    for bad in (-1, -(2**31)):
+        with pytest.raises(ValueError, match="negative"):
+            pqreader._page_decompress(codec, raw, bad)
+
+
+def test_plain_byte_array_count_past_buffer():
+    """A PLAIN BYTE_ARRAY count that the bytes cannot hold (4 length
+    bytes a value) raises ValueError before anything is allocated (10**10
+    values over 7 bytes asked for 74.5 GiB)."""
+    from parquet_go_spark.codecs import plain
+
+    buf = b"\x03\x00\x00\x00abc"
+    assert plain.decode_byte_array(buf, 1).to_pylist() == [b"abc"]
+    for n in (2, 10**10):
+        with pytest.raises(ValueError, match="cannot fit"):
+            plain.decode_byte_array(buf, n)
