@@ -83,3 +83,33 @@ class ByteArrays:
             n,
             [None, pa.py_buffer(off32.tobytes()), pa.py_buffer(self.data.tobytes())],
         ).cast(typ)
+
+
+def slice_values(vals, lo: int, hi: int):
+    """Values [lo, hi) of a ByteArrays (a view of its data, offsets
+    rebased to zero) or of an ndarray (a view)."""
+    if isinstance(vals, ByteArrays):
+        o = vals.offsets
+        return ByteArrays(vals.data[o[lo]:o[hi]], o[lo:hi + 1] - o[lo])
+    return vals[lo:hi]
+
+
+# Byte-array min/max statistics keep at most this many bytes: the
+# reference's DefaultColumnIndexSizeLimit (config.go:27-29). The store
+# manifest's chunk stats and the parquet writer's Statistics share it.
+STAT_TRUNCATE = 16
+
+
+def truncate_max(b: bytes) -> bytes | None:
+    """A byte-array max statistic cut to STAT_TRUNCATE bytes that stays
+    an upper bound: chop, then increment the last byte with carry (the
+    reference's column-index truncation, column_index.go:684-700). None
+    when every kept byte is 0xFF: no bound is representable."""
+    if len(b) <= STAT_TRUNCATE:
+        return b
+    t = bytearray(b[:STAT_TRUNCATE])
+    for i in range(len(t) - 1, -1, -1):
+        if t[i] < 0xFF:
+            t[i] += 1
+            return bytes(t[: i + 1])
+    return None

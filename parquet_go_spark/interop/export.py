@@ -10,6 +10,12 @@ aggregation, one sorted shuffle on the chunk key, Arrow-native kernels,
 no per-row Python. Oversized groups roll to additional files at
 2x target_chunk_bytes (files are independent, so splitting is free) —
 a task never buffers more than ~one file of Arrow slices.
+
+Columns: a scalar is one ColumnSpec leaf. Every list, struct and map
+column, at any depth, is shredded by one Dremel walk (_nested_spec, the
+reference's Deconstruct, schema.go:341-361) into rep/def entry streams
+per leaf. It declares every level optional except a map's key, as
+Spark's types do (containsNull, valueContainsNull, nullable fields).
 """
 
 from __future__ import annotations
@@ -28,8 +34,8 @@ from pyspark.sql.types import (
 
 from parquet_go_spark.plans import pipeline
 from parquet_go_spark.interop.pqwriter import (
-    ColumnSpec, MapColumnSpec, NestedColumnSpec, NestedLeaf,
-    StructColumnSpec, _group_element, _leaf_element, write_table,
+    ColumnSpec, NestedColumnSpec, NestedLeaf, _cum, _group_element,
+    _leaf_element, write_table,
 )
 
 _SUMMARY_SCHEMA = StructType([
@@ -87,166 +93,180 @@ def _leaf_values(arr, spark_type: str):
 
 
 def _supported(spark_type: str) -> bool:
-    """Any struct/list composition of supported leaves (the generic
-    Dremel path), plus map<scalar,scalar> at the top level (the MAP
-    group has its own two-leaf writer; maps nested deeper are the one
-    remaining unsupported shape)."""
-    kv = pipeline._map_kv(spark_type)
-    if kv is not None:
-        return all(_leaf_ok(t) for t in kv)
-    return _supported_nested(spark_type)
-
-
-def _supported_nested(spark_type: str) -> bool:
+    """Any list, struct or map nesting of scalar leaves, where map keys
+    are scalar (the parquet MAP key contract)."""
     if _leaf_ok(spark_type):
         return True
     elem = pipeline._list_elem(spark_type)
     if elem is not None:
-        return _supported_nested(elem)
+        return _supported(elem)
+    kv = pipeline._map_kv(spark_type)
+    if kv is not None:
+        return _leaf_ok(kv[0]) and _supported(kv[1])
     sf = pipeline._struct_fields(spark_type)
-    return sf is not None and all(_supported_nested(t) for _, t in sf)
+    return sf is not None and all(_supported(t) for _, t in sf)
 
 
 def _nested_schema_elements(name: str, spark_type: str) -> list:
-    """SchemaElement structs for one arbitrarily nested column (every
-    level optional — matching the all-optional def accounting of the
-    generic shredder; LIST is the spec 3-level group with an OPTIONAL
-    element)."""
+    """SchemaElement structs for one container column, root group
+    first. Every level is optional except a map's key: LIST is the spec
+    3-level group with an optional element, MAP is `optional group
+    (MAP) { repeated group key_value { required key; optional value }
+    }`."""
     els = []
+
+    def leaf(nm: str, ty: str, repetition: int) -> None:
+        els.append(_leaf_element(nm, repetition, pipeline._col_kind(ty),
+                                 _leaf_flba(ty), _leaf_logical(ty)))
 
     def emit(nm: str, ty: str) -> None:
         elem = pipeline._list_elem(ty)
+        kv = pipeline._map_kv(ty)
         sf = pipeline._struct_fields(ty)
         if elem is not None:
             els.append(_group_element(nm, 1, 1, 3))  # ConvertedType LIST
             els.append(_group_element("list", 2, 1))
             emit("element", elem)
+        elif kv is not None:
+            els.append(_group_element(nm, 1, 1, 1))  # ConvertedType MAP
+            els.append(_group_element("key_value", 2, 2))
+            leaf("key", kv[0], 0)
+            emit("value", kv[1])
         elif sf is not None:
             els.append(_group_element(nm, 1, len(sf)))
             for fn, ft in sf:
                 emit(fn, ft)
         else:
-            els.append(_leaf_element(nm, 1, pipeline._col_kind(ty),
-                                     _leaf_flba(ty), _leaf_logical(ty)))
+            leaf(nm, ty, 1)
 
     emit(name, spark_type)
     return els
 
 
-def _leaf_walks(spark_type: str):
-    """→ [(tokens, leaf_type)] per leaf, in schema order. Tokens drive
-    the entry-stream walk: ("opt",) one optional level (def +1 when
+def _leaves(spark_type: str) -> list:
+    """→ [(tokens, path, leaf_type)] per leaf, in schema order; `path`
+    is the schema path below the column name. Tokens drive the
+    entry-stream walk: ("opt",) one optional level (def +1 when
     present, terminate when null), ("field", i) descend struct field i,
-    ("list",) expand a repeated level (def +1 per element, rep level)."""
+    ("list",) expand a repeated level (def +1 per element, rep level).
+    A map walks as a list of key/value structs whose key is required."""
     elem = pipeline._list_elem(spark_type)
-    if elem is not None:
-        return [([("list",), ("opt",)] + tok, lt)
-                for tok, lt in _leaf_walks(elem)]
+    kv = pipeline._map_kv(spark_type)
     sf = pipeline._struct_fields(spark_type)
-    if sf is not None:
-        out = []
-        for i, (_, ftype) in enumerate(sf):
-            out.extend([([("field", i), ("opt",)] + tok, lt)
-                        for tok, lt in _leaf_walks(ftype)])
-        return out
-    return [([], spark_type)]
-
-
-def _leaf_paths(spark_type: str):
-    """Schema path segments below the column name, one per leaf."""
-    elem = pipeline._list_elem(spark_type)
     if elem is not None:
-        return [["list", "element"] + p for p in _leaf_paths(elem)]
-    sf = pipeline._struct_fields(spark_type)
-    if sf is not None:
-        out = []
-        for fname, ftype in sf:
-            out.extend([[fname] + p for p in _leaf_paths(ftype)])
-        return out
-    return [[]]
+        kids = [([("list",), ("opt",)], ["list", "element"], elem)]
+    elif kv is not None:
+        kids = [([("list",), ("field", 0)], ["key_value", "key"], kv[0]),
+                ([("list",), ("field", 1), ("opt",)],
+                 ["key_value", "value"], kv[1])]
+    elif sf is not None:
+        kids = [([("field", i), ("opt",)], [fname], ftype)
+                for i, (fname, ftype) in enumerate(sf)]
+    else:
+        return [([], [], spark_type)]
+    return [(tok + t, path + p, lt) for tok, path, ty in kids
+            for t, p, lt in _leaves(ty)]
 
 
-def _arr_validity(a: pa.Array) -> np.ndarray:
-    if a.null_count == 0:
-        return np.ones(len(a), dtype=bool)
-    return np.asarray(a.is_valid())
+def _expand(reps: np.ndarray, row_starts: np.ndarray, starts: np.ndarray,
+            depth: int) -> tuple:
+    """Rep levels and row starts after one repeated level: parent entry
+    i becomes entries [starts[i], starts[i+1]); the first keeps the
+    parent's rep level, the others repeat at depth + 1."""
+    new = np.full(int(starts[-1]), depth + 1, dtype=np.uint8)
+    new[starts[:-1]] = reps
+    return new, starts[row_starts]
 
 
 def _leaf_streams(arr: pa.Array, tokens) -> tuple:
     """The write-direction Dremel walk for ONE leaf → (values_arrow,
-    rep uint8[E], def uint8[E]). Entry-state arrays (`idx` position in
-    the current Arrow array, `alive` not-yet-terminated, absolute
-    def/rep) evolve through the token list; a terminated entry (null
-    ancestor / empty list) rides through the remaining tokens unchanged
-    and lands in every descendant leaf with its frozen levels — which
-    is exactly the Dremel record-shredding rule. All numpy; the only
-    Arrow calls are .field/.values/.offsets/.take."""
-    idx = np.arange(len(arr), dtype=np.int64)
-    alive = np.ones(len(arr), dtype=bool)
-    defs = np.zeros(len(arr), dtype=np.int16)
+    rep uint8[E], def uint8[E], row_starts int64[n+1], val_cum
+    int64[E+1]). Entry-state arrays (`idx` position in the current
+    Arrow array, `alive` not-yet-terminated, absolute def/rep) evolve
+    through the token list; a terminated entry (null ancestor / empty
+    list) rides through the remaining tokens unchanged and lands in
+    every descendant leaf with its frozen levels — which is exactly the
+    Dremel record-shredding rule.
+
+    Until the first null or empty list every entry is alive, the
+    entries are the positions [lo, lo + E) of the current array (Arrow
+    list offsets are monotone) and they share one def level `d`; the
+    walk builds `idx`, `alive` and `defs` only from there on."""
+    lo, d = 0, 0
+    idx = alive = defs = None  # None while every entry is alive
     reps = np.zeros(len(arr), dtype=np.uint8)
+    row_starts = np.arange(len(arr) + 1, dtype=np.int64)
     cur = arr
     rep_depth = 0
     for tok in [("opt",)] + tokens:  # column presence first
-        if tok[0] == "opt":
-            valid = _arr_validity(cur)
-            pres = alive.copy()
-            pres[alive] = valid[idx[alive]]
-            defs[pres] += 1
-            alive = pres
-        elif tok[0] == "field":
+        if tok[0] == "field":
             cur = cur.field(tok[1])
-        else:  # ("list",)
-            off = np.asarray(cur.offsets, dtype=np.int64)
-            ai = idx[alive]
-            lens = off[ai + 1] - off[ai]
-            cnt = np.ones(len(idx), dtype=np.int64)
-            cnt[alive] = np.maximum(lens, 1)
-            bump = np.zeros(len(idx), dtype=bool)
-            bump[alive] = lens > 0  # empty lists stop at presence def
-            defs = defs + bump  # every element entry of the list: +1
-            starts = np.zeros(len(idx) + 1, dtype=np.int64)
-            np.cumsum(cnt, out=starts[1:])
-            E = int(starts[-1])
-            pos = np.arange(E, dtype=np.int64) - np.repeat(starts[:-1], cnt)
-            s = np.zeros(len(idx), dtype=np.int64)
-            s[alive] = off[ai]
-            new_reps = np.repeat(reps, cnt)
-            new_reps[pos > 0] = rep_depth + 1
-            reps = new_reps
-            defs = np.repeat(defs, cnt)
-            alive = np.repeat(bump, cnt)
-            idx = np.repeat(s, cnt) + pos
-            cur = cur.values
-            rep_depth += 1
-    leaf_vals = cur.take(pa.array(idx[alive]))
-    return leaf_vals, reps, defs.astype(np.uint8), alive
+            continue
+        E = len(reps)
+        if alive is None:
+            if tok[0] == "opt" and not cur.slice(lo, E).null_count:
+                d += 1
+                continue
+            if tok[0] == "list":
+                off = np.asarray(cur.offsets)[lo:lo + E + 1].astype(np.int64)
+                if np.diff(off).all():  # every list non-empty
+                    reps, row_starts = _expand(reps, row_starts,
+                                               off - off[0], rep_depth)
+                    lo, d = int(off[0]), d + 1
+                    cur, rep_depth = cur.values, rep_depth + 1
+                    continue
+            idx = np.arange(lo, lo + E, dtype=np.int64)
+            alive = np.ones(E, dtype=bool)
+            defs = np.full(E, d, dtype=np.uint8)
+        if tok[0] == "opt":
+            if cur.null_count:
+                pres = alive.copy()
+                pres[alive] = np.asarray(cur.is_valid())[idx[alive]]
+                alive = pres
+            defs += alive
+            continue
+        off = np.asarray(cur.offsets, dtype=np.int64)
+        ai = idx[alive]
+        s = np.zeros(E, dtype=np.int64)
+        s[alive] = off[ai]
+        lens = np.zeros(E, dtype=np.int64)
+        lens[alive] = off[ai + 1] - s[alive]
+        bump = lens > 0  # empty lists stop at presence def
+        cnt = np.maximum(lens, 1)
+        starts = _cum(cnt)
+        idx = np.repeat(s - starts[:-1], cnt) + np.arange(starts[-1])
+        defs = np.repeat(defs + bump, cnt)
+        alive = np.repeat(bump, cnt)
+        reps, row_starts = _expand(reps, row_starts, starts, rep_depth)
+        cur, rep_depth = cur.values, rep_depth + 1
+    E = len(reps)
+    if alive is None:
+        return (cur.slice(lo, E), reps, np.full(E, d, dtype=np.uint8),
+                row_starts, np.arange(E + 1, dtype=np.int64))
+    sel = idx[alive]
+    # alive positions strictly increase, so an unbroken run is a slice
+    if len(sel) and sel[-1] - sel[0] == len(sel) - 1:
+        vals = cur.slice(int(sel[0]), len(sel))
+    else:
+        vals = cur.take(pa.array(sel))
+    return vals, reps, defs, row_starts, _cum(alive)
 
 
 def _nested_spec(name: str, arr: pa.Array, spark_type: str
                  ) -> NestedColumnSpec:
-    """Arrow column of ANY struct/list nesting → NestedColumnSpec."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    walks = _leaf_walks(spark_type)
-    paths = _leaf_paths(spark_type)
+    """Arrow column of ANY list/struct/map nesting → NestedColumnSpec."""
     leaves = []
-    for (tokens, leaf_type), path in zip(walks, paths):
-        vals_arrow, reps, defs, alive = _leaf_streams(arr, tokens)
-        max_rep = sum(1 for t in tokens if t[0] == "list")
-        # def contributions: the column's own presence (1), every
-        # ("opt",) presence level, and every ("list",) repetition level
-        max_def = 1 + sum(1 for t in tokens if t[0] != "field")
-        row_starts = np.append(
-            np.flatnonzero(reps == 0).astype(np.int64), len(reps))
-        kind = pipeline._col_kind(leaf_type)
+    for tokens, path, leaf_type in _leaves(spark_type):
+        vals, reps, defs, row_starts, val_cum = _leaf_streams(arr, tokens)
         leaves.append(NestedLeaf(
-            path=path, kind=kind,
-            values=_leaf_values(vals_arrow, leaf_type),
-            rep=reps, de=defs, max_rep=max_rep, max_def=max_def,
-            row_starts=row_starts,
-            val_cum=np.concatenate(
-                [[0], np.cumsum(alive.astype(np.int64))]),
+            path=path, kind=pipeline._col_kind(leaf_type),
+            values=_leaf_values(vals, leaf_type),
+            rep=reps, de=defs,
+            max_rep=sum(t[0] == "list" for t in tokens),
+            # def contributions: the column's own presence (1), every
+            # ("opt",) presence level, and every ("list",) repetition level
+            max_def=1 + sum(t[0] != "field" for t in tokens),
+            row_starts=row_starts, val_cum=val_cum,
             flba_size=_leaf_flba(leaf_type),
             logical=_leaf_logical(leaf_type),
         ))
@@ -255,100 +275,14 @@ def _nested_spec(name: str, arr: pa.Array, spark_type: str
         schema_elements=_nested_schema_elements(name, spark_type))
 
 
-def _to_specs(tbl: pa.Table, columns) -> list[ColumnSpec]:
-    import pyarrow.compute as pc
-
+def _to_specs(tbl: pa.Table, columns) -> list:
+    """One writer spec per column: a ColumnSpec for a scalar, the one
+    Dremel walk (_nested_spec) for every list, struct and map."""
     specs = []
     for name, spark_type in columns:
-        arr = tbl.column(name)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        elem = pipeline._list_elem(spark_type)
-        sf0 = pipeline._struct_fields(spark_type)
-        if ((elem is not None and not _leaf_ok(elem))
-                or (sf0 is not None
-                    and not all(_leaf_ok(t) for _, t in sf0))):
-            # deeper than the specialized writers go → generic Dremel
+        arr = tbl.column(name).combine_chunks()
+        if pipeline._is_container(spark_type):
             specs.append(_nested_spec(name, arr, spark_type))
-            continue
-        if elem is not None:
-            # array<scalar> → flattened elements + lengths (+ null-list
-            # validity); the writer emits the 3-level LIST group with
-            # real rep/def levels
-            validity = None
-            if arr.null_count:
-                validity = np.asarray(arr.is_valid())
-            lengths = np.asarray(
-                pc.fill_null(pc.list_value_length(arr), 0)
-            ).astype(np.int64)
-            specs.append(ColumnSpec(
-                name,
-                pipeline._col_kind(elem),
-                _leaf_values(arr.flatten(), elem),
-                validity=validity,
-                flba_size=_leaf_flba(elem),
-                logical=_leaf_logical(elem),
-                lengths=lengths,
-            ))
-            continue
-        kv = pipeline._map_kv(spark_type)
-        if kv is not None:
-            # map<K,V> → the writer's two-leaf MAP group. Cast to
-            # list<struct> first (slice-safe; flatten() skips null
-            # slots), same as the pipeline shredder.
-            ktype, vtype = kv
-            validity = None
-            if arr.null_count:
-                validity = np.asarray(arr.is_valid())
-            la = arr.cast(pa.list_(pa.struct([
-                pa.field("key", arr.type.key_type, nullable=False),
-                pa.field("value", arr.type.item_type),
-            ])))
-            lengths = np.asarray(
-                pc.fill_null(pc.list_value_length(la), 0)
-            ).astype(np.int64)
-            entries = la.flatten()
-            keys, vals = entries.field(0), entries.field(1)
-            entry_validity = None
-            if vals.null_count:
-                entry_validity = np.asarray(vals.is_valid())
-                vals = vals.drop_null()
-            specs.append(MapColumnSpec(
-                name,
-                key=ColumnSpec("key", pipeline._col_kind(ktype),
-                               _leaf_values(keys, ktype),
-                               flba_size=_leaf_flba(ktype),
-                               logical=_leaf_logical(ktype)),
-                value=ColumnSpec("value", pipeline._col_kind(vtype),
-                                 _leaf_values(vals, vtype),
-                                 flba_size=_leaf_flba(vtype),
-                                 logical=_leaf_logical(vtype)),
-                lengths=lengths,
-                validity=validity,
-                entry_validity=entry_validity,
-            ))
-            continue
-        sf = pipeline._struct_fields(spark_type)
-        if sf is not None:
-            # struct<...> → one leaf per field. StructArray.flatten()
-            # merges the parent validity into each child, so a child's
-            # own validity is exactly the field-present mask.
-            validity = None
-            if arr.null_count:
-                validity = np.asarray(arr.is_valid())
-            fields = []
-            for (fname, ftype), child in zip(sf, arr.flatten()):
-                cval = None
-                if child.null_count:
-                    cval = np.asarray(child.is_valid())
-                    child = child.drop_null()
-                fields.append((fname, ColumnSpec(
-                    fname, pipeline._col_kind(ftype),
-                    _leaf_values(child, ftype),
-                    validity=cval, flba_size=_leaf_flba(ftype),
-                    logical=_leaf_logical(ftype))))
-            specs.append(StructColumnSpec(name, fields=fields,
-                                          validity=validity))
             continue
         validity = None
         if arr.null_count:
@@ -475,8 +409,8 @@ def export_parquet(
         if not _supported(t):
             raise ValueError(
                 f"export_parquet: column {name}: unsupported type {t} "
-                "(any struct/array nesting of scalar leaves, plus "
-                "top-level map<scalar,scalar>)")
+                "(any array, struct or map nesting of scalar leaves; "
+                "map keys must be scalar)")
     os.makedirs(out_dir, exist_ok=True)
     salt_cols = salt_cols or [c for c, _ in columns if c != repo_col][:2]
     keyed = pipeline.plan_chunks(df, repo_col, salt_cols, target_chunk_bytes)

@@ -51,7 +51,7 @@ import numpy as np
 import pyarrow as pa
 
 from parquet_go_spark.codecs import bitpacked, delta, plain, rle
-from parquet_go_spark.codecs.bytearrays import ByteArrays
+from parquet_go_spark.codecs.bytearrays import ByteArrays, slice_values
 from parquet_go_spark.codecs.kinds import Codec, Kind
 from parquet_go_spark.interop.thriftc import read_struct
 
@@ -1799,16 +1799,6 @@ def _rows_from_pages(locs, keep: list[bool], rg_rows: int):
     return ranges
 
 
-def _slice_vals(vals, lo: int, hi: int):
-    if isinstance(vals, ByteArrays):
-        offs = vals.offsets[lo:hi + 1] - vals.offsets[lo]
-        return ByteArrays(
-            np.ascontiguousarray(
-                vals.data[vals.offsets[lo]:vals.offsets[hi]]),
-            np.asarray(offs, dtype=vals.offsets.dtype))
-    return vals[lo:hi]
-
-
 def _surviving_pages(f, meta: dict, leaf: _Node, locs, ranges,
                      rg_rows: int, verify: bool):
     """Yield (runs, payload, row_span) for each page overlapping
@@ -1909,8 +1899,8 @@ def _trim(payload, leaf: _Node, runs, span: int, indexed: bool):
             eb = nv if bb == rows else int(starts[bb])
         yield (None if defs is None else defs[ea:eb],
                None if reps is None else reps[ea:eb],
-               _slice_vals(values, ea if nn_cum is None else int(nn_cum[ea]),
-                           eb if nn_cum is None else int(nn_cum[eb])),
+               slice_values(values, ea if nn_cum is None else int(nn_cum[ea]),
+                            eb if nn_cum is None else int(nn_cum[eb])),
                eb - ea)
 
 

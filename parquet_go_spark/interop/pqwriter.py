@@ -36,7 +36,9 @@ from parquet_go_spark.codecs import (
     rle,
 )
 from parquet_go_spark.codecs.bloom import spec_hashes
-from parquet_go_spark.codecs.bytearrays import ByteArrays
+from parquet_go_spark.codecs.bytearrays import (
+    STAT_TRUNCATE, ByteArrays, slice_values, truncate_max,
+)
 from parquet_go_spark.codecs.chunk import _outer
 from parquet_go_spark.codecs.kinds import Codec, Kind, KIND_WIDTHS
 from parquet_go_spark.interop import pqbloom, thriftc as tc
@@ -91,7 +93,6 @@ def _dec_flba(kind: int, logical: str | None) -> bool:
             and logical.startswith("decimal("))
 
 _MAGIC = b"PAR1"
-STAT_TRUNCATE = 16  # same bound as the manifest stats (config.go:29)
 
 
 @dataclass
@@ -205,7 +206,7 @@ def _default_encoding(spec: NestedLeaf) -> int:
     if n:
         cap = min(n, 4096)
         if isinstance(spec.values, ByteArrays):
-            sample = _slice_values(spec.values, 0, cap).to_pylist()
+            sample = slice_values(spec.values, 0, cap).to_pylist()
         elif k == Kind.FIXED_LEN_BYTE_ARRAY:
             # 2-D (n, width) rows are unhashable; hash their bytes
             sample = [row.tobytes()
@@ -241,28 +242,10 @@ def _encode_values(vals, kind: int, codec: int, flba_size) -> bytes:
     raise ValueError(f"unsupported parquet-interop codec {codec}")
 
 
-def _slice_values(vals, lo: int, hi: int):
-    if isinstance(vals, ByteArrays):
-        o = vals.offsets
-        return ByteArrays(vals.data[o[lo]:o[hi]], o[lo:hi + 1] - o[lo])
-    return vals[lo:hi]
-
-
 # ---------------------------------------------------------------------------
 # statistics (ColumnMetaData field 12) — raw plain-encoded bounds with
 # the reference's truncate-then-carry upper-bound rule for byte arrays
 # ---------------------------------------------------------------------------
-
-def _truncate_max_bytes(b: bytes) -> bytes | None:
-    if len(b) <= STAT_TRUNCATE:
-        return b
-    t = bytearray(b[:STAT_TRUNCATE])
-    for i in range(len(t) - 1, -1, -1):
-        if t[i] < 0xFF:
-            t[i] += 1
-            return bytes(t[: i + 1])
-    return None  # all 0xFF — no representable upper bound
-
 
 _STAT_FMT = {Kind.INT32: "<i", Kind.INT64: "<q",
              Kind.FLOAT: "<f", Kind.DOUBLE: "<d"}
@@ -325,7 +308,7 @@ def _stat_bounds_exact(vals, kind: int, logical: str | None = None,
                     else pa.array(list(vals), pa.binary()))
     lo = mm["min"].as_py() or b""
     hi = mm["max"].as_py() or b""
-    return (lo[:STAT_TRUNCATE], _truncate_max_bytes(hi),
+    return (lo[:STAT_TRUNCATE], truncate_max(hi),
             len(lo) <= STAT_TRUNCATE, len(hi) <= STAT_TRUNCATE)
 
 
@@ -369,7 +352,7 @@ def _group_element(name: str, repetition: int, n_children: int,
 
 def _cum(mask: np.ndarray) -> np.ndarray:
     """Entry index → value index (length len(mask)+1) for a mask of
-    value-bearing entries."""
+    value-bearing entries; over counts, the start of each run."""
     out = np.zeros(len(mask) + 1, dtype=np.int64)
     np.cumsum(mask, out=out[1:])
     return out
@@ -393,6 +376,18 @@ def _list_levels(lens: np.ndarray, valid: np.ndarray | None):
     else:
         de[ph] = np.where(valid[lens == 0], 1, 0).astype(np.uint8)
     return rep, de, row_starts
+
+
+def _check_int32(name: str, leaf: NestedLeaf) -> None:
+    """An INT32 leaf given wider numbers must hold int32 values: the
+    encoders would wrap them and the statistics cannot pack them."""
+    if leaf.kind != Kind.INT32:
+        return
+    v = np.asarray(leaf.values)
+    if (v.size and not np.can_cast(v.dtype, np.int32)
+            and not -(1 << 31) <= v.min() <= v.max() < 1 << 31):
+        raise ValueError(f"column {name}: INT32 values span "
+                         f"[{v.min()}, {v.max()}], outside the int32 range")
 
 
 def _leaf(part, path: list, rep, de, max_rep: int, max_def: int,
@@ -627,7 +622,7 @@ def _write_nested_chunk(out: bytearray, leaf: NestedLeaf, name: str,
     ehi_all = int(leaf.row_starts[row_hi])
     vlo_all = int(leaf.val_cum[elo_all])
     vhi_all = int(leaf.val_cum[ehi_all])
-    chunk_vals = _slice_values(vals, vlo_all, vhi_all)
+    chunk_vals = slice_values(vals, vlo_all, vhi_all)
 
     dict_offset = None
     encodings = {Codec.PLAIN, Codec.RLE, codec}
@@ -661,7 +656,7 @@ def _write_nested_chunk(out: bytearray, leaf: NestedLeaf, name: str,
         hi = min(lo + page_rows, row_hi)
         elo, ehi = int(leaf.row_starts[lo]), int(leaf.row_starts[hi])
         vlo, vhi = int(leaf.val_cum[elo]), int(leaf.val_cum[ehi])
-        page_vals = _slice_values(vals, vlo, vhi)
+        page_vals = slice_values(vals, vlo, vhi)
         if indexes is not None:
             body = rle.encode_dictionary_indexes(
                 indexes[vlo - vlo_all:vhi - vlo_all])
@@ -875,6 +870,7 @@ def write_table(path: str,
                 lf = replace(lf, encoding=_default_encoding(lf))
             dotted = (c.name if isinstance(c, ColumnSpec)
                       else ".".join([c.name, *lf.path]))
+            _check_int32(dotted, lf)
             leaves.append((c.name, dotted, lf))
     used = {dotted: lf.encoding for _, dotted, lf in leaves}
     if encryption is not None:  # else a typo silently gets the footer key
@@ -927,7 +923,7 @@ def write_table(path: str,
                 if (dotted not in wanted or lf.max_rep
                         or lf.kind == Kind.BOOLEAN):
                     continue
-                vals = _slice_values(
+                vals = slice_values(
                     lf.values, int(lf.val_cum[lf.row_starts[g_lo]]),
                     int(lf.val_cum[lf.row_starts[g_hi]]))
                 hashes = spec_hashes(vals, lf.kind, flba_size=lf.flba_size)

@@ -45,17 +45,14 @@ from pyspark.sql.types import (
 from parquet_go_spark.codecs import bloom as bloomlib
 from parquet_go_spark.codecs import chunk as chunklib
 from parquet_go_spark.codecs import selector
-from parquet_go_spark.codecs.bytearrays import ByteArrays
+from parquet_go_spark.codecs.bytearrays import (
+    STAT_TRUNCATE, ByteArrays, truncate_max,
+)
 from parquet_go_spark.codecs.kinds import Kind
 
 TARGET_CHUNK_BYTES = 8 << 20  # soft upper bound per chunk (all columns):
 # small enough that one chunk is a ~2 s task even through the FSST path
 # (Python-kernel bound), big enough for meaningful per-chunk dictionaries
-
-# Column-index truncation limit for byte-array min/max stats — the
-# DefaultColumnIndexSizeLimit analog (/root/reference/config.go:27,
-# column_index.go:499-533).
-STAT_TRUNCATE = 16
 
 MANIFEST_COLUMNS = [
     "chunk_id", "repo", "bucket", "column", "stream", "n_rows", "kind",
@@ -324,20 +321,6 @@ def _column_sha256(values, spark_type: str, validity=None) -> str:
     return h.hexdigest()
 
 
-def _truncate_max(b: bytes) -> str | None:
-    """Truncate a byte-array max stat to STAT_TRUNCATE bytes while keeping
-    it an upper bound: chop, then increment the last byte with carry
-    (the reference's column-index truncation, column_index.go:684-700)."""
-    if len(b) <= STAT_TRUNCATE:
-        return b.decode("latin-1")
-    t = bytearray(b[:STAT_TRUNCATE])
-    for i in range(len(t) - 1, -1, -1):
-        if t[i] < 0xFF:
-            t[i] += 1
-            return bytes(t[: i + 1]).decode("latin-1")
-    return None  # all 0xFF — no representable upper bound
-
-
 def _chunk_stats(values, spark_type: str) -> tuple[str | None, str | None]:
     """(min_val, max_val) as round-trippable strings, or (None, None)."""
     if spark_type in ("string", "binary"):
@@ -347,7 +330,9 @@ def _chunk_stats(values, spark_type: str) -> tuple[str | None, str | None]:
         mm = pa.compute.min_max(arr)
         lo = mm["min"].as_py() or b""
         hi = mm["max"].as_py() or b""
-        return lo[:STAT_TRUNCATE].decode("latin-1"), _truncate_max(hi)
+        hi = truncate_max(hi)
+        return (lo[:STAT_TRUNCATE].decode("latin-1"),
+                None if hi is None else hi.decode("latin-1"))
     dp = _decimal_info(spark_type)
     if dp is not None and dp[0] > 18:
         # FLBA(16) decimals: lexsort the (high, low-unsigned) word pairs

@@ -799,6 +799,122 @@ def test_list_column_duckdb(tmp_path):
     assert got == (n, int(lens.sum()), int(elems.sum()))
 
 
+# ---------------------------------------------------------------------------
+# nested export shapes: NULLs and empties at every level, each column
+# through the one Dremel walk (export._nested_spec)
+# ---------------------------------------------------------------------------
+
+_NESTED_TYPES = {
+    "a": "array<int>",
+    "m": "map<string,int>",
+    "sm": "struct<m:map<string,array<int>>,x:bigint>",
+    "am": "array<map<string,int>>",
+}
+
+
+def _nested_rows(n=600, seed=4):
+    """{column: values} for _NESTED_TYPES plus `id` and `grp`."""
+    r = np.random.default_rng(seed)
+
+    def null(p, make):
+        return None if r.random() < p else make()
+
+    def ints():  # NULL elements, empty lists
+        return [null(0.2, lambda: int(r.integers(-50, 50)))
+                for _ in range(r.integers(0, 4))]
+
+    def smap(val):  # NULL values, empty maps
+        return {f"k{j}": null(0.25, val) for j in range(r.integers(0, 3))}
+
+    def small():
+        return int(r.integers(100))
+
+    cols = {"id": list(range(n)), "grp": [f"g{i % 4}" for i in range(n)]}
+    cols["a"] = [null(0.1, ints) for _ in range(n)]
+    cols["m"] = [null(0.1, lambda: smap(small)) for _ in range(n)]
+    cols["sm"] = [null(0.1, lambda: {"m": null(0.2, lambda: smap(ints)),
+                                     "x": null(0.2, small)})
+                  for _ in range(n)]
+    cols["am"] = [null(0.1, lambda: [null(0.2, lambda: smap(small))
+                                     for _ in range(r.integers(0, 3))])
+                  for _ in range(n)]
+    return cols
+
+
+def _export_rows_equal(spark, tmp_path, cols):
+    """export_parquet of `cols` (name, spark type) over _nested_rows,
+    read back with spark.read.parquet: every row equal."""
+    from parquet_go_spark.interop.export import export_parquet
+
+    data = _nested_rows()
+    names = ["id", "grp"] + [c for c, _ in cols]
+    ddl = ", ".join(["id bigint", "grp string"]
+                    + [f"{c} {t}" for c, t in cols])
+    src = spark.createDataFrame(
+        list(zip(*(data[c] for c in names))), ddl)
+    out = str(tmp_path / ("nested_" + "_".join(names[2:])))
+    export_parquet(spark, src, out, repo_col="grp", salt_cols=["id"],
+                   target_chunk_bytes=16 << 10)
+    back = spark.read.parquet(out + "/*.parquet").select(*names)
+
+    def rows(df):
+        return [r.asDict(recursive=True)
+                for r in sorted(df.collect(), key=lambda r: r.id)]
+
+    assert rows(back) == rows(src)
+
+
+@pytest.mark.parametrize("col", sorted(_NESTED_TYPES))
+def test_export_nested_shapes_three_readers(tmp_path, col):
+    """_to_specs + write_table of each nested shape (NULL elements,
+    values, lists, maps and structs; empty lists and maps; sliced
+    input; several pages and row groups) reads back equal through
+    pyarrow, DuckDB and pqreader."""
+    import pyarrow as pa
+
+    duckdb = pytest.importorskip("duckdb")
+    from parquet_go_spark.interop import export, pqreader
+
+    data = _nested_rows()
+    spark_t = _NESTED_TYPES[col]
+    arrow_t = {
+        "a": pa.list_(pa.int32()),
+        "m": pa.map_(pa.string(), pa.int32()),
+        "sm": pa.struct([("m", pa.map_(pa.string(), pa.list_(pa.int32()))),
+                         ("x", pa.int64())]),
+        "am": pa.list_(pa.map_(pa.string(), pa.int32())),
+    }[col]
+    full = pa.table({"id": pa.array(data["id"], pa.int64()),
+                     col: pa.array(data[col], arrow_t)})
+    for lo, n in ((0, full.num_rows), (37, 300)):
+        tbl = full.slice(lo, n)
+        want = tbl.column(col).to_pylist()
+        f = str(tmp_path / f"{col}_{lo}.parquet")
+        write_table(f, export._to_specs(
+            tbl, [("id", "bigint"), (col, spark_t)]),
+            page_rows=64, row_group_rows=128)
+        assert pq.read_table(f).column(col).to_pylist() == want
+        assert pqreader.read_table(f).column(col).to_pylist() == want
+        got = duckdb.sql(
+            f"select {col} from read_parquet('{f}') order by id").arrow()
+        assert got.column(col).to_pylist() == want
+        pq.ParquetFile(f, page_checksum_verification=True).read()
+
+
+def test_export_supported_types():
+    """One recursive rule: any list/struct/map nesting of scalar leaves,
+    with scalar map keys."""
+    from parquet_go_spark.interop.export import _supported
+
+    for t in list(_NESTED_TYPES.values()) + [
+            "bigint", "map<int,array<struct<a:string>>>",
+            "array<array<decimal(20,2)>>"]:
+        assert _supported(t), t
+    for t in ("map<array<int>,int>", "map<struct<a:int>,int>",
+              "array<interval>", "struct<a:map<map<int,int>,int>>"):
+        assert not _supported(t), t
+
+
 def test_export_array_column_spark_roundtrip(spark, tmp_path):
     from parquet_go_spark.interop.export import export_parquet
     from pyspark.sql import functions as F
@@ -817,6 +933,9 @@ def test_export_array_column_spark_roundtrip(spark, tmp_path):
 
     assert abs(chk(back) - chk(emb)) < 1e-9
     assert pq.read_table(out).num_rows == emb.count()
+
+    # array<int> with NULL elements, NULL lists and empty lists
+    _export_rows_equal(spark, tmp_path, [("a", "array<int>")])
 
 
 # ---------------------------------------------------------------------------
@@ -984,6 +1103,14 @@ def test_export_map_column_spark_roundtrip(spark, tmp_path):
 
     assert chk(back) == chk(src)
     assert pq.read_table(out).num_rows == src.count()
+
+    # NULL maps, empty maps and NULL values, and maps nested in a
+    # struct and in a list
+    _export_rows_equal(spark, tmp_path, [
+        ("m", "map<string,int>"),
+        ("sm", "struct<m:map<string,array<int>>,x:bigint>"),
+        ("am", "array<map<string,int>>"),
+    ])
 
 
 def test_compact_export_map_column(spark, tmp_path):

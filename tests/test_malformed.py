@@ -157,3 +157,24 @@ def test_plain_byte_array_count_past_buffer():
     for n in (2, 10**10):
         with pytest.raises(ValueError, match="cannot fit"):
             plain.decode_byte_array(buf, n)
+
+
+@pytest.mark.parametrize("encoding", [
+    Codec.DELTA_BINARY_PACKED, Codec.PLAIN, None])
+def test_int32_column_out_of_range(tmp_path, encoding):
+    """An INT32 column given int64 values outside the int32 range
+    raises ValueError naming the column (it raised struct.error from
+    the statistics); int64 values inside the range still write."""
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.interop.pqwriter import ColumnSpec, write_table
+
+    p = str(tmp_path / "k.parquet")
+    for vals in (np.arange(2**33, 2**33 + 100),
+                 np.arange(-2**31 - 1, -2**31 + 99)):
+        with pytest.raises(ValueError, match=r"column k: INT32 values"):
+            write_table(p, [ColumnSpec("k", Kind.INT32, vals,
+                                       encoding=encoding)])
+    write_table(p, [ColumnSpec("k", Kind.INT32, np.arange(-5, 95),
+                               encoding=encoding)])
+    assert pq.read_table(p).column("k").to_pylist() == list(range(-5, 95))
